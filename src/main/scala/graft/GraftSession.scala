@@ -62,6 +62,21 @@ object GraftSession {
     .config("spark.sql.optimizer.excludedRules",
       "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
     .config("spark.ui.enabled", "false")
+    // Without the native Hadoop library (none ships with Spark), the
+    // stock `file:` classes fork a child process per chmod (every create
+    // and mkdir) and per readlink (every FileContext rename checks both
+    // ends): one pass of the perfbench stream workload forked 2029
+    // times (1512 readlink, 502 chmod), about 25 per state-store commit,
+    // on the critical path of every micro-batch's offset/commit log and
+    // state store write. The graft.sources.ForkFree* classes answer both
+    // from java.nio and leave everything else to Hadoop: same files, same
+    // `.crc` sidecars, same modes, and 14 forks per pass (Spark's own
+    // rm, getconf, setsid). Only the `file:` scheme is swapped; hdfs:,
+    // s3a: and every other scheme keep their own implementations.
+    .config("spark.hadoop.fs.file.impl",
+      classOf[graft.sources.ForkFreeLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+      classOf[graft.sources.ForkFreeLocalFs].getName)
 
   /** Builder shaped for a real multi-executor cluster at the 100 TB
     * target (no master set — spark-submit provides it). The knobs and

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -287,9 +287,18 @@ object EventStreams {
   /** foreachBatch scoring sink (SURVEY §2.8): score each micro-batch
     * with the fitted indexer map and append it as parquet, plus a tiny
     * per-batch metrics row — the pattern for coordinating two sinks
-    * from one micro-batch. The batch is persisted so the scoring plan
-    * runs ONCE (write + count previously each recomputed it), and the
-    * `batch_id` column in BOTH outputs is the replay key: plain
+    * from one micro-batch.
+    *
+    * The map is collected ONCE, when the query starts: it has one row per
+    * category, and a lazy `indexerModel` (e.g. `stringIndexerFit` over a
+    * table) would otherwise re-run its fit inside every micro-batch and
+    * could re-number categories mid-stream. Categories unseen at start
+    * score as null, as in [[scoreEvents]]. The batch's row count is
+    * observed inside the parquet write (`Dataset.observe`), so a
+    * micro-batch runs two jobs — the write and the metrics row — and
+    * scores its rows once.
+    *
+    * The `batch_id` column in BOTH outputs is the replay key: plain
     * append-mode parquet is NOT transactional across the two writes,
     * so a failure between them followed by a foreachBatch retry can
     * re-append the same batch — downstream readers deduplicate on
@@ -300,18 +309,19 @@ object EventStreams {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = events.sparkSession
     import spark.implicits._
+    // a null category never matches the join in scoreEvents either
+    val index = typedLit(indexerModel.select("event_type", "idx").collect()
+      .collect { case Row(v: String, i: Long) => v -> i }.toMap)
     events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val scored = graft.ml.RelationalML.stringIndexerTransform(
-            batch.toDF(), "event_type", indexerModel, "event_type_idx")
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        val scored = Observation()
+        batch.withColumn("event_type_idx", element_at(index, col("event_type")))
           .withColumn("batch_id", lit(batchId))
-          .persist()
-        try {
-          scored.write.mode("append").parquet(outDir)
-          Seq((batchId, scored.count()))
-            .toDF("batch_id", "n_scored")
-            .write.mode("append").parquet(metricsDir)
-        } finally scored.unpersist()
+          .observe(scored, count(lit(1)).as("n"))
+          .write.mode("append").parquet(outDir)
+        Seq((batchId, scored.get("n").asInstanceOf[Long]))
+          .toDF("batch_id", "n_scored")
+          .write.mode("append").parquet(metricsDir)
         ()
       }
       .start()

@@ -250,28 +250,48 @@ class StreamingSpec extends AnyFunSuite {
 
   test("foreachBatch sink scores micro-batches to parquet with metrics") {
     import spark.implicits._
-    val fitDf = Seq("click", "view", "click").toDF("event_type")
-    val model = graft.ml.RelationalML.stringIndexerFit(fitDf, "event_type")
-    val out = java.nio.file.Files.createTempDirectory("scored").toString
-    val metrics = java.nio.file.Files.createTempDirectory("metrics").toString
-    val stream = MemoryStream[Ev](spark)
-    val q = EventStreams.scoreToParquet(stream.toDF(), model,
-      s"$out/data", s"$metrics/data")
+    val root = java.nio.file.Files.createTempDirectory("scored")
+    val (out, metrics) = (s"$root/data", s"$root/metrics")
+    val table = s"score_fit_${System.nanoTime()}"
+    spark.sql(s"CREATE TABLE $table (event_type STRING) USING parquet " +
+      s"LOCATION '${root.resolve("fit").toUri}'")
     try {
-      stream.addData(Seq(Ev(1, ts(0), 1, "click", 1.0)))
-      q.processAllAvailable()
-      stream.addData(Seq(Ev(2, ts(1), 2, "view", 2.0),
-        Ev(3, ts(2), 1, "click", 3.0)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val scored = spark.read.parquet(s"$out/data")
-    assert(scored.count() == 3)
-    assert(scored.filter(col("event_type") === "click")
-      .select("event_type_idx").distinct().head().getLong(0) == 0L)
-    val m = spark.read.parquet(s"$metrics/data")
-      .orderBy("batch_id").collect()
-    assert(m.map(_.getLong(1)).sum == 3)
-    assert(m.length == 2) // one metrics row per micro-batch
+      Seq("click", "click", "view").toDF("event_type").write.insertInto(table)
+      val model = graft.ml.RelationalML.stringIndexerFit(
+        spark.table(table), "event_type")
+      def viewIdx = model.filter(col("event_type") === "view").head()
+        .getAs[Long]("idx")
+      val stream = MemoryStream[Ev](spark)
+      val q = EventStreams.scoreToParquet(stream.toDF(), model, out, metrics)
+      try {
+        stream.addData(Seq(Ev(1, ts(0), 1, "click", 1.0),
+          Ev(2, ts(1), 1, "view", 2.0)))
+        q.processAllAvailable()
+        // the fit source changes under the running query: a re-fit now
+        // ranks view first and indexes buy
+        assert(viewIdx == 1L)
+        (Seq.fill(5)("view") ++ Seq.fill(3)("buy")).toDF("event_type")
+          .write.insertInto(table)
+        assert(viewIdx == 0L)
+        stream.addData(Seq(Ev(3, ts(2), 2, "view", 2.0),
+          Ev(4, ts(3), 1, "buy", 3.0), Ev(5, ts(4), 1, "click", 1.0)))
+        q.processAllAvailable()
+      } finally q.stop()
+      val scored = spark.read.parquet(out)
+      val written = scored.groupBy("batch_id").count().collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val m = spark.read.parquet(metrics).collect()
+      assert(m.length == 2) // one metrics row per micro-batch
+      val counted = m.map(r =>
+        r.getAs[Long]("batch_id") -> r.getAs[Long]("n_scored")).toMap
+      assert(counted == written)
+      assert(written.values.toSeq.sorted == Seq(2L, 3L))
+      val idx = scored.collect().map(r => r.getAs[Long]("event_id") ->
+        Option(r.getAs[java.lang.Long]("event_type_idx")).map(_.longValue)).toMap
+      // start-time indices throughout; buy was unseen at start
+      assert(idx == Map(1L -> Some(0L), 2L -> Some(1L), 3L -> Some(1L),
+        4L -> None, 5L -> Some(0L)))
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
   test("runningTotals (transformWithState) accumulates across micro-batches") {
