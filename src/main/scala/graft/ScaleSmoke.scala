@@ -659,10 +659,11 @@ object ScaleSmoke {
     time("single-layer MLP fit, 3 epochs (treeAggregate twin)") {
       val feats = (0 until 6).map(i =>
         element_at(col("embedding"), i + 1).cast("double"))
-      graft.ml.WideMlp.fit(emb, feats,
-        pmod(col("vec_id"), lit(2L)).cast("int"), col("vec_id"),
-        graft.ml.GdTrainer.init(6, 6, 2, seed = 11L), epochs = 3,
-        lr = 0.5, dropout = 0.3)
+      graft.ml.TrainerCommon.fit(graft.ml.WideMlp3.Kernel(Seq(0.3)), emb,
+        feats, pmod(col("vec_id"), lit(2L)).cast("int"), col("vec_id"),
+        graft.ml.Mlp3Trainer.fromMlp(
+          graft.ml.GdTrainer.init(6, 6, 2, seed = 11L)), epochs = 3,
+        opt = graft.ml.TrainerCommon.Optimizer.sgd(0.5))
     }
     // the q40b shape: same net under Adam with 4 hash mini-batches per
     // epoch — batches are row-local predicate VIEWS over the source
@@ -673,11 +674,11 @@ object ScaleSmoke {
     time("MLP fit, Adam + 4 hash mini-batches, 3 epochs (q40b shape)") {
       val feats = (0 until 6).map(i =>
         element_at(col("embedding"), i + 1).cast("double"))
-      graft.ml.WideMlp.fitEsOpt(emb, feats,
-        pmod(col("vec_id"), lit(2L)).cast("int"), col("vec_id"),
-        graft.ml.GdTrainer.init(6, 6, 2, seed = 11L), maxEpochs = 3,
+      graft.ml.TrainerCommon.fitEs(graft.ml.WideMlp3.Kernel(Seq(0.3)), emb,
+        feats, pmod(col("vec_id"), lit(2L)).cast("int"), col("vec_id"),
+        graft.ml.Mlp3Trainer.fromMlp(
+          graft.ml.GdTrainer.init(6, 6, 2, seed = 11L)), maxEpochs = 3,
         opt = graft.ml.TrainerCommon.Optimizer.adam(0.001),
-        dropout = 0.3,
         isVal = graft.ml.TrainerCommon.valSplitPortable(
           Seq(col("vec_id"))),
         patience = -1, batchKeys = Seq(col("vec_id")), nBatches = 4)

@@ -242,11 +242,7 @@ object ConvNetTrainer {
       Option(row.getAs[Any]("vloss")).map(_.asInstanceOf[Double]))
   }
 
-  /** One GD step (shared with the wide-path twin [[WideNet]]). */
-  private[ml] def step(w: NetWeights, gr: NetGrads,
-      lr: Double): NetWeights = applyStep(w, gr, lr)
-
-  private def applyStep(w: NetWeights, gr: NetGrads,
+  private[ml] def applyStep(w: NetWeights, gr: NetGrads,
       lr: Double): NetWeights = {
     def s1(a: Seq[Double], ga: Seq[Double]) =
       a.zip(ga).map { case (x, gx) => x - lr * gx }
@@ -260,9 +256,9 @@ object ConvNetTrainer {
       s2(w.headW, gr.headW), s1(w.headB, gr.headB))
   }
 
-  /** One optimizer step (shared with [[WideNet]]) via the structural
-    * walker [[TrainerCommon.Tensors.applyOpt]].
-    * applyOpt(w, gr, Optimizer.sgd(lr)) == [[step]](w, gr, lr) exactly
+  /** One optimizer step via the structural walker
+    * [[TrainerCommon.Tensors.applyOpt]].
+    * applyOpt(w, gr, Optimizer.sgd(lr)) == [[applyStep]](w, gr, lr) exactly
     * (AdamSpec + OptimizerStepSpec pin it on the stacked shape too). */
   private[ml] def applyOpt(w: NetWeights, gr: NetGrads,
       opt: TrainerCommon.Optimizer): NetWeights =

@@ -326,10 +326,7 @@ object Lstm2Trainer {
   def gradients(df: DataFrame, xs: Seq[Column], label: Column, w: W): G =
     gradientsVal(df, xs, label, lit(0L), w, 1, 0.0, lit(false))._1
 
-  /** One GD step (shared with the wide-path twin [[WideLstm2]]). */
-  private[ml] def step(w: W, gr: G, lr: Double): W = applyStep(w, gr, lr)
-
-  private def applyStep(w: W, gr: G, lr: Double): W = {
+  private[ml] def applyStep(w: W, gr: G, lr: Double): W = {
     def s1(a: Seq[Double], g: Seq[Double]) =
       a.zip(g).map { case (x, gx) => x - lr * gx }
     def s2(a: Seq[Seq[Double]], g: Seq[Seq[Double]]) =
@@ -345,7 +342,7 @@ object Lstm2Trainer {
 
   /** One optimizer step (Adam / sgd) —
     * [[TrainerCommon.Tensors.applyOpt]]; OptimizerStepSpec pins
-    * sgd(lr) == [[step]] bit-for-bit, the gate MAPS (l1/l2) walked in
+    * sgd(lr) == [[applyStep]] bit-for-bit, the gate MAPS (l1/l2) walked in
     * sorted-key order on both the flatten and rebuild sides. */
   private[ml] def applyOpt(w: W, gr: G,
       opt: TrainerCommon.Optimizer): W =

@@ -220,7 +220,7 @@ object LstmTrainer {
     (w, losses)
   }
 
-  /** One GD step (shared with the [[WideLstm]] execution twin). */
+  /** One GD step. */
   private[ml] def applyStep(w: LstmWeights, gr: LstmGrads,
       lr: Double): LstmWeights = {
     def step(a: Seq[Double], ga: Seq[Double]) =

@@ -47,6 +47,16 @@ object Mlp3Trainer {
       "inconsistent shapes")
   }
 
+  /** [[GdTrainer]]'s single-hidden-layer weights as a depth-1 stack, and
+    * back: the narrow MLP trains on [[WideMlp3]]'s kernel at one hidden
+    * layer and scores with [[GdTrainer.predict]]. */
+  def fromMlp(w: GdTrainer.MlpWeights): W =
+    W(Seq(w.w1, w.w2), Seq(w.b1, w.b2))
+  def toMlp(w: W): GdTrainer.MlpWeights = {
+    require(w.nLayers == 2, "toMlp needs exactly one hidden layer")
+    GdTrainer.MlpWeights(w.ws(0), w.bs(0), w.ws(1), w.bs(1))
+  }
+
   /** Deterministic init scaled 1/√fanIn per layer (the WideRnn2Spec
     * lesson: an unscaled uniform(-0.5, 0.5) init explodes at 128/256
     * fan-in — a fan-in-scaled init is what any real framework's default

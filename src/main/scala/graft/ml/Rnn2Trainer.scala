@@ -206,10 +206,7 @@ object Rnn2Trainer {
   def gradients(df: DataFrame, xs: Seq[Column], label: Column, w: W): G =
     gradientsVal(df, xs, label, lit(0L), w, 1, 0.0, lit(false))._1
 
-  /** One GD step (shared with the wide-path twin [[WideRnn2]]). */
-  private[ml] def step(w: W, gr: G, lr: Double): W = applyStep(w, gr, lr)
-
-  private def applyStep(w: W, gr: G, lr: Double): W = {
+  private[ml] def applyStep(w: W, gr: G, lr: Double): W = {
     def s1(a: Seq[Double], g: Seq[Double]) =
       a.zip(g).map { case (x, gx) => x - lr * gx }
     def s2(a: Seq[Seq[Double]], g: Seq[Seq[Double]]) =
@@ -221,7 +218,7 @@ object Rnn2Trainer {
 
   /** One optimizer step (Adam / sgd) —
     * [[TrainerCommon.Tensors.applyOpt]]; OptimizerStepSpec pins
-    * sgd(lr) == [[step]] bit-for-bit. */
+    * sgd(lr) == [[applyStep]] bit-for-bit. */
   private[ml] def applyOpt(w: W, gr: G,
       opt: TrainerCommon.Optimizer): W =
     TrainerCommon.Tensors.applyOpt(w, gr, opt)

@@ -1,8 +1,5 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-
 /** Reference-WIDTH execution path for [[ConvTrainer]] — the flat
   * Conv1D member of the wide-twin family (see [[WideNet]] for the
   * representation rationale): identical math as per-partition
@@ -16,12 +13,14 @@ import org.apache.spark.sql.functions._
   */
 object WideConv {
   import ConvTrainer.{ConvWeights, ConvGrads, Pooling, AvgPool, MaxPool}
-  import WideNet.{Sample, dropMaskLocal}
+  import TrainerCommon.Sample
+  import WideNet.dropMaskLocal
 
   /** Packed weights: FLAT arrays plus a transposed head copy for the
     * backward pass's per-filter column reads (the WideNet layout —
     * r17, verdict task #1; same doubles, same arithmetic). */
-  private final class Packed(w: ConvWeights) extends Serializable {
+  private[ml] final class Packed(w: ConvWeights, T: Int)
+      extends TrainerCommon.Packed {
     val cw: Array[Double] = w.w.flatten.toArray          // (f*k+j)
     val cb: Array[Double] = w.b.toArray
     val w2: Array[Double] = w.w2.flatten.toArray         // (o*nf+v)
@@ -40,6 +39,14 @@ object WideConv {
     val nf: Int = w.filters
     val k: Int = w.kernel
     val kc: Int = w.classes
+    require(T - k + 1 >= 1, s"input length $T < kernel $k")
+    // gradient buffer: w (nf,k), b (nf), w2 (kc,nf), b2 (kc), then the
+    // driver's stats tail
+    val wOff: Int = 0
+    val bOff: Int = wOff + nf * k
+    val w2Off: Int = bOff + nf
+    val b2Off: Int = w2Off + kc * nf
+    val statsOff: Int = b2Off + kc
   }
 
   /** Per-thread reusable scratch (the WideNet pattern); `a` is laid
@@ -66,20 +73,9 @@ object WideConv {
     }
   }
 
-  /** Buffer layout: w (nf,k), b (nf), w2 (kc,nf), b2 (kc), then
-    * [train loss sum, train count, val loss sum, val count]. */
-  private final class Layout(p: Packed) extends Serializable {
-    val wOff: Int = 0
-    val bOff: Int = wOff + p.nf * p.k
-    val w2Off: Int = bOff + p.nf
-    val b2Off: Int = w2Off + p.kc * p.nf
-    val statsOff: Int = b2Off + p.kc
-    val size: Int = statsOff + 4
-  }
-
   /** One row's contribution — line-for-line the staged
     * [[ConvTrainer.gradientsVal]] columns. */
-  private def accumulate(s: Sample, p: Packed, ly: Layout, epoch: Int,
+  private def accumulate(s: Sample, p: Packed, epoch: Int,
       dropout: Double, maxPool: Boolean, g: Array[Double]): Unit = {
     val T = s.x.length
     val P = T - p.k + 1
@@ -159,16 +155,16 @@ object WideConv {
     while (o < p.kc) { denom += math.exp(z2(o) - mx); o += 1 }
     val loss = math.log(denom) + mx - z2(s.y)
     if (s.iv) {
-      g(ly.statsOff + 2) += loss; g(ly.statsOff + 3) += 1.0
+      g(p.statsOff + 2) += loss; g(p.statsOff + 3) += 1.0
       return
     }
-    g(ly.statsOff) += loss; g(ly.statsOff + 1) += 1.0
+    g(p.statsOff) += loss; g(p.statsOff + 1) += 1.0
     val dzo = sc.dzo
     o = 0
     while (o < p.kc) {
       dzo(o) = math.exp(z2(o) - mx) / denom - (if (s.y == o) 1.0 else 0.0)
-      g(ly.b2Off + o) += dzo(o)
-      val gwb = ly.w2Off + o * nf
+      g(p.b2Off + o) += dzo(o)
+      val gwb = p.w2Off + o * nf
       val dv = dzo(o)
       var v = 0
       while (v < nf) { g(gwb + v) += dv * dp(v); v += 1 }
@@ -176,7 +172,7 @@ object WideConv {
     }
     // backward to the conv layer: da routed per pooling mode, the head
     // gradient crossing the dropout mask (d dp/d pool = mask); dpool
-    // reads the TRANSPOSED head row contiguously. The g adds keep the
+    // reads the TRANSPOSED head row contiguousp. The g adds keep the
     // historical per-(f, pos2)-ascending direct-accumulation order.
     f = 0
     while (f < nf) {
@@ -196,7 +192,7 @@ object WideConv {
           q += 1
         }
       }
-      val gw = ly.wOff + f * p.k
+      val gw = p.wOff + f * p.k
       var pos2 = 0
       while (pos2 < P) {
         val da =
@@ -204,7 +200,7 @@ object WideConv {
           else dpool / P
         val dz = da * (if (a(ab + pos2) > 0) 1.0 else 0.0)
         if (dz != 0.0) {
-          g(ly.bOff + f) += dz
+          g(p.bOff + f) += dz
           var j = 0
           while (j < p.k) {
             g(gw + j) += dz * x(pos2 + j)
@@ -217,166 +213,26 @@ object WideConv {
     }
   }
 
-  /** One full-batch pass — the [[ConvTrainer.gradientsVal]] contract on
-    * the treeAggregate path. */
-  def gradientsVal(df: DataFrame, xs: Seq[Column], label: Column,
-      rowKey: Column, w: ConvWeights, epoch: Int, dropout: Double,
-      isVal: Column,
-      pool: Pooling = AvgPool): (ConvGrads, Option[Double]) = {
-    require(xs.length - w.kernel + 1 >= 1,
-      s"input length ${xs.length} < kernel ${w.kernel}")
-    gradientsValRdd(WideNet.sampleRdd(df, xs, label, rowKey, isVal),
-      w, epoch, dropout, pool)
-  }
-
-  /** [[gradientsVal]] over pre-decoded typed rows — the fit loops call
-    * this against ONE cached RDD instead of re-planning/re-decoding a
-    * fresh DataFrame per epoch ([[WideNet.withSamples]]). */
-  private def gradientsValRdd(rows: org.apache.spark.rdd.RDD[Sample],
-      w: ConvWeights, epoch: Int, dropout: Double,
-      pool: Pooling): (ConvGrads, Option[Double]) = {
-    require(dropout >= 0.0 && dropout < 1.0, "dropout in [0, 1)")
-    val spark = org.apache.spark.sql.SparkSession.active
-    val packed = new Packed(w)
-    val ly = new Layout(packed)
-    val maxPool = pool == MaxPool
-    val bc = spark.sparkContext.broadcast((packed, ly))
-    val g = rows.treeAggregate(new Array[Double](ly.size))(
-      seqOp = (buf, s) => {
-        val (p, l) = bc.value
-        accumulate(s, p, l, epoch, dropout, maxPool, buf); buf
-      },
-      combOp = (a, b) => {
-        var i = 0
-        while (i < a.length) { a(i) += b(i); i += 1 }
-        a
-      })
-    bc.destroy()
-    val n = g(ly.statsOff + 1)
-    require(n > 0, "WideConv.gradients: empty training input")
-    val nVal = g(ly.statsOff + 3)
-    val nf = packed.nf; val k = packed.k; val kc = packed.kc
-    (ConvGrads(
-      Seq.tabulate(nf, k)((f, j) => g(ly.wOff + f * k + j) / n),
-      Seq.tabulate(nf)(f => g(ly.bOff + f) / n),
-      Seq.tabulate(kc, nf)((o, f) => g(ly.w2Off + o * nf + f) / n),
-      Seq.tabulate(kc)(o => g(ly.b2Off + o) / n),
-      g(ly.statsOff) / n),
-      if (nVal > 0) Some(g(ly.statsOff + 2) / nVal) else None)
-  }
-
-  /** Mean validation loss at `w` over the val rows ALONE — the trailing
-    * early-stop pass's only consumed number
-    * ([[TrainerCommon.earlyStop]]'s evalPass). Forward-only by
-    * construction ([[accumulate]] early-returns for val rows after the
-    * loss tally) and bit-identical to [[gradientsVal]]'s val output:
-    * narrow filter (same partitions, same in-partition order), val rows
-    * run inference semantics (keep-all masks), same treeAggregate
-    * combine order.
-    *
-    * `dropout` (r17): callers pass the FIT's dropout so the kernel runs
-    * with the argument profile the epochs compiled hot (see
-    * WideNet.valLoss — a fresh dropout constant deoptimizes the inlined
-    * kernel for the whole pass). Pointwise identical for val rows:
-    * iv = true forces every mask to 1.0 regardless of p. */
-  def valLoss(df: DataFrame, xs: Seq[Column], label: Column,
-      rowKey: Column, w: ConvWeights, isVal: Column,
-      pool: Pooling = AvgPool, dropout: Double = 0.0): Double =
-    valLossRdd(WideNet.sampleRdd(
-      df.filter(isVal), xs, label, rowKey, lit(true)), w, pool, dropout)
-
-  /** [[valLoss]] over pre-decoded VAL rows (a narrow filter of the
-    * cached fit RDD — same partitions, same order). */
-  private def valLossRdd(rows: org.apache.spark.rdd.RDD[Sample],
-      w: ConvWeights, pool: Pooling, dropout: Double): Double = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val packed = new Packed(w)
-    val ly = new Layout(packed)
-    val maxPool = pool == MaxPool
-    val bc = spark.sparkContext.broadcast((packed, ly))
-    val g = rows.treeAggregate(new Array[Double](ly.size))(
-      seqOp = (buf, s) => {
-        val (p, l) = bc.value
-        accumulate(s, p, l, epoch = 0, dropout, maxPool, buf); buf
-      },
-      combOp = (a, b) => {
-        var i = 0
-        while (i < a.length) { a(i) += b(i); i += 1 }
-        a
-      })
-    bc.destroy()
-    val nVal = g(ly.statsOff + 3)
-    require(nVal > 0, "WideConv.valLoss: empty validation slice")
-    g(ly.statsOff + 2) / nVal
-  }
-
-  /** Full-batch GD on the wide path ([[ConvTrainer.fit]] contract). */
-  def fit(df: DataFrame, xs: Seq[Column], label: Column, w0: ConvWeights,
-      epochs: Int, lr: Double, pool: Pooling = AvgPool,
-      rowKey: Column = lit(0L),
-      dropout: Double = 0.0): (ConvWeights, Seq[Double]) = {
-    require(xs.length - w0.kernel + 1 >= 1,
-      s"input length ${xs.length} < kernel ${w0.kernel}")
-    WideNet.withSamples(df, xs, label, rowKey, lit(false)) { rows =>
-      var w = w0
-      val losses = (1 to epochs).map { e =>
-        val (gr, _) = gradientsValRdd(rows, w, e, dropout, pool)
-        w = ConvTrainer.applyStep(w, gr, lr)
-        gr.loss
-      }
-      (w, losses)
+  /** The Conv1D kernel: `dropout` on the pooled features, `pool`
+    * global average or first-argmax max pooling. */
+  final case class Kernel(dropout: Double = 0.0,
+      pool: Pooling = AvgPool)
+      extends TrainerCommon.Kernel[ConvWeights, ConvGrads] {
+    type P = Packed
+    private val maxPool = pool == MaxPool
+    def drops: Seq[Double] = Seq(dropout)
+    def pack(w: ConvWeights, T: Int): Packed = new Packed(w, T)
+    def accumulate(s: Sample, p: Packed, epoch: Int,
+        g: Array[Double]): Unit =
+      WideConv.accumulate(s, p, epoch, dropout, maxPool, g)
+    def grads(p: Packed, g: Array[Double], n: Double): ConvGrads = {
+      val nf = p.nf; val k = p.k; val kc = p.kc
+      ConvGrads(
+        Seq.tabulate(nf, k)((f, j) => g(p.wOff + f * k + j) / n),
+        Seq.tabulate(nf)(f => g(p.bOff + f) / n),
+        Seq.tabulate(kc, nf)((o, f) => g(p.w2Off + o * nf + f) / n),
+        Seq.tabulate(kc)(o => g(p.b2Off + o) / n),
+        g(p.statsOff) / n)
     }
   }
-
-  /** [[fit]] under Keras EarlyStopping ([[TrainerCommon.earlyStop]]). */
-  def fitEs(df: DataFrame, xs: Seq[Column], label: Column,
-      w0: ConvWeights, maxEpochs: Int, lr: Double, rowKey: Column,
-      dropout: Double, isVal: Column, pool: Pooling = AvgPool,
-      patience: Int = 5): TrainerCommon.EsResult[ConvWeights] = {
-    require(xs.length - w0.kernel + 1 >= 1,
-      s"input length ${xs.length} < kernel ${w0.kernel}")
-    WideNet.withSamples(df, xs, label, rowKey, isVal) { rows =>
-      val valRows = rows.filter(_.iv)
-      TrainerCommon.earlyStop(w0, maxEpochs, patience,
-          evalPass = Some(wc => valLossRdd(valRows, wc, pool, dropout))) { (w, e) =>
-        val (gr, vl) = gradientsValRdd(rows, w, e, dropout, pool)
-        (ConvTrainer.applyStep(w, gr, lr), gr.loss,
-          vl.getOrElse(sys.error("fitEs: empty validation slice")))
-      }
-    }
-  }
-
-  /** [[fitEs]] with pluggable optimizer + hash mini-batching
-    * ([[TrainerCommon.batchedEpoch]]); sgd + nBatches=1 reproduces
-    * [[fitEs]]. Full-batch runs on the cached-RDD path; the batched
-    * form keeps per-batch DataFrame filters (membership is a
-    * (keys, epoch) hash — it changes every epoch). */
-  def fitEsOpt(df: DataFrame, xs: Seq[Column], label: Column,
-      w0: ConvWeights, maxEpochs: Int, opt: TrainerCommon.Optimizer,
-      rowKey: Column, dropout: Double, isVal: Column,
-      pool: Pooling = AvgPool, patience: Int = 5,
-      batchKeys: Seq[Column] = Nil,
-      nBatches: Int = 1): TrainerCommon.EsResult[ConvWeights] =
-    if (nBatches == 1)
-      WideNet.withSamples(df, xs, label, rowKey, isVal) { rows =>
-        val valRows = rows.filter(_.iv)
-        TrainerCommon.earlyStop(w0, maxEpochs, patience,
-            evalPass = Some(wc => valLossRdd(valRows, wc, pool, dropout))) { (w, e) =>
-          val (gr, vl) = gradientsValRdd(rows, w, e, dropout, pool)
-          (ConvTrainer.applyOpt(w, gr, opt), gr.loss,
-            vl.getOrElse(sys.error("fitEsOpt: empty validation slice")))
-        }
-      }
-    else
-      TrainerCommon.earlyStop(w0, maxEpochs, patience, evalPass =
-          Some(wc => valLoss(df, xs, label, rowKey, wc, isVal, pool, dropout))) {
-        (w, e) =>
-        TrainerCommon.batchedEpoch(df, isVal, batchKeys, nBatches, e, w,
-            evalOnly = e > maxEpochs) {
-          (dfb, ivb, wc) =>
-            val (gr, vl) = gradientsVal(dfb, xs, label, rowKey, wc, e,
-              dropout, ivb, pool)
-            (ConvTrainer.applyOpt(wc, gr, opt), gr.loss, vl)
-        }
-      }
 }

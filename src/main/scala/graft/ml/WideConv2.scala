@@ -1,8 +1,5 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-
 /** Reference-WIDTH execution path for [[Conv2Trainer]] — the stacked
   * two-block Conv1D member of the wide-twin family (see [[WideNet]]
   * for the representation rationale): identical math as per-partition
@@ -19,12 +16,13 @@ import org.apache.spark.sql.functions._
   */
 object WideConv2 {
   import Conv2Trainer.{Conv2Weights, Conv2Grads}
-  import WideNet.Sample
+  import TrainerCommon.Sample
 
   /** Packed weights: FLAT arrays plus TRANSPOSED copies for the
     * backward pass's column reads (the WideNet layout — r17, verdict
     * task #1; same doubles, same arithmetic). */
-  private final class Packed(w: Conv2Weights) extends Serializable {
+  private[ml] final class Packed(w: Conv2Weights, T: Int)
+      extends TrainerCommon.Packed {
     val w1: Array[Double] = w.w1.flatten.toArray         // (f*k+j)
     val b1: Array[Double] = w.b1.toArray
     // flat (g*k+j)*f1+f — position-major kernel over f1 input channels
@@ -63,57 +61,54 @@ object WideConv2 {
       }
       t
     }
+    // gradient buffer: w1 (f,i), b1 (f), w2 (g,j,f), b2 (g), wh (o,g),
+    // bh (o), then the driver's stats tail
+    val P1: Int = T - k + 1
+    val J: Int = P1 / 2
+    val P2: Int = J - k + 1
+    require(P1 >= 1 && P2 >= 1,
+      s"input length $T too short for stacked kernels $k")
+    val w1Off: Int = 0
+    val b1Off: Int = w1Off + f1 * k
+    val w2Off: Int = b1Off + f1
+    val b2Off: Int = w2Off + f2 * k * f1
+    val whOff: Int = b2Off + f2
+    val bhOff: Int = whOff + kc * f2
+    val statsOff: Int = bhOff + kc
   }
 
   /** Per-thread reusable scratch (the WideNet pattern). `dz2` is the
     * one sparsely-written buffer (argmax routing) and is explicitly
     * re-zeroed per use; everything else is fully written before read. */
-  private final class Scratch(val T: Int, p: Packed, ly: Layout) {
+  private final class Scratch(val T: Int, p: Packed) {
     val f1K: Int = p.f1; val f2K: Int = p.f2
     val kK: Int = p.k; val kcK: Int = p.kc
-    val a1 = new Array[Double](ly.P1 * p.f1)
-    val m1 = new Array[Double](ly.J * p.f1)
-    val a2 = new Array[Double](ly.P2 * p.f2)
+    val a1 = new Array[Double](p.P1 * p.f1)
+    val m1 = new Array[Double](p.J * p.f1)
+    val a2 = new Array[Double](p.P2 * p.f2)
     val gp = new Array[Double](p.f2)
     val z = new Array[Double](p.kc)
     val dzo = new Array[Double](p.kc)
-    val dz2 = new Array[Double](ly.P2 * p.f2)
-    val dm1 = new Array[Double](ly.J * p.f1)
+    val dz2 = new Array[Double](p.P2 * p.f2)
+    val dm1 = new Array[Double](p.J * p.f1)
   }
   private val scratchTL = new ThreadLocal[Scratch]
-  private def scratchFor(T: Int, p: Packed, ly: Layout): Scratch = {
+  private def scratchFor(T: Int, p: Packed): Scratch = {
     val c = scratchTL.get()
     if (c != null && c.T == T && c.f1K == p.f1 && c.f2K == p.f2 &&
       c.kK == p.k && c.kcK == p.kc) c
     else {
-      val n = new Scratch(T, p, ly)
+      val n = new Scratch(T, p)
       scratchTL.set(n); n
     }
   }
 
-  /** Buffer layout: w1 (f,i), b1 (f), w2 (g,j,f), b2 (g), wh (o,g),
-    * bh (o), then [loss sum, row count]. */
-  private final class Layout(p: Packed, T: Int) extends Serializable {
-    val P1: Int = T - p.k + 1
-    val J: Int = P1 / 2
-    val P2: Int = J - p.k + 1
-    val w1Off: Int = 0
-    val b1Off: Int = w1Off + p.f1 * p.k
-    val w2Off: Int = b1Off + p.f1
-    val b2Off: Int = w2Off + p.f2 * p.k * p.f1
-    val whOff: Int = b2Off + p.f2
-    val bhOff: Int = whOff + p.kc * p.f2
-    val statsOff: Int = bhOff + p.kc
-    val size: Int = statsOff + 2
-  }
-
   /** One row's contribution — line-for-line the staged
     * [[Conv2Trainer.gradients]] columns. */
-  private def accumulate(s: Sample, p: Packed, ly: Layout,
-      g: Array[Double]): Unit = {
+  private def accumulate(s: Sample, p: Packed, g: Array[Double]): Unit = {
     val k = p.k; val f1 = p.f1; val f2 = p.f2; val kc = p.kc
-    val P1 = ly.P1; val J = ly.J; val P2 = ly.P2
-    val sc = scratchFor(s.x.length, p, ly)
+    val P1 = p.P1; val J = p.J; val P2 = p.P2
+    val sc = scratchFor(s.x.length, p)
     // conv1 + relu, (pos, f) row-major
     val a1 = sc.a1
     var pos = 0
@@ -188,14 +183,18 @@ object WideConv2 {
     while (o < kc) { if (z(o) > mx) mx = z(o); o += 1 }
     var denom = 0.0; o = 0
     while (o < kc) { denom += math.exp(z(o) - mx); o += 1 }
-    g(ly.statsOff) += math.log(denom) + mx - z(s.y)
-    g(ly.statsOff + 1) += 1.0
+    val loss = math.log(denom) + mx - z(s.y)
+    if (s.iv) {
+      g(p.statsOff + 2) += loss; g(p.statsOff + 3) += 1.0
+      return // val rows contribute loss only, never gradients
+    }
+    g(p.statsOff) += loss; g(p.statsOff + 1) += 1.0
     val dzo = sc.dzo
     o = 0
     while (o < kc) {
       dzo(o) = math.exp(z(o) - mx) / denom - (if (s.y == o) 1.0 else 0.0)
-      g(ly.bhOff + o) += dzo(o)
-      val gwb = ly.whOff + o * f2
+      g(p.bhOff + o) += dzo(o)
+      val gwb = p.whOff + o * f2
       val dv = dzo(o)
       var v = 0
       while (v < f2) { g(gwb + v) += dv * gp(v); v += 1 }
@@ -227,7 +226,7 @@ object WideConv2 {
       var gb = 0.0
       var q = 0
       while (q < P2) { gb += dz2(q * f2 + gg); q += 1 }
-      g(ly.b2Off + gg) += gb
+      g(p.b2Off + gg) += gb
       var j = 0
       while (j < k) {
         var f = 0
@@ -238,7 +237,7 @@ object WideConv2 {
             gw += dz2(q * f2 + gg) * m1((q + j) * f1 + f)
             q += 1
           }
-          g(ly.w2Off + (gg * k + j) * f1 + f) += gw
+          g(p.w2Off + (gg * k + j) * f1 + f) += gw
           f += 1
         }
         j += 1
@@ -284,8 +283,8 @@ object WideConv2 {
           if (route && av > 0) {
             val dz = dm1(j * f1 + f)
             if (dz != 0.0) {
-              g(ly.b1Off + f) += dz
-              val gwb = ly.w1Off + f * k
+              g(p.b1Off + f) += dz
+              val gwb = p.w1Off + f * k
               var i = 0
               while (i < k) {
                 g(gwb + i) += dz * s.x(pos + i)
@@ -300,97 +299,24 @@ object WideConv2 {
     }
   }
 
-  /** One full-batch pass — the [[Conv2Trainer.gradients]] contract on
-    * the treeAggregate path: mean gradients + mean loss, one Spark job,
-    * weights broadcast once, O(params) reduction. */
-  def gradients(df: DataFrame, xs: Seq[Column], label: Column,
-      w: Conv2Weights): Conv2Grads = {
-    val T = xs.length
-    require(T - w.k + 1 >= 1 && (T - w.k + 1) / 2 - w.k + 1 >= 1,
-      s"input length $T too short for stacked kernels ${w.k}")
-    gradientsRdd(WideNet.sampleRdd(df, xs, label, lit(0L), lit(false)),
-      T, w)
-  }
-
-  /** [[gradients]] over pre-decoded typed rows — the fit loops call
-    * this against ONE cached RDD instead of re-planning/re-decoding a
-    * fresh DataFrame per epoch ([[WideNet.withSamples]]). */
-  private def gradientsRdd(rows: org.apache.spark.rdd.RDD[Sample],
-      T: Int, w: Conv2Weights): Conv2Grads = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val packed = new Packed(w)
-    val ly = new Layout(packed, T)
-    val bc = spark.sparkContext.broadcast((packed, ly))
-    val g = rows.treeAggregate(new Array[Double](ly.size))(
-      seqOp = (buf, s) => {
-        val (p, l) = bc.value
-        accumulate(s, p, l, buf); buf
-      },
-      combOp = (a, b) => {
-        var i = 0
-        while (i < a.length) { a(i) += b(i); i += 1 }
-        a
-      })
-    bc.destroy()
-    val n = g(ly.statsOff + 1)
-    require(n > 0, "WideConv2.gradients: empty training input")
-    val f1 = packed.f1; val f2 = packed.f2; val k = packed.k
-    val kc = packed.kc
-    Conv2Grads(
-      Seq.tabulate(f1, k)((f, i) => g(ly.w1Off + f * k + i) / n),
-      Seq.tabulate(f1)(f => g(ly.b1Off + f) / n),
-      Seq.tabulate(f2, k, f1)((gg, j, f) =>
-        g(ly.w2Off + (gg * k + j) * f1 + f) / n),
-      Seq.tabulate(f2)(gg => g(ly.b2Off + gg) / n),
-      Seq.tabulate(kc, f2)((o, gg) => g(ly.whOff + o * f2 + gg) / n),
-      Seq.tabulate(kc)(o => g(ly.bhOff + o) / n),
-      g(ly.statsOff) / n)
-  }
-
-  /** Full-batch GD on the wide path ([[Conv2Trainer.fit]] contract). */
-  def fit(df: DataFrame, xs: Seq[Column], label: Column,
-      w0: Conv2Weights, epochs: Int,
-      lr: Double): (Conv2Weights, Seq[Double]) = {
-    val T = xs.length
-    require(T - w0.k + 1 >= 1 && (T - w0.k + 1) / 2 - w0.k + 1 >= 1,
-      s"input length $T too short for stacked kernels ${w0.k}")
-    WideNet.withSamples(df, xs, label, lit(0L), lit(false)) { rows =>
-      var w = w0
-      val losses = (1 to epochs).map { _ =>
-        val gr = gradientsRdd(rows, T, w)
-        w = Conv2Trainer.applyStep(w, gr, lr)
-        gr.loss
-      }
-      (w, losses)
+  /** The stacked two-block Conv1D kernel (no dropout). */
+  case object Kernel extends TrainerCommon.Kernel[Conv2Weights, Conv2Grads] {
+    type P = Packed
+    def drops: Seq[Double] = Nil
+    def pack(w: Conv2Weights, T: Int): Packed = new Packed(w, T)
+    def accumulate(s: Sample, p: Packed, epoch: Int,
+        g: Array[Double]): Unit = WideConv2.accumulate(s, p, g)
+    def grads(p: Packed, g: Array[Double], n: Double): Conv2Grads = {
+      val f1 = p.f1; val f2 = p.f2; val k = p.k; val kc = p.kc
+      Conv2Grads(
+        Seq.tabulate(f1, k)((f, i) => g(p.w1Off + f * k + i) / n),
+        Seq.tabulate(f1)(f => g(p.b1Off + f) / n),
+        Seq.tabulate(f2, k, f1)((gg, j, f) =>
+          g(p.w2Off + (gg * k + j) * f1 + f) / n),
+        Seq.tabulate(f2)(gg => g(p.b2Off + gg) / n),
+        Seq.tabulate(kc, f2)((o, gg) => g(p.whOff + o * f2 + gg) / n),
+        Seq.tabulate(kc)(o => g(p.bhOff + o) / n),
+        g(p.statsOff) / n)
     }
   }
-
-  /** [[fit]] with pluggable optimizer (the reference's Adam) and
-    * optional deterministic hash mini-batching (no validation slice on
-    * this twin — batches are plain row-local filters); sgd +
-    * nBatches=1 reproduces [[fit]]. Full-batch runs on the cached-RDD
-    * path; the batched form keeps per-batch DataFrame filters
-    * (membership is a (keys, epoch) hash — it changes every epoch). */
-  def fitOpt(df: DataFrame, xs: Seq[Column], label: Column,
-      w0: Conv2Weights, epochs: Int, opt: TrainerCommon.Optimizer,
-      batchKeys: Seq[Column] = Nil,
-      nBatches: Int = 1): (Conv2Weights, Seq[Double]) =
-    if (nBatches == 1) {
-      val T = xs.length
-      require(T - w0.k + 1 >= 1 && (T - w0.k + 1) / 2 - w0.k + 1 >= 1,
-        s"input length $T too short for stacked kernels ${w0.k}")
-      WideNet.withSamples(df, xs, label, lit(0L), lit(false)) { rows =>
-        var w = w0
-        val losses = (1 to epochs).map { _ =>
-          val gr = gradientsRdd(rows, T, w)
-          w = Conv2Trainer.applyOpt(w, gr, opt)
-          gr.loss
-        }
-        (w, losses)
-      }
-    } else
-      TrainerCommon.fitLoop(df, epochs, batchKeys, nBatches, w0) { (dfb, w) =>
-        val gr = gradients(dfb, xs, label, w)
-        (Conv2Trainer.applyOpt(w, gr, opt), gr.loss)
-      }
 }

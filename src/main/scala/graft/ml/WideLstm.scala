@@ -1,8 +1,5 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-
 /** Reference-WIDTH execution path for [[LstmTrainer]] — the
   * single-layer gated member of the wide-twin family (see [[WideNet]]
   * for the representation rationale): the same gated-BPTT math as
@@ -16,13 +13,14 @@ import org.apache.spark.sql.functions._
   */
 object WideLstm {
   import LstmTrainer.{LstmWeights, LstmGrads, GateW}
-  import WideNet.Sample
+  import TrainerCommon.Sample
 
   /** Packed weights: FLAT per-gate arrays plus TRANSPOSED copies for
     * the backward pass's column reads (the WideNet layout — r17,
     * verdict task #1; same doubles, same arithmetic). Gate order
     * i, f, g, o — indexed 0..3 throughout. */
-  private final class Packed(w: LstmWeights) extends Serializable {
+  private[ml] final class Packed(w: LstmWeights, T: Int)
+      extends TrainerCommon.Packed {
     val wx: Array[Array[Double]] =
       Array(w.i, w.f, w.g, w.o).map(_.wx.toArray)
     val uu: Array[Array[Double]] =                       // (x)(u*un+v)
@@ -53,6 +51,15 @@ object WideLstm {
       }
       t
     }
+    // Buffer layout per gate X in i,f,g,o: wx (u), u (u,u), b (u); then
+    // w2 (kc,u), b2 (kc), then the driver's stats tail
+    val gateSize: Int = units + units * units + units
+    def wxOff(x: Int): Int = x * gateSize
+    def uOff(x: Int): Int = x * gateSize + units
+    def bOff(x: Int): Int = x * gateSize + units + units * units
+    val w2Off: Int = 4 * gateSize
+    val b2Off: Int = w2Off + kc * units
+    val statsOff: Int = b2Off + kc
   }
 
   /** Per-thread reusable scratch (the WideNet pattern). The t = 0 rows
@@ -80,27 +87,13 @@ object WideLstm {
     }
   }
 
-  /** Buffer layout per gate X in i,f,g,o: wx (u), u (u,u), b (u); then
-    * w2 (kc,u), b2 (kc), then [loss sum, count]. */
-  private final class Layout(p: Packed) extends Serializable {
-    val gateSize: Int = p.units + p.units * p.units + p.units
-    def wxOff(x: Int): Int = x * gateSize
-    def uOff(x: Int): Int = x * gateSize + p.units
-    def bOff(x: Int): Int = x * gateSize + p.units + p.units * p.units
-    val w2Off: Int = 4 * gateSize
-    val b2Off: Int = w2Off + p.kc * p.units
-    val statsOff: Int = b2Off + p.kc
-    val size: Int = statsOff + 2
-  }
-
   private def sig(z: Double): Double = 1.0 / (1.0 + math.exp(-z))
 
   /** One row's contribution — line-for-line the staged
     * [[LstmTrainer.gradients]] columns (Keras gate order, dc chained
     * through f_{t+1}, dh_{t<T} summed over all four gates' recurrent
     * matrices). */
-  private def accumulate(s: Sample, p: Packed, ly: Layout,
-      g: Array[Double]): Unit = {
+  private def accumulate(s: Sample, p: Packed, g: Array[Double]): Unit = {
     val T = s.x.length
     val un = p.units
     val sc = scratchFor(T, p)
@@ -151,14 +144,18 @@ object WideLstm {
     while (o < p.kc) { if (z2(o) > mx) mx = z2(o); o += 1 }
     var denom = 0.0; o = 0
     while (o < p.kc) { denom += math.exp(z2(o) - mx); o += 1 }
-    g(ly.statsOff) += math.log(denom) + mx - z2(s.y)
-    g(ly.statsOff + 1) += 1.0
+    val loss = math.log(denom) + mx - z2(s.y)
+    if (s.iv) {
+      g(p.statsOff + 2) += loss; g(p.statsOff + 3) += 1.0
+      return // val rows contribute loss only, never gradients
+    }
+    g(p.statsOff) += loss; g(p.statsOff + 1) += 1.0
     val dzo = sc.dzo
     o = 0
     while (o < p.kc) {
       dzo(o) = math.exp(z2(o) - mx) / denom - (if (s.y == o) 1.0 else 0.0)
-      g(ly.b2Off + o) += dzo(o)
-      val gwb = ly.w2Off + o * un
+      g(p.b2Off + o) += dzo(o)
+      val gwb = p.w2Off + o * un
       val dv = dzo(o)
       var v = 0
       while (v < un) { g(gwb + v) += dv * h(T * un + v); v += 1 }
@@ -213,8 +210,8 @@ object WideLstm {
           val dzu = dz((t2 * 4 + x) * un + u)
           swx += dzu * s.x(t2 - 1); sb += dzu; t2 += 1
         }
-        g(ly.wxOff(x) + u) += swx
-        g(ly.bOff(x) + u) += sb
+        g(p.wxOff(x) + u) += swx
+        g(p.bOff(x) + u) += sb
         var v = 0
         while (v < un) {
           var sw = 0.0
@@ -222,7 +219,7 @@ object WideLstm {
           while (t2 <= T) {
             sw += dz((t2 * 4 + x) * un + u) * h((t2 - 1) * un + v); t2 += 1
           }
-          g(ly.uOff(x) + u * un + v) += sw
+          g(p.uOff(x) + u * un + v) += sw
           v += 1
         }
         u += 1
@@ -231,82 +228,23 @@ object WideLstm {
     }
   }
 
-  /** One full-batch gated-BPTT pass — the [[LstmTrainer.gradients]]
-    * contract on the treeAggregate path. */
-  def gradients(df: DataFrame, xs: Seq[Column], label: Column,
-      w: LstmWeights): LstmGrads =
-    gradientsRdd(WideNet.sampleRdd(df, xs, label, lit(0L), lit(false)), w)
-
-  /** [[gradients]] over pre-decoded typed rows — the fit loops call
-    * this against ONE cached RDD instead of re-planning/re-decoding a
-    * fresh DataFrame per epoch ([[WideNet.withSamples]]). */
-  private def gradientsRdd(rows: org.apache.spark.rdd.RDD[Sample],
-      w: LstmWeights): LstmGrads = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val packed = new Packed(w)
-    val ly = new Layout(packed)
-    val bc = spark.sparkContext.broadcast((packed, ly))
-    val g = rows.treeAggregate(new Array[Double](ly.size))(
-      seqOp = (buf, s) => {
-        val (p, l) = bc.value
-        accumulate(s, p, l, buf); buf
-      },
-      combOp = (a, b) => {
-        var i = 0
-        while (i < a.length) { a(i) += b(i); i += 1 }
-        a
-      })
-    bc.destroy()
-    val n = g(ly.statsOff + 1)
-    require(n > 0, "WideLstm.gradients: empty training input")
-    val un = packed.units; val kc = packed.kc
-    def gateGrad(x: Int) = GateW(
-      Seq.tabulate(un)(u => g(ly.wxOff(x) + u) / n),
-      Seq.tabulate(un, un)((u, v) => g(ly.uOff(x) + u * un + v) / n),
-      Seq.tabulate(un)(u => g(ly.bOff(x) + u) / n))
-    LstmGrads(gateGrad(0), gateGrad(1), gateGrad(2), gateGrad(3),
-      Seq.tabulate(kc, un)((o, u) => g(ly.w2Off + o * un + u) / n),
-      Seq.tabulate(kc)(o => g(ly.b2Off + o) / n),
-      g(ly.statsOff) / n)
-  }
-
-  /** Full-batch gated-BPTT GD on the wide path ([[LstmTrainer.fit]]
-    * contract). */
-  def fit(df: DataFrame, xs: Seq[Column], label: Column, w0: LstmWeights,
-      epochs: Int, lr: Double): (LstmWeights, Seq[Double]) =
-    WideNet.withSamples(df, xs, label, lit(0L), lit(false)) { rows =>
-      var w = w0
-      val losses = (1 to epochs).map { _ =>
-        val gr = gradientsRdd(rows, w)
-        w = LstmTrainer.applyStep(w, gr, lr)
-        gr.loss
-      }
-      (w, losses)
+  /** The single-layer LSTM kernel (no dropout). */
+  case object Kernel extends TrainerCommon.Kernel[LstmWeights, LstmGrads] {
+    type P = Packed
+    def drops: Seq[Double] = Nil
+    def pack(w: LstmWeights, T: Int): Packed = new Packed(w, T)
+    def accumulate(s: Sample, p: Packed, epoch: Int,
+        g: Array[Double]): Unit = WideLstm.accumulate(s, p, g)
+    def grads(p: Packed, g: Array[Double], n: Double): LstmGrads = {
+      val un = p.units; val kc = p.kc
+      def gate(x: Int) = GateW(
+        Seq.tabulate(un)(u => g(p.wxOff(x) + u) / n),
+        Seq.tabulate(un, un)((u, v) => g(p.uOff(x) + u * un + v) / n),
+        Seq.tabulate(un)(u => g(p.bOff(x) + u) / n))
+      LstmGrads(gate(0), gate(1), gate(2), gate(3),
+        Seq.tabulate(kc, un)((o, u) => g(p.w2Off + o * un + u) / n),
+        Seq.tabulate(kc)(o => g(p.b2Off + o) / n),
+        g(p.statsOff) / n)
     }
-
-  /** [[fit]] with pluggable optimizer (the reference's Adam) and
-    * optional deterministic hash mini-batching (no validation slice on
-    * this twin — batches are plain row-local filters); sgd +
-    * nBatches=1 reproduces [[fit]]. Full-batch runs on the cached-RDD
-    * path; the batched form keeps per-batch DataFrame filters
-    * (membership is a (keys, epoch) hash — it changes every epoch). */
-  def fitOpt(df: DataFrame, xs: Seq[Column], label: Column,
-      w0: LstmWeights, epochs: Int, opt: TrainerCommon.Optimizer,
-      batchKeys: Seq[Column] = Nil,
-      nBatches: Int = 1): (LstmWeights, Seq[Double]) =
-    if (nBatches == 1)
-      WideNet.withSamples(df, xs, label, lit(0L), lit(false)) { rows =>
-        var w = w0
-        val losses = (1 to epochs).map { _ =>
-          val gr = gradientsRdd(rows, w)
-          w = LstmTrainer.applyOpt(w, gr, opt)
-          gr.loss
-        }
-        (w, losses)
-      }
-    else
-      TrainerCommon.fitLoop(df, epochs, batchKeys, nBatches, w0) { (dfb, w) =>
-        val gr = gradients(dfb, xs, label, w)
-        (LstmTrainer.applyOpt(w, gr, opt), gr.loss)
-      }
+  }
 }

@@ -1,8 +1,5 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 /** Reference-WIDTH execution path for [[Lstm2Trainer]] — the stacked
   * LSTM twin of [[WideNet]] (see that file for the full rationale): the
   * staged-expression stack is the oracle-checkable representation at
@@ -21,7 +18,8 @@ import org.apache.spark.sql.functions._
   */
 object WideLstm2 {
   import Lstm2Trainer.{W, G, Gate1, Gate2}
-  import WideNet.{Sample, dropMaskLocal, axpy, vadd}
+  import TrainerCommon.Sample
+  import WideNet.{dropMaskLocal, axpy, vadd}
 
   private val Gates = Array("i", "f", "g", "o")
 
@@ -32,7 +30,8 @@ object WideLstm2 {
     * element and defeated cache-line streaming on the transposed reads
     * (measured ~2.5x on q76's 64/128 widths). Gate order i/f/g/o
     * throughout; same doubles, same arithmetic — layout only. */
-  private final class Packed(w: W) extends Serializable {
+  private[ml] final class Packed(w: W, T: Int)
+      extends TrainerCommon.Packed {
     val u1: Int = w.u1
     val u2: Int = w.u2
     val d: Int = w.d
@@ -138,22 +137,19 @@ object WideLstm2 {
       }
       a
     }
-  }
-
-  /** Gradient buffer layout (gate-major, mirroring Packed). */
-  private final class Layout(p: Packed) extends Serializable {
-    val wx1Off: Int = 0                                  // 4 * u1
-    val uu1Off: Int = wx1Off + 4 * p.u1                  // 4 * u1 * u1
-    val b1Off: Int = uu1Off + 4 * p.u1 * p.u1            // 4 * u1
-    val wx2Off: Int = b1Off + 4 * p.u1                   // 4 * u2 * u1
-    val uu2Off: Int = wx2Off + 4 * p.u2 * p.u1           // 4 * u2 * u2
-    val b2Off: Int = uu2Off + 4 * p.u2 * p.u2            // 4 * u2
-    val wdOff: Int = b2Off + 4 * p.u2                    // d * u2
-    val bdOff: Int = wdOff + p.d * p.u2                  // d
-    val w3Off: Int = bdOff + p.d                         // kc * d
-    val b3Off: Int = w3Off + p.kc * p.d                  // kc
-    val statsOff: Int = b3Off + p.kc                     // 4
-    val size: Int = statsOff + 4
+    // gradient buffer (gate-major, mirroring the weights above), then
+    // the driver's stats tail
+    val wx1Off: Int = 0                           // 4 * u1
+    val uu1Off: Int = wx1Off + 4 * u1             // 4 * u1 * u1
+    val b1Off: Int = uu1Off + 4 * u1 * u1         // 4 * u1
+    val wx2Off: Int = b1Off + 4 * u1              // 4 * u2 * u1
+    val uu2Off: Int = wx2Off + 4 * u2 * u1        // 4 * u2 * u2
+    val b2Off: Int = uu2Off + 4 * u2 * u2         // 4 * u2
+    val wdOff: Int = b2Off + 4 * u2               // d * u2
+    val bdOff: Int = wdOff + d * u2               // d
+    val w3Off: Int = bdOff + d                    // kc * d
+    val b3Off: Int = w3Off + kc * d               // kc
+    val statsOff: Int = b3Off + kc
   }
 
   private def sigm(z: Double): Double = 1.0 / (1.0 + math.exp(-z))
@@ -215,7 +211,7 @@ object WideLstm2 {
     * the historical one (flat/transposed layouts change where a double
     * lives, never the sequence of additions into any sum), so gradients
     * and losses are bit-identical to the nested-array form. */
-  private def accumulate(s: Sample, p: Packed, ly: Layout, epoch: Int,
+  private def accumulate(s: Sample, p: Packed, epoch: Int,
       dropout: Double, g: Array[Double]): Unit = {
     val T = s.x.length
     val u1 = p.u1; val u2 = p.u2
@@ -338,10 +334,10 @@ object WideLstm2 {
     while (o < p.kc) { denom += math.exp(z3(o) - mx); o += 1 }
     val loss = math.log(denom) + mx - z3(s.y)
     if (s.iv) {
-      g(ly.statsOff + 2) += loss; g(ly.statsOff + 3) += 1.0
+      g(p.statsOff + 2) += loss; g(p.statsOff + 3) += 1.0
       return
     }
-    g(ly.statsOff) += loss; g(ly.statsOff + 1) += 1.0
+    g(p.statsOff) += loss; g(p.statsOff + 1) += 1.0
     val dzo = sc.dzo
     o = 0
     while (o < p.kc) {
@@ -523,23 +519,23 @@ object WideLstm2 {
     while (x < 4) {
       var u5 = 0
       while (u5 < u1) {
-        g(ly.wx1Off + x * u1 + u5) += gwx1(x)(u5)
-        g(ly.b1Off + x * u1 + u5) += gb1(x)(u5)
+        g(p.wx1Off + x * u1 + u5) += gwx1(x)(u5)
+        g(p.b1Off + x * u1 + u5) += gb1(x)(u5)
         val grow = guu1(x * u1 + u5)
-        val gb = ly.uu1Off + (x * u1 + u5) * u1
+        val gb = p.uu1Off + (x * u1 + u5) * u1
         var v = 0
         while (v < u1) { g(gb + v) += grow(v); v += 1 }
         u5 += 1
       }
       var u6 = 0
       while (u6 < u2) {
-        g(ly.b2Off + x * u2 + u6) += gb2(x)(u6)
+        g(p.b2Off + x * u2 + u6) += gb2(x)(u6)
         val groww = gwx2(x * u2 + u6)
-        val gwb = ly.wx2Off + (x * u2 + u6) * u1
+        val gwb = p.wx2Off + (x * u2 + u6) * u1
         var v = 0
         while (v < u1) { g(gwb + v) += groww(v); v += 1 }
         val growu = guu2(x * u2 + u6)
-        val gub = ly.uu2Off + (x * u2 + u6) * u2
+        val gub = p.uu2Off + (x * u2 + u6) * u2
         v = 0
         while (v < u2) { g(gub + v) += growu(v); v += 1 }
         u6 += 1
@@ -548,198 +544,49 @@ object WideLstm2 {
     }
     j = 0
     while (j < p.d) {
-      g(ly.bdOff + j) += dzd(j)
+      g(p.bdOff + j) += dzd(j)
       var v = 0
-      while (v < u2) { g(ly.wdOff + j * u2 + v) += dzd(j) * a2(v); v += 1 }
+      while (v < u2) { g(p.wdOff + j * u2 + v) += dzd(j) * a2(v); v += 1 }
       j += 1
     }
     o = 0
     while (o < p.kc) {
-      g(ly.b3Off + o) += dzo(o)
+      g(p.b3Off + o) += dzo(o)
       var j2 = 0
-      while (j2 < p.d) { g(ly.w3Off + o * p.d + j2) += dzo(o) * ad(j2); j2 += 1 }
+      while (j2 < p.d) { g(p.w3Off + o * p.d + j2) += dzo(o) * ad(j2); j2 += 1 }
       o += 1
     }
   }
 
-  /** One full-batch pass — the [[Lstm2Trainer.gradientsVal]] contract on
-    * the treeAggregate path. */
-  def gradientsVal(df: DataFrame, xs: Seq[Column], label: Column,
-      rowKey: Column, w: W, epoch: Int, dropout: Double,
-      isVal: Column): (G, Option[Double]) =
-    gradientsValRdd(WideNet.sampleRdd(df, xs, label, rowKey, isVal),
-      w, epoch, dropout)
-
-  /** [[gradientsVal]] over pre-decoded typed rows — the fit loops call
-    * this against ONE cached RDD instead of re-planning/re-decoding a
-    * fresh DataFrame per epoch ([[WideNet.withSamples]]). */
-  private def gradientsValRdd(rows: org.apache.spark.rdd.RDD[Sample],
-      w: W, epoch: Int, dropout: Double): (G, Option[Double]) = {
-    require(dropout >= 0.0 && dropout < 1.0, "dropout in [0, 1)")
-    val spark = SparkSession.active
-    val packed = new Packed(w)
-    val ly = new Layout(packed)
-    val bc = spark.sparkContext.broadcast((packed, ly))
-    val g = rows.treeAggregate(new Array[Double](ly.size))(
-      seqOp = (buf, s) => {
-        val (p, l) = bc.value
-        accumulate(s, p, l, epoch, dropout, buf); buf
-      },
-      combOp = (a, b) => {
-        var i = 0
-        while (i < a.length) { a(i) += b(i); i += 1 }
-        a
-      })
-    bc.destroy()
-    val n = g(ly.statsOff + 1)
-    require(n > 0, "WideLstm2.gradients: empty training input")
-    val nVal = g(ly.statsOff + 3)
-    val u1 = packed.u1; val u2 = packed.u2
-    (G(
-      Gates.zipWithIndex.map { case (name, x) => name -> Gate1(
-        Seq.tabulate(u1)(u => g(ly.wx1Off + x * u1 + u) / n),
-        Seq.tabulate(u1, u1)((u, v) =>
-          g(ly.uu1Off + (x * u1 + u) * u1 + v) / n),
-        Seq.tabulate(u1)(u => g(ly.b1Off + x * u1 + u) / n)) }.toMap,
-      Gates.zipWithIndex.map { case (name, x) => name -> Gate2(
-        Seq.tabulate(u2, u1)((u, v) =>
-          g(ly.wx2Off + (x * u2 + u) * u1 + v) / n),
-        Seq.tabulate(u2, u2)((u, v) =>
-          g(ly.uu2Off + (x * u2 + u) * u2 + v) / n),
-        Seq.tabulate(u2)(u => g(ly.b2Off + x * u2 + u) / n)) }.toMap,
-      Seq.tabulate(packed.d, u2)((j, u) => g(ly.wdOff + j * u2 + u) / n),
-      Seq.tabulate(packed.d)(j => g(ly.bdOff + j) / n),
-      Seq.tabulate(packed.kc, packed.d)((o, j) =>
-        g(ly.w3Off + o * packed.d + j) / n),
-      Seq.tabulate(packed.kc)(o => g(ly.b3Off + o) / n),
-      g(ly.statsOff) / n),
-      if (nVal > 0) Some(g(ly.statsOff + 2) / nVal) else None)
+  /** The stacked LSTM kernel; `dropout` is the rate after each LSTM
+    * layer. */
+  final case class Kernel(dropout: Double = 0.0)
+      extends TrainerCommon.Kernel[W, G] {
+    type P = Packed
+    def drops: Seq[Double] = Seq(dropout)
+    def pack(w: W, T: Int): Packed = new Packed(w, T)
+    def accumulate(s: Sample, p: Packed, epoch: Int,
+        g: Array[Double]): Unit =
+      WideLstm2.accumulate(s, p, epoch, dropout, g)
+    def grads(p: Packed, g: Array[Double], n: Double): G = {
+      val u1 = p.u1; val u2 = p.u2
+      G(
+        Gates.zipWithIndex.map { case (name, x) => name -> Gate1(
+          Seq.tabulate(u1)(u => g(p.wx1Off + x * u1 + u) / n),
+          Seq.tabulate(u1, u1)((u, v) =>
+            g(p.uu1Off + (x * u1 + u) * u1 + v) / n),
+          Seq.tabulate(u1)(u => g(p.b1Off + x * u1 + u) / n)) }.toMap,
+        Gates.zipWithIndex.map { case (name, x) => name -> Gate2(
+          Seq.tabulate(u2, u1)((u, v) =>
+            g(p.wx2Off + (x * u2 + u) * u1 + v) / n),
+          Seq.tabulate(u2, u2)((u, v) =>
+            g(p.uu2Off + (x * u2 + u) * u2 + v) / n),
+          Seq.tabulate(u2)(u => g(p.b2Off + x * u2 + u) / n)) }.toMap,
+        Seq.tabulate(p.d, u2)((j, u) => g(p.wdOff + j * u2 + u) / n),
+        Seq.tabulate(p.d)(j => g(p.bdOff + j) / n),
+        Seq.tabulate(p.kc, p.d)((o, j) => g(p.w3Off + o * p.d + j) / n),
+        Seq.tabulate(p.kc)(o => g(p.b3Off + o) / n),
+        g(p.statsOff) / n)
+    }
   }
-
-  /** Mean validation loss at `w` over the val rows ALONE — the trailing
-    * early-stop pass's only consumed number
-    * ([[TrainerCommon.earlyStop]]'s evalPass). Forward-only by
-    * construction: [[accumulate]] early-returns for val rows right
-    * after the loss tally, so filtering the frame to the val slice
-    * skips the train rows' backward + gradient-accumulation work the
-    * full trailing pass used to compute and then discard. Bit-identical
-    * to [[gradientsVal]]'s val output: the filter is narrow (same
-    * partitions, same in-partition row order), val rows run inference
-    * semantics (keep-all masks — epoch and dropout never reach their
-    * arithmetic), and the per-partition loss sums combine in the same
-    * treeAggregate order.
-    *
-    * `dropout` (r17): callers pass the FIT's dropout so the kernel runs
-    * with the argument profile the epochs compiled hot (see
-    * WideNet.valLoss — a fresh dropout constant deoptimizes the inlined
-    * kernel for the whole pass). Pointwise identical for val rows:
-    * iv = true forces every mask to 1.0 regardless of p. */
-  def valLoss(df: DataFrame, xs: Seq[Column], label: Column,
-      rowKey: Column, w: W, isVal: Column, dropout: Double = 0.0): Double =
-    valLossRdd(WideNet.sampleRdd(
-      df.filter(isVal), xs, label, rowKey, lit(true)), w, dropout)
-
-  /** [[valLoss]] over pre-decoded VAL rows (a narrow filter of the
-    * cached fit RDD — same partitions, same order). */
-  private def valLossRdd(rows: org.apache.spark.rdd.RDD[Sample],
-      w: W, dropout: Double): Double = {
-    val spark = SparkSession.active
-    val packed = new Packed(w)
-    val ly = new Layout(packed)
-    val bc = spark.sparkContext.broadcast((packed, ly))
-    val g = rows.treeAggregate(new Array[Double](ly.size))(
-      seqOp = (buf, s) => {
-        val (p, l) = bc.value
-        accumulate(s, p, l, epoch = 0, dropout, buf); buf
-      },
-      combOp = (a, b) => {
-        var i = 0
-        while (i < a.length) { a(i) += b(i); i += 1 }
-        a
-      })
-    bc.destroy()
-    val nVal = g(ly.statsOff + 3)
-    require(nVal > 0, "WideLstm2.valLoss: empty validation slice")
-    g(ly.statsOff + 2) / nVal
-  }
-
-  /** Full-batch gated-BPTT GD on the wide path. Decodes the typed rows
-    * once and runs every epoch against the cached RDD
-    * ([[WideNet.withSamples]] — bit-identical, see its note). */
-  def fit(df: DataFrame, xs: Seq[Column], label: Column, w0: W,
-      epochs: Int, lr: Double, rowKey: Column = lit(0L),
-      dropout: Double = 0.0): (W, Seq[Double]) =
-    WideNet.withSamples(df, xs, label, rowKey, lit(false)) { rows =>
-      var w = w0
-      val losses = (1 to epochs).map { e =>
-        val (gr, _) = gradientsValRdd(rows, w, e, dropout)
-        w = Lstm2Trainer.step(w, gr, lr)
-        gr.loss
-      }
-      (w, losses)
-    }
-
-  /** [[fit]] with pluggable optimizer (the reference's Adam); sgd
-    * reproduces [[fit]]. */
-  def fitOpt(df: DataFrame, xs: Seq[Column], label: Column, w0: W,
-      epochs: Int, opt: TrainerCommon.Optimizer,
-      rowKey: Column = lit(0L),
-      dropout: Double = 0.0): (W, Seq[Double]) =
-    WideNet.withSamples(df, xs, label, rowKey, lit(false)) { rows =>
-      var w = w0
-      val losses = (1 to epochs).map { e =>
-        val (gr, _) = gradientsValRdd(rows, w, e, dropout)
-        w = Lstm2Trainer.applyOpt(w, gr, opt)
-        gr.loss
-      }
-      (w, losses)
-    }
-
-  /** [[fit]] under Keras EarlyStopping ([[TrainerCommon.earlyStop]]). */
-  def fitEs(df: DataFrame, xs: Seq[Column], label: Column, w0: W,
-      maxEpochs: Int, lr: Double, rowKey: Column, dropout: Double,
-      isVal: Column, patience: Int = 5): TrainerCommon.EsResult[W] =
-    WideNet.withSamples(df, xs, label, rowKey, isVal) { rows =>
-      val valRows = rows.filter(_.iv)
-      TrainerCommon.earlyStop(w0, maxEpochs, patience,
-          evalPass = Some(wc => valLossRdd(valRows, wc, dropout))) { (w, e) =>
-        val (gr, vl) = gradientsValRdd(rows, w, e, dropout)
-        (Lstm2Trainer.step(w, gr, lr), gr.loss,
-          vl.getOrElse(sys.error("fitEs: empty validation slice")))
-      }
-    }
-
-  /** [[fitEs]] with pluggable optimizer + hash mini-batching
-    * ([[TrainerCommon.batchedEpoch]]); sgd + nBatches=1 reproduces
-    * [[fitEs]]. The full-batch form runs on the cached-RDD path; the
-    * batched form keeps the per-batch DataFrame filters (membership is
-    * an (keys, epoch) hash predicate — it changes every epoch, so there
-    * is no single decoded frame to cache). */
-  def fitEsOpt(df: DataFrame, xs: Seq[Column], label: Column, w0: W,
-      maxEpochs: Int, opt: TrainerCommon.Optimizer, rowKey: Column,
-      dropout: Double, isVal: Column, patience: Int = 5,
-      batchKeys: Seq[Column] = Nil,
-      nBatches: Int = 1): TrainerCommon.EsResult[W] =
-    if (nBatches == 1)
-      WideNet.withSamples(df, xs, label, rowKey, isVal) { rows =>
-        val valRows = rows.filter(_.iv)
-        TrainerCommon.earlyStop(w0, maxEpochs, patience,
-            evalPass = Some(wc => valLossRdd(valRows, wc, dropout))) { (w, e) =>
-          val (gr, vl) = gradientsValRdd(rows, w, e, dropout)
-          (Lstm2Trainer.applyOpt(w, gr, opt), gr.loss,
-            vl.getOrElse(sys.error("fitEsOpt: empty validation slice")))
-        }
-      }
-    else
-      TrainerCommon.earlyStop(w0, maxEpochs, patience,
-          evalPass = Some(wc => valLoss(df, xs, label, rowKey, wc, isVal, dropout))) {
-        (w, e) =>
-        TrainerCommon.batchedEpoch(df, isVal, batchKeys, nBatches, e, w,
-            evalOnly = e > maxEpochs) {
-          (dfb, ivb, wc) =>
-            val (gr, vl) = gradientsVal(dfb, xs, label, rowKey, wc, e,
-              dropout, ivb)
-            (Lstm2Trainer.applyOpt(wc, gr, opt), gr.loss, vl)
-        }
-      }
 }

@@ -1,8 +1,5 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-
 /** Reference-WIDTH execution path for [[Mlp3Trainer]] — the stacked-MLP
   * member of the [[WideNet]]/[[WideRnn2]]/[[WideLstm2]] twin family
   * (see WideNet for the representation rationale): identical math as
@@ -19,14 +16,16 @@ import org.apache.spark.sql.functions._
   */
 object WideMlp3 {
   import Mlp3Trainer.{W, G}
-  import WideNet.{Sample, dropMaskLocal}
+  import TrainerCommon.Sample
+  import WideNet.dropMaskLocal
 
   /** Packed weights: FLAT per-layer arrays plus TRANSPOSED copies for
     * the backward pass's column reads (the WideNet/WideLstm2 layout —
     * r17, verdict task #1; same doubles, same arithmetic, layout
     * only). `wsF(l)(u*in+i)` is row-major; `wsT(l)(i*out+u)` serves
     * `dz(u) = Σ_v dzUpper(v)·W_{l+1}(v)(u)` as a contiguous stream. */
-  private final class Packed(w: W) extends Serializable {
+  private[ml] final class Packed(w: W, T: Int)
+      extends TrainerCommon.Packed {
     val outW: Array[Int] = w.ws.map(_.length).toArray
     val inW: Array[Int] = w.ws.map(_.head.length).toArray
     val wsF: Array[Array[Double]] =
@@ -46,6 +45,7 @@ object WideMlp3 {
     val L: Int = wsF.length - 1 // hidden layer count
     val kc: Int = outW(L)
     val d: Int = inW(0)
+    require(d == T, "feature count != weight width")
     /** Per-hidden-layer mask-unit offsets (cumulative hidden widths —
       * the [[Mlp3Trainer]] scheme, so the two paths draw IDENTICAL
       * masks). */
@@ -54,6 +54,19 @@ object WideMlp3 {
       var acc = 0; var l = 0
       while (l < L) { o(l) = acc; acc += outW(l); l += 1 }
       o
+    }
+    // gradient buffer: per layer l (0..L) w (out×in) then b (out),
+    // then the driver's stats tail
+    val wOff: Array[Int] = new Array[Int](L + 1)
+    val bOff: Array[Int] = new Array[Int](L + 1)
+    val statsOff: Int = {
+      var acc = 0; var l = 0
+      while (l <= L) {
+        wOff(l) = acc; acc += outW(l) * inW(l)
+        bOff(l) = acc; acc += outW(l)
+        l += 1
+      }
+      acc
     }
   }
 
@@ -82,28 +95,11 @@ object WideMlp3 {
     }
   }
 
-  /** Buffer layout: per layer l (0..L): w (out×in) then b (out);
-    * trailing [train loss sum, train count, val loss sum, val count]. */
-  private final class Layout(p: Packed) extends Serializable {
-    val wOff: Array[Int] = new Array[Int](p.L + 1)
-    val bOff: Array[Int] = new Array[Int](p.L + 1)
-    val statsOff: Int = {
-      var acc = 0; var l = 0
-      while (l <= p.L) {
-        wOff(l) = acc; acc += p.outW(l) * p.inW(l)
-        bOff(l) = acc; acc += p.outW(l)
-        l += 1
-      }
-      acc
-    }
-    val size: Int = statsOff + 4
-  }
-
   /** One row's contribution — line-for-line
     * [[Mlp3Trainer.gradientsVal]]'s staged columns: z_l = W_l a_{l-1} +
     * b_l, a_l = relu(z_l) * mask_l, max-shifted softmax CE,
     * dz_l = (W_{l+1}ᵀ dz_{l+1}) * mask_l * relu'(z_l). */
-  private def accumulate(s: Sample, p: Packed, ly: Layout, epoch: Int,
+  private def accumulate(s: Sample, p: Packed, epoch: Int,
       drops: Array[Double], g: Array[Double]): Unit = {
     val L = p.L
     val sc = scratchFor(p)
@@ -170,18 +166,18 @@ object WideMlp3 {
     while (o < p.kc) { denom += math.exp(zo(o) - mx); o += 1 }
     val loss = math.log(denom) + mx - zo(s.y)
     if (s.iv) {
-      g(ly.statsOff + 2) += loss; g(ly.statsOff + 3) += 1.0
+      g(p.statsOff + 2) += loss; g(p.statsOff + 3) += 1.0
       return // val rows contribute loss only, never gradients
     }
-    g(ly.statsOff) += loss; g(ly.statsOff + 1) += 1.0
+    g(p.statsOff) += loss; g(p.statsOff + 1) += 1.0
     // head gradients + dz for the top hidden layer's input
     val dzo = sc.dzo
     o = 0
     while (o < p.kc) {
       dzo(o) = math.exp(zo(o) - mx) / denom - (if (s.y == o) 1.0 else 0.0)
-      g(ly.bOff(L) + o) += dzo(o)
+      g(p.bOff(L) + o) += dzo(o)
       val inW = prev.length
-      val gwb = ly.wOff(L) + o * inW
+      val gwb = p.wOff(L) + o * inW
       val dv = dzo(o)
       var u = 0
       while (u < inW) { g(gwb + u) += dv * prev(u); u += 1 }
@@ -228,8 +224,8 @@ object WideMlp3 {
       val inLen = ins.length
       u = 0
       while (u < width) {
-        g(ly.bOff(l) + u) += dz(u)
-        val gwb = ly.wOff(l) + u * inLen
+        g(p.bOff(l) + u) += dz(u)
+        val gwb = p.wOff(l) + u * inLen
         val dv = dz(u)
         var i = 0
         while (i < inLen) { g(gwb + i) += dv * ins(i); i += 1 }
@@ -240,159 +236,28 @@ object WideMlp3 {
     }
   }
 
-  /** One full-batch pass — the [[Mlp3Trainer.gradientsVal]] contract on
-    * the treeAggregate path: weights broadcast once, one O(params)
-    * reduction, mean TRAIN gradients + mean train loss + mean val loss
-    * (None when the isVal slice is empty). */
-  def gradientsVal(df: DataFrame, features: Seq[Column], label: Column,
-      rowKey: Column, w: W, epoch: Int, drops: Seq[Double],
-      isVal: Column): (G, Option[Double]) = {
-    require(w.ws.headOption.map(_.headOption.fold(0)(_.length))
-      .contains(features.length), "feature count != weight width")
-    gradientsValRdd(WideNet.sampleRdd(df, features, label, rowKey, isVal),
-      w, epoch, drops)
-  }
-
-  /** [[gradientsVal]] over pre-decoded typed rows — the fit loops call
-    * this against ONE cached RDD instead of re-planning/re-decoding a
-    * fresh DataFrame per epoch ([[WideNet.withSamples]]). */
-  private def gradientsValRdd(rows: org.apache.spark.rdd.RDD[Sample],
-      w: W, epoch: Int, drops: Seq[Double]): (G, Option[Double]) = {
-    val L = w.nLayers - 1
-    require(drops.length == L, s"drops must give one rate per hidden " +
-      s"layer ($L), got ${drops.length}")
-    require(drops.forall(p => p >= 0.0 && p < 1.0), "dropout in [0, 1)")
-    val spark = org.apache.spark.sql.SparkSession.active
-    val packed = new Packed(w)
-    val ly = new Layout(packed)
-    val dropsArr = drops.toArray
-    val bc = spark.sparkContext.broadcast((packed, ly))
-    val g = rows.treeAggregate(new Array[Double](ly.size))(
-      seqOp = (buf, s) => {
-        val (p, l) = bc.value
-        accumulate(s, p, l, epoch, dropsArr, buf); buf
-      },
-      combOp = (a, b) => {
-        var i = 0
-        while (i < a.length) { a(i) += b(i); i += 1 }
-        a
-      })
-    bc.destroy()
-    val n = g(ly.statsOff + 1)
-    require(n > 0, "WideMlp3.gradients: empty training input")
-    val nVal = g(ly.statsOff + 3)
-    def outW(l: Int) = packed.outW(l)
-    def inW(l: Int) = packed.inW(l)
-    (G(
-      (0 to L).map(l => Seq.tabulate(outW(l), inW(l))((u, i) =>
-        g(ly.wOff(l) + u * inW(l) + i) / n)),
-      (0 to L).map(l => Seq.tabulate(outW(l))(u =>
-        g(ly.bOff(l) + u) / n)),
-      g(ly.statsOff) / n),
-      if (nVal > 0) Some(g(ly.statsOff + 2) / nVal) else None)
-  }
-
-  /** Mean validation loss at `w` over the val rows ALONE — the trailing
-    * early-stop pass's only consumed number
-    * ([[TrainerCommon.earlyStop]]'s evalPass). Forward-only by
-    * construction ([[accumulate]] early-returns for val rows after the
-    * loss tally) and bit-identical to [[gradientsVal]]'s val output:
-    * narrow filter (same partitions, same in-partition order), val rows
-    * run inference semantics (keep-all masks), same treeAggregate
-    * combine order.
-    *
-    * `drops` (r17): callers pass the FIT's per-layer dropouts so the
-    * kernel runs with the argument profile the epochs compiled hot (see
-    * WideNet.valLoss — a fresh dropout constant deoptimizes the inlined
-    * kernel for the whole pass). Pointwise identical for val rows:
-    * iv = true forces every mask to 1.0 regardless of p. */
-  def valLoss(df: DataFrame, features: Seq[Column], label: Column,
-      rowKey: Column, w: W, isVal: Column,
-      drops: Seq[Double] = Nil): Double = {
-    require(w.ws.headOption.map(_.headOption.fold(0)(_.length))
-      .contains(features.length), "feature count != weight width")
-    valLossRdd(WideNet.sampleRdd(
-      df.filter(isVal), features, label, rowKey, lit(true)), w, drops)
-  }
-
-  /** [[valLoss]] over pre-decoded VAL rows (a narrow filter of the
-    * cached fit RDD — same partitions, same order). */
-  private def valLossRdd(rows: org.apache.spark.rdd.RDD[Sample],
-      w: W, drops: Seq[Double]): Double = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val packed = new Packed(w)
-    val ly = new Layout(packed)
-    val dropsArr =
-      if (drops.isEmpty) new Array[Double](w.nLayers - 1)
-      else {
-        require(drops.length == w.nLayers - 1, "one dropout per layer")
-        drops.toArray
-      }
-    val bc = spark.sparkContext.broadcast((packed, ly))
-    val g = rows.treeAggregate(new Array[Double](ly.size))(
-      seqOp = (buf, s) => {
-        val (p, l) = bc.value
-        accumulate(s, p, l, epoch = 0, dropsArr, buf); buf
-      },
-      combOp = (a, b) => {
-        var i = 0
-        while (i < a.length) { a(i) += b(i); i += 1 }
-        a
-      })
-    bc.destroy()
-    val nVal = g(ly.statsOff + 3)
-    require(nVal > 0, "WideMlp3.valLoss: empty validation slice")
-    g(ly.statsOff + 2) / nVal
-  }
-
-  /** Fixed-epoch full-batch GD on the wide path ([[Mlp3Trainer.fit]]
-    * contract). */
-  def fit(df: DataFrame, features: Seq[Column], label: Column,
-      rowKey: Column, w0: W, epochs: Int, lr: Double,
-      drops: Seq[Double]): (W, Seq[Double]) =
-    WideNet.withSamples(df, features, label, rowKey, lit(false)) { rows =>
-      var w = w0
-      val opt = TrainerCommon.Optimizer.sgd(lr)
-      val losses = (1 to epochs).map { e =>
-        val (gr, _) = gradientsValRdd(rows, w, e, drops)
-        w = Mlp3Trainer.applyOpt(w, gr, opt)
-        gr.loss
-      }
-      (w, losses)
+  /** The depth-k dense kernel: `drops` gives one inverted-dropout rate
+    * per hidden layer (the reference's `Seq(0.3, 0.3, 0.0)`). At one
+    * hidden layer it is [[GdTrainer]]'s single-hidden MLP — the same
+    * mask units, add orders and buffer layout (Mlp3TrainerSpec,
+    * WideSinglesSpec). */
+  final case class Kernel(drops: Seq[Double])
+      extends TrainerCommon.Kernel[W, G] {
+    type P = Packed
+    private val dropsArr = drops.toArray
+    def pack(w: W, T: Int): Packed = {
+      require(drops.length == w.nLayers - 1, "drops must give one rate " +
+        s"per hidden layer (${w.nLayers - 1}), got ${drops.length}")
+      new Packed(w, T)
     }
-
-  /** [[Mlp3Trainer.fitEsOpt]] on the treeAggregate path — Keras ES +
-    * pluggable optimizer (Adam for reference parity) + deterministic
-    * hash mini-batching via the shared [[TrainerCommon]] walkers.
-    * Full-batch runs on the cached-RDD path; the batched form keeps
-    * per-batch DataFrame filters (membership is a (keys, epoch) hash —
-    * it changes every epoch). */
-  def fitEsOpt(df: DataFrame, features: Seq[Column], label: Column,
-      rowKey: Column, w0: W, maxEpochs: Int,
-      opt: TrainerCommon.Optimizer, drops: Seq[Double], isVal: Column,
-      patience: Int = 5, batchKeys: Seq[Column] = Nil,
-      nBatches: Int = 1): TrainerCommon.EsResult[W] =
-    if (nBatches == 1)
-      WideNet.withSamples(df, features, label, rowKey, isVal) { rows =>
-        val valRows = rows.filter(_.iv)
-        TrainerCommon.earlyStop(w0, maxEpochs, patience,
-            evalPass = Some(wc => valLossRdd(valRows, wc, drops))) { (w, e) =>
-          val (gr, vl) = gradientsValRdd(rows, w, e, drops)
-          (Mlp3Trainer.applyOpt(w, gr, opt), gr.loss,
-            vl.getOrElse(sys.error("fitEsOpt: empty validation slice")))
-        }
-      }
-    else
-      TrainerCommon.earlyStop(w0, maxEpochs, patience, evalPass =
-          Some(wc => valLoss(df, features, label, rowKey, wc, isVal,
-            drops))) {
-        (w, e) =>
-        TrainerCommon.batchedEpoch(df, isVal, batchKeys, nBatches, e, w,
-            evalOnly = e > maxEpochs) {
-          (dfb, ivb, wc) =>
-            val (gr, vl) = gradientsVal(dfb, features, label, rowKey, wc,
-              e, drops, ivb)
-            (Mlp3Trainer.applyOpt(wc, gr, opt), gr.loss, vl)
-        }
-      }
+    def accumulate(s: Sample, p: Packed, epoch: Int,
+        g: Array[Double]): Unit =
+      WideMlp3.accumulate(s, p, epoch, dropsArr, g)
+    def grads(p: Packed, g: Array[Double], n: Double): G = G(
+      (0 to p.L).map(l => Seq.tabulate(p.outW(l), p.inW(l))((u, i) =>
+        g(p.wOff(l) + u * p.inW(l) + i) / n)),
+      (0 to p.L).map(l => Seq.tabulate(p.outW(l))(u =>
+        g(p.bOff(l) + u) / n)),
+      g(p.statsOff) / n)
+  }
 }

@@ -1,7 +1,5 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.XXH64
 
 /** Reference-WIDTH execution path for [[ConvNetTrainer]]: identical
@@ -39,41 +37,7 @@ import org.apache.spark.sql.catalyst.expressions.XXH64
   */
 object WideNet {
   import ConvNetTrainer.{NetWeights, NetGrads}
-
-  /** Typed row: feature vector, int label, dropout row key, val flag. */
-  final case class Sample(x: Array[Double], y: Int, rk: Long, iv: Boolean)
-
-  /** The families' shared typed-row projection as an RDD — one place so
-    * the (x, y, rk, iv) column contract cannot drift per family. */
-  private[ml] def sampleRdd(df: DataFrame, xs: Seq[Column], label: Column,
-      rowKey: Column, isVal: Column)
-      : org.apache.spark.rdd.RDD[Sample] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(
-      array(xs.map(_.cast("double")): _*).as("x"),
-      label.cast("int").as("y"), rowKey.cast("long").as("rk"),
-      isVal.cast("boolean").as("iv")).as[Sample].rdd
-  }
-
-  /** Decode the typed rows ONCE and cache them for a fit's epoch loop.
-    * Each epoch of the historical path re-ran the projection through a
-    * fresh DataFrame — re-planning, re-codegen and re-decoding the same
-    * rows every pass (measured ~0.35-0.5 s/pass at sf0.1 vs ~0.1 s for
-    * a treeAggregate over the cached RDD; the arithmetic inside the
-    * pass is identical). Caching the INPUT of a single fit is the same
-    * contract as the entries' existing `facts.persist()` — released
-    * before the query returns, nothing survives across runs. The RDD
-    * inherits the projection's partitioning and per-partition row
-    * order, so per-partition gradient sums are bit-identical to the
-    * per-epoch-DataFrame path. */
-  private[ml] def withSamples[R](df: DataFrame, xs: Seq[Column],
-      label: Column, rowKey: Column, isVal: Column)(
-      body: org.apache.spark.rdd.RDD[Sample] => R): R = {
-    val rdd = sampleRdd(df, xs, label, rowKey, isVal)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try body(rdd) finally { rdd.unpersist(blocking = false); () }
-  }
+  import TrainerCommon.Sample
 
   /** Packed weights as ARRAYS-OF-ROWS: every hot loop in [[accumulate]]
     * is a daxpy (`acc(f) += s * w(f)`) whose operands are 0-BASED rows.
@@ -84,7 +48,8 @@ object WideNet {
     * kernel-shape probe read 1.4-2.4x per loop family). The row split
     * changes where doubles live, never their values; each row is a
     * contiguous slice of the r16 flat layouts. */
-  private final class Packed(w: NetWeights) extends Serializable {
+  private[ml] final class Packed(w: NetWeights, T: Int)
+      extends TrainerCommon.Packed {
     val blocks: Int = w.convW.length
     val k: Int = w.convW(0)(0).length
     val fs: Array[Int] = w.convW.map(_.length).toArray
@@ -131,6 +96,31 @@ object WideNet {
       a
     }
     val hb: Array[Double] = w.headB.toArray
+    // gradient buffer: conv weights (b,f,j,c), conv biases (b,f), dense
+    // (u,i), dense bias (u), head (o,u), head bias (o), then the
+    // driver's stats tail
+    val (ps, ls) = levelSizes(T, k, blocks)
+    require(ls(blocks - 1) * fs(blocks - 1) == flat,
+      s"input length $T does not match the dense layer's width $flat")
+    val cwOff: Array[Int] = {
+      val o = new Array[Int](blocks)
+      var acc = 0
+      for (b <- 0 until blocks) { o(b) = acc; acc += fs(b) * k * fin(b) }
+      o
+    }
+    val cwSize: Int = cwOff(blocks - 1) +
+      fs(blocks - 1) * k * fin(blocks - 1)
+    val cbOff: Array[Int] = {
+      val o = new Array[Int](blocks)
+      var acc = cwSize
+      for (b <- 0 until blocks) { o(b) = acc; acc += fs(b) }
+      o
+    }
+    val dwOff: Int = cbOff(blocks - 1) + fs(blocks - 1)
+    val dbOff: Int = dwOff + dh * flat
+    val hwOff: Int = dbOff + dh
+    val hbOff: Int = hwOff + kc * dh
+    val statsOff: Int = hbOff + kc
   }
 
   /** The one hot-loop shape of every Wide* kernel: `a(i) += s * w(i)`
@@ -175,8 +165,8 @@ object WideNet {
     * validation-rows-keep-all inference semantics. */
   private[ml] def dropMaskLocal(iv: Boolean, rk: Long, epoch: Int,
       u: Int, p: Double): Double =
-    // `iv` tested FIRST (r17): the val-only trailing evaluator calls
-    // with p = 0.0, and a leading `p <= 0.0` test is a branch the fit
+    // `iv` tested FIRST (r17): a val-only pass may run a kernel with
+    // p = 0.0, and a leading `p <= 0.0` test is a branch the fit
     // epochs (p > 0) never took — HotSpot compiles it as an uncommon
     // trap, and the first val-pass row deoptimizes the whole inlined
     // kernel (measured: first valLoss 2.9 s vs 0.4 s steady on the q73
@@ -205,56 +195,26 @@ object WideNet {
     (ps, ls)
   }
 
-  /** Gradient buffer layout: conv weights (b,f,j,c), conv biases (b,f),
-    * dense (u,i), dense bias (u), head (o,u), head bias (o), then
-    * [train loss sum, train count, val loss sum, val count]. */
-  private final class Layout(p: Packed, T: Int) extends Serializable {
-    val (ps, ls) = levelSizes(T, p.k, p.blocks)
-    val fin: Array[Int] =
-      Array.tabulate(p.blocks)(b => if (b == 0) 1 else p.fs(b - 1))
-    val flat: Int = ls(p.blocks - 1) * p.fs(p.blocks - 1)
-    val cwOff: Array[Int] = {
-      val o = new Array[Int](p.blocks)
-      var acc = 0
-      for (b <- 0 until p.blocks) { o(b) = acc; acc += p.fs(b) * p.k * fin(b) }
-      o
-    }
-    val cwSize: Int = cwOff(p.blocks - 1) +
-      p.fs(p.blocks - 1) * p.k * fin(p.blocks - 1)
-    val cbOff: Array[Int] = {
-      val o = new Array[Int](p.blocks)
-      var acc = cwSize
-      for (b <- 0 until p.blocks) { o(b) = acc; acc += p.fs(b) }
-      o
-    }
-    val dwOff: Int = cbOff(p.blocks - 1) + p.fs(p.blocks - 1)
-    val dbOff: Int = dwOff + p.dh * flat
-    val hwOff: Int = dbOff + p.dh
-    val hbOff: Int = hwOff + p.kc * p.dh
-    val statsOff: Int = hbOff + p.kc
-    val size: Int = statsOff + 4
-  }
-
   /** Per-thread reusable scratch for [[accumulate]] (the WideLstm2
     * pattern): activation/gradient work arrays otherwise allocated and
     * zeroed per row. Reuse-safe: every array is either fully written
     * before any read (a/m/dm/dmp/inT and the dense/head vectors) or
     * explicitly re-zeroed per use (`da` — the argmax routing writes
     * sparsely). */
-  private final class Scratch(val T: Int, p: Packed, ly: Layout) {
+  private final class Scratch(val T: Int, p: Packed) {
     val fsKey: Array[Int] = p.fs.clone()
     val dhKey: Int = p.dh; val kcKey: Int = p.kc; val kKey: Int = p.k
     // activations/pooled as ROWS per position: 0-based daxpy operands
     val aR: Array[Array[Array[Double]]] = Array.tabulate(p.blocks)(b =>
-      Array.fill(ly.ps(b))(new Array[Double](p.fs(b))))
+      Array.fill(p.ps(b))(new Array[Double](p.fs(b))))
     val mR: Array[Array[Array[Double]]] = Array.tabulate(p.blocks)(b =>
-      Array.fill(ly.ls(b))(new Array[Double](p.fs(b))))
+      Array.fill(p.ls(b))(new Array[Double](p.fs(b))))
     val da: Array[Array[Double]] =
-      Array.tabulate(p.blocks)(b => new Array[Double](ly.ps(b) * p.fs(b)))
+      Array.tabulate(p.blocks)(b => new Array[Double](p.ps(b) * p.fs(b)))
     // dmp(b): upstream gradient for block b's input (b >= 1)
     val dmp: Array[Array[Double]] = Array.tabulate(p.blocks)(b =>
       if (b == 0) null
-      else new Array[Double](ly.ls(b - 1) * p.fs(b - 1)))
+      else new Array[Double](p.ls(b - 1) * p.fs(b - 1)))
     private val maxF = p.fs.max
     val accRow = new Array[Double](maxF)   // conv forward accumulators
     val dmRow = new Array[Double](maxF)    // one jp row of dmPrev
@@ -264,15 +224,15 @@ object WideNet {
     val hpre = new Array[Double](p.dh); val hd = new Array[Double](p.dh)
     val mask = new Array[Double](p.dh); val dpre = new Array[Double](p.dh)
     val z = new Array[Double](p.kc); val dzo = new Array[Double](p.kc)
-    val dm = new Array[Double](ly.flat)
+    val dm = new Array[Double](p.flat)
   }
   private val scratchTL = new ThreadLocal[Scratch]
-  private def scratchFor(T: Int, p: Packed, ly: Layout): Scratch = {
+  private def scratchFor(T: Int, p: Packed): Scratch = {
     val c = scratchTL.get()
     if (c != null && c.T == T && c.dhKey == p.dh && c.kcKey == p.kc &&
       c.kKey == p.k && java.util.Arrays.equals(c.fsKey, p.fs)) c
     else {
-      val n = new Scratch(T, p, ly)
+      val n = new Scratch(T, p)
       scratchTL.set(n); n
     }
   }
@@ -284,10 +244,10 @@ object WideNet {
     * layouts and lane unrolls change where doubles live and how many
     * independent chains run, never the sequence of additions into any
     * single sum), so the output is bit-identical. */
-  private def accumulate(s: Sample, p: Packed, ly: Layout, epoch: Int,
+  private def accumulate(s: Sample, p: Packed, epoch: Int,
       dropout: Double, g: Array[Double]): Unit = {
     val B = p.blocks; val k = p.k; val fs = p.fs
-    val sc = scratchFor(s.x.length, p, ly)
+    val sc = scratchFor(s.x.length, p)
     // ---- forward ----
     // Conv as idx-major daxpy: acc(f) += window(idx) * cwTR(idx)(f).
     // Per accumulator (pos, f) the adds land idx-ascending from the
@@ -298,7 +258,7 @@ object WideNet {
     val mR = sc.mR                       // pooled rows per position
     var b = 0
     while (b < B) {
-      val fin = ly.fin(b); val pb = ly.ps(b); val lb = ly.ls(b)
+      val fin = p.fin(b); val pb = p.ps(b); val lb = p.ls(b)
       val fb = fs(b)
       val aRb = aR(b)
       val cwTRb = p.cwTR(b); val cbb = p.cb(b)
@@ -349,14 +309,14 @@ object WideNet {
     }
     val mLast = mR(B - 1) // rows (j)(f); flatten index i = j * fB + f
     val fB = fs(B - 1)
-    val lLast = ly.ls(B - 1)
+    val lLast = p.ls(B - 1)
     // ---- dense -> dropout -> head ----
     // hpre as i-major daxpy over transposed dense rows; per unit u the
     // adds land i-ascending from the bias, as before.
     val hpre = sc.hpre
     val hd = sc.hd
     val mask = sc.mask
-    val flatN = ly.flat
+    val flatN = p.flat
     System.arraycopy(p.db, 0, hpre, 0, p.dh)
     var jj = 0
     var i = 0
@@ -391,10 +351,10 @@ object WideNet {
     while (o < p.kc) { denom += math.exp(z(o) - mx); o += 1 }
     val loss = math.log(denom) + mx - z(s.y)
     if (s.iv) {
-      g(ly.statsOff + 2) += loss; g(ly.statsOff + 3) += 1.0
+      g(p.statsOff + 2) += loss; g(p.statsOff + 3) += 1.0
       return // val rows contribute loss only, never gradients
     }
-    g(ly.statsOff) += loss; g(ly.statsOff + 1) += 1.0
+    g(p.statsOff) += loss; g(p.statsOff + 1) += 1.0
     val dzo = sc.dzo
     o = 0
     while (o < p.kc) {
@@ -424,7 +384,7 @@ object WideNet {
     var dmCur = dm
     b = B - 1
     while (b >= 0) {
-      val fin = ly.fin(b); val pb = ly.ps(b); val lb = ly.ls(b)
+      val fin = p.fin(b); val pb = p.ps(b); val lb = p.ls(b)
       val fb = fs(b)
       val aRb = aR(b); val mRb = mR(b)
       val da = sc.da(b)
@@ -470,8 +430,8 @@ object WideNet {
             while (j < k) { kg(j) += dv * s.x(pp + j); j += 1 }
             pp += 1
           }
-          g(ly.cbOff(b) + f) += gb
-          val gwb = ly.cwOff(b) + f * k
+          g(p.cbOff(b) + f) += gb
+          val gwb = p.cwOff(b) + f * k
           var j = 0
           while (j < k) { g(gwb + j) += kg(j); j += 1 }
           f += 1
@@ -495,8 +455,8 @@ object WideNet {
             }
             pp += 1
           }
-          g(ly.cbOff(b) + f) += gb
-          val gwb = ly.cwOff(b) + f * k * fin
+          g(p.cbOff(b) + f) += gb
+          val gwb = p.cwOff(b) + f * k * fin
           var j = 0
           while (j < k) {
             val krow = kgRows(j)
@@ -512,7 +472,7 @@ object WideNet {
         // input gradient, (pp, f2)-major daxpy over the natural kernel
         // rows (vector dimension: input channel c); per element (jp, c)
         // the adds land (pp asc, f2 asc) from 0.0 — the dot form's order
-        val lprev = ly.ls(b - 1); val fprev = fs(b - 1)
+        val lprev = p.ls(b - 1); val fprev = fs(b - 1)
         val dmPrev = sc.dmp(b)
         val cwRb = p.cwR(b)
         val row = sc.dmRow
@@ -541,8 +501,8 @@ object WideNet {
       if (b == B - 1) {
         u = 0
         while (u < p.dh) {
-          g(ly.dbOff + u) += dpre(u)
-          val gwb = ly.dwOff + u * flatN
+          g(p.dbOff + u) += dpre(u)
+          val gwb = p.dwOff + u * flatN
           val dv = dpre(u)
           var j3 = 0
           while (j3 < lLast) {
@@ -556,8 +516,8 @@ object WideNet {
         }
         o = 0
         while (o < p.kc) {
-          g(ly.hbOff + o) += dzo(o)
-          val gwb = ly.hwOff + o * p.dh
+          g(p.hbOff + o) += dzo(o)
+          val gwb = p.hwOff + o * p.dh
           val dv = dzo(o)
           var u2 = 0
           while (u2 < p.dh) { g(gwb + u2) += dv * hd(u2); u2 += 1 }
@@ -568,177 +528,28 @@ object WideNet {
     }
   }
 
-  /** One full-batch pass: mean TRAIN gradients + mean train loss + mean
-    * val loss (None if the isVal slice is empty) — the
-    * [[ConvNetTrainer.gradientsVal]] contract on the treeAggregate path.
-    * One Spark job; weights broadcast once; O(params) reduction. */
-  def gradientsVal(df: DataFrame, xs: Seq[Column], label: Column,
-      rowKey: Column, w: NetWeights, epoch: Int, dropout: Double,
-      isVal: Column): (NetGrads, Option[Double]) =
-    gradientsValRdd(sampleRdd(df, xs, label, rowKey, isVal), xs.length,
-      w, epoch, dropout)
-
-  /** [[gradientsVal]] over pre-decoded typed rows — the fit loops call
-    * this against ONE cached RDD instead of re-planning/re-decoding a
-    * fresh DataFrame per epoch ([[withSamples]]). */
-  private def gradientsValRdd(rows: org.apache.spark.rdd.RDD[Sample],
-      T: Int, w: NetWeights, epoch: Int,
-      dropout: Double): (NetGrads, Option[Double]) = {
-    require(dropout >= 0.0 && dropout < 1.0, "dropout in [0, 1)")
-    val spark = org.apache.spark.sql.SparkSession.active
-    val packed = new Packed(w)
-    val ly = new Layout(packed, T)
-    val bc = spark.sparkContext.broadcast((packed, ly))
-    val g = rows.treeAggregate(new Array[Double](ly.size))(
-      seqOp = (buf, s) => {
-        val (p, l) = bc.value
-        accumulate(s, p, l, epoch, dropout, buf); buf
-      },
-      combOp = (x, y2) => {
-        var i = 0
-        while (i < x.length) { x(i) += y2(i); i += 1 }
-        x
-      })
-    bc.destroy()
-    val nTrain = g(ly.statsOff + 1)
-    require(nTrain > 0, "WideNet.gradients: empty training input")
-    val nVal = g(ly.statsOff + 3)
-    val fs = packed.fs; val k = packed.k
-    def cwAt(b: Int, f: Int, j: Int, c: Int) =
-      g(ly.cwOff(b) + ((f * k) + j) * ly.fin(b) + c) / nTrain
-    (NetGrads(
-      (0 until packed.blocks).map(b => Seq.tabulate(fs(b), k, ly.fin(b))(
-        (f, j, c) => cwAt(b, f, j, c))),
-      (0 until packed.blocks).map(b =>
-        Seq.tabulate(fs(b))(f => g(ly.cbOff(b) + f) / nTrain)),
-      Seq.tabulate(packed.dh, ly.flat)((u, i) =>
-        g(ly.dwOff + u * ly.flat + i) / nTrain),
-      Seq.tabulate(packed.dh)(u => g(ly.dbOff + u) / nTrain),
-      Seq.tabulate(packed.kc, packed.dh)((o, u) =>
-        g(ly.hwOff + o * packed.dh + u) / nTrain),
-      Seq.tabulate(packed.kc)(o => g(ly.hbOff + o) / nTrain),
-      g(ly.statsOff) / nTrain),
-      if (nVal > 0) Some(g(ly.statsOff + 2) / nVal) else None)
-  }
-
-  /** Mean validation loss at `w` over the val rows ALONE — the trailing
-    * early-stop pass's only consumed number
-    * ([[TrainerCommon.earlyStop]]'s evalPass). Forward-only by
-    * construction: [[accumulate]] early-returns for val rows right
-    * after the loss tally, so filtering the frame to the val slice
-    * skips the train rows' backward + gradient-accumulation work the
-    * full trailing pass used to compute and then discard. Bit-identical
-    * to [[gradientsVal]]'s val output: the filter is narrow (same
-    * partitions, same in-partition row order), val rows run inference
-    * semantics (keep-all masks — epoch and dropout never reach their
-    * arithmetic), and the per-partition loss sums combine in the same
-    * treeAggregate order.
-    *
-    * `dropout` (r17): callers pass the FIT's dropout, not 0.0, so the
-    * kernel runs with the exact argument profile the epochs compiled
-    * hot — a val-only pass with a never-before-seen dropout constant
-    * springs HotSpot's value/branch speculation in the inlined kernel
-    * and deoptimizes it for the whole pass (measured on the q75 shape:
-    * first val pass 1.9-4.0 s vs 0.3 s steady; with the fit's dropout
-    * passed through, 0.47 s). Pointwise identical for val rows:
-    * iv = true forces every mask to 1.0 regardless of p. */
-  def valLoss(df: DataFrame, xs: Seq[Column], label: Column,
-      rowKey: Column, w: NetWeights, isVal: Column,
-      dropout: Double = 0.0): Double =
-    valLossRdd(sampleRdd(df.filter(isVal), xs, label, rowKey, lit(true)),
-      xs.length, w, dropout)
-
-  /** [[valLoss]] over pre-decoded VAL rows (a narrow filter of the
-    * cached fit RDD — same partitions, same order). */
-  private def valLossRdd(rows: org.apache.spark.rdd.RDD[Sample], T: Int,
-      w: NetWeights, dropout: Double): Double = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val packed = new Packed(w)
-    val ly = new Layout(packed, T)
-    val bc = spark.sparkContext.broadcast((packed, ly))
-    val g = rows.treeAggregate(new Array[Double](ly.size))(
-      seqOp = (buf, s) => {
-        val (p, l) = bc.value
-        accumulate(s, p, l, epoch = 0, dropout, buf); buf
-      },
-      combOp = (x, y2) => {
-        var i = 0
-        while (i < x.length) { x(i) += y2(i); i += 1 }
-        x
-      })
-    bc.destroy()
-    val nVal = g(ly.statsOff + 3)
-    require(nVal > 0, "WideNet.valLoss: empty validation slice")
-    g(ly.statsOff + 2) / nVal
-  }
-
-  /** Full-batch GD on the wide path ([[ConvNetTrainer.fit]] contract).
-    * Decodes the typed rows once and runs every epoch against the
-    * cached RDD ([[withSamples]] — bit-identical, see its note). */
-  def fit(df: DataFrame, xs: Seq[Column], label: Column, w0: NetWeights,
-      epochs: Int, lr: Double, rowKey: Column = lit(0L),
-      dropout: Double = 0.0): (NetWeights, Seq[Double]) =
-    withSamples(df, xs, label, rowKey, lit(false)) { rows =>
-      var w = w0
-      val losses = (1 to epochs).map { e =>
-        val (gr, _) = gradientsValRdd(rows, xs.length, w, e, dropout)
-        w = ConvNetTrainer.step(w, gr, lr)
-        gr.loss
-      }
-      (w, losses)
+  /** The stacked-CNN kernel; `dropout` is the rate after the dense
+    * layer (`cnn_model.py:29`). */
+  final case class Kernel(dropout: Double = 0.0)
+      extends TrainerCommon.Kernel[NetWeights, NetGrads] {
+    type P = Packed
+    def drops: Seq[Double] = Seq(dropout)
+    def pack(w: NetWeights, T: Int): Packed = new Packed(w, T)
+    def accumulate(s: Sample, p: Packed, epoch: Int,
+        g: Array[Double]): Unit =
+      WideNet.accumulate(s, p, epoch, dropout, g)
+    def grads(p: Packed, g: Array[Double], n: Double): NetGrads = {
+      val fs = p.fs; val k = p.k
+      NetGrads(
+        (0 until p.blocks).map(b => Seq.tabulate(fs(b), k, p.fin(b))(
+          (f, j, c) => g(p.cwOff(b) + ((f * k) + j) * p.fin(b) + c) / n)),
+        (0 until p.blocks).map(b =>
+          Seq.tabulate(fs(b))(f => g(p.cbOff(b) + f) / n)),
+        Seq.tabulate(p.dh, p.flat)((u, i) => g(p.dwOff + u * p.flat + i) / n),
+        Seq.tabulate(p.dh)(u => g(p.dbOff + u) / n),
+        Seq.tabulate(p.kc, p.dh)((o, u) => g(p.hwOff + o * p.dh + u) / n),
+        Seq.tabulate(p.kc)(o => g(p.hbOff + o) / n),
+        g(p.statsOff) / n)
     }
-
-  /** [[fit]] under Keras EarlyStopping ([[TrainerCommon.earlyStop]]). */
-  def fitEs(df: DataFrame, xs: Seq[Column], label: Column,
-      w0: NetWeights, maxEpochs: Int, lr: Double, rowKey: Column,
-      dropout: Double, isVal: Column,
-      patience: Int = 5): TrainerCommon.EsResult[NetWeights] =
-    withSamples(df, xs, label, rowKey, isVal) { rows =>
-      val valRows = rows.filter(_.iv)
-      TrainerCommon.earlyStop(w0, maxEpochs, patience,
-          evalPass = Some(wc => valLossRdd(valRows, xs.length, wc, dropout))) {
-        (w, e) =>
-        val (gr, vl) = gradientsValRdd(rows, xs.length, w, e, dropout)
-        (ConvNetTrainer.step(w, gr, lr), gr.loss,
-          vl.getOrElse(sys.error("fitEs: empty validation slice")))
-      }
-    }
-
-  /** [[fitEs]] with the reference's actual `compile/fit` semantics on
-    * the stacked net: pluggable optimizer
-    * (`TrainerCommon.Optimizer.adam(0.001)` = `cnn_model.py:34`) and
-    * deterministic hash mini-batching, weights updated after each
-    * batch ([[TrainerCommon.batchedEpoch]]). nBatches = 1 + sgd(lr)
-    * reproduces [[fitEs]] bit-for-bit (AdamSpec pins it). Full-batch
-    * runs on the cached-RDD path; the batched form keeps per-batch
-    * DataFrame filters (membership is a (keys, epoch) hash — it
-    * changes every epoch). */
-  def fitEsOpt(df: DataFrame, xs: Seq[Column], label: Column,
-      w0: NetWeights, maxEpochs: Int, opt: TrainerCommon.Optimizer,
-      rowKey: Column, dropout: Double, isVal: Column,
-      patience: Int = 5, batchKeys: Seq[Column] = Nil,
-      nBatches: Int = 1): TrainerCommon.EsResult[NetWeights] =
-    if (nBatches == 1)
-      withSamples(df, xs, label, rowKey, isVal) { rows =>
-        val valRows = rows.filter(_.iv)
-        TrainerCommon.earlyStop(w0, maxEpochs, patience,
-            evalPass = Some(wc => valLossRdd(valRows, xs.length, wc, dropout))) {
-          (w, e) =>
-          val (gr, vl) = gradientsValRdd(rows, xs.length, w, e, dropout)
-          (ConvNetTrainer.applyOpt(w, gr, opt), gr.loss,
-            vl.getOrElse(sys.error("fitEsOpt: empty validation slice")))
-        }
-      }
-    else
-      TrainerCommon.earlyStop(w0, maxEpochs, patience,
-          evalPass = Some(wc => valLoss(df, xs, label, rowKey, wc, isVal, dropout))) {
-        (w, e) =>
-        TrainerCommon.batchedEpoch(df, isVal, batchKeys, nBatches, e, w,
-            evalOnly = e > maxEpochs) {
-          (dfb, ivb, wc) =>
-            val (gr, vl) = gradientsVal(dfb, xs, label, rowKey, wc, e,
-              dropout, ivb)
-            (ConvNetTrainer.applyOpt(wc, gr, opt), gr.loss, vl)
-        }
-      }
+  }
 }

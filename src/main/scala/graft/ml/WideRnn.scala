@@ -1,8 +1,5 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-
 /** Reference-WIDTH execution path for [[RnnTrainer]] — the single-layer
   * SimpleRNN member of the wide-twin family (see [[WideNet]] for the
   * representation rationale): the same BPTT math as per-partition
@@ -15,12 +12,14 @@ import org.apache.spark.sql.functions._
   */
 object WideRnn {
   import RnnTrainer.{RnnWeights, RnnGrads}
-  import WideNet.{Sample, dropMaskLocal}
+  import TrainerCommon.Sample
+  import WideNet.dropMaskLocal
 
   /** Packed weights: FLAT arrays plus TRANSPOSED copies for the
     * backward pass's column reads (the WideNet layout — r17, verdict
     * task #1; same doubles, same arithmetic). */
-  private final class Packed(w: RnnWeights) extends Serializable {
+  private[ml] final class Packed(w: RnnWeights, T: Int)
+      extends TrainerCommon.Packed {
     val wx: Array[Double] = w.wx.toArray
     val wh: Array[Double] = w.wh.flatten.toArray         // (u*un+v)
     val b: Array[Double] = w.b.toArray
@@ -48,6 +47,14 @@ object WideRnn {
       }
       t
     }
+    // gradient buffer: wx (u), wh (u,u), b (u), w2 (kc,u), b2 (kc), then
+    // the driver's stats tail
+    val wxOff: Int = 0
+    val whOff: Int = wxOff + units
+    val bOff: Int = whOff + units * units
+    val w2Off: Int = bOff + units
+    val b2Off: Int = w2Off + kc * units
+    val statsOff: Int = b2Off + kc
   }
 
   /** Per-thread reusable scratch (the WideNet pattern). `h` rows for
@@ -73,23 +80,11 @@ object WideRnn {
     }
   }
 
-  /** Buffer layout: wx (u), wh (u,u), b (u), w2 (kc,u), b2 (kc), then
-    * [train loss sum, train count, val loss sum, val count]. */
-  private final class Layout(p: Packed) extends Serializable {
-    val wxOff: Int = 0
-    val whOff: Int = wxOff + p.units
-    val bOff: Int = whOff + p.units * p.units
-    val w2Off: Int = bOff + p.units
-    val b2Off: Int = w2Off + p.kc * p.units
-    val statsOff: Int = b2Off + p.kc
-    val size: Int = statsOff + 4
-  }
-
   /** One row's contribution — line-for-line the staged
     * [[RnnTrainer.gradientsVal]] columns: relu recurrence, dropout on
     * h_T only (the post-recurrence Keras position), softmax head, and
     * the dh_{t-1} = whT dz_t backward chain. */
-  private def accumulate(s: Sample, p: Packed, ly: Layout, epoch: Int,
+  private def accumulate(s: Sample, p: Packed, epoch: Int,
       dropout: Double, g: Array[Double]): Unit = {
     val T = s.x.length
     val un = p.units
@@ -155,16 +150,16 @@ object WideRnn {
     while (o < p.kc) { denom += math.exp(z2(o) - mx); o += 1 }
     val loss = math.log(denom) + mx - z2(s.y)
     if (s.iv) {
-      g(ly.statsOff + 2) += loss; g(ly.statsOff + 3) += 1.0
+      g(p.statsOff + 2) += loss; g(p.statsOff + 3) += 1.0
       return
     }
-    g(ly.statsOff) += loss; g(ly.statsOff + 1) += 1.0
+    g(p.statsOff) += loss; g(p.statsOff + 1) += 1.0
     val dzo = sc.dzo
     o = 0
     while (o < p.kc) {
       dzo(o) = math.exp(z2(o) - mx) / denom - (if (s.y == o) 1.0 else 0.0)
-      g(ly.b2Off + o) += dzo(o)
-      val gwb = ly.w2Off + o * un
+      g(p.b2Off + o) += dzo(o)
+      val gwb = p.w2Off + o * un
       val dv = dzo(o)
       var v = 0
       while (v < un) { g(gwb + v) += dv * aT(v); v += 1 }
@@ -204,8 +199,8 @@ object WideRnn {
         val dzu = dz(t2 * un + u)
         swx += dzu * s.x(t2 - 1); sb += dzu; t2 += 1
       }
-      g(ly.wxOff + u) += swx
-      g(ly.bOff + u) += sb
+      g(p.wxOff + u) += swx
+      g(p.bOff + u) += sb
       var v = 0
       while (v < un) {
         var sw = 0.0
@@ -213,160 +208,31 @@ object WideRnn {
         while (t2 <= T) {
           sw += dz(t2 * un + u) * h((t2 - 1) * un + v); t2 += 1
         }
-        g(ly.whOff + u * un + v) += sw
+        g(p.whOff + u * un + v) += sw
         v += 1
       }
       u += 1
     }
   }
 
-  /** One full-batch BPTT pass — the [[RnnTrainer.gradientsVal]]
-    * contract on the treeAggregate path. */
-  def gradientsVal(df: DataFrame, xs: Seq[Column], label: Column,
-      rowKey: Column, w: RnnWeights, epoch: Int, dropout: Double,
-      isVal: Column): (RnnGrads, Option[Double]) =
-    gradientsValRdd(WideNet.sampleRdd(df, xs, label, rowKey, isVal),
-      w, epoch, dropout)
-
-  /** [[gradientsVal]] over pre-decoded typed rows — the fit loops call
-    * this against ONE cached RDD instead of re-planning/re-decoding a
-    * fresh DataFrame per epoch ([[WideNet.withSamples]]). */
-  private def gradientsValRdd(rows: org.apache.spark.rdd.RDD[Sample],
-      w: RnnWeights, epoch: Int,
-      dropout: Double): (RnnGrads, Option[Double]) = {
-    require(dropout >= 0.0 && dropout < 1.0, "dropout in [0, 1)")
-    val spark = org.apache.spark.sql.SparkSession.active
-    val packed = new Packed(w)
-    val ly = new Layout(packed)
-    val bc = spark.sparkContext.broadcast((packed, ly))
-    val g = rows.treeAggregate(new Array[Double](ly.size))(
-      seqOp = (buf, s) => {
-        val (p, l) = bc.value
-        accumulate(s, p, l, epoch, dropout, buf); buf
-      },
-      combOp = (a, b) => {
-        var i = 0
-        while (i < a.length) { a(i) += b(i); i += 1 }
-        a
-      })
-    bc.destroy()
-    val n = g(ly.statsOff + 1)
-    require(n > 0, "WideRnn.gradients: empty training input")
-    val nVal = g(ly.statsOff + 3)
-    val un = packed.units; val kc = packed.kc
-    (RnnGrads(
-      Seq.tabulate(un)(u => g(ly.wxOff + u) / n),
-      Seq.tabulate(un, un)((u, v) => g(ly.whOff + u * un + v) / n),
-      Seq.tabulate(un)(u => g(ly.bOff + u) / n),
-      Seq.tabulate(kc, un)((o, u) => g(ly.w2Off + o * un + u) / n),
-      Seq.tabulate(kc)(o => g(ly.b2Off + o) / n),
-      g(ly.statsOff) / n),
-      if (nVal > 0) Some(g(ly.statsOff + 2) / nVal) else None)
-  }
-
-  /** Mean validation loss at `w` over the val rows ALONE — the trailing
-    * early-stop pass's only consumed number
-    * ([[TrainerCommon.earlyStop]]'s evalPass). Forward-only by
-    * construction ([[accumulate]] early-returns for val rows after the
-    * loss tally) and bit-identical to [[gradientsVal]]'s val output:
-    * narrow filter (same partitions, same in-partition order), val rows
-    * run inference semantics (keep-all masks), same treeAggregate
-    * combine order.
-    *
-    * `dropout` (r17): callers pass the FIT's dropout so the kernel runs
-    * with the argument profile the epochs compiled hot (see
-    * WideNet.valLoss — a fresh dropout constant deoptimizes the inlined
-    * kernel for the whole pass). Pointwise identical for val rows:
-    * iv = true forces every mask to 1.0 regardless of p. */
-  def valLoss(df: DataFrame, xs: Seq[Column], label: Column,
-      rowKey: Column, w: RnnWeights, isVal: Column,
-      dropout: Double = 0.0): Double =
-    valLossRdd(WideNet.sampleRdd(
-      df.filter(isVal), xs, label, rowKey, lit(true)), w, dropout)
-
-  /** [[valLoss]] over pre-decoded VAL rows (a narrow filter of the
-    * cached fit RDD — same partitions, same order). */
-  private def valLossRdd(rows: org.apache.spark.rdd.RDD[Sample],
-      w: RnnWeights, dropout: Double): Double = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val packed = new Packed(w)
-    val ly = new Layout(packed)
-    val bc = spark.sparkContext.broadcast((packed, ly))
-    val g = rows.treeAggregate(new Array[Double](ly.size))(
-      seqOp = (buf, s) => {
-        val (p, l) = bc.value
-        accumulate(s, p, l, epoch = 0, dropout, buf); buf
-      },
-      combOp = (a, b) => {
-        var i = 0
-        while (i < a.length) { a(i) += b(i); i += 1 }
-        a
-      })
-    bc.destroy()
-    val nVal = g(ly.statsOff + 3)
-    require(nVal > 0, "WideRnn.valLoss: empty validation slice")
-    g(ly.statsOff + 2) / nVal
-  }
-
-  /** Full-batch BPTT GD on the wide path ([[RnnTrainer.fit]] contract). */
-  def fit(df: DataFrame, xs: Seq[Column], label: Column, w0: RnnWeights,
-      epochs: Int, lr: Double, rowKey: Column = lit(0L),
-      dropout: Double = 0.0): (RnnWeights, Seq[Double]) =
-    WideNet.withSamples(df, xs, label, rowKey, lit(false)) { rows =>
-      var w = w0
-      val losses = (1 to epochs).map { e =>
-        val (gr, _) = gradientsValRdd(rows, w, e, dropout)
-        w = RnnTrainer.applyStep(w, gr, lr)
-        gr.loss
-      }
-      (w, losses)
+  /** The SimpleRNN kernel; `dropout` is the post-recurrence rate on h_T. */
+  final case class Kernel(dropout: Double = 0.0)
+      extends TrainerCommon.Kernel[RnnWeights, RnnGrads] {
+    type P = Packed
+    def drops: Seq[Double] = Seq(dropout)
+    def pack(w: RnnWeights, T: Int): Packed = new Packed(w, T)
+    def accumulate(s: Sample, p: Packed, epoch: Int,
+        g: Array[Double]): Unit =
+      WideRnn.accumulate(s, p, epoch, dropout, g)
+    def grads(p: Packed, g: Array[Double], n: Double): RnnGrads = {
+      val un = p.units; val kc = p.kc
+      RnnGrads(
+        Seq.tabulate(un)(u => g(p.wxOff + u) / n),
+        Seq.tabulate(un, un)((u, v) => g(p.whOff + u * un + v) / n),
+        Seq.tabulate(un)(u => g(p.bOff + u) / n),
+        Seq.tabulate(kc, un)((o, u) => g(p.w2Off + o * un + u) / n),
+        Seq.tabulate(kc)(o => g(p.b2Off + o) / n),
+        g(p.statsOff) / n)
     }
-
-  /** [[fit]] under Keras EarlyStopping ([[TrainerCommon.earlyStop]]). */
-  def fitEs(df: DataFrame, xs: Seq[Column], label: Column,
-      w0: RnnWeights, maxEpochs: Int, lr: Double, rowKey: Column,
-      dropout: Double, isVal: Column,
-      patience: Int = 5): TrainerCommon.EsResult[RnnWeights] =
-    WideNet.withSamples(df, xs, label, rowKey, isVal) { rows =>
-      val valRows = rows.filter(_.iv)
-      TrainerCommon.earlyStop(w0, maxEpochs, patience,
-          evalPass = Some(wc => valLossRdd(valRows, wc, dropout))) { (w, e) =>
-        val (gr, vl) = gradientsValRdd(rows, w, e, dropout)
-        (RnnTrainer.applyStep(w, gr, lr), gr.loss,
-          vl.getOrElse(sys.error("fitEs: empty validation slice")))
-      }
-    }
-
-  /** [[fitEs]] with the reference's `compile/fit` semantics: pluggable
-    * optimizer (`TrainerCommon.Optimizer.adam(0.001)` =
-    * `rnn_model.py:28-34`) + deterministic hash mini-batching
-    * ([[TrainerCommon.batchedEpoch]]); sgd + nBatches=1 reproduces
-    * [[fitEs]] (OptimizerStepSpec / AdamSpec). */
-  def fitEsOpt(df: DataFrame, xs: Seq[Column], label: Column,
-      w0: RnnWeights, maxEpochs: Int, opt: TrainerCommon.Optimizer,
-      rowKey: Column, dropout: Double, isVal: Column,
-      patience: Int = 5, batchKeys: Seq[Column] = Nil,
-      nBatches: Int = 1): TrainerCommon.EsResult[RnnWeights] =
-    if (nBatches == 1)
-      WideNet.withSamples(df, xs, label, rowKey, isVal) { rows =>
-        val valRows = rows.filter(_.iv)
-        TrainerCommon.earlyStop(w0, maxEpochs, patience,
-            evalPass = Some(wc => valLossRdd(valRows, wc, dropout))) { (w, e) =>
-          val (gr, vl) = gradientsValRdd(rows, w, e, dropout)
-          (RnnTrainer.applyOpt(w, gr, opt), gr.loss,
-            vl.getOrElse(sys.error("fitEsOpt: empty validation slice")))
-        }
-      }
-    else
-      TrainerCommon.earlyStop(w0, maxEpochs, patience,
-          evalPass = Some(wc => valLoss(df, xs, label, rowKey, wc, isVal, dropout))) {
-        (w, e) =>
-        TrainerCommon.batchedEpoch(df, isVal, batchKeys, nBatches, e, w,
-            evalOnly = e > maxEpochs) {
-          (dfb, ivb, wc) =>
-            val (gr, vl) = gradientsVal(dfb, xs, label, rowKey, wc, e,
-              dropout, ivb)
-            (RnnTrainer.applyOpt(wc, gr, opt), gr.loss, vl)
-        }
-      }
+  }
 }

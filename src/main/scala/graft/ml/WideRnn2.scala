@@ -1,8 +1,5 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-
 /** Reference-WIDTH execution path for [[Rnn2Trainer]] — the stacked
   * SimpleRNN member of the [[WideNet]]/[[WideLstm2]] family (see
   * WideNet for the representation rationale): identical stacked-BPTT
@@ -14,12 +11,14 @@ import org.apache.spark.sql.functions._
   */
 object WideRnn2 {
   import Rnn2Trainer.{W, G}
-  import WideNet.{Sample, dropMaskLocal, axpy, vadd}
+  import TrainerCommon.Sample
+  import WideNet.{dropMaskLocal, axpy, vadd}
 
   /** FLAT packed weights + transposed copies for the backward pass's
     * column access (the WideLstm2 layout rationale): same doubles, same
     * arithmetic, no nested-array pointer chasing. */
-  private final class Packed(w: W) extends Serializable {
+  private[ml] final class Packed(w: W, T: Int)
+      extends TrainerCommon.Packed {
     val u1: Int = w.u1
     val u2: Int = w.u2
     val kc: Int = w.classes
@@ -84,19 +83,16 @@ object WideRnn2 {
     val wx2TRows: Array[Array[Double]] = rows(wx2T, u1, u2)  // (v)(u)
     val wh2Rows: Array[Array[Double]] = rows(wh2, u2, u2)    // (u)(v)
     val wh2TRows: Array[Array[Double]] = rows(wh2T, u2, u2)  // (v)(u)
-  }
-
-  private final class Layout(p: Packed) extends Serializable {
+    // gradient buffer layout, then the driver's stats tail
     val wx1Off: Int = 0
-    val wh1Off: Int = wx1Off + p.u1
-    val b1Off: Int = wh1Off + p.u1 * p.u1
-    val wx2Off: Int = b1Off + p.u1
-    val wh2Off: Int = wx2Off + p.u2 * p.u1
-    val b2Off: Int = wh2Off + p.u2 * p.u2
-    val w3Off: Int = b2Off + p.u2
-    val b3Off: Int = w3Off + p.kc * p.u2
-    val statsOff: Int = b3Off + p.kc
-    val size: Int = statsOff + 4
+    val wh1Off: Int = wx1Off + u1
+    val b1Off: Int = wh1Off + u1 * u1
+    val wx2Off: Int = b1Off + u1
+    val wh2Off: Int = wx2Off + u2 * u1
+    val b2Off: Int = wh2Off + u2 * u2
+    val w3Off: Int = b2Off + u2
+    val b3Off: Int = w3Off + kc * u2
+    val statsOff: Int = b3Off + kc
   }
 
   /** Per-thread reusable scratch (the WideLstm2 pattern): every array
@@ -141,7 +137,7 @@ object WideRnn2 {
     * reads, and 4-lane unit unrolls (independent accumulator chains);
     * every accumulator's add order is the historical one, so the
     * output is bit-identical (the WideLstm2 rationale). */
-  private def accumulate(s: Sample, p: Packed, ly: Layout, epoch: Int,
+  private def accumulate(s: Sample, p: Packed, epoch: Int,
       dropout: Double, g: Array[Double]): Unit = {
     val T = s.x.length
     val u1 = p.u1; val u2 = p.u2
@@ -214,10 +210,10 @@ object WideRnn2 {
     while (o < p.kc) { denom += math.exp(z3(o) - mx); o += 1 }
     val loss = math.log(denom) + mx - z3(s.y)
     if (s.iv) {
-      g(ly.statsOff + 2) += loss; g(ly.statsOff + 3) += 1.0
+      g(p.statsOff + 2) += loss; g(p.statsOff + 3) += 1.0
       return
     }
-    g(ly.statsOff) += loss; g(ly.statsOff + 1) += 1.0
+    g(p.statsOff) += loss; g(p.statsOff + 1) += 1.0
     val dzo = sc.dzo
     o = 0
     while (o < p.kc) {
@@ -333,185 +329,58 @@ object WideRnn2 {
     }
     var u5 = 0
     while (u5 < u1) {
-      g(ly.wx1Off + u5) += gwx1(u5)
-      g(ly.b1Off + u5) += gb1(u5)
+      g(p.wx1Off + u5) += gwx1(u5)
+      g(p.b1Off + u5) += gb1(u5)
       val grow = gwh1(u5)
-      val gb = ly.wh1Off + u5 * u1
+      val gb = p.wh1Off + u5 * u1
       var v = 0
       while (v < u1) { g(gb + v) += grow(v); v += 1 }
       u5 += 1
     }
     var u6 = 0
     while (u6 < u2) {
-      g(ly.b2Off + u6) += gb2(u6)
+      g(p.b2Off + u6) += gb2(u6)
       val groww = gwx2(u6)
-      val gxb = ly.wx2Off + u6 * u1
+      val gxb = p.wx2Off + u6 * u1
       var v = 0
       while (v < u1) { g(gxb + v) += groww(v); v += 1 }
       val growh = gwh2(u6)
-      val ghb = ly.wh2Off + u6 * u2
+      val ghb = p.wh2Off + u6 * u2
       v = 0
       while (v < u2) { g(ghb + v) += growh(v); v += 1 }
       u6 += 1
     }
     o = 0
     while (o < p.kc) {
-      g(ly.b3Off + o) += dzo(o)
+      g(p.b3Off + o) += dzo(o)
       var v = 0
-      while (v < u2) { g(ly.w3Off + o * u2 + v) += dzo(o) * a2(v); v += 1 }
+      while (v < u2) { g(p.w3Off + o * u2 + v) += dzo(o) * a2(v); v += 1 }
       o += 1
     }
   }
 
-  /** One full-batch pass — the [[Rnn2Trainer.gradientsVal]] contract on
-    * the treeAggregate path. */
-  def gradientsVal(df: DataFrame, xs: Seq[Column], label: Column,
-      rowKey: Column, w: W, epoch: Int, dropout: Double,
-      isVal: Column): (G, Option[Double]) =
-    gradientsValRdd(WideNet.sampleRdd(df, xs, label, rowKey, isVal),
-      w, epoch, dropout)
-
-  /** [[gradientsVal]] over pre-decoded typed rows — the fit loops call
-    * this against ONE cached RDD instead of re-planning/re-decoding a
-    * fresh DataFrame per epoch ([[WideNet.withSamples]]). */
-  private def gradientsValRdd(rows: org.apache.spark.rdd.RDD[Sample],
-      w: W, epoch: Int, dropout: Double): (G, Option[Double]) = {
-    require(dropout >= 0.0 && dropout < 1.0, "dropout in [0, 1)")
-    val spark = org.apache.spark.sql.SparkSession.active
-    val packed = new Packed(w)
-    val ly = new Layout(packed)
-    val bc = spark.sparkContext.broadcast((packed, ly))
-    val g = rows.treeAggregate(new Array[Double](ly.size))(
-      seqOp = (buf, s) => {
-        val (p, l) = bc.value
-        accumulate(s, p, l, epoch, dropout, buf); buf
-      },
-      combOp = (a, b) => {
-        var i = 0
-        while (i < a.length) { a(i) += b(i); i += 1 }
-        a
-      })
-    bc.destroy()
-    val n = g(ly.statsOff + 1)
-    require(n > 0, "WideRnn2.gradients: empty training input")
-    val nVal = g(ly.statsOff + 3)
-    val u1 = packed.u1; val u2 = packed.u2
-    (G(
-      Seq.tabulate(u1)(u => g(ly.wx1Off + u) / n),
-      Seq.tabulate(u1, u1)((u, v) => g(ly.wh1Off + u * u1 + v) / n),
-      Seq.tabulate(u1)(u => g(ly.b1Off + u) / n),
-      Seq.tabulate(u2, u1)((u, v) => g(ly.wx2Off + u * u1 + v) / n),
-      Seq.tabulate(u2, u2)((u, v) => g(ly.wh2Off + u * u2 + v) / n),
-      Seq.tabulate(u2)(u => g(ly.b2Off + u) / n),
-      Seq.tabulate(packed.kc, u2)((o, u) => g(ly.w3Off + o * u2 + u) / n),
-      Seq.tabulate(packed.kc)(o => g(ly.b3Off + o) / n),
-      g(ly.statsOff) / n),
-      if (nVal > 0) Some(g(ly.statsOff + 2) / nVal) else None)
-  }
-
-  /** Mean validation loss at `w` over the val rows ALONE — the trailing
-    * early-stop pass's only consumed number
-    * ([[TrainerCommon.earlyStop]]'s evalPass). Forward-only by
-    * construction ([[accumulate]] early-returns for val rows after the
-    * loss tally) and bit-identical to [[gradientsVal]]'s val output:
-    * narrow filter (same partitions, same in-partition order), val rows
-    * run inference semantics (keep-all masks), same treeAggregate
-    * combine order.
-    *
-    * `dropout` (r17): callers pass the FIT's dropout so the kernel runs
-    * with the argument profile the epochs compiled hot (see
-    * WideNet.valLoss — a fresh dropout constant deoptimizes the inlined
-    * kernel for the whole pass). Pointwise identical for val rows:
-    * iv = true forces every mask to 1.0 regardless of p. */
-  def valLoss(df: DataFrame, xs: Seq[Column], label: Column,
-      rowKey: Column, w: W, isVal: Column, dropout: Double = 0.0): Double =
-    valLossRdd(WideNet.sampleRdd(
-      df.filter(isVal), xs, label, rowKey, lit(true)), w, dropout)
-
-  /** [[valLoss]] over pre-decoded VAL rows (a narrow filter of the
-    * cached fit RDD — same partitions, same order). */
-  private def valLossRdd(rows: org.apache.spark.rdd.RDD[Sample],
-      w: W, dropout: Double): Double = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val packed = new Packed(w)
-    val ly = new Layout(packed)
-    val bc = spark.sparkContext.broadcast((packed, ly))
-    val g = rows.treeAggregate(new Array[Double](ly.size))(
-      seqOp = (buf, s) => {
-        val (p, l) = bc.value
-        accumulate(s, p, l, epoch = 0, dropout, buf); buf
-      },
-      combOp = (a, b) => {
-        var i = 0
-        while (i < a.length) { a(i) += b(i); i += 1 }
-        a
-      })
-    bc.destroy()
-    val nVal = g(ly.statsOff + 3)
-    require(nVal > 0, "WideRnn2.valLoss: empty validation slice")
-    g(ly.statsOff + 2) / nVal
-  }
-
-  /** Full-batch stacked-BPTT GD on the wide path. Decodes the typed
-    * rows once and runs every epoch against the cached RDD
-    * ([[WideNet.withSamples]] — bit-identical, see its note). */
-  def fit(df: DataFrame, xs: Seq[Column], label: Column, w0: W,
-      epochs: Int, lr: Double, rowKey: Column = lit(0L),
-      dropout: Double = 0.0): (W, Seq[Double]) =
-    WideNet.withSamples(df, xs, label, rowKey, lit(false)) { rows =>
-      var w = w0
-      val losses = (1 to epochs).map { e =>
-        val (gr, _) = gradientsValRdd(rows, w, e, dropout)
-        w = Rnn2Trainer.step(w, gr, lr)
-        gr.loss
-      }
-      (w, losses)
+  /** The stacked SimpleRNN kernel; `dropout` is the rate after each
+    * recurrent layer. */
+  final case class Kernel(dropout: Double = 0.0)
+      extends TrainerCommon.Kernel[W, G] {
+    type P = Packed
+    def drops: Seq[Double] = Seq(dropout)
+    def pack(w: W, T: Int): Packed = new Packed(w, T)
+    def accumulate(s: Sample, p: Packed, epoch: Int,
+        g: Array[Double]): Unit =
+      WideRnn2.accumulate(s, p, epoch, dropout, g)
+    def grads(p: Packed, g: Array[Double], n: Double): G = {
+      val u1 = p.u1; val u2 = p.u2
+      G(
+        Seq.tabulate(u1)(u => g(p.wx1Off + u) / n),
+        Seq.tabulate(u1, u1)((u, v) => g(p.wh1Off + u * u1 + v) / n),
+        Seq.tabulate(u1)(u => g(p.b1Off + u) / n),
+        Seq.tabulate(u2, u1)((u, v) => g(p.wx2Off + u * u1 + v) / n),
+        Seq.tabulate(u2, u2)((u, v) => g(p.wh2Off + u * u2 + v) / n),
+        Seq.tabulate(u2)(u => g(p.b2Off + u) / n),
+        Seq.tabulate(p.kc, u2)((o, u) => g(p.w3Off + o * u2 + u) / n),
+        Seq.tabulate(p.kc)(o => g(p.b3Off + o) / n),
+        g(p.statsOff) / n)
     }
-
-  /** [[fit]] under Keras EarlyStopping ([[TrainerCommon.earlyStop]]). */
-  def fitEs(df: DataFrame, xs: Seq[Column], label: Column, w0: W,
-      maxEpochs: Int, lr: Double, rowKey: Column, dropout: Double,
-      isVal: Column, patience: Int = 5): TrainerCommon.EsResult[W] =
-    WideNet.withSamples(df, xs, label, rowKey, isVal) { rows =>
-      val valRows = rows.filter(_.iv)
-      TrainerCommon.earlyStop(w0, maxEpochs, patience,
-          evalPass = Some(wc => valLossRdd(valRows, wc, dropout))) { (w, e) =>
-        val (gr, vl) = gradientsValRdd(rows, w, e, dropout)
-        (Rnn2Trainer.step(w, gr, lr), gr.loss,
-          vl.getOrElse(sys.error("fitEs: empty validation slice")))
-      }
-    }
-
-  /** [[fitEs]] with pluggable optimizer + hash mini-batching
-    * ([[TrainerCommon.batchedEpoch]]); sgd + nBatches=1 reproduces
-    * [[fitEs]]. Full-batch runs on the cached-RDD path; the batched
-    * form keeps per-batch DataFrame filters (membership is a
-    * (keys, epoch) hash — it changes every epoch). */
-  def fitEsOpt(df: DataFrame, xs: Seq[Column], label: Column, w0: W,
-      maxEpochs: Int, opt: TrainerCommon.Optimizer, rowKey: Column,
-      dropout: Double, isVal: Column, patience: Int = 5,
-      batchKeys: Seq[Column] = Nil,
-      nBatches: Int = 1): TrainerCommon.EsResult[W] =
-    if (nBatches == 1)
-      WideNet.withSamples(df, xs, label, rowKey, isVal) { rows =>
-        val valRows = rows.filter(_.iv)
-        TrainerCommon.earlyStop(w0, maxEpochs, patience,
-            evalPass = Some(wc => valLossRdd(valRows, wc, dropout))) { (w, e) =>
-          val (gr, vl) = gradientsValRdd(rows, w, e, dropout)
-          (Rnn2Trainer.applyOpt(w, gr, opt), gr.loss,
-            vl.getOrElse(sys.error("fitEsOpt: empty validation slice")))
-        }
-      }
-    else
-      TrainerCommon.earlyStop(w0, maxEpochs, patience,
-          evalPass = Some(wc => valLoss(df, xs, label, rowKey, wc, isVal, dropout))) {
-        (w, e) =>
-        TrainerCommon.batchedEpoch(df, isVal, batchKeys, nBatches, e, w,
-            evalOnly = e > maxEpochs) {
-          (dfb, ivb, wc) =>
-            val (gr, vl) = gradientsVal(dfb, xs, label, rowKey, wc, e,
-              dropout, ivb)
-            (Rnn2Trainer.applyOpt(wc, gr, opt), gr.loss, vl)
-        }
-      }
+  }
 }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.sources.Tables
-import graft.ml.{Conv2Trainer, ConvNetTrainer, ConvTrainer, GdTrainer, Lstm2Trainer, LstmTrainer, Mlp3Trainer, NeuralForward, Rnn2Trainer, RnnTrainer, SignGd, TrainerCommon, WideConv, WideConv2, WideLstm, WideLstm2, WideMlp, WideMlp3, WideNet, WideRnn, WideRnn2}
+import graft.ml.{Conv2Trainer, ConvNetTrainer, ConvTrainer, GdTrainer, Lstm2Trainer, LstmTrainer, Mlp3Trainer, NeuralForward, Rnn2Trainer, RnnTrainer, SignGd, TrainerCommon, WideConv, WideConv2, WideLstm, WideLstm2, WideMlp3, WideNet, WideRnn, WideRnn2}
 
 /** Oracle-gated fixed-weight neural forward passes (M2/M3 scoring
   * semantics; reference `models/cnn_model.py:21-32` stack shape and
@@ -204,9 +204,9 @@ object NeuralOps {
     try {
       val w0 = ConvNetTrainer.init(T = 22, filters = filters,
         kernel = 3, dense = dense, classes = 2, seed = 41L)
-      val es = WideNet.fitEsOpt(facts, xs, y, w0, maxEpochs = 2,
-        opt = TrainerCommon.Optimizer.adam(0.001), rowKey = rk,
-        dropout = 0.5,
+      val es = TrainerCommon.fitEs(WideNet.Kernel(dropout = 0.5), facts,
+        xs, y, rk, w0, maxEpochs = 2,
+        opt = TrainerCommon.Optimizer.adam(0.001),
         isVal = TrainerCommon.valSplitPortable(
         Seq(col("l_orderkey"), col("l_linenumber"))), patience = 5)
       val ls = es.trainLosses
@@ -594,9 +594,9 @@ object NeuralOps {
         // staged-split idea (exchange before the agg so its method
         // JITs) was probed and measured a NON-WIN — see accOf's
         // scaladoc for the numbers; the fused form stands.
-        val es = WideRnn.fitEsOpt(facts, xs, y, w0, maxEpochs = 3,
-          opt = TrainerCommon.Optimizer.adam(0.001), rowKey = rk,
-          dropout = 0.3,
+        val es = TrainerCommon.fitEs(WideRnn.Kernel(dropout = 0.3), facts,
+          xs, y, rk, w0, maxEpochs = 3,
+          opt = TrainerCommon.Optimizer.adam(0.001),
           isVal = TrainerCommon.valSplitPortable(
             Seq(col("l_orderkey"), col("l_linenumber"))), patience = 5)
         val (lab, fs) = labeled(facts, xs, y)
@@ -637,9 +637,9 @@ object NeuralOps {
         // staged forward DAG exercised end-to-end in this entry.
         // Adam(0.001) — the reference's optimizer (round 13, the q42
         // note)
-        val es = WideRnn2.fitEsOpt(facts, xs.take(6), y, w0,
+        val es = TrainerCommon.fitEs(WideRnn2.Kernel(dropout = 0.3), facts,
+          xs.take(6), y, rk, w0,
           maxEpochs = 2, opt = TrainerCommon.Optimizer.adam(0.001),
-          rowKey = rk, dropout = 0.3,
           isVal = TrainerCommon.valSplitPortable(
             Seq(col("l_orderkey"), col("l_linenumber"))), patience = 5)
         val (lab, fs) = labeled(facts, xs, y)
@@ -675,7 +675,8 @@ object NeuralOps {
         // forward DAG exercised below
         // Adam(0.001) — the reference's optimizer (round 13, the q42
         // note)
-        val (w, losses) = WideLstm.fitOpt(facts, xs.take(5), y, w0,
+        val (w, losses) = TrainerCommon.fit(WideLstm.Kernel, facts,
+          xs.take(5), y, lit(0L), w0,
           epochs = 2, opt = TrainerCommon.Optimizer.adam(0.001))
         val (lab, fs) = labeled(facts, xs, y)
         (losses, accOf(LstmTrainer.predictStaged(
@@ -716,9 +717,9 @@ object NeuralOps {
         // cost; predictStaged keeps the staged forward DAG exercised.
         // Adam(0.001) — the reference's optimizer (round 13, the q42
         // note)
-        val (w, losses) = WideLstm2.fitOpt(facts, xs.take(3), y, w0,
-          epochs = 2, opt = TrainerCommon.Optimizer.adam(0.001),
-          rowKey = rk, dropout = 0.3)
+        val (w, losses) = TrainerCommon.fit(WideLstm2.Kernel(dropout = 0.3),
+          facts, xs.take(3), y, rk, w0,
+          epochs = 2, opt = TrainerCommon.Optimizer.adam(0.001))
         val (lab, fs) = labeled(facts, xs, y)
         (losses, accOf(Lstm2Trainer.predictStaged(
           lab, Seq(col("y")), fs.take(3), w, "pred")))
@@ -765,12 +766,12 @@ object NeuralOps {
         // this scale", matching what 5 Keras epochs on 150 rows under
         // Dropout(.5) can do, not a plan bug. sf0.001 is a smoke
         // scale; the correctness gate runs at sf0.01.
-        val es = WideConv.fitEsOpt(facts, xs, y, w0, maxEpochs = 5,
-          opt = TrainerCommon.Optimizer.adam(0.001), rowKey = rk,
-          dropout = 0.5,
+        val es = TrainerCommon.fitEs(
+          WideConv.Kernel(dropout = 0.5, pool = ConvTrainer.MaxPool),
+          facts, xs, y, rk, w0, maxEpochs = 5,
+          opt = TrainerCommon.Optimizer.adam(0.001),
           isVal = TrainerCommon.valSplitPortable(
-            Seq(col("l_orderkey"), col("l_linenumber"))),
-          pool = ConvTrainer.MaxPool, patience = 5)
+            Seq(col("l_orderkey"), col("l_linenumber"))), patience = 5)
         val (lab, fs) = labeled(facts, xs, y)
         (es.trainLosses, accOf(ConvTrainer.predictStaged(
           lab, Seq(col("y")), fs, es.weights, "pred",
@@ -799,8 +800,9 @@ object NeuralOps {
         // predictStaged below keeps the staged forward exercised
         // Adam(0.001) — the reference's optimizer (round 13, the q42
         // note)
-        val (w, losses) = WideConv2.fitOpt(facts, xs, y, w0,
-          epochs = 3, opt = TrainerCommon.Optimizer.adam(0.001))
+        val (w, losses) = TrainerCommon.fit(WideConv2.Kernel, facts, xs, y,
+          lit(0L), w0, epochs = 3,
+          opt = TrainerCommon.Optimizer.adam(0.001))
         val (lab, fs) = labeled(facts, xs, y)
         (losses, accOf(
           Conv2Trainer.predictStaged(lab, Seq(col("y")), fs, w, "pred")))
@@ -873,9 +875,10 @@ object NeuralOps {
               col("vec_id").as("rk")): _*)
         val feats = (0 until d).map(i => col(s"f$i"))
         val w0 = GdTrainer.init(d, 6, 2, seed = 11L)
-        // fit on the treeAggregate twin (WideMlp — WideSinglesSpec
-        // pins gradients, dropout masks, and the ES trajectory to the
-        // staged plan); GdTrainer.predict below keeps the staged
+        // fit on the depth-1 dense kernel (WideMlp3 at one hidden
+        // layer — WideSinglesSpec pins gradients, dropout masks, and
+        // the ES trajectory to GdTrainer's staged plan, Mlp3Trainer
+        // bridges the weights); GdTrainer.predict below keeps the staged
         // forward expression exercised. Round 13: the reference's
         // ACTUAL optimizer — Adam(learning_rate=0.001), bias-corrected
         // moments as O(params) driver state (`models/mlp_model.py:
@@ -884,12 +887,12 @@ object NeuralOps {
         // sgd step. The batch_size=64 fit semantic runs in
         // q40b_mlp_minibatch (membership itself is oracle-gated by
         // q61b on this exact population).
-        val es = WideMlp.fitEsOpt(emb, feats, col("y"), col("rk"),
-          w0, maxEpochs = 8, opt = TrainerCommon.Optimizer.adam(0.001),
-          dropout = 0.3,
+        val es = TrainerCommon.fitEs(WideMlp3.Kernel(Seq(0.3)), emb, feats,
+          col("y"), col("rk"), Mlp3Trainer.fromMlp(w0), maxEpochs = 8,
+          opt = TrainerCommon.Optimizer.adam(0.001),
           isVal = TrainerCommon.valSplitPortable(Seq(col("rk"))),
           patience = 5)
-        val (w, losses) = (es.weights, es.trainLosses)
+        val (w, losses) = (Mlp3Trainer.toMlp(es.weights), es.trainLosses)
         val acc = emb.select((GdTrainer.predict(feats, w) === col("y"))
           .cast("double").as("ok")).agg(avg("ok")).head().getDouble(0)
         // divergence self-gate: empty output on non-descending loss
@@ -933,9 +936,9 @@ object NeuralOps {
               col("vec_id").as("rk")): _*)
         val feats = (0 until d).map(i => col(s"f$i"))
         val w0 = GdTrainer.init(d, 6, 2, seed = 11L)
-        val es = WideMlp.fitEsOpt(emb, feats, col("y"), col("rk"),
-          w0, maxEpochs = 3, opt = TrainerCommon.Optimizer.adam(0.001),
-          dropout = 0.3,
+        val es = TrainerCommon.fitEs(WideMlp3.Kernel(Seq(0.3)), emb, feats,
+          col("y"), col("rk"), Mlp3Trainer.fromMlp(w0), maxEpochs = 3,
+          opt = TrainerCommon.Optimizer.adam(0.001),
           isVal = TrainerCommon.valSplitPortable(Seq(col("rk"))),
           patience = 5, batchKeys = Seq(col("rk")), nBatches = 4)
         val losses = es.trainLosses
@@ -979,9 +982,10 @@ object NeuralOps {
               col("vec_id").as("rk")): _*)
         val feats = (0 until d).map(i => col(s"f$i"))
         val w0 = Mlp3Trainer.init(d, Seq(256, 128, 64), 2, seed = 53L)
-        gatedEsRows(s, WideMlp3.fitEsOpt(emb, feats, col("y"), col("rk"),
-          w0, maxEpochs = 2, opt = TrainerCommon.Optimizer.adam(0.001),
-          drops = Seq(0.3, 0.3, 0.0),
+        gatedEsRows(s, TrainerCommon.fitEs(
+          WideMlp3.Kernel(Seq(0.3, 0.3, 0.0)), emb, feats, col("y"),
+          col("rk"), w0, maxEpochs = 2,
+          opt = TrainerCommon.Optimizer.adam(0.001),
           isVal = TrainerCommon.valSplitPortable(Seq(col("rk"))),
           patience = 5))
       },
@@ -1009,9 +1013,9 @@ object NeuralOps {
           wx2 = sc(raw.wx2, 1.0 / math.sqrt(64)),
           wh2 = sc(raw.wh2, 1.0 / math.sqrt(128)),
           w3 = sc(raw.w3, 1.0 / math.sqrt(128)))
-        WideRnn2.fitEsOpt(facts, xs, y, wide0, maxEpochs = 2,
-          opt = TrainerCommon.Optimizer.adam(0.001), rowKey = rk,
-          dropout = 0.3, isVal = TrainerCommon.valSplitPortable(
+        TrainerCommon.fitEs(WideRnn2.Kernel(dropout = 0.3), facts, xs, y,
+          rk, wide0, maxEpochs = 2,
+          opt = TrainerCommon.Optimizer.adam(0.001), isVal = TrainerCommon.valSplitPortable(
             Seq(col("l_orderkey"), col("l_linenumber"))), patience = 5)
       },
       None),
@@ -1032,9 +1036,9 @@ object NeuralOps {
       (s, dir) => refSeqTrain(s, dir, mod = 32) { (facts, xs, y, rk) =>
         val wide0 = Lstm2Trainer.init(u1 = 64, u2 = 128, d = 64,
           classes = 2, seed = 47L)
-        WideLstm2.fitEsOpt(facts, xs, y, wide0, maxEpochs = 2,
-          opt = TrainerCommon.Optimizer.adam(0.001), rowKey = rk,
-          dropout = 0.3, isVal = TrainerCommon.valSplitPortable(
+        TrainerCommon.fitEs(WideLstm2.Kernel(dropout = 0.3), facts, xs, y,
+          rk, wide0, maxEpochs = 2,
+          opt = TrainerCommon.Optimizer.adam(0.001), isVal = TrainerCommon.valSplitPortable(
             Seq(col("l_orderkey"), col("l_linenumber"))), patience = 5)
       },
       None),

@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.ml.{ConvNetTrainer, GdTrainer, TrainerCommon, WideMlp, WideNet}
+import graft.ml.{ConvNetTrainer, GdTrainer, Mlp3Trainer, TrainerCommon,
+  WideMlp3, WideNet}
 import graft.ml.TrainerCommon.Optimizer
 
 /** The round-13 optimizer semantics (reference parity:
@@ -93,13 +94,14 @@ class AdamSpec extends AnyFunSuite {
     closeSeq(flatMlp(eo.weights), flatMlp(es.weights), "staged weights")
     closeSeq(eo.trainLosses, es.trainLosses, "staged train losses")
     closeSeq(eo.valLosses, es.valLosses, "staged val losses")
-    val wes = WideMlp.fitEs(df, feats, col("y"), col("rk"), w0,
-      maxEpochs = 3, lr = 0.5, dropout = 0.3, isVal = isVal, patience = 5)
-    val weo = WideMlp.fitEsOpt(df, feats, col("y"), col("rk"), w0,
-      maxEpochs = 3, opt = Optimizer.sgd(0.5), dropout = 0.3,
-      isVal = isVal, patience = 5)
-    closeSeq(flatMlp(weo.weights), flatMlp(wes.weights), "wide weights")
-    closeSeq(weo.trainLosses, wes.trainLosses, "wide train losses")
+    // the driver's sgd fit on the narrow MLP (WideMlp3's kernel at one
+    // hidden layer) against the staged lr fit, the reference
+    val weo = TrainerCommon.fitEs(WideMlp3.Kernel(Seq(0.3)), df, feats,
+      col("y"), col("rk"), Mlp3Trainer.fromMlp(w0), maxEpochs = 3,
+      opt = Optimizer.sgd(0.5), isVal = isVal, patience = 5)
+    closeSeq(flatMlp(Mlp3Trainer.toMlp(weo.weights)), flatMlp(es.weights),
+      "wide weights")
+    closeSeq(weo.trainLosses, es.trainLosses, "wide train losses")
   }
 
   test("hash mini-batches: disjoint, covering, re-drawn per epoch, " +
@@ -144,9 +146,13 @@ class AdamSpec extends AnyFunSuite {
     val staged = run(o => GdTrainer.fitEsOpt(df, feats, col("y"),
       col("rk"), w0, maxEpochs = 6, opt = o, dropout = 0.3, isVal = isVal,
       patience = -1, batchKeys = Seq(col("rk")), nBatches = 2))
-    val wide = run(o => WideMlp.fitEsOpt(df, feats, col("y"),
-      col("rk"), w0, maxEpochs = 6, opt = o, dropout = 0.3, isVal = isVal,
-      patience = -1, batchKeys = Seq(col("rk")), nBatches = 2))
+    val wide = run { o =>
+      val r = TrainerCommon.fitEs(WideMlp3.Kernel(Seq(0.3)), df, feats,
+        col("y"), col("rk"), Mlp3Trainer.fromMlp(w0), maxEpochs = 6,
+        opt = o, isVal = isVal, patience = -1, batchKeys = Seq(col("rk")),
+        nBatches = 2)
+      r.copy(weights = Mlp3Trainer.toMlp(r.weights))
+    }
     // float sums arrive in different orders on the two paths; Adam's
     // sqrt/divide amplifies nothing at these magnitudes
     closeSeq(flatMlp(staged.weights), flatMlp(wide.weights),
@@ -171,18 +177,19 @@ class AdamSpec extends AnyFunSuite {
     val sIsVal = col("rk") % 5 === 0
     val rw0i = RnnTrainer.init(units = 3, classes = 2, seed = 19L)
     val rw0 = rw0i.copy(b = rw0i.b.map(_.abs + 0.1))
-    val es = WideRnn.fitEs(seqDf, xs, col("y"), rw0, maxEpochs = 2,
+    // the driver's sgd fit against the staged lr fit, the reference
+    val es = RnnTrainer.fitEs(seqDf, xs, col("y"), rw0, maxEpochs = 2,
       lr = 0.4, rowKey = col("rk"), dropout = 0.3, isVal = sIsVal,
       patience = 5)
-    val eo = WideRnn.fitEsOpt(seqDf, xs, col("y"), rw0, maxEpochs = 2,
-      opt = Optimizer.sgd(0.4), rowKey = col("rk"), dropout = 0.3,
+    val eo = TrainerCommon.fitEs(WideRnn.Kernel(0.3), seqDf, xs, col("y"),
+      col("rk"), rw0, maxEpochs = 2, opt = Optimizer.sgd(0.4),
       isVal = sIsVal, patience = 5)
     closeSeq(eo.trainLosses, es.trainLosses, "rnn twin train losses")
     closeSeq(eo.valLosses, es.valLosses, "rnn twin val losses")
-    def adamRun() = WideRnn.fitEsOpt(seqDf, xs, col("y"), rw0,
-      maxEpochs = 8, opt = Optimizer.adam(0.05), rowKey = col("rk"),
-      dropout = 0.0, isVal = sIsVal, patience = -1,
-      batchKeys = Seq(col("rk")), nBatches = 2)
+    def adamRun() = TrainerCommon.fitEs(WideRnn.Kernel(), seqDf, xs,
+      col("y"), col("rk"), rw0, maxEpochs = 8, opt = Optimizer.adam(0.05),
+      isVal = sIsVal, patience = -1, batchKeys = Seq(col("rk")),
+      nBatches = 2)
     val a = adamRun()
     assert(a.trainLosses.last < a.trainLosses.head,
       s"rnn loss must descend: ${a.trainLosses.head} -> " +
@@ -206,18 +213,19 @@ class AdamSpec extends AnyFunSuite {
     val sIsVal = col("rk") % 5 === 0
     val nw0 = ConvNetTrainer.init(T = 10, filters = Seq(2, 2), kernel = 3,
       dense = 3, classes = 2, seed = 13L)
-    val es = WideNet.fitEs(seqDf, xs, col("y"), nw0, maxEpochs = 2,
+    // the driver's sgd fit against the staged lr fit, the reference
+    val es = ConvNetTrainer.fitEs(seqDf, xs, col("y"), nw0, maxEpochs = 2,
       lr = 0.5, rowKey = col("rk"), dropout = 0.5, isVal = sIsVal,
       patience = 5)
-    val eo = WideNet.fitEsOpt(seqDf, xs, col("y"), nw0, maxEpochs = 2,
-      opt = Optimizer.sgd(0.5), rowKey = col("rk"), dropout = 0.5,
+    val eo = TrainerCommon.fitEs(WideNet.Kernel(0.5), seqDf, xs, col("y"),
+      col("rk"), nw0, maxEpochs = 2, opt = Optimizer.sgd(0.5),
       isVal = sIsVal, patience = 5)
     closeSeq(flatNet(eo.weights), flatNet(es.weights), "stacked weights")
     closeSeq(eo.trainLosses, es.trainLosses, "stacked train losses")
-    def adamRun() = WideNet.fitEsOpt(seqDf, xs, col("y"), nw0,
-      maxEpochs = 8, opt = Optimizer.adam(0.05), rowKey = col("rk"),
-      dropout = 0.0, isVal = sIsVal, patience = -1,
-      batchKeys = Seq(col("rk")), nBatches = 2)
+    def adamRun() = TrainerCommon.fitEs(WideNet.Kernel(), seqDf, xs,
+      col("y"), col("rk"), nw0, maxEpochs = 8, opt = Optimizer.adam(0.05),
+      isVal = sIsVal, patience = -1, batchKeys = Seq(col("rk")),
+      nBatches = 2)
     val a = adamRun()
     assert(a.trainLosses.last < a.trainLosses.head,
       s"stacked loss must descend: ${a.trainLosses.head} -> " +

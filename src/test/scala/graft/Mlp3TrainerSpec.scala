@@ -111,8 +111,8 @@ class Mlp3TrainerSpec extends AnyFunSuite {
     for (drops <- Seq(Seq(0.0, 0.0, 0.0), refDrops)) {
       val (gs, vs) = Mlp3Trainer.gradientsVal(df, feats, col("y"),
         col("rk"), w0, epoch = 2, drops, iv)
-      val (gw, vw) = WideMlp3.gradientsVal(df, feats, col("y"),
-        col("rk"), w0, epoch = 2, drops, iv)
+      val (gw, vw) = TrainerCommon.gradientsVal(WideMlp3.Kernel(drops), df,
+        feats, col("y"), col("rk"), w0, epoch = 2, iv)
       def flat(g: Mlp3Trainer.G) =
         g.ws.flatMap(_.flatten) ++ g.bs.flatten :+ g.loss
       flat(gs).zip(flat(gw)).zipWithIndex.foreach { case ((a, b), i) =>
@@ -168,9 +168,9 @@ class Mlp3TrainerSpec extends AnyFunSuite {
           col("vec_id").as("rk")): _*)
     val fs: Seq[Column] = (0 until d).map(i => col(s"f$i"))
     val wide0 = Mlp3Trainer.init(d, Seq(256, 128, 64), 2, seed = 53L)
-    val es = WideMlp3.fitEsOpt(emb, fs, col("y"), col("rk"), wide0,
+    val es = TrainerCommon.fitEs(WideMlp3.Kernel(refDrops), emb, fs,
+      col("y"), col("rk"), wide0,
       maxEpochs = 3, opt = TrainerCommon.Optimizer.adam(0.001),
-      drops = refDrops,
       isVal = TrainerCommon.valSplitPortable(Seq(col("rk"))),
       patience = 5)
     assert(es.trainLosses.nonEmpty)

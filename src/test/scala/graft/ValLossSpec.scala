@@ -4,8 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.ml._
 
-/** The r16 trailing-pass optimization's contract: each Wide family's
-  * `valLoss` (forward-only, val-rows-only — what
+/** The r16 trailing-pass optimization's contract: the driver's
+  * [[graft.ml.TrainerCommon.valLoss]] over each family's kernel
+  * (forward-only, val-rows-only — what
   * [[graft.ml.TrainerCommon.earlyStop]]'s evalPass now runs instead of
   * a full discarded gradient pass) returns the SAME number
   * `gradientsVal` reports for the validation slice. Identity is by
@@ -33,70 +34,65 @@ class ValLossSpec extends AnyFunSuite {
   private def assertClose(a: Double, b: Double, what: String): Unit =
     assert(math.abs(a - b) < 1e-9, s"$what: gradientsVal=$a valLoss=$b")
 
+  // The val-only pass runs a zero-dropout kernel against the fit
+  // kernel's val output: val rows keep every unit whatever the rate.
+  private def check[W, G](fitK: TrainerCommon.Kernel[W, G],
+      valK: TrainerCommon.Kernel[W, G], w0: W, epoch: Int,
+      what: String): Unit = {
+    val (_, vl) = TrainerCommon.gradientsVal(fitK, df, xs, col("y"),
+      col("rk"), w0, epoch, isVal)
+    assertClose(vl.get, TrainerCommon.valLoss(valK, df, xs, col("y"),
+      col("rk"), w0, isVal), what)
+  }
+
+  // the narrow MLP: WideMlp3's kernel at one hidden layer
   test("WideMlp.valLoss == gradientsVal's val output") {
     val w0 = GdTrainer.init(d = 5, hidden = 3, classes = 2, seed = 7L)
-    val (_, vl) = WideMlp.gradientsVal(df, xs, col("y"), col("rk"), w0,
-      epoch = 3, dropout = 0.4, isVal)
-    assertClose(vl.get,
-      WideMlp.valLoss(df, xs, col("y"), col("rk"), w0, isVal), "mlp")
+    check(WideMlp3.Kernel(Seq(0.4)), WideMlp3.Kernel(Seq(0.0)),
+      Mlp3Trainer.fromMlp(w0), epoch = 3, "mlp")
   }
 
   test("WideMlp3.valLoss == gradientsVal's val output") {
     val w0 = Mlp3Trainer.init(5, Seq(4, 3, 3), 2, seed = 11L)
-    val (_, vl) = WideMlp3.gradientsVal(df, xs, col("y"), col("rk"), w0,
-      epoch = 2, drops = Seq(0.3, 0.3, 0.0), isVal)
-    assertClose(vl.get,
-      WideMlp3.valLoss(df, xs, col("y"), col("rk"), w0, isVal), "mlp3")
+    check(WideMlp3.Kernel(Seq(0.3, 0.3, 0.0)),
+      WideMlp3.Kernel(Seq(0.0, 0.0, 0.0)), w0, epoch = 2, "mlp3")
   }
 
   test("WideNet.valLoss == gradientsVal's val output") {
     val w0 = ConvNetTrainer.init(T = 5, filters = Seq(2), kernel = 2,
       dense = 3, classes = 2, seed = 13L)
-    val (_, vl) = WideNet.gradientsVal(df, xs, col("y"), col("rk"), w0,
-      epoch = 2, dropout = 0.5, isVal)
-    assertClose(vl.get,
-      WideNet.valLoss(df, xs, col("y"), col("rk"), w0, isVal), "net")
+    check(WideNet.Kernel(0.5), WideNet.Kernel(), w0, epoch = 2, "net")
   }
 
   test("WideRnn.valLoss == gradientsVal's val output") {
     val w0 = RnnTrainer.init(units = 3, classes = 2, seed = 17L)
-    val (_, vl) = WideRnn.gradientsVal(df, xs, col("y"), col("rk"), w0,
-      epoch = 2, dropout = 0.3, isVal)
-    assertClose(vl.get,
-      WideRnn.valLoss(df, xs, col("y"), col("rk"), w0, isVal), "rnn")
+    check(WideRnn.Kernel(0.3), WideRnn.Kernel(), w0, epoch = 2, "rnn")
   }
 
   test("WideRnn2.valLoss == gradientsVal's val output") {
     val w0 = Rnn2Trainer.init(u1 = 2, u2 = 3, classes = 2, seed = 19L)
-    val (_, vl) = WideRnn2.gradientsVal(df, xs, col("y"), col("rk"), w0,
-      epoch = 2, dropout = 0.3, isVal)
-    assertClose(vl.get,
-      WideRnn2.valLoss(df, xs, col("y"), col("rk"), w0, isVal), "rnn2")
+    check(WideRnn2.Kernel(0.3), WideRnn2.Kernel(), w0, epoch = 2, "rnn2")
   }
 
   test("WideConv.valLoss == gradientsVal's val output (max pool)") {
     val w0 = ConvTrainer.init(filters = 2, kernel = 2, classes = 2,
       seed = 23L)
-    val (_, vl) = WideConv.gradientsVal(df, xs, col("y"), col("rk"), w0,
-      epoch = 2, dropout = 0.3, isVal, ConvTrainer.MaxPool)
-    assertClose(vl.get,
-      WideConv.valLoss(df, xs, col("y"), col("rk"), w0, isVal,
-        ConvTrainer.MaxPool), "conv")
+    check(WideConv.Kernel(0.3, ConvTrainer.MaxPool),
+      WideConv.Kernel(0.0, ConvTrainer.MaxPool), w0, epoch = 2, "conv")
   }
 
   test("WideLstm2.valLoss == gradientsVal's val output") {
     val w0 = Lstm2Trainer.init(u1 = 2, u2 = 2, d = 3, classes = 2,
       seed = 31L)
-    val (_, vl) = WideLstm2.gradientsVal(df, xs, col("y"), col("rk"), w0,
-      epoch = 2, dropout = 0.3, isVal)
-    assertClose(vl.get,
-      WideLstm2.valLoss(df, xs, col("y"), col("rk"), w0, isVal), "lstm2")
+    check(WideLstm2.Kernel(0.3), WideLstm2.Kernel(), w0, epoch = 2,
+      "lstm2")
   }
 
   test("valLoss fails loudly on an empty validation slice") {
     val w0 = GdTrainer.init(d = 5, hidden = 3, classes = 2, seed = 7L)
     val e = intercept[Exception] {
-      WideMlp.valLoss(df, xs, col("y"), col("rk"), w0, lit(false))
+      TrainerCommon.valLoss(WideMlp3.Kernel(Seq(0.0)), df, xs, col("y"),
+        col("rk"), Mlp3Trainer.fromMlp(w0), lit(false))
     }
     assert(e.getMessage.contains("empty validation slice"))
   }

@@ -38,6 +38,12 @@ class WideConv2Spec extends AnyFunSuite {
   private def assertClose(a: Double, b: Double, what: String): Unit =
     assert(math.abs(a - b) < 1e-9, s"$what: staged=$a wide=$b")
 
+  private def wide(d: org.apache.spark.sql.DataFrame,
+      cols: Seq[org.apache.spark.sql.Column],
+      w: Conv2Trainer.Conv2Weights): Conv2Trainer.Conv2Grads =
+    TrainerCommon.gradientsVal(WideConv2.Kernel, d, cols, col("y"),
+      lit(0L), w, epoch = 1, isVal = lit(false))._1
+
   private def cmpGrads(gs: Conv2Trainer.Conv2Grads,
       gw: Conv2Trainer.Conv2Grads): Unit = {
     assertClose(gs.loss, gw.loss, "loss")
@@ -57,7 +63,7 @@ class WideConv2Spec extends AnyFunSuite {
     val w0 = Conv2Trainer.init(f1 = 2, f2 = 2, kernel = 3, classes = 2,
       seed = 37L)
     cmpGrads(Conv2Trainer.gradients(df, xs, col("y"), w0),
-      WideConv2.gradients(df, xs, col("y"), w0))
+      wide(df, xs, w0))
   }
 
   test("WideConv2 matches after a step (routing re-decided)") {
@@ -66,7 +72,7 @@ class WideConv2Spec extends AnyFunSuite {
     val (w1s, _) = Conv2Trainer.fit(df, xs, col("y"), w0,
       epochs = 1, lr = 0.5)
     cmpGrads(Conv2Trainer.gradients(df, xs, col("y"), w1s),
-      WideConv2.gradients(df, xs, col("y"), w1s))
+      wide(df, xs, w1s))
   }
 
   test("WideConv2 fit walks the same loss trajectory") {
@@ -74,8 +80,8 @@ class WideConv2Spec extends AnyFunSuite {
       seed = 41L)
     val (ws, ls) = Conv2Trainer.fit(df, xs, col("y"), w0,
       epochs = 3, lr = 0.5)
-    val (ww, lw) = WideConv2.fit(df, xs, col("y"), w0,
-      epochs = 3, lr = 0.5)
+    val (ww, lw) = TrainerCommon.fit(WideConv2.Kernel, df, xs, col("y"),
+      lit(0L), w0, epochs = 3, opt = TrainerCommon.Optimizer.sgd(0.5))
     assert(ls.length == lw.length)
     ls.zip(lw).zipWithIndex.foreach { case ((a, b), e) =>
       assertClose(a, b, s"epoch-${e + 1} loss") }
@@ -99,6 +105,6 @@ class WideConv2Spec extends AnyFunSuite {
     val w0 = Conv2Trainer.init(f1 = 2, f2 = 3, kernel = 3, classes = 2,
       seed = 53L)
     cmpGrads(Conv2Trainer.gradients(d2, xs2, col("y"), w0),
-      WideConv2.gradients(d2, xs2, col("y"), w0))
+      wide(d2, xs2, w0))
   }
 }

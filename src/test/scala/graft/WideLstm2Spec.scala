@@ -37,8 +37,8 @@ class WideLstm2Spec extends AnyFunSuite {
       isVal: org.apache.spark.sql.Column): Unit = {
     val (gs, vs) = Lstm2Trainer.gradientsVal(df, xs, col("y"),
       col("rk"), w0, epoch = 2, dropout, isVal)
-    val (gw, vw) = WideLstm2.gradientsVal(df, xs, col("y"),
-      col("rk"), w0, epoch = 2, dropout, isVal)
+    val (gw, vw) = TrainerCommon.gradientsVal(WideLstm2.Kernel(dropout),
+      df, xs, col("y"), col("rk"), w0, epoch = 2, isVal)
     assertClose(gs.loss, gw.loss, s"loss drop=$dropout")
     (vs, vw) match {
       case (Some(a), Some(b)) => assertClose(a, b, "val loss")
@@ -81,8 +81,9 @@ class WideLstm2Spec extends AnyFunSuite {
     val isVal = TrainerCommon.valSplit(col("rk"), 0.25)
     val es = Lstm2Trainer.fitEs(df, xs, col("y"), w0, maxEpochs = 3,
       lr = 0.5, col("rk"), dropout = 0.3, isVal, patience = 1)
-    val ew = WideLstm2.fitEs(df, xs, col("y"), w0, maxEpochs = 3,
-      lr = 0.5, col("rk"), dropout = 0.3, isVal, patience = 1)
+    val ew = TrainerCommon.fitEs(WideLstm2.Kernel(dropout = 0.3), df, xs,
+      col("y"), col("rk"), w0, maxEpochs = 3,
+      TrainerCommon.Optimizer.sgd(0.5), isVal, patience = 1)
     assert(es.stoppedEpoch == ew.stoppedEpoch &&
       es.bestEpoch == ew.bestEpoch)
     es.trainLosses.zip(ew.trainLosses).foreach { case (a, b) =>
@@ -118,8 +119,9 @@ class WideLstm2Spec extends AnyFunSuite {
         classes = 2, seed = 47L)
       // lr scaled down for the wide stack: a 128-unit layer's summed
       // fan-in makes 0.5 (the toy-width spec rate) overshoot
-      val (_, losses) = WideLstm2.fit(facts, fxs, y, wide0, epochs = 4,
-        lr = 0.02, rowKey = rk, dropout = 0.3)
+      val (_, losses) = TrainerCommon.fit(WideLstm2.Kernel(dropout = 0.3),
+        facts, fxs, y, rk, wide0, epochs = 4,
+        opt = TrainerCommon.Optimizer.sgd(0.02))
       assert(losses.length == 4)
       // each epoch draws a fresh dropout mask, so the full-batch loss
       // is mask-noisy epoch to epoch — require improvement over the

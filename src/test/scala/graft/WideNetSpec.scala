@@ -49,8 +49,8 @@ class WideNetSpec extends AnyFunSuite {
   private def compareGrads(dropout: Double, isVal: org.apache.spark.sql.Column): Unit = {
     val (gs, vs) = ConvNetTrainer.gradientsVal(df, xs, col("y"),
       col("rk"), w0, epoch = 2, dropout, isVal)
-    val (gw, vw) = WideNet.gradientsVal(df, xs, col("y"),
-      col("rk"), w0, epoch = 2, dropout, isVal)
+    val (gw, vw) = TrainerCommon.gradientsVal(WideNet.Kernel(dropout), df,
+      xs, col("y"), col("rk"), w0, epoch = 2, isVal)
     assertClose(gs.loss, gw.loss, s"loss drop=$dropout")
     (vs, vw) match {
       case (Some(a), Some(b)) => assertClose(a, b, "val loss")
@@ -87,8 +87,9 @@ class WideNetSpec extends AnyFunSuite {
     val isVal = TrainerCommon.valSplit(col("rk"), 0.25)
     val es = ConvNetTrainer.fitEs(df, xs, col("y"), w0, maxEpochs = 3,
       lr = 0.5, col("rk"), dropout = 0.3, isVal, patience = 1)
-    val ew = WideNet.fitEs(df, xs, col("y"), w0, maxEpochs = 3,
-      lr = 0.5, col("rk"), dropout = 0.3, isVal, patience = 1)
+    val ew = TrainerCommon.fitEs(WideNet.Kernel(dropout = 0.3), df, xs,
+      col("y"), col("rk"), w0, maxEpochs = 3,
+      TrainerCommon.Optimizer.sgd(0.5), isVal, patience = 1)
     assert(es.stoppedEpoch == ew.stoppedEpoch &&
       es.bestEpoch == ew.bestEpoch)
     es.trainLosses.zip(ew.trainLosses).foreach { case (a, b) =>
@@ -128,8 +129,9 @@ class WideNetSpec extends AnyFunSuite {
       val rk = xxhash64(col("l_orderkey"), col("l_linenumber"))
       val wide0 = ConvNetTrainer.init(T = 22, filters = Seq(32, 64, 128),
         kernel = 3, dense = 128, classes = 2, seed = 41L)
-      val (_, losses) = WideNet.fit(facts, fxs, y, wide0, epochs = 3,
-        lr = 0.05, rowKey = rk, dropout = 0.5)
+      val (_, losses) = TrainerCommon.fit(WideNet.Kernel(dropout = 0.5),
+        facts, fxs, y, rk, wide0, epochs = 3,
+        opt = TrainerCommon.Optimizer.sgd(0.05))
       assert(losses.length == 3)
       assert(losses.last < losses.head,
         s"reference-width loss did not descend: $losses")

@@ -35,8 +35,8 @@ class WideRnn2Spec extends AnyFunSuite {
       isVal: org.apache.spark.sql.Column): Unit = {
     val (gs, vs) = Rnn2Trainer.gradientsVal(df, xs, col("y"),
       col("rk"), w0, epoch = 2, dropout, isVal)
-    val (gw, vw) = WideRnn2.gradientsVal(df, xs, col("y"),
-      col("rk"), w0, epoch = 2, dropout, isVal)
+    val (gw, vw) = TrainerCommon.gradientsVal(WideRnn2.Kernel(dropout), df,
+      xs, col("y"), col("rk"), w0, epoch = 2, isVal)
     assertClose(gs.loss, gw.loss, s"loss drop=$dropout")
     (vs, vw) match {
       case (Some(a), Some(b)) => assertClose(a, b, "val loss")
@@ -100,8 +100,9 @@ class WideRnn2Spec extends AnyFunSuite {
       // fan-in-scaled lr (the WideLstm2Spec note); fresh dropout mask
       // per epoch makes the loss mask-noisy, so require improvement
       // over the start, not monotonicity
-      val (_, losses) = WideRnn2.fit(facts, fxs, y, wide0, epochs = 6,
-        lr = 0.1, rowKey = rk, dropout = 0.3)
+      val (_, losses) = TrainerCommon.fit(WideRnn2.Kernel(dropout = 0.3),
+        facts, fxs, y, rk, wide0, epochs = 6,
+        opt = TrainerCommon.Optimizer.sgd(0.1))
       assert(losses.length == 6)
       assert(losses.tail.min < losses.head,
         s"reference-width loss did not descend: $losses")

@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
 import graft.ml._
 
-/** Equivalence gates for the SINGLE-LAYER wide twins (WideMlp /
-  * WideRnn / WideConv / WideLstm): at widths where the staged plan is
-  * tractable, each twin must reproduce its staged trainer's gradients,
+/** Equivalence gates for the SINGLE-LAYER wide kernels (WideMlp3 at
+  * one hidden layer / WideRnn / WideConv / WideLstm) run through the
+  * [[graft.ml.TrainerCommon]] driver: at widths where the staged plan
+  * is tractable, each kernel must reproduce its staged trainer's gradients,
   * losses, dropout masks, and val-slice semantics number for number —
   * the same obligation WideNetSpec/WideRnn2Spec/WideLstm2Spec pin for
   * the stacked family. These specs are what entitle the q40/q42/q43/
@@ -52,18 +53,19 @@ class WideSinglesSpec extends AnyFunSuite {
   private def cmpV(a: Seq[Double], b: Seq[Double], what: String): Unit =
     for (i <- a.indices) assertClose(a(i), b(i), s"$what $i")
 
-  // ---- MLP (GdTrainer <-> WideMlp) ----
+  // ---- MLP (GdTrainer <-> WideMlp3's kernel at one hidden layer, the
+  // narrow MLP q40/q40b run; the test names keep its "WideMlp" label) ----
 
   private def cmpMlp(dropout: Double, iv: Column): Unit = {
     val w0 = GdTrainer.init(T, hidden = 4, classes = 2, seed = 11L)
     val (gs, vs) = GdTrainer.gradientsVal(df, xs, col("y"), col("rk"),
       w0, epoch = 2, dropout, iv)
-    val (gw, vw) = WideMlp.gradientsVal(df, xs, col("y"), col("rk"),
-      w0, epoch = 2, dropout, iv)
+    val (gw, vw) = TrainerCommon.gradientsVal(WideMlp3.Kernel(Seq(dropout)),
+      df, xs, col("y"), col("rk"), Mlp3Trainer.fromMlp(w0), epoch = 2, iv)
     assertClose(gs.loss, gw.loss, s"mlp loss drop=$dropout")
     assertVal(vs, vw)
-    cmpM(gs.w1, gw.w1, "w1"); cmpV(gs.b1, gw.b1, "b1")
-    cmpM(gs.w2, gw.w2, "w2"); cmpV(gs.b2, gw.b2, "b2")
+    cmpM(gs.w1, gw.ws(0), "w1"); cmpV(gs.b1, gw.bs(0), "b1")
+    cmpM(gs.w2, gw.ws(1), "w2"); cmpV(gs.b2, gw.bs(1), "b2")
   }
 
   test("WideMlp matches GdTrainer gradients (no dropout)") {
@@ -76,8 +78,9 @@ class WideSinglesSpec extends AnyFunSuite {
     val w0 = GdTrainer.init(T, hidden = 4, classes = 2, seed = 11L)
     val es = GdTrainer.fitEs(df, xs, col("y"), col("rk"), w0,
       maxEpochs = 3, lr = 0.5, dropout = 0.3, isVal, patience = 1)
-    val ew = WideMlp.fitEs(df, xs, col("y"), col("rk"), w0,
-      maxEpochs = 3, lr = 0.5, dropout = 0.3, isVal, patience = 1)
+    val ew = TrainerCommon.fitEs(WideMlp3.Kernel(Seq(0.3)), df, xs,
+      col("y"), col("rk"), Mlp3Trainer.fromMlp(w0), maxEpochs = 3,
+      TrainerCommon.Optimizer.sgd(0.5), isVal, patience = 1)
     assert(es.stoppedEpoch == ew.stoppedEpoch &&
       es.bestEpoch == ew.bestEpoch)
     es.trainLosses.zip(ew.trainLosses).foreach { case (a, b) =>
@@ -92,8 +95,8 @@ class WideSinglesSpec extends AnyFunSuite {
     val w0 = RnnTrainer.init(units = 3, classes = 2, seed = 17L)
     val (gs, vs) = RnnTrainer.gradientsVal(df, xs, col("y"), col("rk"),
       w0, epoch = 2, dropout, iv)
-    val (gw, vw) = WideRnn.gradientsVal(df, xs, col("y"), col("rk"),
-      w0, epoch = 2, dropout, iv)
+    val (gw, vw) = TrainerCommon.gradientsVal(WideRnn.Kernel(dropout), df,
+      xs, col("y"), col("rk"), w0, epoch = 2, iv)
     assertClose(gs.loss, gw.loss, s"rnn loss drop=$dropout")
     assertVal(vs, vw)
     cmpV(gs.wx, gw.wx, "wx"); cmpM(gs.wh, gw.wh, "wh")
@@ -117,8 +120,8 @@ class WideSinglesSpec extends AnyFunSuite {
     val w0 = w0i.copy(b = w0i.b.map(_.abs + 0.1))
     val (gs, vs) = ConvTrainer.gradientsVal(df, xs, col("y"), col("rk"),
       w0, epoch = 2, dropout, iv, pool)
-    val (gw, vw) = WideConv.gradientsVal(df, xs, col("y"), col("rk"),
-      w0, epoch = 2, dropout, iv, pool)
+    val (gw, vw) = TrainerCommon.gradientsVal(WideConv.Kernel(dropout, pool),
+      df, xs, col("y"), col("rk"), w0, epoch = 2, iv)
     assertClose(gs.loss, gw.loss, s"conv loss drop=$dropout pool=$pool")
     assertVal(vs, vw)
     cmpM(gs.w, gw.w, s"w $pool"); cmpV(gs.b, gw.b, s"b $pool")
@@ -137,7 +140,8 @@ class WideSinglesSpec extends AnyFunSuite {
   test("WideLstm matches LstmTrainer gradients (all 14 tensors)") {
     val w0 = LstmTrainer.init(units = 2, classes = 2, seed = 29L)
     val gs = LstmTrainer.gradients(df, xs, col("y"), w0)
-    val gw = WideLstm.gradients(df, xs, col("y"), w0)
+    val (gw, _) = TrainerCommon.gradientsVal(WideLstm.Kernel, df, xs,
+      col("y"), lit(0L), w0, epoch = 1, lit(false))
     assertClose(gs.loss, gw.loss, "lstm loss")
     def cmpGate(a: LstmTrainer.GateW, b: LstmTrainer.GateW,
         x: String): Unit = {
@@ -153,8 +157,8 @@ class WideSinglesSpec extends AnyFunSuite {
     val w0 = LstmTrainer.init(units = 2, classes = 2, seed = 29L)
     val (_, ls) = LstmTrainer.fit(df, xs, col("y"), w0, epochs = 2,
       lr = 0.5)
-    val (_, lw) = WideLstm.fit(df, xs, col("y"), w0, epochs = 2,
-      lr = 0.5)
+    val (_, lw) = TrainerCommon.fit(WideLstm.Kernel, df, xs, col("y"),
+      lit(0L), w0, epochs = 2, opt = TrainerCommon.Optimizer.sgd(0.5))
     ls.zip(lw).foreach { case (a, b) => assertClose(a, b, "loss") }
   }
 }

@@ -46,7 +46,7 @@ class OptimizerStepSpec extends AnyFunSuite {
     val gr = Rnn2Trainer.G(g0.wx1, g0.wh1, g0.b1, g0.wx2, g0.wh2,
       g0.b2, g0.w3, g0.b3, 0.5)
     assert(Rnn2Trainer.applyOpt(w, gr, Optimizer.sgd(lr)) ==
-      Rnn2Trainer.step(w, gr, lr))
+      Rnn2Trainer.applyStep(w, gr, lr))
   }
 
   test("LSTM: sgd applyOpt == applyStep through the 14-tensor gate tree") {
@@ -67,7 +67,7 @@ class OptimizerStepSpec extends AnyFunSuite {
     val gr = Lstm2Trainer.G(g0.l1, g0.l2, g0.wd, g0.bd, g0.w3, g0.b3,
       0.5)
     assert(Lstm2Trainer.applyOpt(w, gr, Optimizer.sgd(lr)) ==
-      Lstm2Trainer.step(w, gr, lr))
+      Lstm2Trainer.applyStep(w, gr, lr))
     // walker really visits the gates: Adam must move every gate tensor
     val a = Lstm2Trainer.applyOpt(w, gr, Optimizer.adam(0.01))
     Seq("i", "f", "g", "o").foreach { x =>
@@ -104,7 +104,7 @@ class OptimizerStepSpec extends AnyFunSuite {
     val gr = ConvNetTrainer.NetGrads(g0.convW, g0.convB, g0.denseW,
       g0.denseB, g0.headW, g0.headB, 0.5)
     assert(ConvNetTrainer.applyOpt(w, gr, Optimizer.sgd(lr)) ==
-      ConvNetTrainer.step(w, gr, lr))
+      ConvNetTrainer.applyStep(w, gr, lr))
   }
 
   test("walker error modes: shape mismatch and wrong delta count fail " +
