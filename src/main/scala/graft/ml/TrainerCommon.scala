@@ -222,14 +222,19 @@ object TrainerCommon {
       * order. Case classes are reconstructed through their primary
       * constructor (arity-matched), so shape `require`s re-validate. */
     def subDeltas[W0](w: W0, dd: Array[Double]): W0 = {
-      // upfront count check (w walked as its own grads) so a wrong-size
-      // delta array fails with a clear message, not an index error
-      require(dd.length == flatLike(w, w).length,
-        s"optimizer produced ${dd.length} deltas for a " +
-          s"${flatLike(w, w).length}-coordinate weights tree")
+      // the delta count is checked DURING the rebuild (too short: at the
+      // first missing delta; too long: after the walk), so a wrong-size
+      // array fails with a clear message, not an index error, without a
+      // second walk of the tree on every step; only the failure message
+      // walks `w` to count its coordinates
+      def countMsg = s"optimizer produced ${dd.length} deltas for a " +
+        s"${flatLike(w, w).length}-coordinate weights tree"
       var i = -1
       def rec(a: Any): Any = a match {
-        case d: Double => i += 1; d - dd(i)
+        case d: Double =>
+          i += 1
+          require(i < dd.length, countMsg)
+          d - dd(i)
         case s: Seq[_] => s.map(rec)
         case m: Map[_, _] =>
           // same SORTED key order as flatLike's walk
@@ -247,7 +252,9 @@ object TrainerCommon {
         case other => throw new IllegalArgumentException(
           s"unsupported tensor node: $other")
       }
-      rec(w).asInstanceOf[W0]
+      val out = rec(w).asInstanceOf[W0]
+      require(i + 1 == dd.length, countMsg)
+      out
     }
 
     /** One optimizer step for ANY trainer family: flatten the mean

@@ -19,7 +19,8 @@ package graft.ml
 object WideLstm2 {
   import Lstm2Trainer.{W, G, Gate1, Gate2}
   import TrainerCommon.Sample
-  import WideNet.{dropMaskLocal, axpy, vadd}
+  import WideNet.{axpy, backDot, denseDot, denseGrad, dropMaskLocal,
+    flushRows, matvecRows, rank1Rows, softmaxCE, vadd, zeroRows}
 
   private val Gates = Array("i", "f", "g", "o")
 
@@ -180,8 +181,8 @@ object WideLstm2 {
     val dc2 = new Array[Double]((T + 2) * u2)
     // 0-based daxpy operands (see Packed's rows note)
     private val um = math.max(u1, u2)
-    val acc0 = new Array[Double](um); val acc1 = new Array[Double](um)
-    val acc2 = new Array[Double](um); val acc3 = new Array[Double](um)
+    val accs: Array[Array[Double]] =       // gate accumulators, i/f/g/o
+      Array.fill(4)(new Array[Double](um))
     val bacc = new Array[Double](um)       // backward dh accumulator
     val h1p = new Array[Double](u1); val a1c = new Array[Double](u1)
     val h2p = new Array[Double](u2)
@@ -210,352 +211,261 @@ object WideLstm2 {
     * [[Lstm2Trainer.gradientsVal]]. Every accumulator's ADD ORDER is
     * the historical one (flat/transposed layouts change where a double
     * lives, never the sequence of additions into any sum), so gradients
-    * and losses are bit-identical to the nested-array form. */
+    * and losses are bit-identical to the nested-array form. A short
+    * driver over per-timestep, per-layer forward and backward steps and
+    * a per-timestep gradient step, each compiled within the first rows
+    * of a cold fit (the WideNet.accumulate note; WideKernelShapeSpec).
+    * Forward state is flat (t)*u+i with t in 1..T; the t = 0 rows are
+    * the zero init (see Scratch's reuse contract). */
   private def accumulate(s: Sample, p: Packed, epoch: Int,
       dropout: Double, g: Array[Double]): Unit = {
     val T = s.x.length
-    val u1 = p.u1; val u2 = p.u2
-    // forward state, flat (t)*u+i; t index 1..T, 0 = zero init (the
-    // t = 0 rows are zero in a fresh Scratch and never written — see
-    // Scratch's reuse contract)
     val sc = scratchFor(T, p)
-    val i1 = sc.i1; val f1 = sc.f1; val g1 = sc.g1; val o1 = sc.o1
-    val c1 = sc.c1; val tc1 = sc.tc1; val h1 = sc.h1; val a1 = sc.a1
-    val i2 = sc.i2; val f2 = sc.f2; val g2 = sc.g2; val o2 = sc.o2
-    val c2 = sc.c2; val tc2 = sc.tc2; val h2 = sc.h2
-    val m1v = sc.m1v
-    // The four gates' pre-activations accumulate v-major as daxpy over
-    // 0-based rows: per accumulator (gate, u) the adds land v-ascending
-    // from the bias init — the dot form's exact order — but the vector
-    // dimension is now the INDEPENDENT unit index u, the one shape
-    // SuperWord vectorizes (see Packed's rows note).
-    val ai = sc.acc0; val af = sc.acc1; val ag = sc.acc2; val ao = sc.acc3
-    val wx1R0 = p.wx1R(0); val wx1R1 = p.wx1R(1)
-    val wx1R2 = p.wx1R(2); val wx1R3 = p.wx1R(3)
-    val b1R0 = p.b1R(0); val b1R1 = p.b1R(1)
-    val b1R2 = p.b1R(2); val b1R3 = p.b1R(3)
     var t = 1
     while (t <= T) {
-      val xt = s.x(t - 1)
-      val rp = t * u1; val rm = (t - 1) * u1
-      var u = 0
-      while (u < u1) { ai(u) = xt * wx1R0(u) + b1R0(u); u += 1 }
-      u = 0
-      while (u < u1) { af(u) = xt * wx1R1(u) + b1R1(u); u += 1 }
-      u = 0
-      while (u < u1) { ag(u) = xt * wx1R2(u) + b1R2(u); u += 1 }
-      u = 0
-      while (u < u1) { ao(u) = xt * wx1R3(u) + b1R3(u); u += 1 }
-      var v = 0
-      while (v < u1) {
-        val hv = h1(rm + v)
-        axpy(ai, hv, p.uu1TRows(v), u1)
-        axpy(af, hv, p.uu1TRows(u1 + v), u1)
-        axpy(ag, hv, p.uu1TRows(2 * u1 + v), u1)
-        axpy(ao, hv, p.uu1TRows(3 * u1 + v), u1)
-        v += 1
-      }
-      u = 0
-      while (u < u1) {
-        i1(rp + u) = sigm(ai(u)); f1(rp + u) = sigm(af(u))
-        g1(rp + u) = math.tanh(ag(u)); o1(rp + u) = sigm(ao(u))
-        c1(rp + u) = f1(rp + u) * c1(rm + u) + i1(rp + u) * g1(rp + u)
-        tc1(rp + u) = math.tanh(c1(rp + u))
-        h1(rp + u) = o1(rp + u) * tc1(rp + u)
-        m1v(rp + u) = dropMaskLocal(s.iv, s.rk, epoch, (t - 1) * u1 + u,
-          dropout)
-        a1(rp + u) = h1(rp + u) * m1v(rp + u)
-        u += 1
-      }
-      val qp = t * u2; val qm = (t - 1) * u2
-      System.arraycopy(p.b2R(0), 0, ai, 0, u2)
-      System.arraycopy(p.b2R(1), 0, af, 0, u2)
-      System.arraycopy(p.b2R(2), 0, ag, 0, u2)
-      System.arraycopy(p.b2R(3), 0, ao, 0, u2)
-      v = 0
-      while (v < u1) {
-        val av = a1(rp + v)
-        axpy(ai, av, p.wx2TRows(v), u2)
-        axpy(af, av, p.wx2TRows(u1 + v), u2)
-        axpy(ag, av, p.wx2TRows(2 * u1 + v), u2)
-        axpy(ao, av, p.wx2TRows(3 * u1 + v), u2)
-        v += 1
-      }
-      v = 0
-      while (v < u2) {
-        val hv = h2(qm + v)
-        axpy(ai, hv, p.uu2TRows(v), u2)
-        axpy(af, hv, p.uu2TRows(u2 + v), u2)
-        axpy(ag, hv, p.uu2TRows(2 * u2 + v), u2)
-        axpy(ao, hv, p.uu2TRows(3 * u2 + v), u2)
-        v += 1
-      }
-      u = 0
-      while (u < u2) {
-        i2(qp + u) = sigm(ai(u)); f2(qp + u) = sigm(af(u))
-        g2(qp + u) = math.tanh(ag(u)); o2(qp + u) = sigm(ao(u))
-        c2(qp + u) = f2(qp + u) * c2(qm + u) + i2(qp + u) * g2(qp + u)
-        tc2(qp + u) = math.tanh(c2(qp + u))
-        h2(qp + u) = o2(qp + u) * tc2(qp + u)
-        u += 1
-      }
+      forward1(s, p, sc, t, epoch, dropout)
+      forward2(p, sc, t)
       t += 1
     }
-    // head: dropped h2_T -> relu Dense(d) -> softmax
-    val m2v = sc.m2v
-    val a2 = sc.a2
-    var u = 0
-    while (u < u2) {
-      m2v(u) = dropMaskLocal(s.iv, s.rk, epoch, T * u1 + u, dropout)
-      a2(u) = h2(T * u2 + u) * m2v(u); u += 1
-    }
-    val zd = sc.zd
-    val ad = sc.ad
-    System.arraycopy(p.bd, 0, zd, 0, p.d)
-    var v1 = 0
-    while (v1 < u2) {
-      axpy(zd, a2(v1), p.wdTRows(v1), p.d)
-      v1 += 1
-    }
-    var j = 0
-    while (j < p.d) { ad(j) = if (zd(j) > 0) zd(j) else 0.0; j += 1 }
-    val z3 = sc.z3
-    var o = 0
-    while (o < p.kc) {
-      var acc = p.b3(o)
-      val wb = o * p.d
-      var j2 = 0
-      while (j2 < p.d) { acc += ad(j2) * p.w3(wb + j2); j2 += 1 }
-      z3(o) = acc; o += 1
-    }
-    var mx = z3(0); o = 1
-    while (o < p.kc) { if (z3(o) > mx) mx = z3(o); o += 1 }
-    var denom = 0.0; o = 0
-    while (o < p.kc) { denom += math.exp(z3(o) - mx); o += 1 }
-    val loss = math.log(denom) + mx - z3(s.y)
+    val loss = head(s, p, sc, T, epoch, dropout)
     if (s.iv) {
       g(p.statsOff + 2) += loss; g(p.statsOff + 3) += 1.0
       return
     }
     g(p.statsOff) += loss; g(p.statsOff + 1) += 1.0
-    val dzo = sc.dzo
-    o = 0
-    while (o < p.kc) {
-      dzo(o) = math.exp(z3(o) - mx) / denom - (if (s.y == o) 1.0 else 0.0)
-      o += 1
-    }
-    val dzd = sc.dzd
-    j = 0
+    backDot(sc.dzd, sc.dzo, p.w3T, p.kc, p.d)
+    var j = 0
     while (j < p.d) {
-      var acc = 0.0
-      val wb = j * p.kc
-      o = 0
-      while (o < p.kc) { acc += dzo(o) * p.w3T(wb + o); o += 1 }
-      dzd(j) = acc * (if (zd(j) > 0) 1.0 else 0.0); j += 1
+      sc.dzd(j) = sc.dzd(j) * (if (sc.zd(j) > 0) 1.0 else 0.0); j += 1
     }
-    // backward through time; dz flat ((x)*(T+1)+t)*u+i
-    val dz1 = sc.dz1
-    val dz2 = sc.dz2
-    val dc1 = sc.dc1
-    val dc2 = sc.dc2
-    // Backward: the per-unit upstream sums (dh2, da1/dh1) run 4 units
-    // per pass — four independent accumulator chains sharing one read
-    // of the dz stream; each unit's adds keep their historical order.
     t = T
     while (t >= 1) {
-      // snapshot the loop var: the nested tail defs must capture a val,
-      // not the mutable `t` (a captured var boxes to IntRef and every
-      // access in the method pays a heap deref)
-      val ti = t
-      val qp = ti * u2; val qm = (ti - 1) * u2
-      def dz2Tail(u3: Int, dh2: Double): Unit = {
-        val local = dh2 * o2(qp + u3) * (1.0 - tc2(qp + u3) * tc2(qp + u3))
-        val dc = if (ti == T) local
-          else local + dc2((ti + 1) * u2 + u3) * f2((ti + 1) * u2 + u3)
-        dc2(ti * u2 + u3) = dc
-        dz2((0 * (T + 1) + ti) * u2 + u3) =
-          dc * g2(qp + u3) * i2(qp + u3) * (1.0 - i2(qp + u3))
-        dz2((1 * (T + 1) + ti) * u2 + u3) =
-          dc * c2(qm + u3) * f2(qp + u3) * (1.0 - f2(qp + u3))
-        dz2((2 * (T + 1) + ti) * u2 + u3) =
-          dc * i2(qp + u3) * (1.0 - g2(qp + u3) * g2(qp + u3))
-        dz2((3 * (T + 1) + ti) * u2 + u3) =
-          dh2 * tc2(qp + u3) * o2(qp + u3) * (1.0 - o2(qp + u3))
-      }
-      // dh2 as a daxpy over 0-based natural rows; per unit u3 the adds
-      // land in the dot form's order (ti == T: j2-ascending; else x
-      // then v ascending); the elementwise tails run after, u3-ascending
-      // as before (tails only read t+1 state, never this t's).
-      val bacc = sc.bacc
-      java.util.Arrays.fill(bacc, 0, u2, 0.0)
-      if (ti == T) {
-        var j2 = 0
-        while (j2 < p.d) {
-          axpy(bacc, dzd(j2), p.wdRows(j2), u2)
-          j2 += 1
-        }
-        var u3 = 0
-        while (u3 < u2) { dz2Tail(u3, bacc(u3) * m2v(u3)); u3 += 1 }
-      } else {
-        var x = 0
-        while (x < 4) {
-          val db = (x * (T + 1) + (ti + 1)) * u2
-          val xb = x * u2
-          var v = 0
-          while (v < u2) {
-            axpy(bacc, dz2(db + v), p.uu2Rows(xb + v), u2)
-            v += 1
-          }
-          x += 1
-        }
-        var u3 = 0
-        while (u3 < u2) { dz2Tail(u3, bacc(u3)); u3 += 1 }
-      }
-      val rp = ti * u1; val rm = (ti - 1) * u1
-      def dz1Tail(u4: Int, dh1: Double): Unit = {
-        val local = dh1 * o1(rp + u4) * (1.0 - tc1(rp + u4) * tc1(rp + u4))
-        val dc = if (ti == T) local
-          else local + dc1((ti + 1) * u1 + u4) * f1((ti + 1) * u1 + u4)
-        dc1(ti * u1 + u4) = dc
-        dz1((0 * (T + 1) + ti) * u1 + u4) =
-          dc * g1(rp + u4) * i1(rp + u4) * (1.0 - i1(rp + u4))
-        dz1((1 * (T + 1) + ti) * u1 + u4) =
-          dc * c1(rm + u4) * f1(rp + u4) * (1.0 - f1(rp + u4))
-        dz1((2 * (T + 1) + ti) * u1 + u4) =
-          dc * i1(rp + u4) * (1.0 - g1(rp + u4) * g1(rp + u4))
-        dz1((3 * (T + 1) + ti) * u1 + u4) =
-          dh1 * tc1(rp + u4) * o1(rp + u4) * (1.0 - o1(rp + u4))
-      }
-      // dh1 likewise: wx2 part (x, v ascending), then the mask, then
-      // the uu1 recurrent part (x, v ascending) — the dot form's exact
-      // per-unit order, daxpy'd over natural rows.
-      val dacc = sc.acc0
-      java.util.Arrays.fill(dacc, 0, u1, 0.0)
-      var x3 = 0
-      while (x3 < 4) {
-        val db = (x3 * (T + 1) + ti) * u2
-        val xb = x3 * u2
-        var v = 0
-        while (v < u2) {
-          axpy(dacc, dz2(db + v), p.wx2Rows(xb + v), u1)
-          v += 1
-        }
-        x3 += 1
-      }
-      var u4 = 0
-      while (u4 < u1) { dacc(u4) *= m1v(rp + u4); u4 += 1 }
-      if (ti < T) {
-        var x2 = 0
-        while (x2 < 4) {
-          val db = (x2 * (T + 1) + (ti + 1)) * u1
-          val xb = x2 * u1
-          var v = 0
-          while (v < u1) {
-            axpy(dacc, dz1(db + v), p.uu1Rows(xb + v), u1)
-            v += 1
-          }
-          x2 += 1
-        }
-      }
-      u4 = 0
-      while (u4 < u1) { dz1Tail(u4, dacc(u4)); u4 += 1 }
+      backward2(p, sc, t, T)
+      backward1(p, sc, t, T)
       t -= 1
     }
-    // gradient accumulation (sum over t; mean over rows happens at the
-    // end), t-major: per t the dz row and the state rows it multiplies
-    // are contiguous 0-based slices, so every weight-gradient loop is a
-    // daxpy over the per-row scratch sums. Per element the adds land
-    // t-ascending and the finished sum lands in `g` as ONE add — both
-    // exactly the dot form's behavior.
-    val gwx1 = sc.gwx1; val gb1 = sc.gb1; val gb2 = sc.gb2
-    val guu1 = sc.guu1; val gwx2 = sc.gwx2; val guu2 = sc.guu2
+    clearSums(p, sc)
+    t = 1
+    while (t <= T) { gradStep(s, p, sc, t, T); t += 1 }
+    flush(p, sc, g)
+  }
+
+  /** The gate cell at timestep `t` from the four gate pre-activations in
+    * `sc.accs`: writes i/f/g/o, c, tanh(c) and h at row `t` of the
+    * given layer's state (width `n`). */
+  private def cell(sc: Scratch, n: Int, t: Int, i: Array[Double],
+      f: Array[Double], gg: Array[Double], o: Array[Double],
+      c: Array[Double], tc: Array[Double], h: Array[Double]): Unit = {
+    val ai = sc.accs(0); val af = sc.accs(1)
+    val ag = sc.accs(2); val ao = sc.accs(3)
+    val rp = t * n; val rm = (t - 1) * n
+    var u = 0
+    while (u < n) {
+      i(rp + u) = sigm(ai(u)); f(rp + u) = sigm(af(u))
+      gg(rp + u) = math.tanh(ag(u)); o(rp + u) = sigm(ao(u))
+      c(rp + u) = f(rp + u) * c(rm + u) + i(rp + u) * gg(rp + u)
+      tc(rp + u) = math.tanh(c(rp + u))
+      h(rp + u) = o(rp + u) * tc(rp + u)
+      u += 1
+    }
+  }
+
+  /** Layer 1 at timestep `t`, then its dropout. The gates'
+    * pre-activations accumulate v-major as daxpy over 0-based rows: per
+    * accumulator (gate, u) the adds land v-ascending from the bias init
+    * — the dot form's exact order — with the INDEPENDENT unit index u as
+    * the vector dimension, the one shape SuperWord vectorizes (see
+    * Packed's rows note). */
+  private def forward1(s: Sample, p: Packed, sc: Scratch, t: Int,
+      epoch: Int, dropout: Double): Unit = {
+    val u1 = p.u1
+    val xt = s.x(t - 1)
     var x = 0
     while (x < 4) {
-      java.util.Arrays.fill(gwx1(x), 0, u1, 0.0)
-      java.util.Arrays.fill(gb1(x), 0, u1, 0.0)
-      java.util.Arrays.fill(gb2(x), 0, u2, 0.0)
-      var r = 0
-      while (r < u1) { java.util.Arrays.fill(guu1(x * u1 + r), 0, u1, 0.0); r += 1 }
-      r = 0
-      while (r < u2) {
-        java.util.Arrays.fill(gwx2(x * u2 + r), 0, u1, 0.0)
-        java.util.Arrays.fill(guu2(x * u2 + r), 0, u2, 0.0)
-        r += 1
-      }
+      val acc = sc.accs(x); val wr = p.wx1R(x); val br = p.b1R(x)
+      var u = 0
+      while (u < u1) { acc(u) = xt * wr(u) + br(u); u += 1 }
+      matvecRows(acc, sc.h1, (t - 1) * u1, p.uu1TRows, x * u1, u1, u1)
       x += 1
     }
-    val h1p = sc.h1p; val a1c = sc.a1c; val h2p = sc.h2p
-    val dzr1 = sc.dzr1; val dzr2 = sc.dzr2
-    var t2 = 1
-    while (t2 <= T) {
-      val xt = s.x(t2 - 1)
-      System.arraycopy(h1, (t2 - 1) * u1, h1p, 0, u1)
-      System.arraycopy(a1, t2 * u1, a1c, 0, u1)
-      System.arraycopy(h2, (t2 - 1) * u2, h2p, 0, u2)
-      x = 0
+    cell(sc, u1, t, sc.i1, sc.f1, sc.g1, sc.o1, sc.c1, sc.tc1, sc.h1)
+    val rp = t * u1
+    val h1 = sc.h1; val m1v = sc.m1v; val a1 = sc.a1
+    var u = 0
+    while (u < u1) {
+      m1v(rp + u) = dropMaskLocal(s.iv, s.rk, epoch, (t - 1) * u1 + u,
+        dropout)
+      a1(rp + u) = h1(rp + u) * m1v(rp + u)
+      u += 1
+    }
+  }
+
+  /** Layer 2 at timestep `t`: per gate the bias, then the wx2 part (v
+    * ascending over a1), then the uu2 recurrent part (v ascending). */
+  private def forward2(p: Packed, sc: Scratch, t: Int): Unit = {
+    val u1 = p.u1; val u2 = p.u2
+    var x = 0
+    while (x < 4) {
+      val acc = sc.accs(x)
+      System.arraycopy(p.b2R(x), 0, acc, 0, u2)
+      matvecRows(acc, sc.a1, t * u1, p.wx2TRows, x * u1, u1, u2)
+      matvecRows(acc, sc.h2, (t - 1) * u2, p.uu2TRows, x * u2, u2, u2)
+      x += 1
+    }
+    cell(sc, u2, t, sc.i2, sc.f2, sc.g2, sc.o2, sc.c2, sc.tc2, sc.h2)
+  }
+
+  /** Dropped h2_T -> relu Dense(d) -> softmax; returns the row's loss
+    * and leaves the logit gradient in `dzo`. */
+  private def head(s: Sample, p: Packed, sc: Scratch, T: Int,
+      epoch: Int, dropout: Double): Double = {
+    val u2 = p.u2
+    val m2v = sc.m2v; val a2 = sc.a2; val zd = sc.zd; val ad = sc.ad
+    var u = 0
+    while (u < u2) {
+      m2v(u) = dropMaskLocal(s.iv, s.rk, epoch, T * p.u1 + u, dropout)
+      a2(u) = sc.h2(T * u2 + u) * m2v(u); u += 1
+    }
+    System.arraycopy(p.bd, 0, zd, 0, p.d)
+    matvecRows(zd, a2, 0, p.wdTRows, 0, u2, p.d)
+    var j = 0
+    while (j < p.d) { ad(j) = if (zd(j) > 0) zd(j) else 0.0; j += 1 }
+    denseDot(sc.z3, p.b3, p.w3, ad, p.d, p.kc)
+    softmaxCE(sc.z3, p.kc, s.y, sc.dzo)
+  }
+
+  /** Back through one layer's gate cell at timestep `t` given the
+    * upstream dh in `dh(0 until n)`: writes dc at row t and the four
+    * gate gradients into `dz` (flat ((x)*(T+1)+t)*n+u). Reads only this
+    * t's state and the t+1 dc/f rows. */
+  private def cellBack(dh: Array[Double], n: Int, t: Int, T: Int,
+      i: Array[Double], f: Array[Double], gg: Array[Double],
+      o: Array[Double], c: Array[Double], tc: Array[Double],
+      dc: Array[Double], dz: Array[Double]): Unit = {
+    val rp = t * n; val rm = (t - 1) * n; val rn = (t + 1) * n
+    var u = 0
+    while (u < n) {
+      val dhu = dh(u)
+      val local = dhu * o(rp + u) * (1.0 - tc(rp + u) * tc(rp + u))
+      val dcu = if (t == T) local else local + dc(rn + u) * f(rn + u)
+      dc(rp + u) = dcu
+      dz((0 * (T + 1) + t) * n + u) =
+        dcu * gg(rp + u) * i(rp + u) * (1.0 - i(rp + u))
+      dz((1 * (T + 1) + t) * n + u) =
+        dcu * c(rm + u) * f(rp + u) * (1.0 - f(rp + u))
+      dz((2 * (T + 1) + t) * n + u) =
+        dcu * i(rp + u) * (1.0 - gg(rp + u) * gg(rp + u))
+      dz((3 * (T + 1) + t) * n + u) =
+        dhu * tc(rp + u) * o(rp + u) * (1.0 - o(rp + u))
+      u += 1
+    }
+  }
+
+  /** Layer 2 at timestep `t`: dh2 as a daxpy over 0-based natural rows;
+    * per unit the adds land in the dot form's order (t == T: the dense
+    * rows j ascending, then the head mask; else gate x then v
+    * ascending over the t+1 gate gradients). */
+  private def backward2(p: Packed, sc: Scratch, t: Int, T: Int): Unit = {
+    val u2 = p.u2
+    val bacc = sc.bacc
+    java.util.Arrays.fill(bacc, 0, u2, 0.0)
+    if (t == T) {
+      matvecRows(bacc, sc.dzd, 0, p.wdRows, 0, p.d, u2)
+      var u = 0
+      while (u < u2) { bacc(u) = bacc(u) * sc.m2v(u); u += 1 }
+    } else {
+      var x = 0
       while (x < 4) {
-        System.arraycopy(dz1, (x * (T + 1) + t2) * u1, dzr1, 0, u1)
-        axpy(gwx1(x), xt, dzr1, u1)
-        vadd(gb1(x), dzr1, u1)
-        var u5 = 0
-        while (u5 < u1) {
-          axpy(guu1(x * u1 + u5), dzr1(u5), h1p, u1)
-          u5 += 1
-        }
-        System.arraycopy(dz2, (x * (T + 1) + t2) * u2, dzr2, 0, u2)
-        vadd(gb2(x), dzr2, u2)
-        var u6 = 0
-        while (u6 < u2) {
-          val dv = dzr2(u6)
-          axpy(gwx2(x * u2 + u6), dv, a1c, u1)
-          axpy(guu2(x * u2 + u6), dv, h2p, u2)
-          u6 += 1
-        }
+        matvecRows(bacc, sc.dz2, (x * (T + 1) + (t + 1)) * u2, p.uu2Rows,
+          x * u2, u2, u2)
         x += 1
       }
-      t2 += 1
     }
-    x = 0
+    cellBack(bacc, u2, t, T, sc.i2, sc.f2, sc.g2, sc.o2, sc.c2, sc.tc2,
+      sc.dc2, sc.dz2)
+  }
+
+  /** Layer 1 at timestep `t`: dh1 is the wx2 part (x, v ascending over
+    * this t's layer-2 gate gradients), then the mask, then the uu1
+    * recurrent part (x, v ascending over the t+1 rows) — the dot form's
+    * exact per-unit order. */
+  private def backward1(p: Packed, sc: Scratch, t: Int, T: Int): Unit = {
+    val u1 = p.u1; val u2 = p.u2
+    val dacc = sc.accs(0)
+    java.util.Arrays.fill(dacc, 0, u1, 0.0)
+    var x = 0
     while (x < 4) {
-      var u5 = 0
-      while (u5 < u1) {
-        g(p.wx1Off + x * u1 + u5) += gwx1(x)(u5)
-        g(p.b1Off + x * u1 + u5) += gb1(x)(u5)
-        val grow = guu1(x * u1 + u5)
-        val gb = p.uu1Off + (x * u1 + u5) * u1
-        var v = 0
-        while (v < u1) { g(gb + v) += grow(v); v += 1 }
-        u5 += 1
-      }
-      var u6 = 0
-      while (u6 < u2) {
-        g(p.b2Off + x * u2 + u6) += gb2(x)(u6)
-        val groww = gwx2(x * u2 + u6)
-        val gwb = p.wx2Off + (x * u2 + u6) * u1
-        var v = 0
-        while (v < u1) { g(gwb + v) += groww(v); v += 1 }
-        val growu = guu2(x * u2 + u6)
-        val gub = p.uu2Off + (x * u2 + u6) * u2
-        v = 0
-        while (v < u2) { g(gub + v) += growu(v); v += 1 }
-        u6 += 1
-      }
+      matvecRows(dacc, sc.dz2, (x * (T + 1) + t) * u2, p.wx2Rows, x * u2,
+        u2, u1)
       x += 1
     }
-    j = 0
-    while (j < p.d) {
-      g(p.bdOff + j) += dzd(j)
-      var v = 0
-      while (v < u2) { g(p.wdOff + j * u2 + v) += dzd(j) * a2(v); v += 1 }
-      j += 1
+    val rp = t * u1
+    var u = 0
+    while (u < u1) { dacc(u) *= sc.m1v(rp + u); u += 1 }
+    if (t < T) {
+      x = 0
+      while (x < 4) {
+        matvecRows(dacc, sc.dz1, (x * (T + 1) + (t + 1)) * u1, p.uu1Rows,
+          x * u1, u1, u1)
+        x += 1
+      }
     }
-    o = 0
-    while (o < p.kc) {
-      g(p.b3Off + o) += dzo(o)
-      var j2 = 0
-      while (j2 < p.d) { g(p.w3Off + o * p.d + j2) += dzo(o) * ad(j2); j2 += 1 }
-      o += 1
+    cellBack(dacc, u1, t, T, sc.i1, sc.f1, sc.g1, sc.o1, sc.c1, sc.tc1,
+      sc.dc1, sc.dz1)
+  }
+
+  /** Zero the per-row gradient sums. */
+  private def clearSums(p: Packed, sc: Scratch): Unit = {
+    val u1 = p.u1; val u2 = p.u2
+    zeroRows(sc.gwx1, 0, 4, u1)
+    zeroRows(sc.gb1, 0, 4, u1)
+    zeroRows(sc.gb2, 0, 4, u2)
+    zeroRows(sc.guu1, 0, 4 * u1, u1)
+    zeroRows(sc.gwx2, 0, 4 * u2, u1)
+    zeroRows(sc.guu2, 0, 4 * u2, u2)
+  }
+
+  /** Timestep `t`'s share of the gradient sums (sum over t; the mean
+    * over rows happens at the end): per t the dz row and the state rows
+    * it multiplies are contiguous 0-based slices, so every
+    * weight-gradient loop is a daxpy over the per-row sums; per element
+    * the adds land t-ascending. */
+  private def gradStep(s: Sample, p: Packed, sc: Scratch, t: Int,
+      T: Int): Unit = {
+    val u1 = p.u1; val u2 = p.u2
+    val h1p = sc.h1p; val a1c = sc.a1c; val h2p = sc.h2p
+    val dzr1 = sc.dzr1; val dzr2 = sc.dzr2
+    val xt = s.x(t - 1)
+    System.arraycopy(sc.h1, (t - 1) * u1, h1p, 0, u1)
+    System.arraycopy(sc.a1, t * u1, a1c, 0, u1)
+    System.arraycopy(sc.h2, (t - 1) * u2, h2p, 0, u2)
+    var x = 0
+    while (x < 4) {
+      System.arraycopy(sc.dz1, (x * (T + 1) + t) * u1, dzr1, 0, u1)
+      axpy(sc.gwx1(x), xt, dzr1, u1)
+      vadd(sc.gb1(x), dzr1, u1)
+      rank1Rows(sc.guu1, x * u1, dzr1, u1, h1p, u1)
+      System.arraycopy(sc.dz2, (x * (T + 1) + t) * u2, dzr2, 0, u2)
+      vadd(sc.gb2(x), dzr2, u2)
+      rank1Rows(sc.gwx2, x * u2, dzr2, u2, a1c, u1)
+      rank1Rows(sc.guu2, x * u2, dzr2, u2, h2p, u2)
+      x += 1
     }
+  }
+
+  /** Each finished per-row sum lands in `g` as ONE add (the dot form's
+    * behavior; the gate blocks are contiguous, gate-major), then the
+    * dense and head gradients. */
+  private def flush(p: Packed, sc: Scratch, g: Array[Double]): Unit = {
+    val u1 = p.u1; val u2 = p.u2
+    flushRows(g, p.wx1Off, sc.gwx1, 0, 4, u1)
+    flushRows(g, p.b1Off, sc.gb1, 0, 4, u1)
+    flushRows(g, p.uu1Off, sc.guu1, 0, 4 * u1, u1)
+    flushRows(g, p.b2Off, sc.gb2, 0, 4, u2)
+    flushRows(g, p.wx2Off, sc.gwx2, 0, 4 * u2, u1)
+    flushRows(g, p.uu2Off, sc.guu2, 0, 4 * u2, u2)
+    denseGrad(g, p.wdOff, p.bdOff, sc.dzd, p.d, sc.a2, u2)
+    denseGrad(g, p.w3Off, p.b3Off, sc.dzo, p.kc, sc.ad, p.d)
   }
 
   /** The stacked LSTM kernel; `dropout` is the rate after each LSTM

@@ -17,7 +17,7 @@ package graft.ml
 object WideMlp3 {
   import Mlp3Trainer.{W, G}
   import TrainerCommon.Sample
-  import WideNet.dropMaskLocal
+  import WideNet.{denseDot, denseGrad, dropMaskLocal, softmaxCE}
 
   /** Packed weights: FLAT per-layer arrays plus TRANSPOSED copies for
     * the backward pass's column reads (the WideNet/WideLstm2 layout —
@@ -98,141 +98,119 @@ object WideMlp3 {
   /** One row's contribution — line-for-line
     * [[Mlp3Trainer.gradientsVal]]'s staged columns: z_l = W_l a_{l-1} +
     * b_l, a_l = relu(z_l) * mask_l, max-shifted softmax CE,
-    * dz_l = (W_{l+1}ᵀ dz_{l+1}) * mask_l * relu'(z_l). */
+    * dz_l = (W_{l+1}ᵀ dz_{l+1}) * mask_l * relu'(z_l). A short driver
+    * over per-layer forward and backward steps (the WideNet.accumulate
+    * note; WideKernelShapeSpec). */
   private def accumulate(s: Sample, p: Packed, epoch: Int,
       drops: Array[Double], g: Array[Double]): Unit = {
     val L = p.L
     val sc = scratchFor(p)
-    // forward — 4 units per pass share one read of the input stream
-    // (independent accumulator chains; each keeps the historical
-    // b-then-ascending-i add order, so sums are bit-identical)
-    val z = sc.z; val a = sc.a; val mask = sc.mask
     var prev: Array[Double] = s.x
     var l = 0
     while (l < L) {
-      val width = p.outW(l); val in = prev.length
-      val zl = z(l); val al = a(l); val ml = mask(l)
-      val wf = p.wsF(l); val bl = p.bs(l)
-      val dl = drops(l); val off = p.offs(l)
-      var u = 0
-      while (u + 3 < width) {
-        var a0 = bl(u); var a1 = bl(u + 1)
-        var a2 = bl(u + 2); var a3 = bl(u + 3)
-        val w0 = u * in; val w1 = (u + 1) * in
-        val w2 = (u + 2) * in; val w3 = (u + 3) * in
-        var i = 0
-        while (i < in) {
-          val pv = prev(i)
-          a0 += pv * wf(w0 + i); a1 += pv * wf(w1 + i)
-          a2 += pv * wf(w2 + i); a3 += pv * wf(w3 + i)
-          i += 1
-        }
-        zl(u) = a0; zl(u + 1) = a1; zl(u + 2) = a2; zl(u + 3) = a3
-        var q = u
-        while (q < u + 4) {
-          ml(q) = dropMaskLocal(s.iv, s.rk, epoch, off + q, dl)
-          al(q) = (if (zl(q) > 0) zl(q) else 0.0) * ml(q)
-          q += 1
-        }
-        u += 4
-      }
-      while (u < width) {
-        var acc = bl(u)
-        val wb = u * in
-        var i = 0
-        while (i < in) { acc += prev(i) * wf(wb + i); i += 1 }
-        zl(u) = acc
-        ml(u) = dropMaskLocal(s.iv, s.rk, epoch, off + u, dl)
-        al(u) = (if (acc > 0) acc else 0.0) * ml(u)
-        u += 1
-      }
-      prev = al
+      forward(s, p, sc, l, prev, epoch, drops(l))
+      prev = sc.a(l)
       l += 1
     }
-    // head
-    val zo = sc.zo
-    var o = 0
-    while (o < p.kc) {
-      var acc = p.bs(L)(o)
-      val wf = p.wsF(L)
-      val wb = o * prev.length
-      var u = 0
-      while (u < prev.length) { acc += prev(u) * wf(wb + u); u += 1 }
-      zo(o) = acc; o += 1
-    }
-    var mx = zo(0); o = 1
-    while (o < p.kc) { if (zo(o) > mx) mx = zo(o); o += 1 }
-    var denom = 0.0; o = 0
-    while (o < p.kc) { denom += math.exp(zo(o) - mx); o += 1 }
-    val loss = math.log(denom) + mx - zo(s.y)
+    denseDot(sc.zo, p.bs(L), p.wsF(L), prev, prev.length, p.kc)
+    val loss = softmaxCE(sc.zo, p.kc, s.y, sc.dzo)
     if (s.iv) {
       g(p.statsOff + 2) += loss; g(p.statsOff + 3) += 1.0
       return // val rows contribute loss only, never gradients
     }
     g(p.statsOff) += loss; g(p.statsOff + 1) += 1.0
-    // head gradients + dz for the top hidden layer's input
-    val dzo = sc.dzo
-    o = 0
-    while (o < p.kc) {
-      dzo(o) = math.exp(zo(o) - mx) / denom - (if (s.y == o) 1.0 else 0.0)
-      g(p.bOff(L) + o) += dzo(o)
-      val inW = prev.length
-      val gwb = p.wOff(L) + o * inW
-      val dv = dzo(o)
-      var u = 0
-      while (u < inW) { g(gwb + u) += dv * prev(u); u += 1 }
-      o += 1
-    }
-    // backward through hidden layers: dz via the TRANSPOSED upper
-    // weights (contiguous over v), 4 units per pass sharing one read
-    // of the dzUpper stream; per-unit add order unchanged
-    var dzUpper: Array[Double] = dzo
+    denseGrad(g, p.wOff(L), p.bOff(L), sc.dzo, p.kc, prev, prev.length)
+    var dzUpper: Array[Double] = sc.dzo
     l = L - 1
     while (l >= 0) {
-      val width = p.outW(l)
-      val upT = p.wsT(l + 1) // (width × upperWidth), row u contiguous
-      val uw = dzUpper.length
-      val dz = sc.dz(l)
-      val zl = z(l); val ml = mask(l)
-      var u = 0
-      while (u + 3 < width) {
-        var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
-        val t0 = u * uw; val t1 = (u + 1) * uw
-        val t2 = (u + 2) * uw; val t3 = (u + 3) * uw
-        var v = 0
-        while (v < uw) {
-          val dv = dzUpper(v)
-          s0 += dv * upT(t0 + v); s1 += dv * upT(t1 + v)
-          s2 += dv * upT(t2 + v); s3 += dv * upT(t3 + v)
-          v += 1
-        }
-        dz(u) = s0 * ml(u) * (if (zl(u) > 0) 1.0 else 0.0)
-        dz(u + 1) = s1 * ml(u + 1) * (if (zl(u + 1) > 0) 1.0 else 0.0)
-        dz(u + 2) = s2 * ml(u + 2) * (if (zl(u + 2) > 0) 1.0 else 0.0)
-        dz(u + 3) = s3 * ml(u + 3) * (if (zl(u + 3) > 0) 1.0 else 0.0)
-        u += 4
-      }
-      while (u < width) {
-        var acc = 0.0
-        val tb = u * uw
-        var v = 0
-        while (v < uw) { acc += dzUpper(v) * upT(tb + v); v += 1 }
-        dz(u) = acc * ml(u) * (if (zl(u) > 0) 1.0 else 0.0)
-        u += 1
-      }
-      val ins = if (l == 0) s.x else a(l - 1)
-      val inLen = ins.length
-      u = 0
-      while (u < width) {
-        g(p.bOff(l) + u) += dz(u)
-        val gwb = p.wOff(l) + u * inLen
-        val dv = dz(u)
-        var i = 0
-        while (i < inLen) { g(gwb + i) += dv * ins(i); i += 1 }
-        u += 1
-      }
-      dzUpper = dz
+      backward(p, sc, l, dzUpper)
+      val ins = if (l == 0) s.x else sc.a(l - 1)
+      denseGrad(g, p.wOff(l), p.bOff(l), sc.dz(l), p.outW(l), ins,
+        ins.length)
+      dzUpper = sc.dz(l)
       l -= 1
+    }
+  }
+
+  /** Hidden layer `l` over its input `prev`: 4 units per pass share one
+    * read of the input stream (independent accumulator chains; each
+    * keeps the historical b-then-ascending-i add order, so sums are
+    * bit-identical). */
+  private def forward(s: Sample, p: Packed, sc: Scratch, l: Int,
+      prev: Array[Double], epoch: Int, dl: Double): Unit = {
+    val width = p.outW(l); val in = prev.length
+    val zl = sc.z(l); val al = sc.a(l); val ml = sc.mask(l)
+    val wf = p.wsF(l); val bl = p.bs(l)
+    val off = p.offs(l)
+    var u = 0
+    while (u + 3 < width) {
+      var a0 = bl(u); var a1 = bl(u + 1)
+      var a2 = bl(u + 2); var a3 = bl(u + 3)
+      val w0 = u * in; val w1 = (u + 1) * in
+      val w2 = (u + 2) * in; val w3 = (u + 3) * in
+      var i = 0
+      while (i < in) {
+        val pv = prev(i)
+        a0 += pv * wf(w0 + i); a1 += pv * wf(w1 + i)
+        a2 += pv * wf(w2 + i); a3 += pv * wf(w3 + i)
+        i += 1
+      }
+      zl(u) = a0; zl(u + 1) = a1; zl(u + 2) = a2; zl(u + 3) = a3
+      u += 4
+    }
+    while (u < width) {
+      var acc = bl(u)
+      val wb = u * in
+      var i = 0
+      while (i < in) { acc += prev(i) * wf(wb + i); i += 1 }
+      zl(u) = acc
+      u += 1
+    }
+    u = 0
+    while (u < width) {
+      ml(u) = dropMaskLocal(s.iv, s.rk, epoch, off + u, dl)
+      al(u) = (if (zl(u) > 0) zl(u) else 0.0) * ml(u)
+      u += 1
+    }
+  }
+
+  /** dz of hidden layer `l` via the TRANSPOSED upper weights
+    * (contiguous over v), 4 units per pass sharing one read of the
+    * `dzUpper` stream; per-unit add order unchanged. */
+  private def backward(p: Packed, sc: Scratch, l: Int,
+      dzUpper: Array[Double]): Unit = {
+    val width = p.outW(l)
+    val upT = p.wsT(l + 1) // (width × upperWidth), row u contiguous
+    val uw = dzUpper.length
+    val dz = sc.dz(l)
+    var u = 0
+    while (u + 3 < width) {
+      var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+      val t0 = u * uw; val t1 = (u + 1) * uw
+      val t2 = (u + 2) * uw; val t3 = (u + 3) * uw
+      var v = 0
+      while (v < uw) {
+        val dv = dzUpper(v)
+        s0 += dv * upT(t0 + v); s1 += dv * upT(t1 + v)
+        s2 += dv * upT(t2 + v); s3 += dv * upT(t3 + v)
+        v += 1
+      }
+      dz(u) = s0; dz(u + 1) = s1; dz(u + 2) = s2; dz(u + 3) = s3
+      u += 4
+    }
+    while (u < width) {
+      var acc = 0.0
+      val tb = u * uw
+      var v = 0
+      while (v < uw) { acc += dzUpper(v) * upT(tb + v); v += 1 }
+      dz(u) = acc
+      u += 1
+    }
+    val zl = sc.z(l); val ml = sc.mask(l)
+    u = 0
+    while (u < width) {
+      dz(u) = dz(u) * ml(u) * (if (zl(u) > 0) 1.0 else 0.0)
+      u += 1
     }
   }
 

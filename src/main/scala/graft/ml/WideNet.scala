@@ -159,6 +159,113 @@ object WideNet {
     while (i < n) { a(i) += b(i); i += 1 }
   }
 
+  // ---- loops shared by the per-row kernels ----
+  // Each is the one loop two or more families ran inline; as a shared
+  // method it is compiled by whichever fit warms it first and stays
+  // compiled for the rest of the pass. Every element keeps its add
+  // order: only method boundaries moved.
+
+  /** `acc(i) += x(xOff + v) * rows(rowOff + v)(i)` for v = 0 until n
+    * (ascending) — a matrix-vector product as daxpy over 0-based rows. */
+  private[ml] def matvecRows(acc: Array[Double], x: Array[Double],
+      xOff: Int, rows: Array[Array[Double]], rowOff: Int, n: Int,
+      len: Int): Unit = {
+    var v = 0
+    while (v < n) { axpy(acc, x(xOff + v), rows(rowOff + v), len); v += 1 }
+  }
+
+  /** `rows(rowOff + u)(i) += d(u) * x(i)` for u = 0 until n — a rank-1
+    * update of per-row gradient sums. */
+  private[ml] def rank1Rows(rows: Array[Array[Double]], rowOff: Int,
+      d: Array[Double], n: Int, x: Array[Double], len: Int): Unit = {
+    var u = 0
+    while (u < n) { axpy(rows(rowOff + u), d(u), x, len); u += 1 }
+  }
+
+  /** `rows(rowOff + u)(0 until len) = 0.0` for u = 0 until n. */
+  private[ml] def zeroRows(rows: Array[Array[Double]], rowOff: Int,
+      n: Int, len: Int): Unit = {
+    var u = 0
+    while (u < n) {
+      java.util.Arrays.fill(rows(rowOff + u), 0, len, 0.0); u += 1
+    }
+  }
+
+  /** `g(gOff + i) += a(i)` for i = 0 until n: one finished per-row sum
+    * lands in the gradient buffer as ONE add per element. */
+  private[ml] def gadd(g: Array[Double], gOff: Int, a: Array[Double],
+      n: Int): Unit = {
+    var i = 0
+    while (i < n) { g(gOff + i) += a(i); i += 1 }
+  }
+
+  /** [[gadd]] of `n` rows of `len` into the row-major block at `gOff`. */
+  private[ml] def flushRows(g: Array[Double], gOff: Int,
+      rows: Array[Array[Double]], rowOff: Int, n: Int, len: Int): Unit = {
+    var u = 0
+    while (u < n) { gadd(g, gOff + u * len, rows(rowOff + u), len); u += 1 }
+  }
+
+  /** Dense layer in dot form: `z(o) = b(o) + Σ_v x(v) * w(o * n + v)`,
+    * v ascending, for o = 0 until kc. */
+  private[ml] def denseDot(z: Array[Double], b: Array[Double],
+      w: Array[Double], x: Array[Double], n: Int, kc: Int): Unit = {
+    var o = 0
+    while (o < kc) {
+      var acc = b(o)
+      val wb = o * n
+      var v = 0
+      while (v < n) { acc += x(v) * w(wb + v); v += 1 }
+      z(o) = acc; o += 1
+    }
+  }
+
+  /** Max-shifted softmax cross-entropy over `z(0 until kc)` against
+    * label `y` ([[TrainerCommon.softmaxHead]] algebra): returns the
+    * loss and writes its logit gradient into `dz`. */
+  private[ml] def softmaxCE(z: Array[Double], kc: Int, y: Int,
+      dz: Array[Double]): Double = {
+    var mx = z(0); var o = 1
+    while (o < kc) { if (z(o) > mx) mx = z(o); o += 1 }
+    var denom = 0.0; o = 0
+    while (o < kc) { denom += math.exp(z(o) - mx); o += 1 }
+    o = 0
+    while (o < kc) {
+      dz(o) = math.exp(z(o) - mx) / denom - (if (y == o) 1.0 else 0.0)
+      o += 1
+    }
+    math.log(denom) + mx - z(y)
+  }
+
+  /** Back through a dense layer in dot form: `out(j) = Σ_o d(o) *
+    * wT(j * kc + o)`, o ascending from 0.0, for j = 0 until n. */
+  private[ml] def backDot(out: Array[Double], d: Array[Double],
+      wT: Array[Double], kc: Int, n: Int): Unit = {
+    var j = 0
+    while (j < n) {
+      var acc = 0.0
+      val wb = j * kc
+      var o = 0
+      while (o < kc) { acc += d(o) * wT(wb + o); o += 1 }
+      out(j) = acc; j += 1
+    }
+  }
+
+  /** A dense layer's gradients: `g(bOff + o) += d(o)` and
+    * `g(wOff + o * len + v) += d(o) * x(v)` for o = 0 until n. */
+  private[ml] def denseGrad(g: Array[Double], wOff: Int, bOff: Int,
+      d: Array[Double], n: Int, x: Array[Double], len: Int): Unit = {
+    var o = 0
+    while (o < n) {
+      val dv = d(o)
+      g(bOff + o) += dv
+      val wb = wOff + o * len
+      var v = 0
+      while (v < len) { g(wb + v) += dv * x(v); v += 1 }
+      o += 1
+    }
+  }
+
   /** [[TrainerCommon.dropMask]] replayed on the driver/executor side:
     * same XXH64 fold (seed 42, rk as long, epoch and u as ints), same
     * pmod-1000 keep test, same 1/(1-p) inverted scaling, same
@@ -243,90 +350,111 @@ object WideNet {
     * accumulator's add order is the historical one (flat/transposed
     * layouts and lane unrolls change where doubles live and how many
     * independent chains run, never the sequence of additions into any
-    * single sum), so the output is bit-identical. */
+    * single sum), so the output is bit-identical.
+    *
+    * A short driver over per-position, per-block, per-filter and
+    * per-unit steps: each step runs many times per row, so HotSpot
+    * compiles it within the first rows of a cold fit, where one
+    * monolithic body (once per row) ran interpreted and OSR-compiled
+    * for most of it (WideKernelShapeSpec keeps every method small). */
   private def accumulate(s: Sample, p: Packed, epoch: Int,
       dropout: Double, g: Array[Double]): Unit = {
-    val B = p.blocks; val k = p.k; val fs = p.fs
+    val B = p.blocks
     val sc = scratchFor(s.x.length, p)
-    // ---- forward ----
-    // Conv as idx-major daxpy: acc(f) += window(idx) * cwTR(idx)(f).
-    // Per accumulator (pos, f) the adds land idx-ascending from the
-    // bias — the exact order of the r16 dot-product form — but the
-    // vector dimension is now the INDEPENDENT filter index over 0-based
-    // rows, the one shape SuperWord vectorizes.
-    val aR = sc.aR                       // conv+relu rows per position
-    val mR = sc.mR                       // pooled rows per position
     var b = 0
     while (b < B) {
-      val fin = p.fin(b); val pb = p.ps(b); val lb = p.ls(b)
-      val fb = fs(b)
-      val aRb = aR(b)
-      val cwTRb = p.cwTR(b); val cbb = p.cb(b)
-      val inRows: Array[Array[Double]] = if (b == 0) null else mR(b - 1)
-      val acc = sc.accRow
       var pos = 0
-      while (pos < pb) {
-        System.arraycopy(cbb, 0, acc, 0, fb)
-        if (b == 0) {
-          // fin == 1: the window is k scalars of s.x
-          var j = 0
-          while (j < k) {
-            axpy(acc, s.x(pos + j), cwTRb(j), fb)
-            j += 1
-          }
-        } else {
-          var j = 0
-          var idx = 0
-          while (j < k) {
-            val irow = inRows(pos + j)
-            var c = 0
-            while (c < fin) {
-              axpy(acc, irow(c), cwTRb(idx), fb)
-              idx += 1; c += 1
-            }
-            j += 1
-          }
-        }
-        val orow = aRb(pos)
-        var f = 0
-        while (f < fb) { val v = acc(f); orow(f) = if (v > 0) v else 0.0; f += 1 }
-        pos += 1
-      }
-      val mRb = mR(b)
-      var j2 = 0
-      while (j2 < lb) {
-        val r0 = aRb(2 * j2); val r1 = aRb(2 * j2 + 1)
-        val mrow = mRb(j2)
-        var f = 0
-        while (f < fb) {
-          val x0 = r0(f); val x1 = r1(f)
-          mrow(f) = if (x0 >= x1) x0 else x1
-          f += 1
-        }
-        j2 += 1
-      }
+      while (pos < p.ps(b)) { convPos(s.x, p, sc, b, pos); pos += 1 }
+      pool(p, sc, b)
       b += 1
     }
-    val mLast = mR(B - 1) // rows (j)(f); flatten index i = j * fB + f
-    val fB = fs(B - 1)
-    val lLast = p.ls(B - 1)
-    // ---- dense -> dropout -> head ----
-    // hpre as i-major daxpy over transposed dense rows; per unit u the
-    // adds land i-ascending from the bias, as before.
-    val hpre = sc.hpre
-    val hd = sc.hd
-    val mask = sc.mask
-    val flatN = p.flat
+    hidden(s, p, sc, epoch, dropout)
+    denseDot(sc.z, p.hb, p.hw, sc.hd, p.dh, p.kc)
+    val loss = softmaxCE(sc.z, p.kc, s.y, sc.dzo)
+    if (s.iv) {
+      g(p.statsOff + 2) += loss; g(p.statsOff + 3) += 1.0
+      return // val rows contribute loss only, never gradients
+    }
+    g(p.statsOff) += loss; g(p.statsOff + 1) += 1.0
+    hiddenBack(p, sc)
+    var u = 0
+    while (u < p.dh) { denseGradRow(p, sc, u, g); u += 1 }
+    denseGrad(g, p.hwOff, p.hbOff, sc.dzo, p.kc, sc.hd, p.dh)
+    var dmCur = sc.dm
+    b = B - 1
+    while (b >= 0) {
+      unpool(p, sc, b, dmCur)
+      var f = 0
+      while (f < p.fs(b)) {
+        if (b == 0) filterGrad0(s.x, p, sc, f, g)
+        else filterGrad(p, sc, b, f, g)
+        f += 1
+      }
+      if (b > 0) {
+        var jp = 0
+        while (jp < p.ls(b - 1)) { inputGradRow(p, sc, b, jp); jp += 1 }
+        dmCur = sc.dmp(b)
+      }
+      b -= 1
+    }
+  }
+
+  /** Conv + relu at one output position of block `b`, as idx-major
+    * daxpy: acc(f) += window(idx) * cwTR(idx)(f). Per accumulator
+    * (pos, f) the adds land idx-ascending from the bias — the exact
+    * order of the r16 dot-product form — but the vector dimension is the
+    * INDEPENDENT filter index over 0-based rows, the one shape SuperWord
+    * vectorizes. */
+  private def convPos(x: Array[Double], p: Packed, sc: Scratch, b: Int,
+      pos: Int): Unit = {
+    val fb = p.fs(b); val cwTRb = p.cwTR(b)
+    val acc = sc.accRow
+    System.arraycopy(p.cb(b), 0, acc, 0, fb)
+    if (b == 0) {
+      // fin == 1: the window is k scalars of x
+      matvecRows(acc, x, pos, cwTRb, 0, p.k, fb)
+    } else {
+      val fin = p.fin(b); val inRows = sc.mR(b - 1)
+      var j = 0
+      while (j < p.k) {
+        matvecRows(acc, inRows(pos + j), 0, cwTRb, j * fin, fin, fb)
+        j += 1
+      }
+    }
+    val orow = sc.aR(b)(pos)
+    var f = 0
+    while (f < fb) { val v = acc(f); orow(f) = if (v > 0) v else 0.0; f += 1 }
+  }
+
+  /** Max-pool (size 2, stride 2) of block `b`'s position rows. */
+  private def pool(p: Packed, sc: Scratch, b: Int): Unit = {
+    val fb = p.fs(b); val aRb = sc.aR(b); val mRb = sc.mR(b)
+    var j2 = 0
+    while (j2 < p.ls(b)) {
+      val r0 = aRb(2 * j2); val r1 = aRb(2 * j2 + 1)
+      val mrow = mRb(j2)
+      var f = 0
+      while (f < fb) {
+        val x0 = r0(f); val x1 = r1(f)
+        mrow(f) = if (x0 >= x1) x0 else x1
+        f += 1
+      }
+      j2 += 1
+    }
+  }
+
+  /** Dense -> relu -> dropout over the last block's pooled rows (flatten
+    * index i = j * fB + f): hpre as i-major daxpy over transposed dense
+    * rows; per unit u the adds land i-ascending from the bias. */
+  private def hidden(s: Sample, p: Packed, sc: Scratch, epoch: Int,
+      dropout: Double): Unit = {
+    val B = p.blocks
+    val mLast = sc.mR(B - 1); val fB = p.fs(B - 1)
+    val hpre = sc.hpre; val hd = sc.hd; val mask = sc.mask
     System.arraycopy(p.db, 0, hpre, 0, p.dh)
     var jj = 0
-    var i = 0
-    while (jj < lLast) {
-      val mrow = mLast(jj)
-      var f = 0
-      while (f < fB) {
-        axpy(hpre, mrow(f), p.dwTR(i), p.dh)
-        i += 1; f += 1
-      }
+    while (jj < p.ls(B - 1)) {
+      matvecRows(hpre, mLast(jj), 0, p.dwTR, jj * fB, fB, p.dh)
       jj += 1
     }
     var u = 0
@@ -335,197 +463,139 @@ object WideNet {
       hd(u) = (if (hpre(u) > 0) hpre(u) else 0.0) * mask(u)
       u += 1
     }
-    val z = sc.z
-    var o = 0
-    while (o < p.kc) {
-      var acc = p.hb(o)
-      val wb = o * p.dh
-      var u2 = 0
-      while (u2 < p.dh) { acc += hd(u2) * p.hw(wb + u2); u2 += 1 }
-      z(o) = acc; o += 1
-    }
-    // max-shifted softmax CE (TrainerCommon.softmaxHead algebra)
-    var mx = z(0); o = 1
-    while (o < p.kc) { if (z(o) > mx) mx = z(o); o += 1 }
-    var denom = 0.0; o = 0
-    while (o < p.kc) { denom += math.exp(z(o) - mx); o += 1 }
-    val loss = math.log(denom) + mx - z(s.y)
-    if (s.iv) {
-      g(p.statsOff + 2) += loss; g(p.statsOff + 3) += 1.0
-      return // val rows contribute loss only, never gradients
-    }
-    g(p.statsOff) += loss; g(p.statsOff + 1) += 1.0
-    val dzo = sc.dzo
-    o = 0
-    while (o < p.kc) {
-      dzo(o) = math.exp(z(o) - mx) / denom - (if (s.y == o) 1.0 else 0.0)
-      o += 1
-    }
-    // ---- backward ----
-    val dpre = sc.dpre
-    u = 0
+  }
+
+  /** Back through the head and the dense layer: dpre, then dm at level
+    * B-1 as u-major daxpy over natural dense rows (per element i the
+    * adds land u-ascending from 0.0). */
+  private def hiddenBack(p: Packed, sc: Scratch): Unit = {
+    val dpre = sc.dpre; val mask = sc.mask; val hpre = sc.hpre
+    backDot(dpre, sc.dzo, p.hwT, p.kc, p.dh)
+    var u = 0
     while (u < p.dh) {
-      var acc = 0.0
-      val wb = u * p.kc
-      o = 0
-      while (o < p.kc) { acc += dzo(o) * p.hwT(wb + o); o += 1 }
-      dpre(u) = acc * mask(u) * (if (hpre(u) > 0) 1.0 else 0.0)
+      dpre(u) = dpre(u) * mask(u) * (if (hpre(u) > 0) 1.0 else 0.0)
       u += 1
     }
-    // dm at level B-1, (j, f) flat — u-major daxpy over natural dense
-    // rows; per element i the adds land u-ascending from 0.0, as before
-    val dm = sc.dm
-    java.util.Arrays.fill(dm, 0, flatN, 0.0)
-    u = 0
-    while (u < p.dh) {
-      axpy(dm, dpre(u), p.dwR(u), flatN)
-      u += 1
+    java.util.Arrays.fill(sc.dm, 0, p.flat, 0.0)
+    matvecRows(sc.dm, dpre, 0, p.dwR, 0, p.dh, p.flat)
+  }
+
+  /** Dense-layer gradients of unit `u` (they consume mLast + dpre). */
+  private def denseGradRow(p: Packed, sc: Scratch, u: Int,
+      g: Array[Double]): Unit = {
+    val B = p.blocks
+    val mLast = sc.mR(B - 1); val fB = p.fs(B - 1)
+    val dv = sc.dpre(u)
+    g(p.dbOff + u) += dv
+    val gwb = p.dwOff + u * p.flat
+    var j3 = 0
+    while (j3 < p.ls(B - 1)) {
+      val mrow = mLast(j3)
+      val base = gwb + j3 * fB
+      var f = 0
+      while (f < fB) { g(base + f) += dv * mrow(f); f += 1 }
+      j3 += 1
     }
-    var dmCur = dm
-    b = B - 1
-    while (b >= 0) {
-      val fin = p.fin(b); val pb = p.ps(b); val lb = p.ls(b)
-      val fb = fs(b)
-      val aRb = aR(b); val mRb = mR(b)
-      val da = sc.da(b)
-      java.util.Arrays.fill(da, 0, pb * fb, 0.0)
-      var pos = 0
-      while (pos < pb) {
-        val j = pos / 2
-        if (j < lb) {
-          val mrow = mRb(j); val arow = aRb(pos); val arow0 = aRb(2 * j)
-          var f = 0
-          while (f < fb) {
-            val target = mrow(f)
-            val av = arow(f)
-            // first-argmax routing: position pos routes iff it equals
-            // the max and every earlier window position is strictly less
-            val route =
-              if (pos == 2 * j) av == target
-              else arow0(f) < target && av == target
-            if (route && av > 0)
-              da(pos * fb + f) = dmCur(j * fb + f)
-            f += 1
-          }
-        }
-        pos += 1
-      }
-      // kernel + bias gradients, pp-major: the per-(j, c) window sums
-      // accumulate in 0-based rows (daxpy over c against the block
-      // input's natural position rows — no transpose pass needed) and
-      // land in `g` as ONE add of the finished sum, exactly like the
-      // dot form's `g += s0`.
-      if (b == 0) {
-        // fin == 1, klen == k: scalar window over s.x
-        val kg = sc.kg0
+  }
+
+  /** Route block `b`'s pooled gradient `dmCur` back through the max-pool
+    * into `da(b)`: position pos routes iff it equals the max and every
+    * earlier window position is strictly less (first argmax). */
+  private def unpool(p: Packed, sc: Scratch, b: Int,
+      dmCur: Array[Double]): Unit = {
+    val pb = p.ps(b); val lb = p.ls(b); val fb = p.fs(b)
+    val aRb = sc.aR(b); val mRb = sc.mR(b)
+    val da = sc.da(b)
+    java.util.Arrays.fill(da, 0, pb * fb, 0.0)
+    var pos = 0
+    while (pos < pb) {
+      val j = pos / 2
+      if (j < lb) {
+        val mrow = mRb(j); val arow = aRb(pos); val arow0 = aRb(2 * j)
         var f = 0
         while (f < fb) {
-          java.util.Arrays.fill(kg, 0, k, 0.0)
-          var gb = 0.0
-          var pp = 0
-          while (pp < pb) {
-            val dv = da(pp * fb + f)
-            gb += dv
-            var j = 0
-            while (j < k) { kg(j) += dv * s.x(pp + j); j += 1 }
-            pp += 1
-          }
-          g(p.cbOff(b) + f) += gb
-          val gwb = p.cwOff(b) + f * k
-          var j = 0
-          while (j < k) { g(gwb + j) += kg(j); j += 1 }
-          f += 1
-        }
-      } else {
-        val inRowsB = mR(b - 1)
-        val kgRows = sc.kgRows
-        var f = 0
-        while (f < fb) {
-          var j0 = 0
-          while (j0 < k) { java.util.Arrays.fill(kgRows(j0), 0, fin, 0.0); j0 += 1 }
-          var gb = 0.0
-          var pp = 0
-          while (pp < pb) {
-            val dv = da(pp * fb + f)
-            gb += dv
-            var j = 0
-            while (j < k) {
-              axpy(kgRows(j), dv, inRowsB(pp + j), fin)
-              j += 1
-            }
-            pp += 1
-          }
-          g(p.cbOff(b) + f) += gb
-          val gwb = p.cwOff(b) + f * k * fin
-          var j = 0
-          while (j < k) {
-            val krow = kgRows(j)
-            val base = gwb + j * fin
-            var c = 0
-            while (c < fin) { g(base + c) += krow(c); c += 1 }
-            j += 1
-          }
+          val target = mrow(f)
+          val av = arow(f)
+          val route =
+            if (pos == 2 * j) av == target
+            else arow0(f) < target && av == target
+          if (route && av > 0)
+            da(pos * fb + f) = dmCur(j * fb + f)
           f += 1
         }
       }
-      if (b > 0) {
-        // input gradient, (pp, f2)-major daxpy over the natural kernel
-        // rows (vector dimension: input channel c); per element (jp, c)
-        // the adds land (pp asc, f2 asc) from 0.0 — the dot form's order
-        val lprev = p.ls(b - 1); val fprev = fs(b - 1)
-        val dmPrev = sc.dmp(b)
-        val cwRb = p.cwR(b)
-        val row = sc.dmRow
-        var jp = 0
-        while (jp < lprev) {
-          java.util.Arrays.fill(row, 0, fprev, 0.0)
-          val ppLo = math.max(0, jp - k + 1)
-          val pMax = math.min(pb - 1, jp)
-          var pp = ppLo
-          while (pp <= pMax) {
-            val dab = pp * fb
-            val jr = jp - pp
-            var f2 = 0
-            while (f2 < fb) {
-              axpy(row, da(dab + f2), cwRb(f2 * k + jr), fprev)
-              f2 += 1
-            }
-            pp += 1
-          }
-          System.arraycopy(row, 0, dmPrev, jp * fprev, fprev)
-          jp += 1
-        }
-        dmCur = dmPrev
-      }
-      // dense-layer gradients once (they consume mLast + dpre)
-      if (b == B - 1) {
-        u = 0
-        while (u < p.dh) {
-          g(p.dbOff + u) += dpre(u)
-          val gwb = p.dwOff + u * flatN
-          val dv = dpre(u)
-          var j3 = 0
-          while (j3 < lLast) {
-            val mrow = mLast(j3)
-            val base = gwb + j3 * fB
-            var f = 0
-            while (f < fB) { g(base + f) += dv * mrow(f); f += 1 }
-            j3 += 1
-          }
-          u += 1
-        }
-        o = 0
-        while (o < p.kc) {
-          g(p.hbOff + o) += dzo(o)
-          val gwb = p.hwOff + o * p.dh
-          val dv = dzo(o)
-          var u2 = 0
-          while (u2 < p.dh) { g(gwb + u2) += dv * hd(u2); u2 += 1 }
-          o += 1
-        }
-      }
-      b -= 1
+      pos += 1
     }
+  }
+
+  /** Kernel + bias gradients of filter `f` in block 0 (fin == 1, a
+    * scalar window over x): the per-j window sums accumulate pp-major
+    * and land in `g` as ONE add of the finished sum, exactly like the
+    * dot form's `g += s0`. */
+  private def filterGrad0(x: Array[Double], p: Packed, sc: Scratch,
+      f: Int, g: Array[Double]): Unit = {
+    val k = p.k; val fb = p.fs(0); val da = sc.da(0)
+    val kg = sc.kg0
+    java.util.Arrays.fill(kg, 0, k, 0.0)
+    var gb = 0.0
+    var pp = 0
+    while (pp < p.ps(0)) {
+      val dv = da(pp * fb + f)
+      gb += dv
+      var j = 0
+      while (j < k) { kg(j) += dv * x(pp + j); j += 1 }
+      pp += 1
+    }
+    g(p.cbOff(0) + f) += gb
+    gadd(g, p.cwOff(0) + f * k, kg, k)
+  }
+
+  /** Kernel + bias gradients of filter `f` in block `b` >= 1: the
+    * per-(j, c) window sums accumulate in 0-based rows (daxpy over c
+    * against the block input's natural position rows) and land in `g`
+    * as ONE add of each finished sum. */
+  private def filterGrad(p: Packed, sc: Scratch, b: Int, f: Int,
+      g: Array[Double]): Unit = {
+    val k = p.k; val fin = p.fin(b); val fb = p.fs(b)
+    val da = sc.da(b); val inRowsB = sc.mR(b - 1)
+    val kgRows = sc.kgRows
+    zeroRows(kgRows, 0, k, fin)
+    var gb = 0.0
+    var pp = 0
+    while (pp < p.ps(b)) {
+      val dv = da(pp * fb + f)
+      gb += dv
+      var j = 0
+      while (j < k) { axpy(kgRows(j), dv, inRowsB(pp + j), fin); j += 1 }
+      pp += 1
+    }
+    g(p.cbOff(b) + f) += gb
+    flushRows(g, p.cwOff(b) + f * k * fin, kgRows, 0, k, fin)
+  }
+
+  /** Input gradient of block `b` >= 1 at previous-level position `jp`,
+    * (pp, f2)-major daxpy over the natural kernel rows (vector
+    * dimension: input channel c); per element (jp, c) the adds land
+    * (pp asc, f2 asc) from 0.0 — the dot form's order. */
+  private def inputGradRow(p: Packed, sc: Scratch, b: Int,
+      jp: Int): Unit = {
+    val k = p.k; val fb = p.fs(b); val fprev = p.fs(b - 1)
+    val da = sc.da(b); val cwRb = p.cwR(b)
+    val row = sc.dmRow
+    java.util.Arrays.fill(row, 0, fprev, 0.0)
+    val pMax = math.min(p.ps(b) - 1, jp)
+    var pp = math.max(0, jp - k + 1)
+    while (pp <= pMax) {
+      val dab = pp * fb
+      val jr = jp - pp
+      var f2 = 0
+      while (f2 < fb) {
+        axpy(row, da(dab + f2), cwRb(f2 * k + jr), fprev)
+        f2 += 1
+      }
+      pp += 1
+    }
+    System.arraycopy(row, 0, sc.dmp(b), jp * fprev, fprev)
   }
 
   /** The stacked-CNN kernel; `dropout` is the rate after the dense

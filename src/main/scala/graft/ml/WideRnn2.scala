@@ -12,7 +12,8 @@ package graft.ml
 object WideRnn2 {
   import Rnn2Trainer.{W, G}
   import TrainerCommon.Sample
-  import WideNet.{dropMaskLocal, axpy, vadd}
+  import WideNet.{axpy, backDot, denseDot, denseGrad, dropMaskLocal,
+    flushRows, gadd, matvecRows, rank1Rows, softmaxCE, vadd, zeroRows}
 
   /** FLAT packed weights + transposed copies for the backward pass's
     * column access (the WideLstm2 layout rationale): same doubles, same
@@ -134,229 +135,160 @@ object WideRnn2 {
 
   /** One row's stacked-BPTT contribution — line for line the staged
     * columns of [[Rnn2Trainer.gradientsVal]]. Flat layouts, transposed
-    * reads, and 4-lane unit unrolls (independent accumulator chains);
-    * every accumulator's add order is the historical one, so the
-    * output is bit-identical (the WideLstm2 rationale). */
+    * reads and 0-based daxpy rows; every accumulator's add order is the
+    * historical one, so the output is bit-identical (the WideLstm2
+    * rationale). A short driver over per-timestep forward, backward
+    * and gradient steps, each compiled within the first rows of a cold
+    * fit (the WideNet.accumulate note; WideKernelShapeSpec). */
   private def accumulate(s: Sample, p: Packed, epoch: Int,
       dropout: Double, g: Array[Double]): Unit = {
     val T = s.x.length
-    val u1 = p.u1; val u2 = p.u2
     val sc = scratchFor(T, p)
-    val h1 = sc.h1; val a1 = sc.a1; val m1v = sc.m1v; val h2 = sc.h2
-    // Pre-activations accumulate v-major as daxpy over 0-based rows:
-    // per unit the adds land v-ascending from the init — the dot form's
-    // exact order — with the INDEPENDENT unit index as the vector
-    // dimension, the one shape SuperWord vectorizes (Packed's note).
-    val acc = sc.acc
     var t = 1
-    while (t <= T) {
-      val xt = s.x(t - 1)
-      val rp = t * u1; val rm = (t - 1) * u1
-      var u = 0
-      while (u < u1) { acc(u) = xt * p.wx1(u) + p.b1(u); u += 1 }
-      var v = 0
-      while (v < u1) {
-        axpy(acc, h1(rm + v), p.wh1TRows(v), u1)
-        v += 1
-      }
-      u = 0
-      while (u < u1) {
-        val av = acc(u)
-        h1(rp + u) = if (av > 0) av else 0.0
-        m1v(rp + u) = dropMaskLocal(s.iv, s.rk, epoch, (t - 1) * u1 + u,
-          dropout)
-        a1(rp + u) = h1(rp + u) * m1v(rp + u)
-        u += 1
-      }
-      val qp = t * u2; val qm = (t - 1) * u2
-      System.arraycopy(p.b2, 0, acc, 0, u2)
-      v = 0
-      while (v < u1) {
-        axpy(acc, a1(rp + v), p.wx2TRows(v), u2)
-        v += 1
-      }
-      v = 0
-      while (v < u2) {
-        axpy(acc, h2(qm + v), p.wh2TRows(v), u2)
-        v += 1
-      }
-      u = 0
-      while (u < u2) {
-        val av = acc(u)
-        h2(qp + u) = if (av > 0) av else 0.0
-        u += 1
-      }
-      t += 1
-    }
-    val m2v = sc.m2v
-    val a2 = sc.a2
-    var u = 0
-    while (u < u2) {
-      m2v(u) = dropMaskLocal(s.iv, s.rk, epoch, T * u1 + u, dropout)
-      a2(u) = h2(T * u2 + u) * m2v(u); u += 1
-    }
-    val z3 = sc.z3
-    var o = 0
-    while (o < p.kc) {
-      var acc = p.b3(o)
-      val wb = o * u2
-      var v = 0
-      while (v < u2) { acc += a2(v) * p.w3(wb + v); v += 1 }
-      z3(o) = acc; o += 1
-    }
-    var mx = z3(0); o = 1
-    while (o < p.kc) { if (z3(o) > mx) mx = z3(o); o += 1 }
-    var denom = 0.0; o = 0
-    while (o < p.kc) { denom += math.exp(z3(o) - mx); o += 1 }
-    val loss = math.log(denom) + mx - z3(s.y)
+    while (t <= T) { forward(s, p, sc, t, epoch, dropout); t += 1 }
+    val loss = head(s, p, sc, T, epoch, dropout)
     if (s.iv) {
       g(p.statsOff + 2) += loss; g(p.statsOff + 3) += 1.0
       return
     }
     g(p.statsOff) += loss; g(p.statsOff + 1) += 1.0
-    val dzo = sc.dzo
-    o = 0
-    while (o < p.kc) {
-      dzo(o) = math.exp(z3(o) - mx) / denom - (if (s.y == o) 1.0 else 0.0)
-      o += 1
-    }
-    val dz1 = sc.dz1
-    val dz2 = sc.dz2
     t = T
-    while (t >= 1) {
-      val ti = t
-      val qp = ti * u2
-      var u3 = 0
-      if (ti == T) {
-        while (u3 < u2) {
-          var acc = 0.0
-          val wb = u3 * p.kc
-          o = 0
-          while (o < p.kc) { acc += dzo(o) * p.w3T(wb + o); o += 1 }
-          val dh2 = acc * m2v(u3)
-          dz2(ti * u2 + u3) = dh2 * (if (h2(qp + u3) > 0) 1.0 else 0.0)
-          u3 += 1
-        }
-      } else {
-        // dh2 as v-major daxpy over natural wh2 rows; per unit the adds
-        // land v-ascending from 0.0 — the dot form's order
-        val db = (ti + 1) * u2
-        val bacc = sc.bacc
-        java.util.Arrays.fill(bacc, 0, u2, 0.0)
-        var v = 0
-        while (v < u2) {
-          axpy(bacc, dz2(db + v), p.wh2Rows(v), u2)
-          v += 1
-        }
-        while (u3 < u2) {
-          dz2(ti * u2 + u3) = bacc(u3) * (if (h2(qp + u3) > 0) 1.0 else 0.0)
-          u3 += 1
-        }
-      }
-      val rp = ti * u1
-      val db2 = ti * u2
-      // dh1: wx2 part (v ascending), mask, then the wh1 recurrent part
-      // (v ascending) — the dot form's per-unit order, daxpy'd over
-      // natural rows
-      val dacc = sc.acc
-      java.util.Arrays.fill(dacc, 0, u1, 0.0)
-      var v3 = 0
-      while (v3 < u2) {
-        axpy(dacc, dz2(db2 + v3), p.wx2Rows(v3), u1)
-        v3 += 1
-      }
-      var u4 = 0
-      while (u4 < u1) { dacc(u4) *= m1v(rp + u4); u4 += 1 }
-      if (ti < T) {
-        val db1 = (ti + 1) * u1
-        var v2 = 0
-        while (v2 < u1) {
-          axpy(dacc, dz1(db1 + v2), p.wh1Rows(v2), u1)
-          v2 += 1
-        }
-      }
-      u4 = 0
-      while (u4 < u1) {
-        dz1(ti * u1 + u4) = dacc(u4) * (if (h1(rp + u4) > 0) 1.0 else 0.0)
-        u4 += 1
-      }
-      t -= 1
+    while (t >= 1) { backward(p, sc, t, T); t -= 1 }
+    clearSums(p, sc)
+    t = 1
+    while (t <= T) { gradStep(s, p, sc, t); t += 1 }
+    flush(p, sc, g)
+  }
+
+  /** Both layers at timestep `t`. Pre-activations accumulate v-major as
+    * daxpy over 0-based rows: per unit the adds land v-ascending from
+    * the init — the dot form's exact order — with the INDEPENDENT unit
+    * index as the vector dimension, the one shape SuperWord vectorizes
+    * (Packed's note). */
+  private def forward(s: Sample, p: Packed, sc: Scratch, t: Int,
+      epoch: Int, dropout: Double): Unit = {
+    val u1 = p.u1; val u2 = p.u2
+    val h1 = sc.h1; val a1 = sc.a1; val m1v = sc.m1v; val h2 = sc.h2
+    val acc = sc.acc
+    val xt = s.x(t - 1)
+    val rp = t * u1
+    var u = 0
+    while (u < u1) { acc(u) = xt * p.wx1(u) + p.b1(u); u += 1 }
+    matvecRows(acc, h1, (t - 1) * u1, p.wh1TRows, 0, u1, u1)
+    u = 0
+    while (u < u1) {
+      val av = acc(u)
+      h1(rp + u) = if (av > 0) av else 0.0
+      m1v(rp + u) = dropMaskLocal(s.iv, s.rk, epoch, (t - 1) * u1 + u,
+        dropout)
+      a1(rp + u) = h1(rp + u) * m1v(rp + u)
+      u += 1
     }
-    // gradient accumulation (sum over t), t-major: per t the dz row and
-    // the state rows it multiplies are contiguous 0-based slices, so
-    // every weight-gradient loop is a daxpy over the per-row scratch
-    // sums. Per element the adds land t-ascending and the finished sum
-    // lands in `g` as ONE add — both exactly the dot form's behavior.
-    val gwx1 = sc.gwx1; val gb1 = sc.gb1; val gb2 = sc.gb2
-    val gwh1 = sc.gwh1; val gwx2 = sc.gwx2; val gwh2 = sc.gwh2
-    java.util.Arrays.fill(gwx1, 0, u1, 0.0)
-    java.util.Arrays.fill(gb1, 0, u1, 0.0)
-    java.util.Arrays.fill(gb2, 0, u2, 0.0)
-    var r = 0
-    while (r < u1) { java.util.Arrays.fill(gwh1(r), 0, u1, 0.0); r += 1 }
-    r = 0
-    while (r < u2) {
-      java.util.Arrays.fill(gwx2(r), 0, u1, 0.0)
-      java.util.Arrays.fill(gwh2(r), 0, u2, 0.0)
-      r += 1
+    System.arraycopy(p.b2, 0, acc, 0, u2)
+    matvecRows(acc, a1, rp, p.wx2TRows, 0, u1, u2)
+    matvecRows(acc, h2, (t - 1) * u2, p.wh2TRows, 0, u2, u2)
+    val qp = t * u2
+    u = 0
+    while (u < u2) {
+      val av = acc(u)
+      h2(qp + u) = if (av > 0) av else 0.0
+      u += 1
     }
+  }
+
+  /** Dropped h2_T -> softmax head; returns the row's loss and leaves
+    * the logit gradient in `dzo`. */
+  private def head(s: Sample, p: Packed, sc: Scratch, T: Int,
+      epoch: Int, dropout: Double): Double = {
+    val u2 = p.u2
+    val m2v = sc.m2v; val a2 = sc.a2
+    var u = 0
+    while (u < u2) {
+      m2v(u) = dropMaskLocal(s.iv, s.rk, epoch, T * p.u1 + u, dropout)
+      a2(u) = sc.h2(T * u2 + u) * m2v(u); u += 1
+    }
+    denseDot(sc.z3, p.b3, p.w3, a2, u2, p.kc)
+    softmaxCE(sc.z3, p.kc, s.y, sc.dzo)
+  }
+
+  /** dz2 and dz1 at timestep `t`, reading the t+1 rows. dh2 (and the
+    * wx2 then wh1 parts of dh1) run as v-major daxpy over natural rows;
+    * per unit the adds land v-ascending from 0.0 — the dot form's
+    * order. */
+  private def backward(p: Packed, sc: Scratch, t: Int, T: Int): Unit = {
+    val u1 = p.u1; val u2 = p.u2
+    val h1 = sc.h1; val h2 = sc.h2; val dz1 = sc.dz1; val dz2 = sc.dz2
+    val bacc = sc.bacc
+    val qp = t * u2
+    if (t == T) {
+      backDot(bacc, sc.dzo, p.w3T, p.kc, u2)
+      var u = 0
+      while (u < u2) { bacc(u) = bacc(u) * sc.m2v(u); u += 1 }
+    } else {
+      java.util.Arrays.fill(bacc, 0, u2, 0.0)
+      matvecRows(bacc, dz2, (t + 1) * u2, p.wh2Rows, 0, u2, u2)
+    }
+    var u = 0
+    while (u < u2) {
+      dz2(qp + u) = bacc(u) * (if (h2(qp + u) > 0) 1.0 else 0.0)
+      u += 1
+    }
+    val rp = t * u1
+    val dacc = sc.acc
+    java.util.Arrays.fill(dacc, 0, u1, 0.0)
+    matvecRows(dacc, dz2, qp, p.wx2Rows, 0, u2, u1)
+    u = 0
+    while (u < u1) { dacc(u) *= sc.m1v(rp + u); u += 1 }
+    if (t < T) matvecRows(dacc, dz1, (t + 1) * u1, p.wh1Rows, 0, u1, u1)
+    u = 0
+    while (u < u1) {
+      dz1(rp + u) = dacc(u) * (if (h1(rp + u) > 0) 1.0 else 0.0)
+      u += 1
+    }
+  }
+
+  /** Zero the per-row gradient sums. */
+  private def clearSums(p: Packed, sc: Scratch): Unit = {
+    java.util.Arrays.fill(sc.gwx1, 0, p.u1, 0.0)
+    java.util.Arrays.fill(sc.gb1, 0, p.u1, 0.0)
+    java.util.Arrays.fill(sc.gb2, 0, p.u2, 0.0)
+    zeroRows(sc.gwh1, 0, p.u1, p.u1)
+    zeroRows(sc.gwx2, 0, p.u2, p.u1)
+    zeroRows(sc.gwh2, 0, p.u2, p.u2)
+  }
+
+  /** Timestep `t`'s share of the gradient sums (sum over t): the dz row
+    * and the state rows it multiplies are contiguous 0-based slices, so
+    * every weight-gradient loop is a daxpy over the per-row sums; per
+    * element the adds land t-ascending. */
+  private def gradStep(s: Sample, p: Packed, sc: Scratch, t: Int): Unit = {
+    val u1 = p.u1; val u2 = p.u2
     val h1p = sc.h1p; val a1c = sc.a1c; val h2p = sc.h2p
     val dzr1 = sc.dzr1; val dzr2 = sc.dzr2
-    var t2 = 1
-    while (t2 <= T) {
-      val xt = s.x(t2 - 1)
-      System.arraycopy(h1, (t2 - 1) * u1, h1p, 0, u1)
-      System.arraycopy(a1, t2 * u1, a1c, 0, u1)
-      System.arraycopy(h2, (t2 - 1) * u2, h2p, 0, u2)
-      System.arraycopy(dz1, t2 * u1, dzr1, 0, u1)
-      System.arraycopy(dz2, t2 * u2, dzr2, 0, u2)
-      axpy(gwx1, xt, dzr1, u1)
-      vadd(gb1, dzr1, u1)
-      var u5 = 0
-      while (u5 < u1) {
-        axpy(gwh1(u5), dzr1(u5), h1p, u1)
-        u5 += 1
-      }
-      vadd(gb2, dzr2, u2)
-      var u6 = 0
-      while (u6 < u2) {
-        val dv = dzr2(u6)
-        axpy(gwx2(u6), dv, a1c, u1)
-        axpy(gwh2(u6), dv, h2p, u2)
-        u6 += 1
-      }
-      t2 += 1
-    }
-    var u5 = 0
-    while (u5 < u1) {
-      g(p.wx1Off + u5) += gwx1(u5)
-      g(p.b1Off + u5) += gb1(u5)
-      val grow = gwh1(u5)
-      val gb = p.wh1Off + u5 * u1
-      var v = 0
-      while (v < u1) { g(gb + v) += grow(v); v += 1 }
-      u5 += 1
-    }
-    var u6 = 0
-    while (u6 < u2) {
-      g(p.b2Off + u6) += gb2(u6)
-      val groww = gwx2(u6)
-      val gxb = p.wx2Off + u6 * u1
-      var v = 0
-      while (v < u1) { g(gxb + v) += groww(v); v += 1 }
-      val growh = gwh2(u6)
-      val ghb = p.wh2Off + u6 * u2
-      v = 0
-      while (v < u2) { g(ghb + v) += growh(v); v += 1 }
-      u6 += 1
-    }
-    o = 0
-    while (o < p.kc) {
-      g(p.b3Off + o) += dzo(o)
-      var v = 0
-      while (v < u2) { g(p.w3Off + o * u2 + v) += dzo(o) * a2(v); v += 1 }
-      o += 1
-    }
+    System.arraycopy(sc.h1, (t - 1) * u1, h1p, 0, u1)
+    System.arraycopy(sc.a1, t * u1, a1c, 0, u1)
+    System.arraycopy(sc.h2, (t - 1) * u2, h2p, 0, u2)
+    System.arraycopy(sc.dz1, t * u1, dzr1, 0, u1)
+    System.arraycopy(sc.dz2, t * u2, dzr2, 0, u2)
+    axpy(sc.gwx1, s.x(t - 1), dzr1, u1)
+    vadd(sc.gb1, dzr1, u1)
+    rank1Rows(sc.gwh1, 0, dzr1, u1, h1p, u1)
+    vadd(sc.gb2, dzr2, u2)
+    rank1Rows(sc.gwx2, 0, dzr2, u2, a1c, u1)
+    rank1Rows(sc.gwh2, 0, dzr2, u2, h2p, u2)
+  }
+
+  /** Each finished per-row sum lands in `g` as ONE add (the dot form's
+    * behavior), then the head's gradients. */
+  private def flush(p: Packed, sc: Scratch, g: Array[Double]): Unit = {
+    val u1 = p.u1; val u2 = p.u2
+    gadd(g, p.wx1Off, sc.gwx1, u1)
+    gadd(g, p.b1Off, sc.gb1, u1)
+    flushRows(g, p.wh1Off, sc.gwh1, 0, u1, u1)
+    gadd(g, p.b2Off, sc.gb2, u2)
+    flushRows(g, p.wx2Off, sc.gwx2, 0, u2, u1)
+    flushRows(g, p.wh2Off, sc.gwh2, 0, u2, u2)
+    denseGrad(g, p.w3Off, p.b3Off, sc.dzo, p.kc, sc.a2, u2)
   }
 
   /** The stacked SimpleRNN kernel; `dropout` is the rate after each

@@ -120,4 +120,17 @@ class OptimizerStepSpec extends AnyFunSuite {
       Tensors.subDeltas(w, new Array[Double](3))
     }
   }
+
+  test("wrong delta count names both counts, too short or too long") {
+    val w = GdTrainer.init(3, 4, 2, seed = 7L)
+    val n = Tensors.flatLike(w, w).length
+    for (m <- Seq(0, n - 1, n + 1)) {
+      val e = intercept[IllegalArgumentException] {
+        Tensors.subDeltas(w, new Array[Double](m))
+      }
+      assert(e.getMessage == "requirement failed: optimizer produced " +
+        s"$m deltas for a $n-coordinate weights tree")
+    }
+    assert(Tensors.subDeltas(w, new Array[Double](n)) == w)
+  }
 }
