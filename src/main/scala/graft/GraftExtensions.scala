@@ -68,6 +68,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(graft.functions.MisraGriesAgg.injection)
     ext.injectFunction(graft.functions.KMeansAssignExpr.injection)
     ext.injectFunction(graft.functions.LongSetCountExpr.injection)
+    ext.injectFunction(graft.functions.NormKey.injection)
     ext.injectFunction((
       FunctionIdentifier("topk_agg"),
       new ExpressionInfo(classOf[TopKAgg].getName, "topk_agg"),

@@ -313,6 +313,56 @@ object TokenKernels {
       seen.size.toLong))
   }
 
+  /** The normalized dedup key of x24 in one loop over the UTF-8 bytes:
+    * equal to Spark's
+    * `trim(regexp_replace(regexp_replace(lower(t), "[^a-z0-9 ]", ""),
+    * " +", " "))`, the form the DuckDB oracle runs (NormKeySpec pins the
+    * equality over every code point). ASCII `A-Z` is lowered and
+    * `[a-z0-9]` kept; a run of `' '` becomes one PENDING space, written
+    * only before the next kept character, so the collapse and the trim
+    * fall out of the same loop; any other code point is dropped unless
+    * its lowercase is ASCII `[a-z0-9]` (U+212A KELVIN SIGN -> `k`,
+    * U+0130 -> `i`, which is what lower-then-strip leaves of its `i` +
+    * U+0307). Ill-formed bytes become U+FFFD first (`makeValid`: a
+    * validity scan, no copy for valid input), as they do for the builtin
+    * `lower`, so they are dropped and never swallow a neighbouring ASCII
+    * byte.
+    *
+    * Locale-free (the builtin follows the JVM's default locale, so a
+    * Turkic one would turn `I` into a dropped dotless `i`) and ICU-free:
+    * the builtin `lower` goes through ICU, whose case-map class pays a
+    * ~1.8 s single-threaded static initializer on its first use in a
+    * JVM, and then through two regex passes. */
+  def normKey(s: UTF8String): UTF8String = {
+    val v = s.makeValid()
+    val n = v.numBytes()
+    val out = new Array[Byte](n)
+    var k = 0
+    var pending = false
+    var i = 0
+    while (i < n) {
+      val b = v.getByte(i)
+      var c = -1
+      var len = 1
+      if (b >= 0) {
+        if (b >= 'a' && b <= 'z' || b >= '0' && b <= '9') c = b
+        else if (b >= 'A' && b <= 'Z') c = b + ('a' - 'A')
+        else if (b == ' ') pending = k > 0
+      } else {
+        len = UTF8String.numBytesForFirstByte(b)
+        val lc = Character.toLowerCase(v.codePointFrom(i))
+        if (lc >= 'a' && lc <= 'z' || lc >= '0' && lc <= '9') c = lc
+      }
+      if (c >= 0) {
+        if (pending) { out(k) = ' '; k += 1; pending = false }
+        out(k) = c.toByte
+        k += 1
+      }
+      i += len
+    }
+    UTF8String.fromBytes(out, 0, k)
+  }
+
   /** All ordered index pairs (arr(i), arr(j)), i < j, of a long array —
     * one flat loop replacing the interpreted nested-lambda form
     * `flatten(transform(vs, (x, i) -> transform(slice(vs, i + 2, ...),
@@ -549,6 +599,35 @@ case class CdcChunks(child: Expression, mod: Int) extends UnaryExpression {
     copy(child = newChild)
 }
 
+/** `norm_key(text)` — x24's normalized dedup key in one fused pass
+  * over the UTF-8 bytes (see [[TokenKernels.normKey]]). */
+case class NormKey(child: Expression) extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"norm_key requires string, got ${other.sql}")
+  }
+  override def dataType: DataType = StringType
+  override protected def nullSafeEval(v: Any): Any =
+    TokenKernels.normKey(v.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.TokenKernels.normKey($c);")
+  override protected def withNewChildInternal(newChild: Expression): NormKey =
+    copy(child = newChild)
+}
+
+object NormKey {
+  val injection: (FunctionIdentifier, ExpressionInfo,
+      Seq[Expression] => Expression) =
+    (FunctionIdentifier("norm_key"),
+      new ExpressionInfo(classOf[NormKey].getName, "norm_key"),
+      { args =>
+        require(args.length == 1, "norm_key takes 1 argument")
+        NormKey(args.head)
+      })
+}
+
 /** `text_quality_counts(text)` — the five quality-signal counts in one
   * fused pass (see [[TokenKernels.textQualityCounts]]). */
 case class TextQualityCounts(child: Expression) extends UnaryExpression {
@@ -734,6 +813,13 @@ object TokenKernelFns {
   def orderedPairs(spark: SparkSession, arr: Column): Column = {
     reg(spark, "ordered_pairs", 1, args => OrderedPairs(args.head))
     org.apache.spark.sql.functions.call_function("ordered_pairs", arr)
+  }
+
+  def normKey(spark: SparkSession, text: Column): Column = {
+    val (id, info, build) = NormKey.injection
+    if (!spark.sessionState.functionRegistry.functionExists(id))
+      spark.sessionState.functionRegistry.registerFunction(id, info, build)
+    org.apache.spark.sql.functions.call_function("norm_key", text)
   }
 
   def textQualityCounts(spark: SparkSession, text: Column): Column = {

@@ -24,6 +24,14 @@ object WideLstm2 {
 
   private val Gates = Array("i", "f", "g", "o")
 
+  /** One gate field of every gate, concatenated in i/f/g/o order. A
+    * method rather than a lambda over the constructor's weight tree: a
+    * closure over `w` inside [[Packed]] would make scalac keep the boxed
+    * tree as a field, and every broadcast would ship it. */
+  private def gateMajor[G](gates: Map[String, G])(
+      f: G => Seq[Double]): Array[Double] =
+    Gates.flatMap(x => f(gates(x)))
+
   /** Packed weights: FLAT gate-major arrays (plus transposed copies for
     * the backward pass's column access), O(1) hot-loop access with no
     * nested-array pointer chasing — the 2-level `Array[Array[Double]]`
@@ -38,13 +46,13 @@ object WideLstm2 {
     val d: Int = w.d
     val kc: Int = w.classes
     // layer 1: wx1((x)*u1+u), uu1(((x*u1)+u)*u1+v), b1((x)*u1+u)
-    val wx1: Array[Double] = Gates.flatMap(x => w.l1(x).wx)
-    val uu1: Array[Double] = Gates.flatMap(x => w.l1(x).u.flatten)
-    val b1: Array[Double] = Gates.flatMap(x => w.l1(x).b)
+    val wx1: Array[Double] = gateMajor(w.l1)(_.wx)
+    val uu1: Array[Double] = gateMajor(w.l1)(_.u.flatten)
+    val b1: Array[Double] = gateMajor(w.l1)(_.b)
     // layer 2: wx2(((x*u2)+u)*u1+v over u1), uu2(((x*u2)+u)*u2+v), b2
-    val wx2: Array[Double] = Gates.flatMap(x => w.l2(x).wx.flatten)
-    val uu2: Array[Double] = Gates.flatMap(x => w.l2(x).u.flatten)
-    val b2: Array[Double] = Gates.flatMap(x => w.l2(x).b)
+    val wx2: Array[Double] = gateMajor(w.l2)(_.wx.flatten)
+    val uu2: Array[Double] = gateMajor(w.l2)(_.u.flatten)
+    val b2: Array[Double] = gateMajor(w.l2)(_.b)
     val wd: Array[Double] = w.wd.flatten.toArray            // (j)*u2+v
     val bd: Array[Double] = w.bd.toArray
     val w3: Array[Double] = w.w3.flatten.toArray            // (o)*d+j

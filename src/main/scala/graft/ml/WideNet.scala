@@ -53,8 +53,7 @@ object WideNet {
     val blocks: Int = w.convW.length
     val k: Int = w.convW(0)(0).length
     val fs: Array[Int] = w.convW.map(_.length).toArray
-    val fin: Array[Int] =
-      Array.tabulate(blocks)(b => w.convW(b)(0)(0).length)
+    val fin: Array[Int] = w.convW.map(_(0)(0).length).toArray
     // cw(b)((f*k+j)*fin+c) — the flat kernel row for filter f
     val cw: Array[Array[Double]] =
       w.convW.map(_.flatten.flatten.toArray).toArray
@@ -99,7 +98,8 @@ object WideNet {
     // gradient buffer: conv weights (b,f,j,c), conv biases (b,f), dense
     // (u,i), dense bias (u), head (o,u), head bias (o), then the
     // driver's stats tail
-    val (ps, ls) = levelSizes(T, k, blocks)
+    val ps: Array[Int] = convLengths(T, k, blocks)
+    val ls: Array[Int] = ps.map(_ / 2)
     require(ls(blocks - 1) * fs(blocks - 1) == flat,
       s"input length $T does not match the dense layer's width $flat")
     val cwOff: Array[Int] = {
@@ -287,19 +287,20 @@ object WideNet {
       if (m >= math.round(1000 * p)) 1.0 / (1.0 - p) else 0.0
     }
 
-  private def levelSizes(T: Int, k: Int, blocks: Int): (Array[Int], Array[Int]) = {
+  /** Each block's conv output length; its pooled length is half of it
+    * (returned alone so [[Packed]] keeps no tuple field). */
+  private def convLengths(T: Int, k: Int, blocks: Int): Array[Int] = {
     var len = T
     val ps = new Array[Int](blocks)
-    val ls = new Array[Int](blocks)
     var b = 0
     while (b < blocks) {
       val p = len - k + 1
       require(p >= 1, s"sequence too short for $blocks blocks of kernel $k")
       val l = p / 2
       require(l >= 1, s"pooling empties the sequence ($blocks blocks, k=$k)")
-      ps(b) = p; ls(b) = l; len = l; b += 1
+      ps(b) = p; len = l; b += 1
     }
-    (ps, ls)
+    ps
   }
 
   /** Per-thread reusable scratch for [[accumulate]] (the WideLstm2

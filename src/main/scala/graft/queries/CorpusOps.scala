@@ -1263,16 +1263,20 @@ object CorpusOps {
     // digest; docs differing only in case/punctuation/spacing collapse
     // onto one normalized key, min doc_id keeps. Emits every doc's
     // (doc_id, keeper, is_dup) so the assignment itself is hash-gated.
-    // Same single digest-keyed exchange as x1; the normalization is a
-    // row-local regex chain identical in both engines (POSIX classes,
-    // global replace).
+    // Same single digest-keyed exchange as x1. The key is the fused
+    // row-local `norm_key` kernel (TokenKernels.normKey): one pass over
+    // the UTF-8 bytes, equal to the lower/regexp_replace/trim chain the
+    // oracle runs (NormKeySpec pins it over every code point), but
+    // without Spark's ICU-backed `lower` — whose case-map class costs a
+    // ~1.8 s single-threaded static initializer on its first call in a
+    // JVM — or the two regex passes.
     Entry("x24_norm_dedup",
       (s, dir) => {
-        val norm = trim(regexp_replace(regexp_replace(lower(col("text")),
-          "[^a-z0-9 ]", ""), " +", " "))
         val w = Window.partitionBy("nk")
         t(s, dir, "documents")
-          .select(col("doc_id"), md5(norm).as("nk"))
+          .select(col("doc_id"),
+            md5(graft.functions.TokenKernelFns.normKey(s, col("text")))
+              .as("nk"))
           .withColumn("keeper", min("doc_id").over(w))
           .select(col("doc_id"), col("keeper"),
             (col("doc_id") =!= col("keeper")).cast("long").as("is_dup"))

@@ -57,6 +57,9 @@ class ExtensionsSpec extends AnyFunSuite {
         " array(array(0L, 0L), array(2L, 2L))) AS c")
       .head()
     assert(!ka.isNullAt(0))
+    val nk = spark.sql("SELECT norm_key('Hello,  World!') AS k")
+      .head().getString(0)
+    assert(nk == "hello world")
   }
 
   test("topk_agg is SQL-callable and HammingJoinRewrite is installed") {

@@ -61,6 +61,23 @@ class PlanAuditSpec extends AnyFunSuite {
         s"missing: ${declared.diff(rowsOnly)}")
   }
 
+  test("x24 keys on the fused norm_key kernel: no case map, no regex") {
+    // Spark's lower/upper/initcap go through an ICU case-map class whose
+    // first use in a JVM costs a ~1.8 s single-threaded static
+    // initializer; x24's key is the one-pass norm_key kernel instead
+    import org.apache.spark.sql.catalyst.expressions.{InitCap, Lower,
+      RegExpReplace, Upper}
+    val plan = Registry.all.find(_.name == "x24_norm_dedup").get
+      .run(spark, sf).queryExecution.optimizedPlan
+    val exprs = plan.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    val banned = exprs.collect {
+      case e @ (_: Lower | _: Upper | _: InitCap | _: RegExpReplace) =>
+        e.prettyName
+    }
+    assert(banned.isEmpty, s"x24 plans $banned:\n$plan")
+    assert(exprs.exists(_.isInstanceOf[graft.functions.NormKey]), plan)
+  }
+
   test("no query plans an unjustified nested-loop or cartesian join") {
     val offenders = plans.collect {
       case (n, p) if (p.contains("BroadcastNestedLoopJoin") ||
