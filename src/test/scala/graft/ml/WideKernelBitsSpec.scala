@@ -7,16 +7,18 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ml.TrainerCommon.{Kernel, Sample}
 
-/** Golden bits for the four reference-width kernels: `pack` plus
+/** Golden bits for the wide kernels: `pack` plus
   * `accumulate` over a fixed mix of train and val rows, two epochs,
   * dropout > 0, summed on the driver (no Spark job), and the sha256 of
   * the buffer's raw IEEE bits pinned. The twin specs compare against the
   * staged trainers at 1e-9; this pins EXACT bit identity, so a kernel
   * restructure that moves a single add (or a depth-generic kernel that
   * replaces one of these) cannot pass by rounding luck. The digests
-  * were recorded from the kernels before they were split into
-  * per-timestep/per-layer helpers and must never be re-recorded to make
-  * a change pass.
+  * were recorded from each kernel's own monolithic form — the four
+  * reference-width kernels before they were split into
+  * per-timestep/per-layer helpers, the single-layer recurrent and the
+  * conv kernels before depth-generic kernels replace them — and must
+  * never be re-recorded to make a change pass.
   */
 class WideKernelBitsSpec extends AnyFunSuite {
 
@@ -61,6 +63,46 @@ class WideKernelBitsSpec extends AnyFunSuite {
       seed = 5L)
     assert(digest(WideLstm2.Kernel(0.3), w, T, rows(16, T, 3)) ==
       "539e9dd5929e4e3818070220345dbc868ab3171c2e6a13bd3469f35cdcd323d8")
+  }
+
+  test("WideRnn kernel: unrolled and remainder units") {
+    val T = 7
+    val w = RnnTrainer.init(units = 5, classes = 3, seed = 5L)
+    assert(digest(WideRnn.Kernel(0.3), w, T, rows(16, T, 3)) ==
+      "82904a00d66065f75890b9820e04c50844de0edb7277099fe731897982c1982b")
+  }
+
+  test("WideLstm kernel") {
+    val T = 6
+    val w = LstmTrainer.init(units = 5, classes = 3, seed = 5L)
+    assert(digest(WideLstm.Kernel, w, T, rows(16, T, 3)) ==
+      "379d4fafbccfe0653489e0f80418585f3a9f12b720f1ef17082a0a1b4c13f18e")
+  }
+
+  test("WideConv kernel: max pool with dropout") {
+    val T = 11
+    val w = ConvTrainer.init(filters = 4, kernel = 3, classes = 3,
+      seed = 5L)
+    assert(digest(WideConv.Kernel(0.3, ConvTrainer.MaxPool), w, T,
+      rows(16, T, 3)) ==
+      "37b199aac533bddebb62763d59b16f3f0a9c29cd4548385893238e1309d029dd")
+  }
+
+  test("WideConv kernel: average pool") {
+    val T = 11
+    val w = ConvTrainer.init(filters = 4, kernel = 3, classes = 3,
+      seed = 5L)
+    assert(digest(WideConv.Kernel(0.2, ConvTrainer.AvgPool), w, T,
+      rows(16, T, 3)) ==
+      "0cac7da4e10a4ee50179af5bd37aedd22391567bf72629007f2b5ab4f86f6fb1")
+  }
+
+  test("WideConv2 kernel: odd first-block length") {
+    val T = 13
+    val w = Conv2Trainer.init(f1 = 3, f2 = 4, kernel = 3, classes = 3,
+      seed = 5L)
+    assert(digest(WideConv2.Kernel, w, T, rows(16, T, 3)) ==
+      "9e89a593ff6052731b42248962b7e565706d9218c2debd74fca3d35188a948df")
   }
 
   test("WideMlp3 kernel: unrolled and remainder units, a zero-rate layer") {
