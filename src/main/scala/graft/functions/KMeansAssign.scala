@@ -21,8 +21,8 @@ import org.apache.spark.sql.types._
   * subexpression elimination cannot fuse them), and at reference-scale
   * k (tens to thousands of clusters) the generated code for a k-element
   * array of fused kernels blows past codegen method limits and falls
-  * back to interpreted eval. ScaleSmoke measured the composed
-  * assignment at ~300 µs/row at k=80 — this kernel is one k×dims
+  * back to interpreted eval. The composed assignment measured ~300
+  * µs/row at k=80 (CHANGELOG, SURVEY §7.4b) — this kernel is one k×dims
   * multiply-add loop (~1 µs/row), with the centroid matrix held as a
   * flat Long array reference, not k array literals.
   *

@@ -469,7 +469,7 @@ object TokenKernels {
     * round-13 `aggregate()` Column fold this replaces rebuilt a
     * struct(chunks array, open string) accumulator per TOKEN through
     * interpreted lambda plumbing and went superlinear with corpus size
-    * (ScaleSmoke 10x/50x: 4.4 s -> 38.3 s for 5x the tokens — GC churn,
+    * (10x/50x: 4.4 s -> 38.3 s for 5x the tokens, CHANGELOG — GC churn,
     * not arithmetic). Split matches the builtin `split(text, ' ')`
     * (regex, limit -1: trailing empty tokens kept). */
   def cdcChunks(text: UTF8String, mod: Int): ArrayData = {

@@ -165,6 +165,46 @@ object WideNet {
   // compiled for the rest of the pass. Every element keeps its add
   // order: only method boundaries moved.
 
+  /** The `n` rows of length `len` of the row-major `a`, each a copy:
+    * the 0-based daxpy operand form of a weight matrix (see Packed). */
+  private[ml] def rowsOf(a: Array[Double], n: Int,
+      len: Int): Array[Array[Double]] =
+    Array.tabulate(n)(r =>
+      java.util.Arrays.copyOfRange(a, r * len, (r + 1) * len))
+
+  /** [[rowsOf]] of `a` read as `blocks` consecutive row-major `r` x `c`
+    * blocks, each transposed: row `k * c + j` holds column `j` of block
+    * `k`. The forward daxpy form of gate-major weights. */
+  private[ml] def rowsT(a: Array[Double], blocks: Int, r: Int,
+      c: Int): Array[Array[Double]] =
+    Array.tabulate(blocks * c) { kj =>
+      val base = kj / c * r * c + kj % c
+      Array.tabulate(r)(i => a(base + i * c))
+    }
+
+  /** Per layer `l`, the rows of the `gates` stacked `out(l)` x `in(l)`
+    * blocks of `ws(l)`: transposed ([[rowsT]], the forward daxpy form)
+    * or natural ([[rowsOf]], the backward one). A method and not a
+    * lambda inside a Packed constructor, so no Packed keeps `ws` as a
+    * field. */
+  private[ml] def layerRows(ws: Array[Array[Double]], gates: Int,
+      out: Array[Int], in: Array[Int],
+      transposed: Boolean): Array[Array[Array[Double]]] =
+    Array.tabulate(ws.length)(l =>
+      if (transposed) rowsT(ws(l), gates, out(l), in(l))
+      else rowsOf(ws(l), gates * out(l), in(l)))
+
+  /** `n` buffer cells from `off`, divided by `div`: one bias or input
+    * vector of a typed mean gradient. */
+  private[ml] def meanVec(g: Array[Double], off: Int, n: Int,
+      div: Double): Seq[Double] =
+    Seq.tabulate(n)(i => g(off + i) / div)
+
+  /** The row-major `r` x `c` block at `off`, divided by `div`. */
+  private[ml] def meanMat(g: Array[Double], off: Int, r: Int, c: Int,
+      div: Double): Seq[Seq[Double]] =
+    Seq.tabulate(r, c)((i, j) => g(off + i * c + j) / div)
+
   /** `acc(i) += x(xOff + v) * rows(rowOff + v)(i)` for v = 0 until n
     * (ascending) — a matrix-vector product as daxpy over 0-based rows. */
   private[ml] def matvecRows(acc: Array[Double], x: Array[Double],

@@ -35,8 +35,8 @@ object CorpusClean {
       // before the contamination join. A 3-gram shared by thousands of
       // documents is boilerplate, not contamination evidence — and it
       // is also the superlinear-fanout hazard of the shingle join
-      // (ScaleSmoke measured 14x cost for 5x docs on a boilerplate-
-      // heavy corpus; the cap restores linearity via an anti-join over
+      // (measured 14x cost for 5x docs on a boilerplate-heavy corpus,
+      // CHANGELOG; the cap restores linearity via an anti-join over
       // the few hot keys). The default is ON (10k): at 100 TB an
       // uncapped join is a scale cliff, so safety must not depend on
       // the caller knowing this knob exists — and a shingle in >10k

@@ -942,8 +942,8 @@ object Dedup {
         hamming(col("h1"), col("h2")).cast("long").as("dist"))
   }
 
-  /** Duplicate-span SCRUBBING (RefinedWeb-style; the p11 entry and the
-    * ScaleSmoke row share this plan): re-emit every document with its
+  /** Duplicate-span SCRUBBING (RefinedWeb-style; the p11 entry's
+    * plan): re-emit every document with its
     * duplicated content-defined chunks removed — a chunk occurring in
     * >= 2 distinct docs survives only at its global canonical owner
     * (min (id, chunk_idx)); kept chunks are stitched back in position

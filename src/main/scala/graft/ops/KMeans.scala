@@ -61,7 +61,8 @@ object KMeans {
     * ([[graft.functions.KMeansAssignExpr]]); KMeansSpec pins the two
     * bit-identical. Not used on the hot path: the k-wide tree is
     * evaluated up to 3x per row and falls off codegen at reference-
-    * scale k (ScaleSmoke measured ~300 µs/row at k=80 vs ~1 µs fused). */
+    * scale k (measured ~300 µs/row at k=80 vs ~1 µs fused; CHANGELOG,
+    * SURVEY §7.4b). */
   private[graft] def composedAssignCols(
       spark: org.apache.spark.sql.SparkSession,
       cents: Seq[Seq[Long]]): (Column, Column) = {

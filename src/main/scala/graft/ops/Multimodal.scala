@@ -140,7 +140,7 @@ object Multimodal {
     * ~22k — real PNG inflate+luma costs ~1.5× the LCG fake at this
     * plane size, i.e. ~1.8k imgs/s/core, scan-parallel at cluster
     * scale like every other narrow map here. Scaling point (round 16,
-    * ScaleSmoke local[32] media family, SURVEY §7.4b): 40k→200k PNGs
+    * local[32] media rows, CHANGELOG, SURVEY §7.4b): 40k→200k PNGs
     * decode in 1.3→10.2 s (~29k→20k imgs/s; the throughput dip is
     * encoder/GC cost of full-pixel Frame output rows, not decode —
     * the features path with small output rows scales 0.6→2.2 s,

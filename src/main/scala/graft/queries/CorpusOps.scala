@@ -52,9 +52,9 @@ object CorpusOps {
     * shuffle + sort entirely — at 100 TB that removes the full-corpus
     * exchange, the difference between one wide stage and two.
     * Implemented as the fused `cdc_chunks` kernel: the first cut of
-    * this helper was an `aggregate()` Column fold, which ScaleSmoke
-    * caught going SUPERLINEAR at 50x corpus (4.4 s -> 38.3 s for 5x
-    * the tokens — per-token interpreted struct/array rebuilds, GC
+    * this helper was an `aggregate()` Column fold, measured going
+    * SUPERLINEAR at 50x corpus (4.4 s -> 38.3 s for 5x the tokens,
+    * CHANGELOG — per-token interpreted struct/array rebuilds, GC
     * churn, not arithmetic; the kernel is one JVM loop). */
   private[graft] def cdcChunks(spark: org.apache.spark.sql.SparkSession,
       textCol: Column): Column =
@@ -313,8 +313,8 @@ object CorpusOps {
     // the joined tokens: the gate checks content, not just counts.
     // The md5 boundary/fingerprint hash is the ORACLE-portability
     // contract; a production deployment swaps both to codegen'd
-    // xxhash64 — ScaleSmoke carries the md5/xxhash64 row pair, and the
-    // swap is most of the row's CPU.
+    // xxhash64 — the measured md5/xxhash64 pair (~2.5x hash tax,
+    // CHANGELOG) puts the swap at most of the row's CPU.
     Entry("p6_cdc_chunk",
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window

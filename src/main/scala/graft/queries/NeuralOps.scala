@@ -572,9 +572,11 @@ object NeuralOps {
         // 3 epochs: per-epoch cost is staged-DAG plan/codegen depth,
         // not data (the q56/q58 rationale); descent + the ES harness
         // are fully exercised at this count. Fit runs on the
-        // treeAggregate twin (WideRnn — the q58/q59 pattern):
-        // WideSinglesSpec pins it gradient-for-gradient to
-        // RnnTrainer's staged plan, so the trajectory is unchanged
+        // treeAggregate path (the q58/q59 pattern): the WideRnn bridge
+        // onto the depth-generic WideRnn2 kernel at one layer, which
+        // WideSinglesSpec pins gradient-for-gradient to RnnTrainer's
+        // staged plan (WideKernelBitsSpec to the former single-layer
+        // kernel's bits), so the trajectory is unchanged
         // while the per-epoch staged plan/codegen cost disappears;
         // predictStaged below keeps the staged DAG exercised.
         // round 13: the reference's actual optimizer — Adam(0.001),
@@ -669,10 +671,11 @@ object NeuralOps {
     Entry("q56_lstm_train",
       (s, dir) => trainEntry(s, dir) { (facts, xs, y) =>
         val w0 = LstmTrainer.init(units = 2, classes = 2, seed = 29L)
-        // fit on the treeAggregate twin (WideLstm, the q59/q60
-        // rationale — WideSinglesSpec pins all 14 gradient tensors to
-        // the staged plan); predictStaged keeps the staged gated
-        // forward DAG exercised below
+        // fit on the treeAggregate path (the q59/q60 rationale): the
+        // WideLstm bridge onto the depth-generic WideLstm2 kernel at
+        // one layer with no Dense and no dropout — WideSinglesSpec pins
+        // all 14 gradient tensors to the staged plan; predictStaged
+        // keeps the staged gated forward DAG exercised below
         // Adam(0.001) — the reference's optimizer (round 13, the q42
         // note)
         val (w, losses) = TrainerCommon.fit(WideLstm.Kernel, facts,

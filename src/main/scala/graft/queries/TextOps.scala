@@ -712,8 +712,8 @@ object TextOps {
     // isolation): shingles appearing in more than DfCap training docs
     // are boilerplate, not contamination evidence, and are dropped from
     // the overlap join by an anti-join BEFORE it fans out. This is the
-    // mitigation ScaleSmoke proved mandatory (uncapped: 14x cost for 5x
-    // docs on boilerplate-heavy corpora); the cap is ANSI-expressible —
+    // mitigation measured as mandatory (uncapped: 14x cost for 5x docs
+    // on boilerplate-heavy corpora, CHANGELOG); the cap is ANSI-expressible —
     // a HAVING-filtered hot set + NOT IN — so unlike the engine-hash
     // families the 100 TB-safe form itself gets the strict DuckDB hash
     // gate. DfCap = 25 is low enough to actually fire on the fixture

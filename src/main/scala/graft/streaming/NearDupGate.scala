@@ -153,7 +153,7 @@ object NearDupGate {
   }
 
   /** Declarative batch reduction of [[verdicts]] (the hash-gated
-    * `p12_neardup_gate` plan; the ScaleSmoke row shares it): keeper per
+    * `p12_neardup_gate` plan): keeper per
     * (band, bucket) = min id, verified by the signature estimator.
     *
     * Shape: NARROW band rows (band, bucket, id — no signature) feed the

@@ -3,6 +3,13 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, GenericInternalRow, InterpretedUnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.{PortableHash, TokenKernelFns}
 import graft.ops.BpeTrain
 
@@ -236,16 +243,37 @@ class TokenKernelsSpec extends AnyFunSuite {
   }
 
   test("kernels survive codegen and interpreted paths identically") {
-    // wholeStage off forces the interpreted eval() path; results must
-    // match the codegen run bit-for-bit (shared static kernel)
-    val df = fixtureTexts.select(col("id"), split(col("text"), " ").as("t"))
-    def run(): Seq[Row] = df.select(col("id"),
-        TokenKernelFns.minhashSig(spark, col("t"), 8).as("s"),
+    // A generated projection runs the kernels' doGenCode, an interpreted
+    // one their nullSafeEval. A session setting cannot force the latter:
+    // with whole-stage codegen off, ProjectExec still builds its
+    // projection through expression codegen. So both projections are
+    // built directly over the analyzed expressions (the NormKeySpec way).
+    val df = spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      StructType(Seq(StructField("t", ArrayType(StringType)))))
+    val p = df.select(TokenKernelFns.minhashSig(spark, col("t"), 8).as("s"),
         TokenKernelFns.tokenXx64Set(spark, col("t")).as("x"))
-      .orderBy("id").collect().toSeq
-    val on = run()
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try assert(run() == on)
-    finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+      .queryExecution.analyzed.collectFirst { case p: Project => p }.get
+    val exprs = p.projectList.map(e => BindReferences.bindReference(
+      e.asInstanceOf[Alias].child, p.child.output))
+    val gen = GenerateUnsafeProjection.generate(exprs)
+    val interp = InterpretedUnsafeProjection.createProjection(exprs)
+    def cells(r: InternalRow): Seq[Option[Seq[Option[Long]]]] =
+      Seq(0, 1).map(i => Option.when(!r.isNullAt(i)) {
+        val a = r.getArray(i)
+        (0 until a.numElements()).map(j =>
+          Option.when(!a.isNullAt(j))(a.getLong(j)))
+      })
+    val docs = fixtureTexts.select(split(col("text"), " ")).collect()
+      .map(_.getSeq[String](0)).toSeq
+    val inputs = docs ++ Seq(Seq("b", null, "a", "b"), Seq(null), Seq.empty)
+    val row = new GenericInternalRow(1)
+    for (toks <- inputs.map(Some(_)) :+ None) {
+      row.update(0, toks.map(ts => new GenericArrayData(
+        ts.map(t => if (t == null) null else UTF8String.fromString(t))))
+        .orNull)
+      val viaGen = cells(gen(row))
+      assert(cells(interp(row)) == viaGen, s"input $toks")
+      assert(viaGen.forall(_.isDefined) == toks.isDefined, s"input $toks")
+    }
   }
 }

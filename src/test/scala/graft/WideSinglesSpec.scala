@@ -5,9 +5,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
 import graft.ml._
 
-/** Equivalence gates for the SINGLE-LAYER wide kernels (WideMlp3 at
-  * one hidden layer / WideRnn / WideConv / WideLstm) run through the
-  * [[graft.ml.TrainerCommon]] driver: at widths where the staged plan
+/** Equivalence gates for the SINGLE-LAYER wide kernels run through the
+  * [[graft.ml.TrainerCommon]] driver: WideMlp3 at one hidden layer,
+  * WideRnn and WideLstm (weight bridges onto the depth-generic
+  * WideRnn2/WideLstm2 kernels at one layer) and WideConv. At widths
+  * where the staged plan
   * is tractable, each kernel must reproduce its staged trainer's gradients,
   * losses, dropout masks, and val-slice semantics number for number —
   * the same obligation WideNetSpec/WideRnn2Spec/WideLstm2Spec pin for

@@ -42,6 +42,47 @@ class WideKernelBitsSpec extends AnyFunSuite {
       .map(b => f"$b%02x").mkString
   }
 
+  /** Each row length's buffer (raw bits) after two epochs over `order`,
+    * accumulated on a fresh thread, so from a fresh per-thread scratch. */
+  private def buffersByLength[W, G](k: Kernel[W, G], w: W,
+      order: Seq[Sample]): Map[Int, Seq[Long]] = {
+    var out = Map.empty[Int, Seq[Long]]
+    val th = new Thread(() => {
+      val ps = order.map(_.x.length).distinct.map(n => n -> k.pack(w, n))
+        .toMap
+      val gs = ps.map { case (n, p) => n -> new Array[Double](p.statsOff + 4) }
+      for (epoch <- 1 to 2; s <- order)
+        k.accumulate(s, ps(s.x.length), epoch, gs(s.x.length))
+      out = gs.map { case (n, g) =>
+        n -> g.toSeq.map(java.lang.Double.doubleToRawLongBits) }
+    })
+    th.start(); th.join()
+    out
+  }
+
+  /** Rows of T = 3 and T = 7 interleaved on one thread — the scratch
+    * grows to T = 7 and then serves the T = 3 rows — give the same bits
+    * as each length run alone. */
+  private def interleavedLengths[W, G](k: Kernel[W, G], w: W): Unit = {
+    val short = rows(8, 3, 3); val long = rows(8, 7, 3)
+    val mixed = short.zip(long).flatMap { case (a, b) => Seq(a, b) }
+    val alone = buffersByLength(k, w, short) ++ buffersByLength(k, w, long)
+    assert(alone.keySet == Set(3, 7))
+    assert(buffersByLength(k, w, mixed) == alone)
+  }
+
+  test("recurrent kernels: T = 3 and T = 7 rows interleaved on one " +
+    "thread match separate runs") {
+    interleavedLengths(WideRnn2.Kernel(0.3),
+      Rnn2Trainer.init(u1 = 5, u2 = 6, classes = 3, seed = 5L))
+    interleavedLengths(WideLstm2.Kernel(0.3),
+      Lstm2Trainer.init(u1 = 5, u2 = 6, d = 4, classes = 3, seed = 5L))
+    interleavedLengths(WideRnn.Kernel(0.3),
+      RnnTrainer.init(units = 5, classes = 3, seed = 5L))
+    interleavedLengths(WideLstm.Kernel,
+      LstmTrainer.init(units = 5, classes = 3, seed = 5L))
+  }
+
   test("WideNet kernel: three conv blocks, odd pooled length") {
     val T = 24
     val w = ConvNetTrainer.init(T, filters = Seq(3, 4, 5), kernel = 3,

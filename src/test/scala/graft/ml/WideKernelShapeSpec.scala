@@ -6,7 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** JIT-shape guard for the reference-width kernels the `train`
   * benchmark workload runs: no method of `WideNet$`, `WideRnn2$`,
   * `WideLstm2$` or `WideMlp3$` may carry more than 1,000 bytes of
-  * bytecode.
+  * bytecode. `WideRnn2$` and `WideLstm2$` are the depth-generic
+  * recurrent kernels: their per-layer helpers also run q42's and q56's
+  * single-layer fits, through the `WideRnn`/`WideLstm` weight bridges,
+  * which hold no kernel code of their own.
   *
   * Why: a per-row kernel runs once per row, so a monolithic
   * `accumulate` (WideMlp3 1,570, WideRnn2 2,153, WideNet 2,328 and

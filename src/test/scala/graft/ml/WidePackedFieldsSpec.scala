@@ -30,7 +30,8 @@ class WidePackedFieldsSpec extends AnyFunSuite {
     if (c.isArray) primitiveOrArray(c.getComponentType) else c.isPrimitive
 
   test("the packed classes are found") {
-    assert(packedClasses.size >= 8, s"found only $packedClasses")
+    assert(packedClasses == Seq("WideConv", "WideConv2", "WideLstm2",
+      "WideMlp3", "WideNet", "WideRnn2").map(n => s"graft.ml.$n$$Packed"))
   }
 
   for (cls <- packedClasses)
