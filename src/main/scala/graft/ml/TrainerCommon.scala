@@ -505,48 +505,71 @@ object TrainerCommon {
     try body(rdd) finally { rdd.unpersist(blocking = false); () }
   }
 
-  /** A [[Kernel]]'s weights packed for one pass at one sequence length:
+  /** A [[Kernel]]'s weights packed for one pass at sequence length `T`:
     * flat/transposed arrays plus the gradient buffer layout. The buffer
     * holds `statsOff` gradient coordinates followed by the fixed stats
     * tail [train loss sum, train count, val loss sum, val count]. */
-  trait Packed extends Serializable { def statsOff: Int }
+  trait Packed extends Serializable { def statsOff: Int; def T: Int }
 
   /** The per-row contract of one wide-path family (the reference-width
     * twin of a staged trainer; [[WideNet]] gives the representation
     * rationale). The kernel value carries the family's hyperparameters
     * (dropout rates, pooling), so every pass of one fit — the val-only
-    * pass included — runs the same kernel. */
+    * pass included — runs the same kernel. A pass ([[sumPass]]) makes
+    * ONE scratch per task, inside the task, and never retains it: no
+    * work array outlives its task or stays on an executor thread
+    * between fits. The per-task partials merge in the combine tree
+    * `treeAggregate` has always built, so every sum keeps its bits. */
   trait Kernel[W, G] extends Serializable {
     type P <: Packed
+    /** The per-row work arrays of [[accumulate]]. */
+    type S <: AnyRef
     /** Dropout rates the kernel applies; the driver rejects any outside
       * [0, 1). */
     def drops: Seq[Double]
     /** Pack `w` for inputs of length `T`; fails when `T` does not fit
       * the architecture. */
     def pack(w: W, T: Int): P
-    /** Add one row to `g`: a train row adds its gradients and stats
-      * slots 0-1, a val row (inference semantics, keep-all masks) adds
-      * only its loss to slots 2-3. */
-    def accumulate(s: Sample, p: P, epoch: Int, g: Array[Double]): Unit
+    /** Fresh work arrays for rows of up to `p.T` steps; one scratch
+      * serves any sequence of such rows. */
+    def scratch(p: P): S
+    /** Add one row to `g`, working in `sc`: a train row adds its
+      * gradients and stats slots 0-1, a val row (inference semantics,
+      * keep-all masks) adds only its loss to slots 2-3. */
+    def accumulate(s: Sample, p: P, sc: S, epoch: Int,
+        g: Array[Double]): Unit
     /** The summed buffer as typed mean gradients over `n` train rows,
       * mean train loss in the trailing `loss` field. */
     def grads(p: P, g: Array[Double], n: Double): G
   }
 
-  /** One pass of `k` over `rows`: weights broadcast once, one O(params)
-    * treeAggregate, broadcast released. Returns the summed buffer. */
+  /** One pass of `k` over `rows`: weights broadcast once, one gradient
+    * buffer and one scratch per task, the partials merged by
+    * `treeAggregate(depth = 2)` from a `null` zero (no O(params) buffer
+    * in the closure; `treeReduce` builds the same tree through an extra
+    * RDD, at more driver time per pass). Each partial enters the tree
+    * where `zero + partial` did, and `+0.0 + x` is `x` (a partial sums
+    * from +0.0, so never holds -0.0): every sum keeps its bits. An RDD
+    * with no partitions sums to zeros. */
   private def sumPass[W, G](k: Kernel[W, G])(p: k.P, rows: RDD[Sample],
       epoch: Int): Array[Double] = {
     require(k.drops.forall(d => d >= 0.0 && d < 1.0), "dropout in [0, 1)")
+    val n = p.statsOff + 4
+    val add = (a: Array[Double], b: Array[Double]) =>
+      if (a == null) b
+      else if (b == null) a
+      else { WideNet.vadd(a, b, n); a }
     val bc = rows.sparkContext.broadcast(p)(ClassTag(p.getClass))
-    try rows.treeAggregate(new Array[Double](p.statsOff + 4))(
-      seqOp = (buf, s) => { k.accumulate(s, bc.value, epoch, buf); buf },
-      combOp = (a, b) => {
-        var i = 0
-        while (i < a.length) { a(i) += b(i); i += 1 }
-        a
-      })
-    finally bc.destroy()
+    val sum =
+      try rows.mapPartitions { it =>
+        val pv = bc.value
+        val g = new Array[Double](n)
+        val sc = k.scratch(pv)
+        it.foreach(s => k.accumulate(s, pv, sc, epoch, g))
+        Iterator.single(g)
+      }.treeAggregate(null: Array[Double])(add, add, depth = 2)
+      finally bc.destroy()
+    if (sum == null) new Array[Double](n) else sum
   }
 
   /** Full pass: (mean train gradients, mean train loss, mean val loss or
@@ -592,7 +615,7 @@ object TrainerCommon {
     * to [[gradientsVal]]'s val output: the filter is narrow (same
     * partitions, same in-partition row order), val rows run inference
     * semantics (keep-all masks whatever the dropout), and the partial
-    * sums combine in the same treeAggregate order.
+    * sums combine in the same tree.
     *
     * [[fitEs]] runs this with the FIT's own kernel, so the kernel keeps
     * the argument profile the epochs compiled hot: a val-only pass with

@@ -19,7 +19,7 @@ object WideConv {
   /** Packed weights: FLAT arrays plus a transposed head copy for the
     * backward pass's per-filter column reads (the WideNet layout —
     * r17, verdict task #1; same doubles, same arithmetic). */
-  private[ml] final class Packed(w: ConvWeights, T: Int)
+  private[ml] final class Packed(w: ConvWeights, val T: Int)
       extends TrainerCommon.Packed {
     val cw: Array[Double] = w.w.flatten.toArray          // (f*k+j)
     val cb: Array[Double] = w.b.toArray
@@ -49,38 +49,27 @@ object WideConv {
     val statsOff: Int = b2Off + kc
   }
 
-  /** Per-thread reusable scratch (the WideNet pattern); `a` is laid
-    * out (filter, position) so the pool scan and the backward's
-    * per-filter position walk stream contiguously. Every array is
-    * fully written before any read, so reuse across rows is safe. */
-  private final class Scratch(val P: Int, p: Packed) {
-    val nfK: Int = p.nf; val kK: Int = p.k; val kcK: Int = p.kc
-    val a = new Array[Double](p.nf * P)
+  /** The work arrays of [[accumulate]] for rows of up to `p.T` steps,
+    * made once per task; `a` is laid out (filter, position) so the pool
+    * scan and the backward's per-filter position walk stream
+    * contiguously. Every array is fully written before any read, so
+    * reuse across rows is safe. */
+  private[ml] final class Scratch(p: Packed) {
+    val a = new Array[Double](p.nf * (p.T - p.k + 1))
     val poolV = new Array[Double](p.nf)
     val mask = new Array[Double](p.nf)
     val dp = new Array[Double](p.nf)
     val z2 = new Array[Double](p.kc)
     val dzo = new Array[Double](p.kc)
   }
-  private val scratchTL = new ThreadLocal[Scratch]
-  private def scratchFor(P: Int, p: Packed): Scratch = {
-    val c = scratchTL.get()
-    if (c != null && c.P == P && c.nfK == p.nf && c.kK == p.k &&
-      c.kcK == p.kc) c
-    else {
-      val n = new Scratch(P, p)
-      scratchTL.set(n); n
-    }
-  }
 
   /** One row's contribution — line-for-line the staged
     * [[ConvTrainer.gradientsVal]] columns. */
-  private def accumulate(s: Sample, p: Packed, epoch: Int,
+  private def accumulate(s: Sample, p: Packed, sc: Scratch, epoch: Int,
       dropout: Double, maxPool: Boolean, g: Array[Double]): Unit = {
     val T = s.x.length
     val P = T - p.k + 1
     val nf = p.nf
-    val sc = scratchFor(P, p)
     // conv + relu, (f, pos): filter-major so the pool scan and the
     // backward's position walk stream contiguously; 4 positions per
     // pass share one read of the kernel row. Cell values are written
@@ -219,12 +208,14 @@ object WideConv {
       pool: Pooling = AvgPool)
       extends TrainerCommon.Kernel[ConvWeights, ConvGrads] {
     type P = Packed
+    type S = Scratch
     private val maxPool = pool == MaxPool
     def drops: Seq[Double] = Seq(dropout)
     def pack(w: ConvWeights, T: Int): Packed = new Packed(w, T)
-    def accumulate(s: Sample, p: Packed, epoch: Int,
+    def scratch(p: Packed): Scratch = new Scratch(p)
+    def accumulate(s: Sample, p: Packed, sc: Scratch, epoch: Int,
         g: Array[Double]): Unit =
-      WideConv.accumulate(s, p, epoch, dropout, maxPool, g)
+      WideConv.accumulate(s, p, sc, epoch, dropout, maxPool, g)
     def grads(p: Packed, g: Array[Double], n: Double): ConvGrads = {
       val nf = p.nf; val k = p.k; val kc = p.kc
       ConvGrads(

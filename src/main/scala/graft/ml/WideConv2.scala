@@ -21,7 +21,7 @@ object WideConv2 {
   /** Packed weights: FLAT arrays plus TRANSPOSED copies for the
     * backward pass's column reads (the WideNet layout — r17, verdict
     * task #1; same doubles, same arithmetic). */
-  private[ml] final class Packed(w: Conv2Weights, T: Int)
+  private[ml] final class Packed(w: Conv2Weights, val T: Int)
       extends TrainerCommon.Packed {
     val w1: Array[Double] = w.w1.flatten.toArray         // (f*k+j)
     val b1: Array[Double] = w.b1.toArray
@@ -77,12 +77,10 @@ object WideConv2 {
     val statsOff: Int = bhOff + kc
   }
 
-  /** Per-thread reusable scratch (the WideNet pattern). `dz2` is the
-    * one sparsely-written buffer (argmax routing) and is explicitly
+  /** The work arrays of [[accumulate]], made once per task. `dz2` is
+    * the one sparsely-written buffer (argmax routing) and is explicitly
     * re-zeroed per use; everything else is fully written before read. */
-  private final class Scratch(val T: Int, p: Packed) {
-    val f1K: Int = p.f1; val f2K: Int = p.f2
-    val kK: Int = p.k; val kcK: Int = p.kc
+  private[ml] final class Scratch(p: Packed) {
     val a1 = new Array[Double](p.P1 * p.f1)
     val m1 = new Array[Double](p.J * p.f1)
     val a2 = new Array[Double](p.P2 * p.f2)
@@ -92,23 +90,13 @@ object WideConv2 {
     val dz2 = new Array[Double](p.P2 * p.f2)
     val dm1 = new Array[Double](p.J * p.f1)
   }
-  private val scratchTL = new ThreadLocal[Scratch]
-  private def scratchFor(T: Int, p: Packed): Scratch = {
-    val c = scratchTL.get()
-    if (c != null && c.T == T && c.f1K == p.f1 && c.f2K == p.f2 &&
-      c.kK == p.k && c.kcK == p.kc) c
-    else {
-      val n = new Scratch(T, p)
-      scratchTL.set(n); n
-    }
-  }
 
   /** One row's contribution — line-for-line the staged
     * [[Conv2Trainer.gradients]] columns. */
-  private def accumulate(s: Sample, p: Packed, g: Array[Double]): Unit = {
+  private def accumulate(s: Sample, p: Packed, sc: Scratch,
+      g: Array[Double]): Unit = {
     val k = p.k; val f1 = p.f1; val f2 = p.f2; val kc = p.kc
     val P1 = p.P1; val J = p.J; val P2 = p.P2
-    val sc = scratchFor(s.x.length, p)
     // conv1 + relu, (pos, f) row-major
     val a1 = sc.a1
     var pos = 0
@@ -302,10 +290,12 @@ object WideConv2 {
   /** The stacked two-block Conv1D kernel (no dropout). */
   case object Kernel extends TrainerCommon.Kernel[Conv2Weights, Conv2Grads] {
     type P = Packed
+    type S = Scratch
     def drops: Seq[Double] = Nil
     def pack(w: Conv2Weights, T: Int): Packed = new Packed(w, T)
-    def accumulate(s: Sample, p: Packed, epoch: Int,
-        g: Array[Double]): Unit = WideConv2.accumulate(s, p, g)
+    def scratch(p: Packed): Scratch = new Scratch(p)
+    def accumulate(s: Sample, p: Packed, sc: Scratch, epoch: Int,
+        g: Array[Double]): Unit = WideConv2.accumulate(s, p, sc, g)
     def grads(p: Packed, g: Array[Double], n: Double): Conv2Grads = {
       val f1 = p.f1; val f2 = p.f2; val k = p.k; val kc = p.kc
       Conv2Grads(

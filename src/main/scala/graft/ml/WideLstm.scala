@@ -20,6 +20,7 @@ object WideLstm {
   /** The single-layer LSTM kernel (no dropout). */
   case object Kernel extends TrainerCommon.Kernel[LstmWeights, LstmGrads] {
     type P = WideLstm2.Packed
+    type S = WideLstm2.Scratch
     def drops: Seq[Double] = Nil
     def pack(w: LstmWeights, T: Int): P = {
       val gates = Seq(w.i, w.f, w.g, w.o)
@@ -27,10 +28,12 @@ object WideLstm {
         Array(gates.flatMap(_.u.flatten).toArray),
         Array(gates.flatMap(_.b).toArray), Array.emptyDoubleArray,
         Array.emptyDoubleArray, w.w2.flatten.toArray, w.b2.toArray,
-        gateBlocks = true)
+        gateBlocks = true, T)
     }
-    def accumulate(s: Sample, p: P, epoch: Int, g: Array[Double]): Unit =
-      WideLstm2.accumulate(s, p, epoch, 0.0, g)
+    def scratch(p: P): S = new WideLstm2.Scratch(p)
+    def accumulate(s: Sample, p: P, sc: S, epoch: Int,
+        g: Array[Double]): Unit =
+      WideLstm2.accumulate(s, p, sc, epoch, 0.0, g)
     def grads(p: P, g: Array[Double], n: Double): LstmGrads = {
       val u = p.uL
       def gate(x: Int) = GateW(meanVec(g, p.wxOff(0)(x), u, n),

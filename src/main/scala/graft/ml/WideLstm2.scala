@@ -57,7 +57,7 @@ object WideLstm2 {
   private[ml] final class Packed(wx: Array[Array[Double]],
       uu: Array[Array[Double]], b: Array[Array[Double]], wd: Array[Double],
       val bd: Array[Double], val w3: Array[Double], val b3: Array[Double],
-      gateBlocks: Boolean)
+      gateBlocks: Boolean, val T: Int)
       extends TrainerCommon.Packed {
     val L: Int = b.length
     val us: Array[Int] = b.map(_.length / 4)
@@ -111,28 +111,24 @@ object WideLstm2 {
 
   private def sigm(z: Double): Double = 1.0 / (1.0 + math.exp(-z))
 
-  /** Per-thread reusable scratch for [[accumulate]] — ~190 KB of state/
-    * gradient work arrays at q76's widths, per row otherwise allocated
-    * and zeroed 18k+ times per epoch. Keyed on the layer dims and sized
-    * to the largest T seen: loops run to the row's own T, and every
-    * cell they read is written earlier in the same row EXCEPT the t = 0
-    * state rows (zero init = zero h/c state), which no code path ever
-    * writes — so they stay zero from the initial allocation. Executor
-    * task threads are pooled and long-lived; one scratch per thread
-    * amortizes to nothing. */
-  private final class Scratch(val T: Int, p: Packed) {
-    val us: Array[Int] = p.us
-    val d: Int = p.d
-    val kc: Int = p.kc
+  /** The work arrays of [[accumulate]] for rows of up to `p.T` steps —
+    * about 1.1 MB of state/gradient arrays at q76's widths, made once
+    * per task instead of allocated and zeroed per row. Loops run to the
+    * row's own T, and every cell they read is written earlier in the
+    * same row EXCEPT the t = 0 state rows (zero init = zero h/c state),
+    * which no code path ever writes — so they stay zero from the
+    * initial allocation. */
+  private[ml] final class Scratch(p: Packed) {
+    private val us = p.us
     private def perLayer(n: Int) = us.map(u => new Array[Double](n * u))
     // gates, cell, tanh(cell), h, and the non-final layers' masks and
     // masked outputs: (l)(t*u+i)
-    val i, f, gg, o, c, tc, h, m, a: Array[Array[Double]] = perLayer(T + 1)
-    val dz: Array[Array[Double]] = perLayer(4 * (T + 1)) // ((x)*(T+1)+t)*u+i
-    val dc: Array[Array[Double]] = perLayer(T + 2)
+    val i, f, gg, o, c, tc, h, m, a: Array[Array[Double]] = perLayer(p.T + 1)
+    val dz: Array[Array[Double]] = perLayer(4 * (p.T + 1)) // ((x)*(T+1)+t)*u+i
+    val dc: Array[Array[Double]] = perLayer(p.T + 2)
     val mH, aH = new Array[Double](p.uL)
-    val zd, ad, dzd = new Array[Double](d)
-    val z3, dzo = new Array[Double](kc)
+    val zd, ad, dzd = new Array[Double](p.d)
+    val z3, dzo = new Array[Double](p.kc)
     // 0-based daxpy operands (see Packed)
     private val um = us.max
     val accs: Array[Array[Double]] =       // gate accumulators, i/f/g/o
@@ -149,16 +145,6 @@ object WideLstm2 {
     val gb: Array[Array[Array[Double]]] =
       us.map(u => Array.fill(4)(new Array[Double](u)))
   }
-  private val scratchTL = new ThreadLocal[Scratch]
-  private def scratchFor(T: Int, p: Packed): Scratch = {
-    val c = scratchTL.get()
-    if (c != null && c.T >= T && c.d == p.d && c.kc == p.kc &&
-      java.util.Arrays.equals(c.us, p.us)) c
-    else {
-      val n = new Scratch(T, p)
-      scratchTL.set(n); n
-    }
-  }
 
   /** One row's contribution — line for line the staged columns of
     * [[Lstm2Trainer.gradientsVal]] (and at depth 1 of
@@ -171,10 +157,9 @@ object WideLstm2 {
     * of a cold fit (the WideNet.accumulate note; WideKernelShapeSpec).
     * Forward state is flat (t)*u+i with t in 1..T; the t = 0 rows are
     * the zero init (see Scratch's reuse contract). */
-  private[ml] def accumulate(s: Sample, p: Packed, epoch: Int,
-      dropout: Double, g: Array[Double]): Unit = {
+  private[ml] def accumulate(s: Sample, p: Packed, sc: Scratch,
+      epoch: Int, dropout: Double, g: Array[Double]): Unit = {
     val T = s.x.length
-    val sc = scratchFor(T, p)
     var t = 1
     while (t <= T) {
       var l = 0
@@ -414,16 +399,18 @@ object WideLstm2 {
   final case class Kernel(dropout: Double = 0.0)
       extends TrainerCommon.Kernel[W, G] {
     type P = Packed
+    type S = Scratch
     def drops: Seq[Double] = Seq(dropout)
     def pack(w: W, T: Int): Packed = new Packed(
       Array(gateMajor(w.l1)(_.wx), gateMajor(w.l2)(_.wx.flatten)),
       Array(gateMajor(w.l1)(_.u.flatten), gateMajor(w.l2)(_.u.flatten)),
       Array(gateMajor(w.l1)(_.b), gateMajor(w.l2)(_.b)),
       w.wd.flatten.toArray, w.bd.toArray, w.w3.flatten.toArray,
-      w.b3.toArray, gateBlocks = false)
-    def accumulate(s: Sample, p: Packed, epoch: Int,
+      w.b3.toArray, gateBlocks = false, T)
+    def scratch(p: Packed): Scratch = new Scratch(p)
+    def accumulate(s: Sample, p: Packed, sc: Scratch, epoch: Int,
         g: Array[Double]): Unit =
-      WideLstm2.accumulate(s, p, epoch, dropout, g)
+      WideLstm2.accumulate(s, p, sc, epoch, dropout, g)
     def grads(p: Packed, g: Array[Double], n: Double): G = {
       val u1 = p.us(0); val u2 = p.us(1)
       G(

@@ -24,7 +24,7 @@ object WideMlp3 {
     * r17, verdict task #1; same doubles, same arithmetic, layout
     * only). `wsF(l)(u*in+i)` is row-major; `wsT(l)(i*out+u)` serves
     * `dz(u) = Σ_v dzUpper(v)·W_{l+1}(v)(u)` as a contiguous stream. */
-  private[ml] final class Packed(w: W, T: Int)
+  private[ml] final class Packed(w: W, val T: Int)
       extends TrainerCommon.Packed {
     val outW: Array[Int] = w.ws.map(_.length).toArray
     val inW: Array[Int] = w.ws.map(_.head.length).toArray
@@ -70,10 +70,10 @@ object WideMlp3 {
     }
   }
 
-  /** Per-thread reusable scratch (the WideNet pattern): every array is
-    * fully written before any read, so reuse across rows is safe. */
-  private final class Scratch(p: Packed) {
-    val key: Array[Int] = p.outW.clone()
+  /** The work arrays of [[accumulate]], made once per task: every
+    * array is fully written before any read, so reuse across rows is
+    * safe. */
+  private[ml] final class Scratch(p: Packed) {
     val z: Array[Array[Double]] =
       Array.tabulate(p.L)(l => new Array[Double](p.outW(l)))
     val a: Array[Array[Double]] =
@@ -85,15 +85,6 @@ object WideMlp3 {
     val dz: Array[Array[Double]] =
       Array.tabulate(p.L)(l => new Array[Double](p.outW(l)))
   }
-  private val scratchTL = new ThreadLocal[Scratch]
-  private def scratchFor(p: Packed): Scratch = {
-    val c = scratchTL.get()
-    if (c != null && java.util.Arrays.equals(c.key, p.outW)) c
-    else {
-      val n = new Scratch(p)
-      scratchTL.set(n); n
-    }
-  }
 
   /** One row's contribution — line-for-line
     * [[Mlp3Trainer.gradientsVal]]'s staged columns: z_l = W_l a_{l-1} +
@@ -101,10 +92,9 @@ object WideMlp3 {
     * dz_l = (W_{l+1}ᵀ dz_{l+1}) * mask_l * relu'(z_l). A short driver
     * over per-layer forward and backward steps (the WideNet.accumulate
     * note; WideKernelShapeSpec). */
-  private def accumulate(s: Sample, p: Packed, epoch: Int,
+  private def accumulate(s: Sample, p: Packed, sc: Scratch, epoch: Int,
       drops: Array[Double], g: Array[Double]): Unit = {
     val L = p.L
-    val sc = scratchFor(p)
     var prev: Array[Double] = s.x
     var l = 0
     while (l < L) {
@@ -222,15 +212,17 @@ object WideMlp3 {
   final case class Kernel(drops: Seq[Double])
       extends TrainerCommon.Kernel[W, G] {
     type P = Packed
+    type S = Scratch
     private val dropsArr = drops.toArray
     def pack(w: W, T: Int): Packed = {
       require(drops.length == w.nLayers - 1, "drops must give one rate " +
         s"per hidden layer (${w.nLayers - 1}), got ${drops.length}")
       new Packed(w, T)
     }
-    def accumulate(s: Sample, p: Packed, epoch: Int,
+    def scratch(p: Packed): Scratch = new Scratch(p)
+    def accumulate(s: Sample, p: Packed, sc: Scratch, epoch: Int,
         g: Array[Double]): Unit =
-      WideMlp3.accumulate(s, p, epoch, dropsArr, g)
+      WideMlp3.accumulate(s, p, sc, epoch, dropsArr, g)
     def grads(p: Packed, g: Array[Double], n: Double): G = G(
       (0 to p.L).map(l => Seq.tabulate(p.outW(l), p.inW(l))((u, i) =>
         g(p.wOff(l) + u * p.inW(l) + i) / n)),

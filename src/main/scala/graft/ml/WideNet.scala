@@ -48,7 +48,7 @@ object WideNet {
     * kernel-shape probe read 1.4-2.4x per loop family). The row split
     * changes where doubles live, never their values; each row is a
     * contiguous slice of the r16 flat layouts. */
-  private[ml] final class Packed(w: NetWeights, T: Int)
+  private[ml] final class Packed(w: NetWeights, val T: Int)
       extends TrainerCommon.Packed {
     val blocks: Int = w.convW.length
     val k: Int = w.convW(0)(0).length
@@ -136,7 +136,18 @@ object WideNet {
     * already-C2-compiled helper — and still inlines into the C2 caller
     * (FreqInlineSize 325). Each element is read-modified-written
     * exactly once per call, so per-element results are independent of
-    * statement order: bit-identical. */
+    * statement order: bit-identical.
+    *
+    * Zero skips: [[matvecRows]], [[rank1Rows]], [[denseGrad]] and the
+    * per-filter/per-unit gradient steps skip a term whose scalar is
+    * exactly 0.0 (max-pool routing, relu and dropout zero half or more
+    * of the conv and dense deltas). For finite operands the term is
+    * ±0.0, which leaves a nonzero sum unchanged; a zero sum could only
+    * change sign, and no gradient sum does: each starts at +0.0 and,
+    * under round-to-nearest, never becomes -0.0. A zero forward or delta
+    * value's sign reaches no result (relu and routing compare it with
+    * 0, products with it are zero terms), so the skips are bit-identical
+    * (WideKernelBitsSpec). */
   private[ml] def axpy(a: Array[Double], s: Double,
       w: Array[Double], n: Int): Unit = {
     // Explicit range guard (never fires: callers pass n <= both
@@ -211,7 +222,11 @@ object WideNet {
       xOff: Int, rows: Array[Array[Double]], rowOff: Int, n: Int,
       len: Int): Unit = {
     var v = 0
-    while (v < n) { axpy(acc, x(xOff + v), rows(rowOff + v), len); v += 1 }
+    while (v < n) {
+      val s = x(xOff + v)
+      if (s != 0.0) axpy(acc, s, rows(rowOff + v), len)
+      v += 1
+    }
   }
 
   /** `rows(rowOff + u)(i) += d(u) * x(i)` for u = 0 until n — a rank-1
@@ -219,7 +234,11 @@ object WideNet {
   private[ml] def rank1Rows(rows: Array[Array[Double]], rowOff: Int,
       d: Array[Double], n: Int, x: Array[Double], len: Int): Unit = {
     var u = 0
-    while (u < n) { axpy(rows(rowOff + u), d(u), x, len); u += 1 }
+    while (u < n) {
+      val s = d(u)
+      if (s != 0.0) axpy(rows(rowOff + u), s, x, len)
+      u += 1
+    }
   }
 
   /** `rows(rowOff + u)(0 until len) = 0.0` for u = 0 until n. */
@@ -298,10 +317,12 @@ object WideNet {
     var o = 0
     while (o < n) {
       val dv = d(o)
-      g(bOff + o) += dv
-      val wb = wOff + o * len
-      var v = 0
-      while (v < len) { g(wb + v) += dv * x(v); v += 1 }
+      if (dv != 0.0) {
+        g(bOff + o) += dv
+        val wb = wOff + o * len
+        var v = 0
+        while (v < len) { g(wb + v) += dv * x(v); v += 1 }
+      }
       o += 1
     }
   }
@@ -343,15 +364,12 @@ object WideNet {
     ps
   }
 
-  /** Per-thread reusable scratch for [[accumulate]] (the WideLstm2
-    * pattern): activation/gradient work arrays otherwise allocated and
-    * zeroed per row. Reuse-safe: every array is either fully written
-    * before any read (a/m/dm/dmp/inT and the dense/head vectors) or
-    * explicitly re-zeroed per use (`da` — the argmax routing writes
-    * sparsely). */
-  private final class Scratch(val T: Int, p: Packed) {
-    val fsKey: Array[Int] = p.fs.clone()
-    val dhKey: Int = p.dh; val kcKey: Int = p.kc; val kKey: Int = p.k
+  /** The work arrays of [[accumulate]], made once per task: activation
+    * and gradient arrays otherwise allocated and zeroed per row.
+    * Reuse-safe: every array is either fully written before any read
+    * (aR/mR/dm/dmp and the dense/head vectors) or explicitly re-zeroed
+    * per use (`da` — the argmax routing writes sparsely). */
+  private[ml] final class Scratch(p: Packed) {
     // activations/pooled as ROWS per position: 0-based daxpy operands
     val aR: Array[Array[Array[Double]]] = Array.tabulate(p.blocks)(b =>
       Array.fill(p.ps(b))(new Array[Double](p.fs(b))))
@@ -374,16 +392,6 @@ object WideNet {
     val z = new Array[Double](p.kc); val dzo = new Array[Double](p.kc)
     val dm = new Array[Double](p.flat)
   }
-  private val scratchTL = new ThreadLocal[Scratch]
-  private def scratchFor(T: Int, p: Packed): Scratch = {
-    val c = scratchTL.get()
-    if (c != null && c.T == T && c.dhKey == p.dh && c.kcKey == p.kc &&
-      c.kKey == p.k && java.util.Arrays.equals(c.fsKey, p.fs)) c
-    else {
-      val n = new Scratch(T, p)
-      scratchTL.set(n); n
-    }
-  }
 
   /** Accumulate one row's contribution into `g` (gradients for train
     * rows; loss tallies for both slices). The math is line-for-line
@@ -398,10 +406,9 @@ object WideNet {
     * compiles it within the first rows of a cold fit, where one
     * monolithic body (once per row) ran interpreted and OSR-compiled
     * for most of it (WideKernelShapeSpec keeps every method small). */
-  private def accumulate(s: Sample, p: Packed, epoch: Int,
+  private def accumulate(s: Sample, p: Packed, sc: Scratch, epoch: Int,
       dropout: Double, g: Array[Double]): Unit = {
     val B = p.blocks
-    val sc = scratchFor(s.x.length, p)
     var b = 0
     while (b < B) {
       var pos = 0
@@ -527,6 +534,7 @@ object WideNet {
     val B = p.blocks
     val mLast = sc.mR(B - 1); val fB = p.fs(B - 1)
     val dv = sc.dpre(u)
+    if (dv == 0.0) return
     g(p.dbOff + u) += dv
     val gwb = p.dwOff + u * p.flat
     var j3 = 0
@@ -582,9 +590,11 @@ object WideNet {
     var pp = 0
     while (pp < p.ps(0)) {
       val dv = da(pp * fb + f)
-      gb += dv
-      var j = 0
-      while (j < k) { kg(j) += dv * x(pp + j); j += 1 }
+      if (dv != 0.0) {
+        gb += dv
+        var j = 0
+        while (j < k) { kg(j) += dv * x(pp + j); j += 1 }
+      }
       pp += 1
     }
     g(p.cbOff(0) + f) += gb
@@ -605,9 +615,11 @@ object WideNet {
     var pp = 0
     while (pp < p.ps(b)) {
       val dv = da(pp * fb + f)
-      gb += dv
-      var j = 0
-      while (j < k) { axpy(kgRows(j), dv, inRowsB(pp + j), fin); j += 1 }
+      if (dv != 0.0) {
+        gb += dv
+        var j = 0
+        while (j < k) { axpy(kgRows(j), dv, inRowsB(pp + j), fin); j += 1 }
+      }
       pp += 1
     }
     g(p.cbOff(b) + f) += gb
@@ -631,7 +643,8 @@ object WideNet {
       val jr = jp - pp
       var f2 = 0
       while (f2 < fb) {
-        axpy(row, da(dab + f2), cwRb(f2 * k + jr), fprev)
+        val dv = da(dab + f2)
+        if (dv != 0.0) axpy(row, dv, cwRb(f2 * k + jr), fprev)
         f2 += 1
       }
       pp += 1
@@ -644,11 +657,13 @@ object WideNet {
   final case class Kernel(dropout: Double = 0.0)
       extends TrainerCommon.Kernel[NetWeights, NetGrads] {
     type P = Packed
+    type S = Scratch
     def drops: Seq[Double] = Seq(dropout)
     def pack(w: NetWeights, T: Int): Packed = new Packed(w, T)
-    def accumulate(s: Sample, p: Packed, epoch: Int,
+    def scratch(p: Packed): Scratch = new Scratch(p)
+    def accumulate(s: Sample, p: Packed, sc: Scratch, epoch: Int,
         g: Array[Double]): Unit =
-      WideNet.accumulate(s, p, epoch, dropout, g)
+      WideNet.accumulate(s, p, sc, epoch, dropout, g)
     def grads(p: Packed, g: Array[Double], n: Double): NetGrads = {
       val fs = p.fs; val k = p.k
       NetGrads(

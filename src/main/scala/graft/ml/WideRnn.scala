@@ -19,12 +19,15 @@ object WideRnn {
   final case class Kernel(dropout: Double = 0.0)
       extends TrainerCommon.Kernel[RnnWeights, RnnGrads] {
     type P = WideRnn2.Packed
+    type S = WideRnn2.Scratch
     def drops: Seq[Double] = Seq(dropout)
     def pack(w: RnnWeights, T: Int): P = new WideRnn2.Packed(
       Array(w.wx.toArray), Array(w.wh.flatten.toArray), Array(w.b.toArray),
-      w.w2.flatten.toArray, w.b2.toArray)
-    def accumulate(s: Sample, p: P, epoch: Int, g: Array[Double]): Unit =
-      WideRnn2.accumulate(s, p, epoch, dropout, g)
+      w.w2.flatten.toArray, w.b2.toArray, T)
+    def scratch(p: P): S = new WideRnn2.Scratch(p)
+    def accumulate(s: Sample, p: P, sc: S, epoch: Int,
+        g: Array[Double]): Unit =
+      WideRnn2.accumulate(s, p, sc, epoch, dropout, g)
     def grads(p: P, g: Array[Double], n: Double): RnnGrads = {
       val u = p.uL
       RnnGrads(meanVec(g, p.wxOff(0), u, n), meanMat(g, p.whOff(0), u, u, n),

@@ -35,7 +35,7 @@ object WideRnn2 {
     * arithmetic. */
   private[ml] final class Packed(wx: Array[Array[Double]],
       wh: Array[Array[Double]], val b: Array[Array[Double]],
-      val w3: Array[Double], val b3: Array[Double])
+      val w3: Array[Double], val b3: Array[Double], val T: Int)
       extends TrainerCommon.Packed {
     val L: Int = b.length
     val us: Array[Int] = b.map(_.length)
@@ -72,20 +72,20 @@ object WideRnn2 {
     val statsOff: Int = b3Off + kc
   }
 
-  /** Per-thread reusable scratch for one set of layer dims, sized to the
-    * largest T seen: loops run to the row's own T, every cell they read
-    * is written earlier in the same row except the t = 0 state rows,
-    * which no code path writes — they stay zero from allocation. */
-  private final class Scratch(val T: Int, p: Packed) {
-    val us: Array[Int] = p.us
-    val kc: Int = p.kc
+  /** The work arrays of [[accumulate]] for rows of up to `p.T` steps,
+    * made once per task: loops run to the row's own T, and every cell
+    * they read is written earlier in the same row except the t = 0
+    * state rows, which no code path writes — they stay zero from
+    * allocation. */
+  private[ml] final class Scratch(p: Packed) {
+    private val us = p.us
     private def perLayer(n: Int) = us.map(u => new Array[Double](n * u))
     // h, and the non-final layers' masks and masked outputs (the next
     // layer's input): (l)(t*u+i)
-    val h, m, a: Array[Array[Double]] = perLayer(T + 1)
-    val dz: Array[Array[Double]] = perLayer(T + 2)
+    val h, m, a: Array[Array[Double]] = perLayer(p.T + 1)
+    val dz: Array[Array[Double]] = perLayer(p.T + 2)
     val mH, aH = new Array[Double](p.uL)
-    val z3, dzo = new Array[Double](kc)
+    val z3, dzo = new Array[Double](p.kc)
     // 0-based daxpy operands (see Packed)
     private val um = us.max
     val acc, hp, ain, dzr = new Array[Double](um)
@@ -99,16 +99,6 @@ object WideRnn2 {
       us.map(u => Array.fill(u)(new Array[Double](u)))
     val gb: Array[Array[Double]] = perLayer(1)
   }
-  private val scratchTL = new ThreadLocal[Scratch]
-  private def scratchFor(T: Int, p: Packed): Scratch = {
-    val c = scratchTL.get()
-    if (c != null && c.T >= T && c.kc == p.kc &&
-      java.util.Arrays.equals(c.us, p.us)) c
-    else {
-      val n = new Scratch(T, p)
-      scratchTL.set(n); n
-    }
-  }
 
   /** One row's stacked-BPTT contribution — line for line the staged
     * columns of [[Rnn2Trainer.gradientsVal]] (and at depth 1 of
@@ -118,10 +108,9 @@ object WideRnn2 {
     * rationale). A short driver over per-timestep, per-layer forward,
     * backward and gradient steps, each compiled within the first rows
     * of a cold fit (the WideNet.accumulate note; WideKernelShapeSpec). */
-  private[ml] def accumulate(s: Sample, p: Packed, epoch: Int,
-      dropout: Double, g: Array[Double]): Unit = {
+  private[ml] def accumulate(s: Sample, p: Packed, sc: Scratch,
+      epoch: Int, dropout: Double, g: Array[Double]): Unit = {
     val T = s.x.length
-    val sc = scratchFor(T, p)
     var t = 1
     while (t <= T) {
       var l = 0
@@ -273,14 +262,17 @@ object WideRnn2 {
   final case class Kernel(dropout: Double = 0.0)
       extends TrainerCommon.Kernel[W, G] {
     type P = Packed
+    type S = Scratch
     def drops: Seq[Double] = Seq(dropout)
     def pack(w: W, T: Int): Packed = new Packed(
       Array(w.wx1.toArray, w.wx2.flatten.toArray),
       Array(w.wh1.flatten.toArray, w.wh2.flatten.toArray),
-      Array(w.b1.toArray, w.b2.toArray), w.w3.flatten.toArray, w.b3.toArray)
-    def accumulate(s: Sample, p: Packed, epoch: Int,
+      Array(w.b1.toArray, w.b2.toArray), w.w3.flatten.toArray, w.b3.toArray,
+      T)
+    def scratch(p: Packed): Scratch = new Scratch(p)
+    def accumulate(s: Sample, p: Packed, sc: Scratch, epoch: Int,
         g: Array[Double]): Unit =
-      WideRnn2.accumulate(s, p, epoch, dropout, g)
+      WideRnn2.accumulate(s, p, sc, epoch, dropout, g)
     def grads(p: Packed, g: Array[Double], n: Double): G = {
       val u1 = p.us(0); val u2 = p.us(1)
       G(meanVec(g, p.wxOff(0), u1, n), meanMat(g, p.whOff(0), u1, u1, n),

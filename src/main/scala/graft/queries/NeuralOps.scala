@@ -155,7 +155,7 @@ object NeuralOps {
               math.rint(acc * 1e4) / 1e4)
           }
         else Seq.empty[(Long, Double, Double)]
-      rows.toDF("epoch", "loss", "final_acc").orderBy("epoch")
+      rows.toDF("epoch", "loss", "final_acc")
     } finally facts.unpersist()
   }
 
@@ -226,7 +226,7 @@ object NeuralOps {
             }
           else Seq.empty[(Long, Double, Double, Long, Long, Double)]
         rows.toDF("epoch", "loss", "val_loss", "best_epoch",
-          "stopped_epoch", "final_acc").orderBy("epoch")
+          "stopped_epoch", "final_acc")
       } else {
         val rows =
           if (descended)
@@ -237,7 +237,7 @@ object NeuralOps {
             }
           else Seq.empty[(Long, Double, Double, Long, Long)]
         rows.toDF("epoch", "loss", "val_loss", "best_epoch",
-          "stopped_epoch").orderBy("epoch")
+          "stopped_epoch")
       }
     } finally facts.unpersist()
   }
@@ -306,7 +306,7 @@ object NeuralOps {
         }
       else Seq.empty[(Long, Double, Double, Long, Long)]
     rows.toDF("epoch", "loss", "val_loss", "best_epoch",
-      "stopped_epoch").orderBy("epoch")
+      "stopped_epoch")
   }
 
   /** Label the slice with aliased feature columns for predictStaged. */
@@ -909,7 +909,7 @@ object NeuralOps {
             }
           else Seq.empty[(Long, Double, Double, Long, Long, Double)]
         rows.toDF("epoch", "loss", "val_loss", "best_epoch",
-          "stopped_epoch", "final_acc").orderBy("epoch")
+          "stopped_epoch", "final_acc")
       },
       None),
 
@@ -954,7 +954,7 @@ object NeuralOps {
             }
           else Seq.empty[(Long, Double, Double, Long, Long)]
         rows.toDF("epoch", "loss", "val_loss", "best_epoch",
-          "stopped_epoch").orderBy("epoch")
+          "stopped_epoch")
       },
       None),
 

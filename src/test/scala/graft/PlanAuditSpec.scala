@@ -61,6 +61,21 @@ class PlanAuditSpec extends AnyFunSuite {
         s"missing: ${declared.diff(rowsOnly)}")
   }
 
+  test("trainer entries return their epoch rows as built: no Sort, " +
+      "no Exchange") {
+    // each builds a handful of rows in epoch order on the driver; a
+    // range sort of them costs a sampling job and a sort job
+    val trainers = Registry.all.filter(e =>
+      e.oracle.isEmpty && e.name != "q41_lstm_forward").map(_.name)
+    assert(trainers.size == 13, trainers)
+    val sorted = trainers.filter(n =>
+      plans(n).contains("Sort") || plans(n).contains("Exchange"))
+    assert(sorted.isEmpty, sorted.map(n => s"$n:\n${plans(n)}"))
+    val epochs = Registry.all.find(_.name == "q40_mlp_train").get
+      .run(spark, sf).collect().map(_.getAs[Long]("epoch")).toSeq
+    assert(epochs.nonEmpty && epochs == (1L to epochs.size.toLong), epochs)
+  }
+
   test("x24 keys on the fused norm_key kernel: no case map, no regex") {
     // Spark's lower/upper/initcap go through an ICU case-map class whose
     // first use in a JVM costs a ~1.8 s single-threaded static

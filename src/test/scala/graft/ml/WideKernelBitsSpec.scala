@@ -32,8 +32,9 @@ class WideKernelBitsSpec extends AnyFunSuite {
   private def digest[W, G](k: Kernel[W, G], w: W, T: Int,
       rs: Seq[Sample]): String = {
     val p = k.pack(w, T)
+    val sc = k.scratch(p)
     val g = new Array[Double](p.statsOff + 4)
-    for (epoch <- 1 to 2; s <- rs) k.accumulate(s, p, epoch, g)
+    for (epoch <- 1 to 2; s <- rs) k.accumulate(s, p, sc, epoch, g)
     assert(g(p.statsOff + 1) > 0 && g(p.statsOff + 3) > 0,
       "both slices must be exercised")
     val bb = ByteBuffer.allocate(8 * g.length)
@@ -42,33 +43,32 @@ class WideKernelBitsSpec extends AnyFunSuite {
       .map(b => f"$b%02x").mkString
   }
 
-  /** Each row length's buffer (raw bits) after two epochs over `order`,
-    * accumulated on a fresh thread, so from a fresh per-thread scratch. */
+  /** Each row length's buffer (raw bits) after two epochs over `order`:
+    * with `shared`, every row runs on ONE scratch made for the longest
+    * length; otherwise each row gets a fresh scratch. */
   private def buffersByLength[W, G](k: Kernel[W, G], w: W,
-      order: Seq[Sample]): Map[Int, Seq[Long]] = {
-    var out = Map.empty[Int, Seq[Long]]
-    val th = new Thread(() => {
-      val ps = order.map(_.x.length).distinct.map(n => n -> k.pack(w, n))
-        .toMap
-      val gs = ps.map { case (n, p) => n -> new Array[Double](p.statsOff + 4) }
-      for (epoch <- 1 to 2; s <- order)
-        k.accumulate(s, ps(s.x.length), epoch, gs(s.x.length))
-      out = gs.map { case (n, g) =>
-        n -> g.toSeq.map(java.lang.Double.doubleToRawLongBits) }
-    })
-    th.start(); th.join()
-    out
+      order: Seq[Sample], shared: Boolean): Map[Int, Seq[Long]] = {
+    val ps = order.map(_.x.length).distinct.map(n => n -> k.pack(w, n))
+      .toMap
+    val one = k.scratch(ps(ps.keys.max))
+    val gs = ps.map { case (n, p) => n -> new Array[Double](p.statsOff + 4) }
+    for (epoch <- 1 to 2; s <- order) {
+      val p = ps(s.x.length)
+      k.accumulate(s, p, if (shared) one else k.scratch(p), epoch,
+        gs(s.x.length))
+    }
+    gs.map { case (n, g) =>
+      n -> g.toSeq.map(java.lang.Double.doubleToRawLongBits) }
   }
 
-  /** Rows of T = 3 and T = 7 interleaved on one thread — the scratch
-    * grows to T = 7 and then serves the T = 3 rows — give the same bits
-    * as each length run alone. */
+  /** Rows of T = 3 and T = 7 interleaved on one scratch made for T = 7
+    * give the same bits as a fresh scratch per row. */
   private def interleavedLengths[W, G](k: Kernel[W, G], w: W): Unit = {
     val short = rows(8, 3, 3); val long = rows(8, 7, 3)
     val mixed = short.zip(long).flatMap { case (a, b) => Seq(a, b) }
-    val alone = buffersByLength(k, w, short) ++ buffersByLength(k, w, long)
-    assert(alone.keySet == Set(3, 7))
-    assert(buffersByLength(k, w, mixed) == alone)
+    val fresh = buffersByLength(k, w, mixed, shared = false)
+    assert(fresh.keySet == Set(3, 7))
+    assert(buffersByLength(k, w, mixed, shared = true) == fresh)
   }
 
   test("recurrent kernels: T = 3 and T = 7 rows interleaved on one " +
