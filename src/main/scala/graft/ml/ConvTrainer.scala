@@ -13,7 +13,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   * backward pass routes the gradient to the FIRST argmax position via
   * staged comparison indicators) or [[AvgPool]] (uniform 1/P routing).
   *
-  * Same execution contract as GdTrainer/RnnTrainer: per-row forward +
+  * Same execution contract as Mlp3Trainer/RnnTrainer: per-row forward +
   * backward passes are staged expression columns (weights are plan
   * literals), one epoch = ONE aggregation of mean gradients, O(params)
   * to the driver and O(params) updated there.

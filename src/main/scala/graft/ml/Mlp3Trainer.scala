@@ -6,11 +6,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 /** STACKED deep-MLP trainer — the reference's actual feed-forward
   * architecture (`models/mlp_model.py:19-26`): Dense(256, relu) →
   * Dropout(0.3) → Dense(128, relu) → Dropout(0.3) → Dense(64, relu) →
-  * Dense(num_classes, softmax). [[GdTrainer]] is the single-hidden
-  * building block; this closes the last M1 architecture asymmetry (the
-  * CNN/RNN/LSTM families got their reference-complete stacked forms in
-  * Q58/Q59/Q60; the MLP's reference depth previously ran only through
-  * the dropout-less MLlib parity path).
+  * Dense(num_classes, softmax) — and, at ONE hidden layer, the narrow
+  * dropout MLP that q40/q40b train (x → dense(h, relu) → dropout(p) →
+  * dense(k) → softmax), the regularizer MLlib's
+  * `MultilayerPerceptronClassifier` cannot express (SURVEY §2.6 M1).
   *
   * Generic over depth: `W.ws`/`W.bs` hold one (out × in) matrix + bias
   * per layer — hidden relu layers first, the softmax output layer last —
@@ -18,18 +17,19 @@ import org.apache.spark.sql.{Column, DataFrame}
   * reference drops after layers 1 and 2 only: `Seq(0.3, 0.3, 0.0)`).
   * Per-layer mask units are offset by the cumulative hidden width so the
   * (row, epoch, unit) hash families never collide across layers — the
-  * same discipline as [[Rnn2Trainer]]'s two mask spaces.
+  * same discipline as [[Rnn2Trainer]]'s two mask spaces. Masks are
+  * [[TrainerCommon.dropMask]]'s hash of (row key, epoch, unit), so a
+  * retried or re-partitioned pass draws the same masks.
   *
   * Execution contract shared by every trainer in `ml/`: weights ride
   * the plan as literals (broadcast-small-model), forward and backward
   * are staged expression columns (one select per dependency frontier),
-  * one epoch = ONE aggregation of O(params) mean gradient products,
-  * bit-deterministic on any partitioning/retry. The staged form is the
-  * FD-checkable semantic source of truth at narrow widths; the
-  * reference's 256/128/64 widths run on the [[WideMlp3]] treeAggregate
-  * twin (Mlp3TrainerSpec pins the two gradient-for-gradient), because
-  * 128-wide layers as expression columns are a quadratic plan blowup —
-  * the exact q58/q73 split.
+  * one epoch = ONE aggregation of O(params) mean gradient products. The
+  * staged form is the FD-checkable semantic source of truth at narrow
+  * widths; the fits run on the [[WideMlp3]] treeAggregate twin
+  * (Mlp3TrainerSpec and WideSinglesSpec pin the two gradient-for-
+  * gradient), because 128-wide layers as expression columns are a
+  * quadratic plan blowup — the exact q58/q73 split.
   */
 object Mlp3Trainer {
 
@@ -47,14 +47,17 @@ object Mlp3Trainer {
       "inconsistent shapes")
   }
 
-  /** [[GdTrainer]]'s single-hidden-layer weights as a depth-1 stack, and
-    * back: the narrow MLP trains on [[WideMlp3]]'s kernel at one hidden
-    * layer and scores with [[GdTrainer.predict]]. */
-  def fromMlp(w: GdTrainer.MlpWeights): W =
-    W(Seq(w.w1, w.w2), Seq(w.b1, w.b2))
-  def toMlp(w: W): GdTrainer.MlpWeights = {
-    require(w.nLayers == 2, "toMlp needs exactly one hidden layer")
-    GdTrainer.MlpWeights(w.ws(0), w.bs(0), w.ws(1), w.bs(1))
+  /** The one-hidden-layer init of the narrow MLP (q40/q40b): one
+    * `Random(seed)` draws w1's rows, b1, w2's rows, then b2, each
+    * uniform in [-0.5, 0.5) and unscaled. The draw order is part of the
+    * contract: the q40 rows and MlpBitsSpec's digests depend on it. */
+  def initOneHidden(d: Int, hidden: Int, classes: Int, seed: Long): W = {
+    val rng = new scala.util.Random(seed)
+    def m(r: Int, c: Int) = Seq.fill(r, c)(rng.nextDouble() - 0.5)
+    def v(n: Int) = Seq.fill(n)(rng.nextDouble() - 0.5)
+    val w1 = m(hidden, d); val b1 = v(hidden)
+    val w2 = m(classes, hidden); val b2 = v(classes)
+    W(Seq(w1, w2), Seq(b1, b2))
   }
 
   /** Deterministic init scaled 1/√fanIn per layer (the WideRnn2Spec
@@ -119,7 +122,7 @@ object Mlp3Trainer {
 
     // ---- forward: per hidden layer, pre-activations then dropped
     // relu activations (mask folded into a; relu' recomputed from z's
-    // sign in backprop — the GdTrainer staging) ----
+    // sign in backprop) ----
     def inCols(l: Int): Seq[Column] =
       if (l == 0) xs else (0 until w.hidden(l - 1)).map(u => col(s"a${l - 1}_$u"))
     for (l <- 0 until L) {

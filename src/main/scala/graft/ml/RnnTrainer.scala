@@ -17,7 +17,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   * whole per-row gradient is plain codegen'd arithmetic. One epoch =
   * ONE aggregation (mean of every gradient product; partial sums
   * map-side, an O(params) row to the driver, O(params) update there).
-  * Same 100 TB story as GdTrainer: weights ride in the plan as
+  * Same 100 TB story as Mlp3Trainer: weights ride in the plan as
   * literals, the shuffle carries parameter-sized partial sums, never
   * rows, and nothing is nondeterministic — re-running an epoch
   * reproduces its gradient bit-for-bit on any partitioning
@@ -65,7 +65,7 @@ object RnnTrainer {
 
   /** [[gradients]] with the reference's post-recurrence DROPOUT
     * (`rnn_model.py:19-24`: Dropout after the recurrent output, before
-    * the dense head — here applied to h_T with the GdTrainer
+    * the dense head — here applied to h_T with the MLP's
     * hash-mask: deterministic in (rowKey, epoch, unit), inverted
     * scaling 1/(1-p)) and an in-pass VALIDATION slice (`isVal` rows:
     * excluded from every gradient average, inference semantics — no

@@ -2,19 +2,21 @@ package graft.ml
 
 import scala.reflect.ClassTag
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The numerically subtle pieces every expression-column trainer shares
-  * (GdTrainer / RnnTrainer / ConvTrainer) — kept in ONE place so a fix
-  * to the max-shifted softmax or the loss algebra cannot silently miss
-  * a copy (the dropout-threshold rounding fix in this repo's history is
-  * the cautionary tale). Public: the query registry consumes
-  * [[earlyStop]]'s result type and [[valSplit]] directly. Also the one
-  * fit driver of the treeAggregate (`Wide*`) path: each family supplies
-  * only a per-row [[Kernel]]; [[fit]]/[[fitEs]] own the passes, the
-  * optimizer step, batching, early stopping and the input checks.
+  * (Mlp3Trainer, RnnTrainer, ConvTrainer and the stacked families) —
+  * kept in ONE place so a fix to the max-shifted softmax or the loss
+  * algebra cannot silently miss a copy (the dropout-threshold rounding
+  * fix in this repo's history is the cautionary tale). Public: the
+  * query registry consumes [[earlyStop]]'s result type and [[valSplit]]
+  * directly. Also the one fit driver of the treeAggregate (`Wide*`)
+  * path: each family supplies only a per-row [[Kernel]];
+  * [[fit]]/[[fitEs]] own the passes, the optimizer step, batching,
+  * early stopping and the input checks.
   */
 object TrainerCommon {
 
@@ -124,7 +126,7 @@ object TrainerCommon {
 
   object Optimizer {
     /** Plain SGD: delta = lr * g — the trainers' historical step
-      * ([[graft.ml.GdTrainer.applyStep]] parity, spec-pinned). */
+      * (each staged family's `applyStep` parity, spec-pinned). */
     def sgd(lr: Double): Optimizer = new Optimizer {
       def deltas(g: Array[Double]): Array[Double] = g.map(_ * lr)
     }
@@ -518,8 +520,8 @@ object TrainerCommon {
     * pass included — runs the same kernel. A pass ([[sumPass]]) makes
     * ONE scratch per task, inside the task, and never retains it: no
     * work array outlives its task or stays on an executor thread
-    * between fits. The per-task partials merge in the combine tree
-    * `treeAggregate` has always built, so every sum keeps its bits. */
+    * between fits. The per-task partials merge in partition-index order
+    * ([[mergeInOrder]]), so a pass repeats its bits. */
   trait Kernel[W, G] extends Serializable {
     type P <: Packed
     /** The per-row work arrays of [[accumulate]]. */
@@ -544,32 +546,50 @@ object TrainerCommon {
   }
 
   /** One pass of `k` over `rows`: weights broadcast once, one gradient
-    * buffer and one scratch per task, the partials merged by
-    * `treeAggregate(depth = 2)` from a `null` zero (no O(params) buffer
-    * in the closure; `treeReduce` builds the same tree through an extra
-    * RDD, at more driver time per pass). Each partial enters the tree
-    * where `zero + partial` did, and `+0.0 + x` is `x` (a partial sums
-    * from +0.0, so never holds -0.0): every sum keeps its bits. An RDD
-    * with no partitions sums to zeros. */
+    * buffer and one scratch per task, the partials summed by
+    * [[mergeInOrder]]. An RDD with no partitions sums to zeros. */
   private def sumPass[W, G](k: Kernel[W, G])(p: k.P, rows: RDD[Sample],
       epoch: Int): Array[Double] = {
     require(k.drops.forall(d => d >= 0.0 && d < 1.0), "dropout in [0, 1)")
     val n = p.statsOff + 4
-    val add = (a: Array[Double], b: Array[Double]) =>
-      if (a == null) b
-      else if (b == null) a
-      else { WideNet.vadd(a, b, n); a }
     val bc = rows.sparkContext.broadcast(p)(ClassTag(p.getClass))
-    val sum =
-      try rows.mapPartitions { it =>
+    try mergeInOrder(rows.mapPartitions { it =>
         val pv = bc.value
         val g = new Array[Double](n)
         val sc = k.scratch(pv)
         it.foreach(s => k.accumulate(s, pv, sc, epoch, g))
         Iterator.single(g)
-      }.treeAggregate(null: Array[Double])(add, add, depth = 2)
-      finally bc.destroy()
-    if (sum == null) new Array[Double](n) else sum
+      }, n)
+    finally bc.destroy()
+  }
+
+  /** Sum the one-per-partition buffers of `partials` in the combine tree
+    * of `treeAggregate(depth = 2)`, merging in partition-index order at
+    * every level. `treeAggregate` itself merges in arrival order (the
+    * driver's `fold` as tasks complete, the intermediate `foldByKey` as
+    * shuffle blocks arrive), so one pass could round differently from
+    * run to run. Below 6 partitions the tree has no intermediate level
+    * and the driver left-folds the collected partials; from 6 on, one
+    * level of about √n-way merges runs on the executors first, so the
+    * driver receives about √n buffers, not n. One Spark job. */
+  private def mergeInOrder(partials: RDD[Array[Double]],
+      n: Int): Array[Double] = {
+    val add = (a: Array[Double], b: Array[Double]) => {
+      WideNet.vadd(a, b, n); a
+    }
+    val parts = partials.getNumPartitions
+    val scale = math.max(math.ceil(math.sqrt(parts)).toInt, 2)
+    val top =
+      if (parts <= scale + math.ceil(parts.toDouble / scale)) partials
+      else {
+        val cur = parts / scale
+        partials.mapPartitionsWithIndex((i, it) =>
+            it.map(g => (i % cur, (i, g))))
+          .partitionBy(new HashPartitioner(cur))
+          .mapPartitions(it => it.map(_._2).toArray.sortBy(_._1)
+            .map(_._2).reduceLeftOption(add).iterator)
+      }
+    top.collect().reduceLeftOption(add).getOrElse(new Array[Double](n))
   }
 
   /** Full pass: (mean train gradients, mean train loss, mean val loss or

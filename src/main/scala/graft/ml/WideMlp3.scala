@@ -206,9 +206,7 @@ object WideMlp3 {
 
   /** The depth-k dense kernel: `drops` gives one inverted-dropout rate
     * per hidden layer (the reference's `Seq(0.3, 0.3, 0.0)`). At one
-    * hidden layer it is [[GdTrainer]]'s single-hidden MLP — the same
-    * mask units, add orders and buffer layout (Mlp3TrainerSpec,
-    * WideSinglesSpec). */
+    * hidden layer it is the narrow q40/q40b MLP (WideSinglesSpec). */
   final case class Kernel(drops: Seq[Double])
       extends TrainerCommon.Kernel[W, G] {
     type P = Packed

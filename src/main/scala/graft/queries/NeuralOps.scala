@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.sources.Tables
-import graft.ml.{Conv2Trainer, ConvNetTrainer, ConvTrainer, GdTrainer, Lstm2Trainer, LstmTrainer, Mlp3Trainer, NeuralForward, Rnn2Trainer, RnnTrainer, SignGd, TrainerCommon, WideConv, WideConv2, WideLstm, WideLstm2, WideMlp3, WideNet, WideRnn, WideRnn2}
+import graft.ml.{Conv2Trainer, ConvNetTrainer, ConvTrainer, Lstm2Trainer, LstmTrainer, Mlp3Trainer, NeuralForward, Rnn2Trainer, RnnTrainer, SignGd, TrainerCommon, WideConv, WideConv2, WideLstm, WideLstm2, WideMlp3, WideNet, WideRnn, WideRnn2}
 
 /** Oracle-gated fixed-weight neural forward passes (M2/M3 scoring
   * semantics; reference `models/cnn_model.py:21-32` stack shape and
@@ -180,9 +180,11 @@ object NeuralOps {
     import s.implicits._
     val scan = t(s, dir, "lineitem").filter(col("l_orderkey") % 4 === 0)
     val para = s.sparkContext.defaultParallelism
-    val facts =
-      (if (scan.rdd.getNumPartitions < para) scan.repartition(para)
-       else scan).persist()
+    val sliced =
+      if (scan.rdd.getNumPartitions < para) scan.repartition(para) else scan
+    // the fit decodes and caches its rows once (TrainerCommon.fitEs), so
+    // only the predictStaged tail reads the slice a second time
+    val facts = if (withPredict) sliced.persist() else sliced
     // 22 deterministic integer-derived features, scaled to ~[0, 3]
     val primes = Seq(97, 89, 83, 79, 73, 71, 67, 61, 59, 53, 47, 43,
       41, 37, 31, 29, 23, 19)
@@ -239,7 +241,7 @@ object NeuralOps {
         rows.toDF("epoch", "loss", "val_loss", "best_epoch",
           "stopped_epoch")
       }
-    } finally facts.unpersist()
+    } finally if (withPredict) facts.unpersist()
   }
 
   /** Shared q75/q76 harness — prices the recurrent twins' REFERENCE
@@ -260,9 +262,9 @@ object NeuralOps {
     import s.implicits._
     val scan = t(s, dir, "lineitem").filter(col("l_orderkey") % mod === 0)
     val para = s.sparkContext.defaultParallelism
+    // read once: the fit decodes and caches its rows itself
     val facts =
-      (if (scan.rdd.getNumPartitions < para) scan.repartition(para)
-       else scan).persist()
+      if (scan.rdd.getNumPartitions < para) scan.repartition(para) else scan
     val xs: Seq[Column] = Seq(
       col("l_quantity") / lit(32.0),
       col("l_linenumber").cast("double") / lit(4.0),
@@ -274,8 +276,7 @@ object NeuralOps {
       (col("l_extendedprice") % 79).cast("double") / lit(32.0))
     val y = ((col("l_orderkey") + col("l_suppkey")) % 2).cast("int")
     val rk = xxhash64(col("l_orderkey"), col("l_linenumber"))
-    try gatedEsRows(s, fit(facts, xs, y, rk))
-    finally facts.unpersist()
+    gatedEsRows(s, fit(facts, xs, y, rk))
   }
 
   /** The priced-fit entries' shared divergence self-gate + epoch-row
@@ -849,10 +850,10 @@ object NeuralOps {
         dense = 128, withPredict = false),
       None),
 
-    // Q40 — MLP training WITH DROPOUT and EARLY STOPPING (GdTrainer):
-    // up to 8 full-batch epochs of a 6->6->2 softmax MLP over the
-    // embeddings table, deterministic hash-based dropout 0.3, under the
-    // reference's actual stop condition — Keras
+    // Q40 — MLP training WITH DROPOUT and EARLY STOPPING (Mlp3Trainer at
+    // one hidden layer): up to 8 full-batch epochs of a 6->6->2 softmax
+    // MLP over the embeddings table, deterministic hash-based dropout
+    // 0.3, under the reference's actual stop condition — Keras
     // EarlyStopping(monitor=val_loss, patience=5, restore_best_weights)
     // (`models/mlp_model.py:67-71`) — monitored on a deterministic 20%
     // hash hold-out of the rows, with the val loss riding the SAME
@@ -877,27 +878,28 @@ object NeuralOps {
             Seq((col("label") % 2).cast("int").as("y"),
               col("vec_id").as("rk")): _*)
         val feats = (0 until d).map(i => col(s"f$i"))
-        val w0 = GdTrainer.init(d, 6, 2, seed = 11L)
+        val w0 = Mlp3Trainer.initOneHidden(d, 6, 2, seed = 11L)
         // fit on the depth-1 dense kernel (WideMlp3 at one hidden
         // layer — WideSinglesSpec pins gradients, dropout masks, and
-        // the ES trajectory to GdTrainer's staged plan, Mlp3Trainer
-        // bridges the weights); GdTrainer.predict below keeps the staged
-        // forward expression exercised. Round 13: the reference's
-        // ACTUAL optimizer — Adam(learning_rate=0.001), bias-corrected
-        // moments as O(params) driver state (`models/mlp_model.py:
-        // 28-34`; AdamSpec pins the math to the paper recurrences) —
+        // the ES trajectory to the staged plan); Mlp3Trainer.predict
+        // below keeps the staged forward expression exercised. Round
+        // 13: the reference's ACTUAL optimizer — Adam(learning_rate=
+        // 0.001), bias-corrected moments as O(params) driver state
+        // (`models/mlp_model.py:28-34`; AdamSpec pins the math to the
+        // paper recurrences) —
         // at the same one-aggregation-per-epoch job count as the old
         // sgd step. The batch_size=64 fit semantic runs in
         // q40b_mlp_minibatch (membership itself is oracle-gated by
         // q61b on this exact population).
         val es = TrainerCommon.fitEs(WideMlp3.Kernel(Seq(0.3)), emb, feats,
-          col("y"), col("rk"), Mlp3Trainer.fromMlp(w0), maxEpochs = 8,
+          col("y"), col("rk"), w0, maxEpochs = 8,
           opt = TrainerCommon.Optimizer.adam(0.001),
           isVal = TrainerCommon.valSplitPortable(Seq(col("rk"))),
           patience = 5)
-        val (w, losses) = (Mlp3Trainer.toMlp(es.weights), es.trainLosses)
-        val acc = emb.select((GdTrainer.predict(feats, w) === col("y"))
-          .cast("double").as("ok")).agg(avg("ok")).head().getDouble(0)
+        val losses = es.trainLosses
+        val acc = emb.select(
+            (Mlp3Trainer.predict(feats, es.weights) === col("y"))
+              .cast("double").as("ok")).agg(avg("ok")).head().getDouble(0)
         // divergence self-gate: empty output on non-descending loss
         // (the trainEntry note above)
         val rows =
@@ -938,9 +940,9 @@ object NeuralOps {
             Seq((col("label") % 2).cast("int").as("y"),
               col("vec_id").as("rk")): _*)
         val feats = (0 until d).map(i => col(s"f$i"))
-        val w0 = GdTrainer.init(d, 6, 2, seed = 11L)
+        val w0 = Mlp3Trainer.initOneHidden(d, 6, 2, seed = 11L)
         val es = TrainerCommon.fitEs(WideMlp3.Kernel(Seq(0.3)), emb, feats,
-          col("y"), col("rk"), Mlp3Trainer.fromMlp(w0), maxEpochs = 3,
+          col("y"), col("rk"), w0, maxEpochs = 3,
           opt = TrainerCommon.Optimizer.adam(0.001),
           isVal = TrainerCommon.valSplitPortable(Seq(col("rk"))),
           patience = 5, batchKeys = Seq(col("rk")), nBatches = 4)
@@ -965,10 +967,10 @@ object NeuralOps {
     // `models/mlp_model.py:19-34` block-for-block — fit 2 epochs over
     // the q40 embeddings slice on the treeAggregate twin (WideMlp3).
     // Mlp3TrainerSpec pins the twin gradient-for-gradient to the
-    // FD-checked staged trainer (Mlp3Trainer) at narrow widths, pins
-    // the staged trainer to GdTrainer at depth 1, and trains these
-    // exact widths in-spec; the staged plan cannot express 256-wide
-    // layers without quadratic expression blowup — the q58/q73 split.
+    // FD-checked staged trainer (Mlp3Trainer) at narrow widths and
+    // trains these exact widths in-spec; the staged plan cannot express
+    // 256-wide layers without quadratic expression blowup — the q58/q73
+    // split.
     // Fit-only, rows-only (float losses), divergence-self-gated on
     // both trajectories (the refSeqTrain gate note),
     // trainer_class-tagged by construction: this row PRICES the real

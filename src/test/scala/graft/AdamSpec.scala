@@ -3,8 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.ml.{ConvNetTrainer, GdTrainer, Mlp3Trainer, TrainerCommon,
-  WideMlp3, WideNet}
+import graft.ml.{ConvNetTrainer, Mlp3Trainer, TrainerCommon, WideMlp3,
+  WideNet}
 import graft.ml.TrainerCommon.Optimizer
 
 /** The round-13 optimizer semantics (reference parity:
@@ -32,12 +32,13 @@ class AdamSpec extends AnyFunSuite {
   }
   private val feats = Seq(col("x0"), col("x1"), col("x2"))
   private val isVal = col("rk") % 5 === 0
-  private def w0 = GdTrainer.init(3, 4, 2, seed = 7L)
+  private def w0 = Mlp3Trainer.initOneHidden(3, 4, 2, seed = 7L)
 
   // Trajectory comparisons are tolerance-based, NOT bit-equal: the
-  // driver folds partial aggregation results in task-COMPLETION order
-  // (SparkContext.runJob's resultHandler), so float gradient sums can
-  // differ in the last ulp between runs of the IDENTICAL plan. What IS
+  // staged path's aggregation merges partial results in the order they
+  // arrive, so float gradient sums can differ in the last ulp between
+  // runs of the IDENTICAL plan, and the staged and wide paths add in
+  // different orders. What IS
   // bit-exact is everything per-row: dropout masks, batch membership,
   // the val split. 1e-9 absolute on O(1) magnitudes = reorder noise
   // only; a semantic bug (wrong delta order, stale moments) shows up
@@ -49,8 +50,8 @@ class AdamSpec extends AnyFunSuite {
     assert(a.length == b.length, s"$what: length ${a.length} vs ${b.length}")
     a.zip(b).foreach { case (x, y) => close(x, y, what) }
   }
-  private def flatMlp(w: GdTrainer.MlpWeights): Seq[Double] =
-    w.w1.flatten ++ w.b1 ++ w.w2.flatten ++ w.b2
+  private def flatMlp(w: Mlp3Trainer.W): Seq[Double] =
+    w.ws.flatMap(_.flatten) ++ w.bs.flatten
   private def flatNet(w: ConvNetTrainer.NetWeights): Seq[Double] =
     w.convW.flatMap(_.flatMap(_.flatten)) ++ w.convB.flatten ++
       w.denseW.flatten ++ w.denseB ++ w.headW.flatten ++ w.headB
@@ -86,22 +87,19 @@ class AdamSpec extends AnyFunSuite {
 
   test("sgd optimizer + nBatches=1 reproduces the historical fitEs " +
       "(staged and treeAggregate paths)") {
-    val es = GdTrainer.fitEs(df, feats, col("y"), col("rk"), w0,
-      maxEpochs = 3, lr = 0.5, dropout = 0.3, isVal = isVal, patience = 5)
-    val eo = GdTrainer.fitEsOpt(df, feats, col("y"), col("rk"), w0,
-      maxEpochs = 3, opt = Optimizer.sgd(0.5), dropout = 0.3,
+    // the staged full-batch sgd fit (the historical lr step: sgd
+    // applyOpt == applyStep, OptimizerStepSpec) is the reference
+    val es = Mlp3Trainer.fitEsOpt(df, feats, col("y"), col("rk"), w0,
+      maxEpochs = 3, opt = Optimizer.sgd(0.5), drops = Seq(0.3),
       isVal = isVal, patience = 5)
-    closeSeq(flatMlp(eo.weights), flatMlp(es.weights), "staged weights")
-    closeSeq(eo.trainLosses, es.trainLosses, "staged train losses")
-    closeSeq(eo.valLosses, es.valLosses, "staged val losses")
     // the driver's sgd fit on the narrow MLP (WideMlp3's kernel at one
-    // hidden layer) against the staged lr fit, the reference
+    // hidden layer) against it
     val weo = TrainerCommon.fitEs(WideMlp3.Kernel(Seq(0.3)), df, feats,
-      col("y"), col("rk"), Mlp3Trainer.fromMlp(w0), maxEpochs = 3,
+      col("y"), col("rk"), w0, maxEpochs = 3,
       opt = Optimizer.sgd(0.5), isVal = isVal, patience = 5)
-    closeSeq(flatMlp(Mlp3Trainer.toMlp(weo.weights)), flatMlp(es.weights),
-      "wide weights")
+    closeSeq(flatMlp(weo.weights), flatMlp(es.weights), "wide weights")
     closeSeq(weo.trainLosses, es.trainLosses, "wide train losses")
+    closeSeq(weo.valLosses, es.valLosses, "wide val losses")
   }
 
   test("hash mini-batches: disjoint, covering, re-drawn per epoch, " +
@@ -123,15 +121,15 @@ class AdamSpec extends AnyFunSuite {
 
   test("Adam + mini-batching learns the separable fixture; trajectory " +
       "reproducible across reruns") {
-    def run() = GdTrainer.fitEsOpt(df, feats, col("y"), col("rk"), w0,
-      maxEpochs = 12, opt = Optimizer.adam(0.05), dropout = 0.0,
+    def run() = Mlp3Trainer.fitEsOpt(df, feats, col("y"), col("rk"), w0,
+      maxEpochs = 12, opt = Optimizer.adam(0.05), drops = Seq(0.0),
       isVal = isVal, patience = -1, batchKeys = Seq(col("rk")),
       nBatches = 3)
     val a = run()
     assert(a.trainLosses.last < a.trainLosses.head,
       s"loss must descend: ${a.trainLosses.head} -> ${a.trainLosses.last}")
     val acc = df.filter(!isVal)
-      .select((GdTrainer.predict(feats, a.weights) === col("y"))
+      .select((Mlp3Trainer.predict(feats, a.weights) === col("y"))
         .cast("double").as("ok")).agg(avg("ok")).head().getDouble(0)
     assert(acc > 0.9, s"train accuracy $acc on the separable fixture")
     val b = run() // fresh optimizer instance: moments must not leak
@@ -140,19 +138,14 @@ class AdamSpec extends AnyFunSuite {
   }
 
   test("staged and treeAggregate MLP twins agree under Adam + batches") {
-    def run(fitter: (TrainerCommon.Optimizer) =>
-        TrainerCommon.EsResult[GdTrainer.MlpWeights]) =
-      fitter(Optimizer.adam(0.05))
-    val staged = run(o => GdTrainer.fitEsOpt(df, feats, col("y"),
-      col("rk"), w0, maxEpochs = 6, opt = o, dropout = 0.3, isVal = isVal,
-      patience = -1, batchKeys = Seq(col("rk")), nBatches = 2))
-    val wide = run { o =>
-      val r = TrainerCommon.fitEs(WideMlp3.Kernel(Seq(0.3)), df, feats,
-        col("y"), col("rk"), Mlp3Trainer.fromMlp(w0), maxEpochs = 6,
-        opt = o, isVal = isVal, patience = -1, batchKeys = Seq(col("rk")),
-        nBatches = 2)
-      r.copy(weights = Mlp3Trainer.toMlp(r.weights))
-    }
+    val staged = Mlp3Trainer.fitEsOpt(df, feats, col("y"), col("rk"), w0,
+      maxEpochs = 6, opt = Optimizer.adam(0.05), drops = Seq(0.3),
+      isVal = isVal, patience = -1, batchKeys = Seq(col("rk")),
+      nBatches = 2)
+    val wide = TrainerCommon.fitEs(WideMlp3.Kernel(Seq(0.3)), df, feats,
+      col("y"), col("rk"), w0, maxEpochs = 6, opt = Optimizer.adam(0.05),
+      isVal = isVal, patience = -1, batchKeys = Seq(col("rk")),
+      nBatches = 2)
     // float sums arrive in different orders on the two paths; Adam's
     // sqrt/divide amplifies nothing at these magnitudes
     closeSeq(flatMlp(staged.weights), flatMlp(wide.weights),

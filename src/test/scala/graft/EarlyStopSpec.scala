@@ -2,16 +2,18 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.ml.{GdTrainer, TrainerCommon}
+import graft.ml.{Mlp3Trainer, TrainerCommon}
+import graft.ml.Mlp3Trainer.W
 
 /** EarlyStopping semantics (Keras: monitor=val_loss, min_delta=0,
   * patience, restore_best_weights=True — `models/mlp_model.py:67-71`):
   * the generic loop is pinned against scripted loss trajectories, and
-  * the Spark wiring (GdTrainer.fitEs) against a fixture engineered so
-  * the validation slice's labels CONTRADICT the training slice — train
-  * loss descends while val loss rises, so the stop must fire at the
-  * patience bound and the restored weights must be the best (earliest)
-  * epoch's, not the last's.
+  * the Spark wiring (the one-hidden-layer Mlp3Trainer.fitEsOpt under
+  * plain SGD) against a fixture engineered so the validation slice's
+  * labels CONTRADICT the training slice — train loss descends while val
+  * loss rises, so the stop must fire at the patience bound and the
+  * restored weights must be the best (earliest) epoch's, not the
+  * last's.
   */
 class EarlyStopSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -88,11 +90,23 @@ class EarlyStopSpec extends AnyFunSuite {
     rows.toDF("rk", "x0", "y")
   }
 
+  /** Early-stopped SGD over the whole frame, val slice rk < 8. */
+  private def fitEs(w0: W, maxEpochs: Int, lr: Double, dropout: Double,
+      patience: Int): TrainerCommon.EsResult[W] =
+    Mlp3Trainer.fitEsOpt(adversarial, Seq(col("x0")), col("y"),
+      col("rk"), w0, maxEpochs, TrainerCommon.Optimizer.sgd(lr),
+      Seq(dropout), isVal = col("rk") < 8, patience = patience)
+
+  /** Plain fixed-epoch SGD over the train slice alone. */
+  private def fitTrain(w0: W, epochs: Int, lr: Double,
+      dropout: Double = 0.0): (W, Seq[Double]) =
+    Mlp3Trainer.fit(adversarial.filter(col("rk") >= 8), Seq(col("x0")),
+      col("y"), col("rk"), w0, epochs, lr, Seq(dropout))
+
   test("fitEs: val slice is excluded from training and stops the run") {
-    val w0 = GdTrainer.init(1, 3, 2, seed = 3L)
-    val es = GdTrainer.fitEs(adversarial, Seq(col("x0")), col("y"),
-      col("rk"), w0, maxEpochs = 12, lr = 1.0, dropout = 0.0,
-      isVal = col("rk") < 8, patience = 3)
+    val w0 = Mlp3Trainer.initOneHidden(1, 3, 2, seed = 3L)
+    val es = fitEs(w0, maxEpochs = 12, lr = 1.0, dropout = 0.0,
+      patience = 3)
     // training must have learned the TRAIN labels (val excluded): the
     // train loss descends
     assert(es.trainLosses.last < es.trainLosses.head)
@@ -104,9 +118,8 @@ class EarlyStopSpec extends AnyFunSuite {
         s"(best=${es.bestEpoch}, stopped=${es.stoppedEpoch})")
     // restored weights reproduce the BEST epoch's val loss, not the
     // final epoch's: re-run bestEpoch epochs of plain fit and compare
-    val (wBest, _) = GdTrainer.fit(adversarial.filter(col("rk") >= 8),
-      Seq(col("x0")), col("y"), col("rk"), w0, es.bestEpoch, lr = 1.0)
-    es.weights.w1.flatten.zip(wBest.w1.flatten).foreach { case (a, b) =>
+    val (wBest, _) = fitTrain(w0, es.bestEpoch, lr = 1.0)
+    es.weights.ws(0).flatten.zip(wBest.ws(0).flatten).foreach { case (a, b) =>
       assert(math.abs(a - b) < 1e-12,
         "restored weights != weights after bestEpoch plain epochs") }
   }
@@ -114,13 +127,10 @@ class EarlyStopSpec extends AnyFunSuite {
   test("fitEs: gradients equal plain fit on the train slice only") {
     // fitEs(full frame, isVal=rk<8) must walk the same weight path as
     // fit(train-only frame): val rows contribute NOTHING to gradients
-    val w0 = GdTrainer.init(1, 3, 2, seed = 9L)
-    val es = GdTrainer.fitEs(adversarial, Seq(col("x0")), col("y"),
-      col("rk"), w0, maxEpochs = 3, lr = 0.5, dropout = 0.0,
-      isVal = col("rk") < 8, patience = -1)
-    val (_, plainLosses) = GdTrainer.fit(
-      adversarial.filter(col("rk") >= 8), Seq(col("x0")), col("y"),
-      col("rk"), w0, epochs = 3, lr = 0.5)
+    val w0 = Mlp3Trainer.initOneHidden(1, 3, 2, seed = 9L)
+    val es = fitEs(w0, maxEpochs = 3, lr = 0.5, dropout = 0.0,
+      patience = -1)
+    val (_, plainLosses) = fitTrain(w0, epochs = 3, lr = 0.5)
     // identical per-epoch train losses == identical gradient path (each
     // epoch's loss is computed at the weights the previous gradients
     // produced). Tolerance, not equality: nulling val rows out of an
@@ -130,30 +140,25 @@ class EarlyStopSpec extends AnyFunSuite {
     es.trainLosses.zip(plainLosses).foreach { case (a, b) =>
       assert(math.abs(a - b) < 1e-12, s"$a vs $b") }
     // weights themselves are restore-BEST -> compare a bestEpoch run
-    val (wBest, _) = GdTrainer.fit(
-      adversarial.filter(col("rk") >= 8), Seq(col("x0")), col("y"),
-      col("rk"), w0, epochs = es.bestEpoch, lr = 0.5)
-    es.weights.w1.flatten.zip(wBest.w1.flatten).foreach { case (a, b) =>
-      assert(math.abs(a - b) < 1e-12) }
-    es.weights.w2.flatten.zip(wBest.w2.flatten).foreach { case (a, b) =>
-      assert(math.abs(a - b) < 1e-12) }
+    val (wBest, _) = fitTrain(w0, epochs = es.bestEpoch, lr = 0.5)
+    es.weights.ws(0).flatten.zip(wBest.ws(0).flatten).foreach {
+      case (a, b) => assert(math.abs(a - b) < 1e-12) }
+    es.weights.ws(1).flatten.zip(wBest.ws(1).flatten).foreach {
+      case (a, b) => assert(math.abs(a - b) < 1e-12) }
   }
 
   test("fitEs: val loss is computed at inference semantics (no dropout)") {
     // With dropout on, an epoch's val loss must equal the UNDROPPED
     // forward loss at that epoch's weights: replay epoch 1 by hand.
-    val w0 = GdTrainer.init(1, 3, 2, seed = 5L)
-    val es = GdTrainer.fitEs(adversarial, Seq(col("x0")), col("y"),
-      col("rk"), w0, maxEpochs = 2, lr = 0.5, dropout = 0.5,
-      isVal = col("rk") < 8, patience = -1)
+    val w0 = Mlp3Trainer.initOneHidden(1, 3, 2, seed = 5L)
+    val es = fitEs(w0, maxEpochs = 2, lr = 0.5, dropout = 0.5,
+      patience = -1)
     // weights after epoch 1 = one dropped step on the train slice
-    val (w1, _) = GdTrainer.fit(adversarial.filter(col("rk") >= 8),
-      Seq(col("x0")), col("y"), col("rk"), w0, epochs = 1, lr = 0.5,
-      dropout = 0.5)
+    val (w1, _) = fitTrain(w0, epochs = 1, lr = 0.5, dropout = 0.5)
     // undropped loss of w1 on the val slice via gradients(dropout=0)
     val valOnly = adversarial.filter(col("rk") < 8)
-    val expected = GdTrainer.gradients(valOnly, Seq(col("x0")), col("y"),
-      col("rk"), w1, epoch = 99, dropout = 0.0).loss
+    val expected = Mlp3Trainer.gradientsVal(valOnly, Seq(col("x0")),
+      col("y"), col("rk"), w1, epoch = 99, Seq(0.0), lit(false))._1.loss
     assert(math.abs(es.valLosses.head - expected) < 1e-12,
       s"val loss ${es.valLosses.head} != inference loss $expected")
   }

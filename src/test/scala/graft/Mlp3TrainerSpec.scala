@@ -3,17 +3,16 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
-import graft.ml.{GdTrainer, Mlp3Trainer, TrainerCommon, WideMlp3}
+import graft.ml.{Mlp3Trainer, TrainerCommon, WideMlp3}
 import graft.ml.Mlp3Trainer.W
 
-/** The stacked-MLP trainer's correctness case, same three legs as
-  * GdTrainerSpec plus two equivalence pins: (1) analytic gradients
-  * match finite differences of the trainer's own loss — every tensor
-  * family, with and without dropout; (2) at ONE hidden layer the
-  * stacked trainer degenerates to GdTrainer exactly (same mask space,
-  * same gradients — the two implementations cannot drift); (3) the
-  * WideMlp3 treeAggregate twin reproduces the staged gradients number
-  * for number (what entitles q74 to fit on the twin); (4) the
+/** The stacked-MLP trainer's correctness case at depth 3
+  * (GdTrainerSpec covers its one-hidden-layer case): (1) analytic
+  * gradients match finite differences of the trainer's own loss — every
+  * tensor family, with and without dropout — masks are deterministic
+  * per epoch, and GD learns a separable fixture; (2) the WideMlp3
+  * treeAggregate twin reproduces the staged gradients number
+  * for number (what entitles q74 to fit on the twin); (3) the
   * REFERENCE widths (mlp_model.py:19-26, Dense 256/128/64) train
   * end-to-end with descending loss — the WideNetSpec obligation. */
 class Mlp3TrainerSpec extends AnyFunSuite {
@@ -85,25 +84,6 @@ class Mlp3TrainerSpec extends AnyFunSuite {
       "different epoch should resample masks")
     assert(g(1, refDrops) != g(1, Seq(0.0, 0.0, 0.0)),
       "dropout must actually drop units")
-  }
-
-  test("ONE hidden layer degenerates to GdTrainer exactly") {
-    // same uniform init shape: hand-build matching weights so the two
-    // trainers start identical (Mlp3Trainer.init scales 1/sqrt(fanIn);
-    // GdTrainer.init does not — bridge via GdTrainer's weights)
-    val g1 = GdTrainer.init(3, 4, 2, seed = 13L)
-    val stacked = W(Seq(g1.w1, g1.w2), Seq(g1.b1, g1.b2))
-    val iv = TrainerCommon.valSplit(col("rk"), 0.25)
-    for (p <- Seq(0.0, 0.4)) {
-      val (ga, va) = GdTrainer.gradientsVal(df, feats, col("y"),
-        col("rk"), g1, epoch = 2, p, iv)
-      val (gb, vb) = Mlp3Trainer.gradientsVal(df, feats, col("y"),
-        col("rk"), stacked, epoch = 2, Seq(p), iv)
-      assert(gb.ws(0) == ga.w1 && gb.bs(0) == ga.b1 &&
-        gb.ws(1) == ga.w2 && gb.bs(1) == ga.b2 &&
-        gb.loss == ga.loss && va == vb,
-        s"stacked-at-depth-1 != GdTrainer at p=$p")
-    }
   }
 
   test("WideMlp3 twin matches staged gradients exactly (dropout + val slice)") {

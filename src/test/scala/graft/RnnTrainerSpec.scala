@@ -89,7 +89,7 @@ class RnnTrainerSpec extends AnyFunSuite {
 
   test("BPTT gradients match finite differences WITH dropout active") {
     // fixed (epoch, rowKey) -> deterministic masks, so FD through
-    // gradientsVal differentiates the same masked loss (the GdTrainer
+    // gradientsVal differentiates the same masked loss (the GdTrainerSpec
     // dropout-FD argument, now through the recurrence + dropped head)
     val eps = 1e-5
     def gAt(w: RnnWeights) = RnnTrainer.gradientsVal(dfRk, xs, col("y"),

@@ -47,9 +47,10 @@ class ValLossSpec extends AnyFunSuite {
 
   // the narrow MLP: WideMlp3's kernel at one hidden layer
   test("WideMlp.valLoss == gradientsVal's val output") {
-    val w0 = GdTrainer.init(d = 5, hidden = 3, classes = 2, seed = 7L)
-    check(WideMlp3.Kernel(Seq(0.4)), WideMlp3.Kernel(Seq(0.0)),
-      Mlp3Trainer.fromMlp(w0), epoch = 3, "mlp")
+    val w0 = Mlp3Trainer.initOneHidden(d = 5, hidden = 3, classes = 2,
+      seed = 7L)
+    check(WideMlp3.Kernel(Seq(0.4)), WideMlp3.Kernel(Seq(0.0)), w0,
+      epoch = 3, "mlp")
   }
 
   test("WideMlp3.valLoss == gradientsVal's val output") {
@@ -89,10 +90,11 @@ class ValLossSpec extends AnyFunSuite {
   }
 
   test("valLoss fails loudly on an empty validation slice") {
-    val w0 = GdTrainer.init(d = 5, hidden = 3, classes = 2, seed = 7L)
+    val w0 = Mlp3Trainer.initOneHidden(d = 5, hidden = 3, classes = 2,
+      seed = 7L)
     val e = intercept[Exception] {
       TrainerCommon.valLoss(WideMlp3.Kernel(Seq(0.0)), df, xs, col("y"),
-        col("rk"), Mlp3Trainer.fromMlp(w0), lit(false))
+        col("rk"), w0, lit(false))
     }
     assert(e.getMessage.contains("empty validation slice"))
   }

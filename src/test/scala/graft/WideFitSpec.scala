@@ -9,8 +9,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.ml.{GdTrainer, Mlp3Trainer, RnnTrainer, TrainerCommon,
-  WideMlp3, WideRnn}
+import graft.ml.{Mlp3Trainer, RnnTrainer, TrainerCommon, WideMlp3,
+  WideRnn}
 import graft.ml.TrainerCommon.Optimizer
 
 /** Degenerate inputs, failure paths and the resource contract of the
@@ -53,7 +53,7 @@ class WideFitSpec extends AnyFunSuite {
     }
   private lazy val families = Seq(
     family("dense", p => WideMlp3.Kernel(Seq(p)),
-      Mlp3Trainer.fromMlp(GdTrainer.init(T, 3, 2, seed = 5L))),
+      Mlp3Trainer.initOneHidden(T, 3, 2, seed = 5L)),
     family("recurrent", p => WideRnn.Kernel(p),
       RnnTrainer.init(units = 3, classes = 2, seed = 7L)))
 
@@ -85,6 +85,40 @@ class WideFitSpec extends AnyFunSuite {
       failsWith(s"${f.name} batched fitEs", "empty validation slice")(
         f.fitEs(df, lit(false), 0.0, nBatches = 2))
     }
+  }
+
+  /** Distinct raw-bit buffers over 30 gradientsVal passes of one
+    * WideMlp3 kernel over a cached `parts`-partition frame. */
+  private def distinctBuffers(parts: Int): Int = {
+    val frame = (0 until 400).map { i =>
+      (i.toLong, 0.01 * (i % 97), 0.5 - 0.003 * (i % 61),
+        0.02 * (i % 13), 0.1 * math.sin(i), (i / 3) % 2)
+    }.toDF("rk", "x0", "x1", "x2", "x3", "y").repartition(parts).cache()
+    val w = Mlp3Trainer.init(T, Seq(32, 32), 2, seed = 3L)
+    val k = WideMlp3.Kernel(Seq(0.3, 0.0))
+    def bits(): Seq[Long] = {
+      val (g, vl) = TrainerCommon.gradientsVal(k, frame, xs, col("y"),
+        col("rk"), w, epoch = 1, isVal)
+      (g.ws.flatMap(_.flatten) ++ g.bs.flatten ++ Seq(g.loss, vl.get))
+        .map(java.lang.Double.doubleToRawLongBits)
+    }
+    try {
+      assert(frame.rdd.getNumPartitions == parts && frame.count() == 400)
+      Seq.fill(30)(bits()).distinct.length
+    } finally frame.unpersist()
+  }
+
+  test("30 passes over a cached 4-partition frame give one buffer") {
+    // 4 partials reach the merge: summed in the order the tasks finish,
+    // the low bits of a coordinate vary from pass to pass
+    val n = distinctBuffers(4)
+    assert(n == 1, s"$n distinct buffers over 30 passes")
+  }
+
+  test("30 passes over a cached 9-partition frame give one buffer " +
+      "(one merge level on the executors)") {
+    val n = distinctBuffers(9)
+    assert(n == 1, s"$n distinct buffers over 30 passes")
   }
 
   test("dropout 1.0 is rejected") {

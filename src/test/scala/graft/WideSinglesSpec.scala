@@ -55,33 +55,36 @@ class WideSinglesSpec extends AnyFunSuite {
   private def cmpV(a: Seq[Double], b: Seq[Double], what: String): Unit =
     for (i <- a.indices) assertClose(a(i), b(i), s"$what $i")
 
-  // ---- MLP (GdTrainer <-> WideMlp3's kernel at one hidden layer, the
-  // narrow MLP q40/q40b run; the test names keep its "WideMlp" label) ----
+  // ---- MLP (the staged Mlp3Trainer <-> WideMlp3's kernel, both at one
+  // hidden layer: the narrow MLP q40/q40b run; the test names keep its
+  // "WideMlp" label) ----
+
+  private def mlp0 = Mlp3Trainer.initOneHidden(T, hidden = 4, classes = 2,
+    seed = 11L)
 
   private def cmpMlp(dropout: Double, iv: Column): Unit = {
-    val w0 = GdTrainer.init(T, hidden = 4, classes = 2, seed = 11L)
-    val (gs, vs) = GdTrainer.gradientsVal(df, xs, col("y"), col("rk"),
-      w0, epoch = 2, dropout, iv)
+    val (gs, vs) = Mlp3Trainer.gradientsVal(df, xs, col("y"), col("rk"),
+      mlp0, epoch = 2, Seq(dropout), iv)
     val (gw, vw) = TrainerCommon.gradientsVal(WideMlp3.Kernel(Seq(dropout)),
-      df, xs, col("y"), col("rk"), Mlp3Trainer.fromMlp(w0), epoch = 2, iv)
+      df, xs, col("y"), col("rk"), mlp0, epoch = 2, iv)
     assertClose(gs.loss, gw.loss, s"mlp loss drop=$dropout")
     assertVal(vs, vw)
-    cmpM(gs.w1, gw.ws(0), "w1"); cmpV(gs.b1, gw.bs(0), "b1")
-    cmpM(gs.w2, gw.ws(1), "w2"); cmpV(gs.b2, gw.bs(1), "b2")
+    cmpM(gs.ws(0), gw.ws(0), "w1"); cmpV(gs.bs(0), gw.bs(0), "b1")
+    cmpM(gs.ws(1), gw.ws(1), "w2"); cmpV(gs.bs(1), gw.bs(1), "b2")
   }
 
-  test("WideMlp matches GdTrainer gradients (no dropout)") {
+  test("WideMlp matches the staged MLP's gradients (no dropout)") {
     cmpMlp(0.0, lit(false))
   }
-  test("WideMlp matches GdTrainer with dropout + val slice") {
+  test("WideMlp matches the staged MLP with dropout + val slice") {
     cmpMlp(0.3, isVal)
   }
   test("WideMlp early stopping walks the same trajectory") {
-    val w0 = GdTrainer.init(T, hidden = 4, classes = 2, seed = 11L)
-    val es = GdTrainer.fitEs(df, xs, col("y"), col("rk"), w0,
-      maxEpochs = 3, lr = 0.5, dropout = 0.3, isVal, patience = 1)
+    val es = Mlp3Trainer.fitEsOpt(df, xs, col("y"), col("rk"), mlp0,
+      maxEpochs = 3, TrainerCommon.Optimizer.sgd(0.5), Seq(0.3), isVal,
+      patience = 1)
     val ew = TrainerCommon.fitEs(WideMlp3.Kernel(Seq(0.3)), df, xs,
-      col("y"), col("rk"), Mlp3Trainer.fromMlp(w0), maxEpochs = 3,
+      col("y"), col("rk"), mlp0, maxEpochs = 3,
       TrainerCommon.Optimizer.sgd(0.5), isVal, patience = 1)
     assert(es.stoppedEpoch == ew.stoppedEpoch &&
       es.bestEpoch == ew.bestEpoch)

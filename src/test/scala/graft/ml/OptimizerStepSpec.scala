@@ -4,15 +4,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ml.TrainerCommon.{Optimizer, Tensors}
 
-/** The generic tensor walker ([[TrainerCommon.Tensors]]) against every
-  * trainer family's historical fixed-lr step: `applyOpt(w, gr,
-  * Optimizer.sgd(lr))` must equal `applyStep(w, gr, lr)` BIT-FOR-BIT
-  * (both are pure driver arithmetic — `x - lr*gx` with multiplication
-  * commutative in IEEE — so exact equality is the right assertion,
-  * unlike the cluster-aggregated trajectories). Plus Adam determinism
-  * and the walker's structural error modes. Lives in package graft.ml
-  * to reach the private[ml] applyStep/applyOpt pairs. No SparkSession:
-  * everything here is O(params) driver code.
+/** The generic tensor walker ([[TrainerCommon.Tensors]]) against the
+  * historical fixed-lr step of every staged family that has one:
+  * `applyOpt(w, gr, Optimizer.sgd(lr))` must equal `applyStep(w, gr,
+  * lr)` BIT-FOR-BIT (both are pure driver arithmetic — `x - lr*gx` with
+  * multiplication commutative in IEEE — so exact equality is the right
+  * assertion, unlike the cluster-aggregated trajectories). Plus Adam
+  * reaching every gate tensor and the walker's structural error modes.
+  * Lives in package graft.ml to reach the private[ml] applyStep/applyOpt
+  * pairs. No SparkSession: everything here is O(params) driver code.
   */
 class OptimizerStepSpec extends AnyFunSuite {
 
@@ -20,17 +20,6 @@ class OptimizerStepSpec extends AnyFunSuite {
 
   // fabricate gradients with a DIFFERENT seed so no coordinate is zero
   // or equal to its weight; loss fields are arbitrary
-
-  test("MLP: sgd applyOpt == applyStep; Adam deterministic") {
-    val w = GdTrainer.init(3, 4, 2, seed = 7L)
-    val g0 = GdTrainer.init(3, 4, 2, seed = 8L)
-    val gr = GdTrainer.MlpGrads(g0.w1, g0.b1, g0.w2, g0.b2, 1.23)
-    assert(GdTrainer.applyOpt(w, gr, Optimizer.sgd(lr)) ==
-      GdTrainer.applyStep(w, gr, lr))
-    val a1 = GdTrainer.applyOpt(w, gr, Optimizer.adam(0.01))
-    val a2 = GdTrainer.applyOpt(w, gr, Optimizer.adam(0.01))
-    assert(a1 == a2 && a1 != w)
-  }
 
   test("RNN: sgd applyOpt == applyStep") {
     val w = RnnTrainer.init(units = 3, classes = 2, seed = 7L)
@@ -109,10 +98,9 @@ class OptimizerStepSpec extends AnyFunSuite {
 
   test("walker error modes: shape mismatch and wrong delta count fail " +
       "loudly") {
-    val w = GdTrainer.init(3, 4, 2, seed = 7L)
-    val narrower = GdTrainer.init(2, 4, 2, seed = 8L)
-    val badGr = GdTrainer.MlpGrads(narrower.w1, narrower.b1,
-      narrower.w2, narrower.b2, 0.5)
+    val w = Mlp3Trainer.initOneHidden(3, 4, 2, seed = 7L)
+    val narrower = Mlp3Trainer.initOneHidden(2, 4, 2, seed = 8L)
+    val badGr = Mlp3Trainer.G(narrower.ws, narrower.bs, 0.5)
     intercept[IllegalArgumentException] {
       Tensors.flatLike(w, badGr)
     }
@@ -122,7 +110,7 @@ class OptimizerStepSpec extends AnyFunSuite {
   }
 
   test("wrong delta count names both counts, too short or too long") {
-    val w = GdTrainer.init(3, 4, 2, seed = 7L)
+    val w = Mlp3Trainer.initOneHidden(3, 4, 2, seed = 7L)
     val n = Tensors.flatLike(w, w).length
     for (m <- Seq(0, n - 1, n + 1)) {
       val e = intercept[IllegalArgumentException] {
